@@ -1,6 +1,8 @@
 package graft
 
 import graft.config.Settings
+import graft.reconcile.MvReconciler.{Consistent, Inconsistent, MissingInBase,
+  MissingInMv, NotInScope}
 import graft.schema.TableSchema
 import graft.sources.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -89,8 +91,12 @@ object MvSyncDemo {
 
     println("=== stats ===")
     println(result.stats.toString)
-    println("=== classified sample ===")
-    result.classified.groupBy("problem").count().orderBy("problem").show(false)
+    println("=== problem counts ===")
+    val st = result.stats
+    Seq(Consistent -> st.consistentRecords, Inconsistent -> st.inConsistentRecords,
+      MissingInBase -> st.missingBaseTableRecords, MissingInMv -> st.missingMvRecords,
+      NotInScope -> st.skippedRecords)
+      .foreach { case (p, n) => println(f"$p%-22s $n%d") }
     println("=== mutation plan sample ===")
     result.mutations.orderBy("o_custkey", "o_orderkey", "column").show(10, false)
     println(s"=== reports under $outDir ===")

@@ -392,13 +392,13 @@ object Dedup {
     var converged = false
     var steps = 0
     // ONE step per checkpoint+probe round. Batching 2-3 steps per round
-    // (VERDICT #6's suggestion) was measured and REJECTED (CcAb,
-    // in-session: 1-step 0.646s, 2-step 0.752s, 3-step 0.761s vs the
-    // old left-join shape's 0.654s): the deeper uncheckpointed plan per
-    // round costs more locally than the saved probe action, and at
-    // scale a batched round over-steps past convergence by up to
-    // stepsPerRound−1 full label-table propagation shuffles — the
-    // exact-stop single step never wastes one.
+    // (VERDICT #6's suggestion) was measured and REJECTED
+    // (OPTIMIZATION_r22.md, in-session: 1-step 0.646s, 2-step 0.752s,
+    // 3-step 0.761s vs the old left-join shape's 0.654s): the deeper
+    // uncheckpointed plan per round costs more locally than the saved
+    // probe action, and at scale a batched round over-steps past
+    // convergence by up to stepsPerRound−1 full label-table propagation
+    // shuffles — the exact-stop single step never wastes one.
     while (!converged && steps < maxIter) {
       val merged = step(labels).localCheckpoint(eager = false)
       val newSum = labelSum(merged)

@@ -635,8 +635,8 @@ object ReconQueries {
     // and each consumption would re-run the whole upstream reconcile
     // join — checkpoint the plan (tiny: proportional to the damage, not
     // the table) so the base/MV scan+join executes once. MvSyncJob.run
-    // caches `classified` for the same reason; at 100 TB the recompute
-    // is two extra full-table shuffles.
+    // checkpoints its non-consistent rows for the same reason; at
+    // 100 TB the recompute is two extra full-table shuffles.
     val plan = RepairPlanner.plan(classified(spark, dir, fix),
       MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, fix)
       .localCheckpoint(eager = false)
@@ -1276,8 +1276,7 @@ object ReconQueries {
     val classified = MvReconciler.reconcile(
       AllTypesFixture.base(spark), AllTypesFixture.mv(spark),
       AllTypesFixture.schema, AllTypesFixture.schema, Trusted)
-    classified
-      .filter(col(MvReconciler.ProblemCol).isin(ReportWriter.ReportedProblems: _*))
+    ReportWriter.damaged(classified)
       .select(col("id"), col(MvReconciler.ProblemCol).as("problem"),
         ReportFormatter.reportColumn(AllTypesFixture.schema, AllTypesFixture.schema,
           classified.columns.toSet).as("report"))

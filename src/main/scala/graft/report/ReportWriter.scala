@@ -5,7 +5,7 @@ import graft.reconcile.MvReconciler
 import graft.reconcile.MvReconciler._
 import graft.schema.TableSchema
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -112,6 +112,10 @@ object ReportWriter {
    * not reported — MVJobOutputStreamer.java:70-82, MvSync.java:374-378). */
   val ReportedProblems: Seq[String] = Seq(MissingInBase, MissingInMv, Inconsistent)
 
+  /** The rows that get report files: the rows that need action. */
+  def damaged(classified: DataFrame): DataFrame =
+    classified.filter(col(ProblemCol).isin(ReportedProblems: _*))
+
   /**
    * Write `<outdir>/<CATEGORY>/<partitionId>.txt` report streams +
    * `stats.txt` (MvSync.java:144-154). The per-partition fan-out runs
@@ -121,6 +125,9 @@ object ReportWriter {
    * streamer boundary, MVJobOutputStreamFactory.java:7-11): files by
    * default, console/custom by override — exactly how the reference's
    * own end-to-end tests capture the job's reports.
+   *
+   * One Spark action: the category counts behind the stats line are
+   * observed on the report pass itself (StatsCollector.observed).
    */
   def write(
       classified: DataFrame,
@@ -128,12 +135,28 @@ object ReportWriter {
       mvSchema: TableSchema,
       settings: Settings,
       factory: OutputStreamFactory = new OutputStreamFactory): JobStats = {
+    val (observed, obs) = StatsCollector.observed(classified)
+    writeObserved(damaged(observed), obs, baseSchema, mvSchema, settings, factory)
+  }
+
+  /**
+   * The report pass over `rows` (already [[damaged]]) whose plan carries
+   * `obs` from StatsCollector.observed, then `stats.txt` from the
+   * observed counts. The pass completes the observation unless an
+   * earlier action over the same plan already did (MvSyncJob.run's
+   * checkpoint).
+   */
+  def writeObserved(
+      rows: DataFrame,
+      obs: Observation,
+      baseSchema: TableSchema,
+      mvSchema: TableSchema,
+      settings: Settings,
+      factory: OutputStreamFactory = new OutputStreamFactory): JobStats = {
     val outDir = settings.outputDir
-    val reported = classified
-      .filter(col(ProblemCol).isin(ReportedProblems: _*))
-      .select(col(ProblemCol),
-        ReportFormatter.reportColumn(baseSchema, mvSchema,
-          classified.columns.toSet).as("report"))
+    val reported = rows.select(col(ProblemCol),
+      ReportFormatter.reportColumn(baseSchema, mvSchema,
+        rows.columns.toSet).as("report"))
 
     reported.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
       val pid = TaskContext.getPartitionId()
@@ -149,8 +172,7 @@ object ReportWriter {
       } finally streams.values.foreach(_.commit())
     }
 
-    val stats = StatsCollector.collect(classified,
-      settings.fixMissingMv, settings.fixOrphanMv, settings.fixInconsistentMv)
+    val stats = StatsCollector.fromObservation(obs, settings)
     writeStats(stats, outDir)
     stats
   }

@@ -1,7 +1,8 @@
 package graft.report
 
+import graft.config.Settings
 import graft.reconcile.MvReconciler._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,10 +10,10 @@ import org.apache.spark.sql.functions._
  * `mvsync.JobStats` (JobStats.java:8-41) and its one-line summary format
  * (JobStats.java:43-75, README.md:73).
  *
- * Instead of accumulators (which double-count on task retry) the counts
- * come from ONE aggregation over the classified DataFrame —
- * `groupBy(problem).count()` — exact under retries and a single
- * map-side-combined shuffle of |categories| rows at any scale.
+ * Instead of 15 hand-incremented accumulators the counters derive from
+ * per-category counts of the classified rows: observed on the pass that
+ * writes the reports (`Dataset.observe`, no extra job) or, standalone,
+ * one `groupBy(problem).count()`. Both feed the same flag arithmetic.
  */
 final case class JobStats(
     totRecords: Long = 0,
@@ -45,6 +46,10 @@ final case class JobStats(
 
 object StatsCollector {
 
+  /** Every state the classifier emits, reported or only counted. */
+  private val Categories: Seq[String] =
+    Seq(Consistent, Inconsistent, MissingInBase, MissingInMv, NotInScope)
+
   /** Category counts as a (problem, count) DataFrame — the distributed
    * part; tiny result, safe to collect. */
   def byProblem(classified: DataFrame): DataFrame =
@@ -57,29 +62,42 @@ object StatsCollector {
    * runs, instead of a second aggregation pass over the classified frame.
    * Read `observation.get` after the action completes.
    */
-  def observed(classified: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("graft_mvsync")
+  def observed(classified: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation("graft_mvsync")
     def cnt(problem: String) =
       count_if(col(ProblemCol) === problem).as(problem)
     val df = classified.observe(obs,
-      count(lit(1)).as("totRecords"),
-      cnt(Consistent), cnt(Inconsistent), cnt(MissingInBase),
-      cnt(MissingInMv), cnt(NotInScope))
+      count(lit(1)).as("totRecords"), Categories.map(cnt): _*)
     (df, obs)
   }
 
-  /**
-   * Collect the reference stats. Repair counters reflect the repair flags
-   * the same way the gating logic does (MvSync.java:380-414): with all
-   * fix flags off every problem row is "notRepair"/"notDel".
-   */
+  /** The stats of a completed observation from [[observed]]. */
+  def fromObservation(obs: Observation, settings: Settings): JobStats = {
+    val m = obs.get
+    fromCounts(Categories.map(p => p -> m(p).asInstanceOf[Long]).toMap,
+      settings.fixMissingMv, settings.fixOrphanMv, settings.fixInconsistentMv)
+  }
+
+  /** The stats of `classified` by one aggregation action. */
   def collect(
       classified: DataFrame,
       fixMissingMv: Boolean = false,
       fixOrphanMv: Boolean = false,
-      fixInconsistentMv: Boolean = false): JobStats = {
-    val counts = byProblem(classified).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      fixInconsistentMv: Boolean = false): JobStats =
+    fromCounts(byProblem(classified).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap,
+      fixMissingMv, fixOrphanMv, fixInconsistentMv)
+
+  /**
+   * Category counts → the reference stats. Repair counters reflect the
+   * repair flags the same way the gating logic does (MvSync.java:380-414):
+   * with all fix flags off every problem row is "notRepair"/"notDel".
+   */
+  private def fromCounts(
+      counts: Map[String, Long],
+      fixMissingMv: Boolean,
+      fixOrphanMv: Boolean,
+      fixInconsistentMv: Boolean): JobStats = {
     def c(k: String) = counts.getOrElse(k, 0L)
 
     val missingBase = c(MissingInBase)

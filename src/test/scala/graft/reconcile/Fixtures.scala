@@ -72,6 +72,10 @@ object Fixtures {
     row(baseSchema, baseRow1Pk, cells(Seq(10, 20, 30, 40), Wt1)),
     row(baseSchema, baseRow2Pk, cells(Seq(11, 22, 33, 44), Wt2)))
 
+  /** One base row: c1..c4 = `vals`, every cell written at `wt`. */
+  def baseRow(pk: Map[String, Any], vals: Seq[Int], wt: Long): Row =
+    row(baseSchema, pk, cells(vals, wt))
+
   def mvRow(schema: TableSchema, pkBase: Map[String, Any], c1: Int,
       vals: Seq[Int], wt: Long, c4Override: Option[Int] = None): Row = {
     val all = Map("c2" -> vals(0), "c3" -> vals(1), "c4" -> c4Override.getOrElse(vals(2)))

@@ -42,6 +42,40 @@ class ReportWriterSpec extends SparkSpec {
     assert(content.contains("MainTableEntry: CassandraRow{"))
   }
 
+  test("reports + stats line run as ONE Spark job") {
+    // The category counts are observed on the report pass, not taken by a
+    // second aggregation. AQE off: it would submit each exchange stage
+    // as a job of its own, counting scheduling structure, not actions.
+    val outDir = Files.createTempDirectory("graft-report-1job").toString
+    val settings = Settings(outputDir = outDir)
+    val classified = MvReconciler.reconcile(
+      baseBoth(spark), mvMismatchRow2(spark), baseSchema, mvSchema, settings)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
+    val stats = try {
+      val s = ReportWriter.write(classified, baseSchema, mvSchema, settings)
+      // listener delivery is async — settle before asserting
+      val deadline = System.nanoTime() + 5000000000L
+      while (jobs.get() < 1 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      Thread.sleep(200)
+      s
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    assert(jobs.get() == 1,
+      s"reports + stats submitted ${jobs.get()} jobs; they need exactly one")
+    assert(stats == StatsCollector.collect(classified))
+    assert(Files.exists(Paths.get(s"$outDir/INCONSISTENT")))
+  }
+
   test("one-sided-null mismatch renders bare col:TYPE (no :null suffix)") {
     import org.apache.spark.sql.Row
     val outDir = Files.createTempDirectory("graft-report3").toString

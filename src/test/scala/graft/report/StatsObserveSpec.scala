@@ -19,5 +19,6 @@ class StatsObserveSpec extends SparkSpec {
     assert(m("INCONSISTENT") == stats.inConsistentRecords)
     assert(m("MISSING_IN_BASE_TABLE") == stats.missingBaseTableRecords)
     assert(m("MISSING_IN_MV_TABLE") == stats.missingMvRecords)
+    assert(StatsCollector.fromObservation(obs, Settings()) == stats)
   }
 }
