@@ -356,6 +356,24 @@ object Dedup {
    * half-propagated labeling (the labels would look plausible and
    * split one true cluster into several).
    */
+  /** Convergence probe of [[connectedComponents]]: labels only ever
+   * DECREASE, so the label sum (exact decimal — a bigint sum could
+   * overflow at 10¹⁰ labels × 10¹⁰-sized ids) is strictly monotone and
+   * stalls exactly at the fixpoint — no extra per-step column or
+   * compare-join needed. One action per probe: the row count rides in
+   * the same aggregate, because with ANSI off an overflowing decimal
+   * sum is null, and two null sums in a row must not read as
+   * convergence. Only an empty label table sums to zero. */
+  private[operators] def labelSum(lbl: DataFrame): java.math.BigDecimal = {
+    val r = lbl.agg(sum(col("label").cast("decimal(38,0)")), count(lit(1)))
+      .head()
+    if (!r.isNullAt(0)) r.getDecimal(0)
+    else if (r.getLong(1) == 0L) java.math.BigDecimal.ZERO
+    else throw new ArithmeticException(
+      s"connectedComponents: the sum of ${r.getLong(1)} labels " +
+        "overflowed decimal(38,0) — convergence cannot be detected")
+  }
+
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val a = col("a"); val b = col("b")
     // edges materialized ONCE (tiny: the near-dup pair list): the
@@ -380,14 +398,6 @@ object Dedup {
     def step(lbl: DataFrame): DataFrame =
       sym.join(lbl, sym("b") === lbl("id"))
         .groupBy(a.as("id")).agg(min("label").as("label"))
-    // Convergence probe: labels only ever DECREASE, so the label sum
-    // (exact decimal — a bigint sum could overflow at 10¹⁰ labels ×
-    // 10¹⁰-sized ids) is strictly monotone and stalls exactly at the
-    // fixpoint — no extra per-step column or compare-join needed.
-    def labelSum(lbl: DataFrame): java.math.BigDecimal = {
-      val r = lbl.agg(sum(col("label").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
     var prevSum = labelSum(labels)
     var converged = false
     var steps = 0

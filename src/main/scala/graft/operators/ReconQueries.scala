@@ -1061,13 +1061,15 @@ object ReconQueries {
         .localCheckpoint()
       moved.drop("__f", "__p").write.format(fmt)
         .mode("append").save(s"$tmp/mv")
-      moved.select("__f", "__p").collect()
-        .groupBy(_.getString(0)).foreach { case (f, rows) =>
+      val sidecars = moved.select("__f", "__p").collect()
+        .groupBy(_.getString(0)).map { case (f, rows) =>
           graft.sources.Dsv2Parquet.writeDvSidecar(
             new org.apache.hadoop.fs.Path(s"$tmp/mv"),
             new org.apache.hadoop.fs.Path(f).getName,
-            rows.map(_.getLong(1)).sorted, conf): Unit
+            rows.map(_.getLong(1)).sorted, conf)
         }
+      graft.sources.CommitLog.commitUpdate(s"$tmp/mv", conf, "delta")(cur =>
+        Some(cur.copy(dvFiles = cur.dvFiles ++ sidecars)))
       require(graft.sources.Dsv2Parquet.hasDvs(s"$tmp/mv", conf),
         "recon_classify_alltypes_dsv2: the MV table carries no DVs")
       def rd(p: String) = spark.read.format(fmt).load(p)

@@ -5,14 +5,15 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
- * EQUALITY-DELETE sidecars for commit-logged [[GraftParquetProvider]]
- * tables — deletes by KEY VALUE instead of by (file, position), the
+ * EQUALITY-DELETE sidecars for [[GraftParquetProvider]] tables —
+ * deletes by KEY VALUE instead of by (file, position), the
  * Iceberg equality-delete idea reduced to this connector's shape. The
  * client that needs them is a streaming repairer: it knows which KEYS
  * are damaged (from the reconcile classification) but not where their
@@ -45,8 +46,9 @@ import org.apache.spark.sql.types._
  *    repair-to-next-maintenance, the same trade the reference accepts
  *    between repair and Cassandra compaction.
  *
- * v1 boundaries (fail-fast, documented): commit-logged tables only
- * (the manifest IS what sequences deletes against inserts); one key
+ * v1 boundaries (fail-fast, documented): the manifest IS what
+ * sequences deletes against inserts, so a plain parquet directory is
+ * imported into the log before the first repair; one key
  * tuple per table (every sidecar must agree on keyCols); key types
  * integral or string (canonical encoding = Spark's CAST AS STRING);
  * row-level operations (MERGE/UPDATE/DELETE rewrites) refuse tables
@@ -245,14 +247,15 @@ object Dsv2Equality {
  * positions). `deleteKeys` rows name keys to remove from the CURRENT
  * data files; `inserts` rows land beside them exempt from those
  * deletes — so an upsert is (key ∈ deleteKeys) + (new row ∈ inserts).
+ * Inserts follow the table's store-assignment rule, as a DSv2 append
+ * does: a column whose type cannot be stored into the table's fails the
+ * commit before anything stages, and a value that overflows its
+ * narrower table type fails the job. The table is unchanged either way.
  */
 object EqualityRepair {
   def commit(spark: SparkSession, path: String, keyCols: Seq[String],
       deleteKeys: DataFrame, inserts: DataFrame): Unit = {
     val conf = Dsv2Parquet.readConf
-    require(CommitLog.enabled(path, conf),
-      s"graft-eq: equality deletes need the commit log on $path (set " +
-        s"TBLPROPERTIES('${Dsv2Parquet.CommitLogProperty}'='true'))")
     // a fresh (file-less) table has no footers yet — the inserts
     // define its shape, and the deletes are no-ops against it
     val tableSchema =
@@ -270,7 +273,18 @@ object EqualityRepair {
       require(deleteKeys.schema.fieldNames.contains(c),
         s"graft-eq: deleteKeys frame lacks key column $c")
     }
-    val base = CommitLog.latest(path, conf).get
+    if (inserts.schema.nonEmpty) {
+      val from = inserts.select(
+        tableSchema.fieldNames.toIndexedSeq.map(col): _*).schema.fields
+      tableSchema.fields.zip(from).foreach { case (t, f) =>
+        require(Cast.canANSIStoreAssign(f.dataType, t.dataType),
+          s"graft-eq: cannot store insert column ${t.name} of type " +
+            s"${f.dataType.sql} into table column type ${t.dataType.sql}")
+      }
+    }
+    // a plain parquet directory is imported here, before the job below
+    // places any file in it
+    val base = CommitLog.begin(path, conf)
     // one key tuple per table: a second repair must agree with the
     // sidecars still LIVE (compaction retires them; sidecars whose
     // targets were all retired are inert and don't constrain the key)
@@ -312,12 +326,14 @@ object EqualityRepair {
       (canon.as("_ek") +: tableSchema.fields.toIndexedSeq.map(f =>
         lit(null).cast(f.dataType).as(f.name))): _*)
       .repartition(slices)
+    def ansiCast(c: Column, t: DataType): Column = GraftSqlBridge.column(
+      Cast(GraftSqlBridge.expression(c), t, None, EvalMode.ANSI))
     val tagged =
       if (inserts.schema.isEmpty) delSide
       else delSide.unionAll(inserts.select(
         (lit(null).cast(StringType).as("_ek") +:
           tableSchema.fields.toIndexedSeq.map(f =>
-            col(f.name).cast(f.dataType))): _*))
+            ansiCast(col(f.name), f.dataType).as(f.name))): _*))
     val writeSchema = tableSchema
     try {
     val names: Array[(Boolean, String)] =
@@ -378,7 +394,8 @@ object EqualityRepair {
       }.toSet
     }
       CommitRaceProbe.beforeEqPublish(path)
-      CommitLog.commitUpdate(path, conf, operation = "eq-repair") { cur =>
+      CommitLog.commitUpdate(path, conf, operation = "eq-repair",
+          base = Some(base)) { cur =>
         // a targeted file retired by a concurrent rewrite means its
         // replacement does NOT carry these deletes — abort, never lose
         val gone = targets.filterNot(cur.dataFiles.contains)

@@ -130,10 +130,11 @@ private[sources] case class GraftParquetTable(path: String,
 
   // `CommitLog.enabled` is a full directory listing, and Spark calls
   // properties() repeatedly during analysis/DESCRIBE (r20 advice: large
-  // directories paid a listing RPC per call). The log is enable-only,
+  // directories paid a listing RPC per call). A log is never removed,
   // so a POSITIVE answer is immutable and cached on the instance; a
-  // negative is re-checked, so a mid-life enable still surfaces even on
-  // a long-lived table object.
+  // negative (a directory graft has not written yet) is re-checked, so
+  // the import by a first write still surfaces on a long-lived table
+  // object.
   @transient private[this] var logEnabledSeen = false
   private def logEnabled: Boolean = logEnabledSeen || {
     val e = CommitLog.enabled(path, Dsv2Parquet.readConf)
@@ -190,7 +191,9 @@ private[sources] case class GraftParquetTable(path: String,
     val (drop, keep) = Dsv2Parquet.deleteDecisions(path, filters)
       .getOrElse(throw new UnsupportedOperationException(
         s"graft-parquet: cannot metadata-delete by ${filters.mkString(", ")}"))
-    val fs = new Path(path).getFileSystem(Dsv2Parquet.readConf)
+    val conf = Dsv2Parquet.readConf
+    val base = CommitLog.begin(path, conf)
+    val fs = new Path(path).getFileSystem(conf)
     if (keep.isEmpty && drop.nonEmpty) {
       // a delete (e.g. TRUNCATE) that removes the LAST data file must
       // not make the table vanish from the catalog — persist the schema
@@ -198,32 +201,26 @@ private[sources] case class GraftParquetTable(path: String,
       val out = fs.create(new Path(path, Dsv2Parquet.SchemaFileName), true)
       try out.write(schema.toDDL.getBytes("UTF-8")) finally out.close()
     }
-    if (CommitLog.enabled(path, Dsv2Parquet.readConf)) {
-      // logical retire: the manifest drop IS the delete (re-proved per
-      // CAS attempt); the bytes stay for time travel
-      CommitLog.commitUpdate(path, Dsv2Parquet.readConf,
-          operation = "delete") { cur =>
-        val removed = Dsv2Parquet.deleteDecisions(path, filters).getOrElse(
-          throw new IllegalStateException(
-            s"graft-parquet: metadata delete no longer file-aligned " +
-              s"(${filters.mkString(", ")}) — a file changed mid-commit"))
-          ._1.map(_.getName).toSet
-        val remaining = cur.dataFiles -- removed
-        Some(cur.copy(dataFiles = remaining,
-          dvFiles = cur.dvFiles.filterNot(v =>
-            Dsv2Parquet.dvTarget(v).exists(removed.contains)),
-          // an equality sidecar whose targets are ALL retired is dead
-          // weight: it would pin the row-path probe forever (no live
-          // target left for compact_table to fold) and wedge row-level
-          // ops behind the fold-first guard
-          eqFiles = cur.eqFiles.filter(n =>
-            Dsv2Equality.read(new Path(path), n, Dsv2Parquet.readConf)
-              .targets.exists(remaining.contains))))
-      }
-    } else {
-      drop.foreach(f => fs.delete(f, false))
-      if (drop.nonEmpty)
-        Dsv2Parquet.deleteDvsFor(fs, drop(0).getParent, drop.map(_.getName))
+    // logical retire: the manifest drop IS the delete (re-proved per
+    // CAS attempt); the bytes stay for time travel
+    CommitLog.commitUpdate(path, conf, operation = "delete",
+        base = Some(base)) { cur =>
+      val removed = Dsv2Parquet.deleteDecisions(path, filters).getOrElse(
+        throw new IllegalStateException(
+          s"graft-parquet: metadata delete no longer file-aligned " +
+            s"(${filters.mkString(", ")}) — a file changed mid-commit"))
+        ._1.map(_.getName).toSet
+      val remaining = cur.dataFiles -- removed
+      Some(cur.copy(dataFiles = remaining,
+        dvFiles = cur.dvFiles.filterNot(v =>
+          Dsv2Parquet.dvTarget(v).exists(removed.contains)),
+        // an equality sidecar whose targets are ALL retired is dead
+        // weight: it would pin the row-path probe forever (no live
+        // target left for compact_table to fold) and wedge row-level
+        // ops behind the fold-first guard
+        eqFiles = cur.eqFiles.filter(n =>
+          Dsv2Equality.read(new Path(path), n, conf)
+            .targets.exists(remaining.contains))))
     }
     Dsv2DeleteProbe.forPath(path).lastDropped.set(drop.length)
     Dsv2DeleteProbe.forPath(path).lastKept.set(keep.length)
@@ -1170,10 +1167,11 @@ private[graft] object Dsv2Parquet {
    * through the catalog's versioned loadTable. */
   val VersionAsOfOption = "graft.versionAsOf"
 
-  /** Table property enabling the [[CommitLog]] (versioned manifests,
-   * CAS commits, snapshot isolation, time travel). Enable-only: once
-   * manifests exist they ARE the table state — deleting them would
-   * resurrect every orphaned file the log had retired. */
+  /** Table property naming the [[CommitLog]] (versioned manifests, CAS
+   * commits, snapshot isolation, time travel). Every graft table has
+   * the log, so the only accepted value is 'true': manifests ARE the
+   * table state — deleting them would resurrect every orphaned file the
+   * log had retired. */
   val CommitLogProperty = "graft.commit.log"
 
   /** Write options requesting a sink-driven exchange: ordered (range
@@ -1323,8 +1321,7 @@ private[graft] object Dsv2Parquet {
 
   /** Publish ONE commit's positions for one data file as a fresh
    * immutable sidecar (tmp + atomic rename to a unique name); returns
-   * the sidecar's name (a commit-logged caller adds it to the next
-   * manifest). */
+   * the sidecar's name (the caller adds it to the next manifest). */
   def writeDvSidecar(dir: Path, dataFileName: String,
       positions: Array[Long], conf: Configuration): String = {
     val fs = dir.getFileSystem(conf)
@@ -1350,9 +1347,9 @@ private[graft] object Dsv2Parquet {
       conf: Configuration): Map[String, Array[String]] =
     dvListing(path, conf, None)
 
-  /** Same snapshot rule as [[dataFiles]]: a commit-logged table serves
-   * the manifest's sidecar set (latest or `versionAsOf`), a log-less
-   * table the raw listing. */
+  /** Same snapshot rule as [[dataFiles]]: a graft table serves the
+   * manifest's sidecar set (latest or `versionAsOf`), a directory graft
+   * never wrote the raw listing. */
   def dvListing(path: String, conf: Configuration,
       versionAsOf: Option[Long]): Map[String, Array[String]] = {
     val p = new Path(path)
@@ -1413,19 +1410,6 @@ private[graft] object Dsv2Parquet {
    * unknowable). */
   def hasDvs(path: String, conf: Configuration): Boolean =
     dvListing(path, conf).nonEmpty
-
-  /** Remove every DV sidecar of data files being deleted/replaced —
-   * one listing for the whole batch. */
-  def deleteDvsFor(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-      dataFileNames: Iterable[String]): Unit = {
-    val listing = dvListing(dir.toString, fs.getConf)
-    dataFileNames.foreach(n =>
-      listing.getOrElse(n, Array.empty[String])
-        .foreach(s => fs.delete(new Path(s), false)))
-  }
-
-  def deleteDvFor(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-      dataFileName: String): Unit = deleteDvsFor(fs, dir, Seq(dataFileName))
 
   /** Metadata-column name → the physical wide column carrying its
    * bytes: `writetime(c)` ↔ `writetime_c`, `ttl(c)` ↔ `ttl_c` (the
@@ -1706,7 +1690,8 @@ private[graft] object Dsv2Parquet {
    * the MANIFEST's — the latest version's, or exactly `versionAsOf`'s
    * (time travel). Files present in the directory but not in the
    * manifest (uncommitted, replaced, orphaned) are invisible. A
-   * log-less table keeps pure listing semantics. */
+   * directory graft never wrote (plain parquet output, read through the
+   * provider) serves its listing until a graft write imports it. */
   def dataFiles(path: String, conf: Configuration,
       versionAsOf: Option[Long]): Array[FileStatus] = {
     val p = new Path(path)

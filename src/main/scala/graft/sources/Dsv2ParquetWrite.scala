@@ -37,14 +37,15 @@ import org.apache.spark.sql.types._
  * [[GraftParquetCommitMessage]]; job [[GraftParquetBatchWrite.commit]]
  * renames exactly the files named by the messages into `path` (a retry
  * or speculative attempt whose message never reached the driver leaves
- * only invisible staging garbage, removed with the staging dir). Job
+ * only invisible staging garbage, removed with the staging dir), and
+ * ONE CAS manifest publish ([[CommitLog]]) is the commit point: renamed
+ * files are invisible until a manifest names them. Job
  * [[GraftParquetBatchWrite.abort]] deletes the staging dir — committed
- * data is untouched by a failed write. TRUNCATE (mode=overwrite) moves
- * the previously committed files into a `_trash-<queryId>` directory
- * (invisible to the listing) before the staged renames and drops the
- * trash only after every rename succeeded — a driver crash mid-commit
- * leaves the old table recoverable from the trash, never an empty
- * directory.
+ * data is untouched by a failed write. TRUNCATE (mode=overwrite) and a
+ * filter overwrite retire the replaced files from the manifest; the
+ * files stay on disk for time travel until `expire_snapshots`. The
+ * first write into a plain parquet directory imports its listing as
+ * version 1 before any rename ([[CommitLog.begin]]).
  *
  * Scale shape: one output file per non-empty task partition, written
  * through parquet's buffered page writer — no driver-side data, no
@@ -217,111 +218,67 @@ private[sources] case class GraftParquetBatchWrite(path: String,
     // step — a missing staged file fails the job with old data intact
     staged.foreach(f => require(fs.isFile(f),
       s"graft-parquet commit: staged file missing: $f"))
-    if (CommitLog.enabled(path, conf)) {
-      // COMMIT-LOGGED table: files retire LOGICALLY — the staged
-      // renames land invisibly (no manifest references them yet), and
-      // ONE CAS manifest publish is the commit point. Replaced files
-      // stay on disk for time travel until expire_snapshots. Losing
-      // the CAS re-reads the new base: appends commute (retry);
-      // truncate/overwrite recompute their removal set against the
-      // new state (overwrite-wins semantics, re-proved per attempt).
-      staged.foreach { f =>
-        val dst = new Path(target, f.getName)
-        require(fs.rename(f, dst),
-          s"graft-parquet commit: rename $f -> $dst failed")
-      }
-      val stagedNames = staged.map(_.getName).toSet
-      var removedCount = 0
-      CommitLog.commitUpdate(path, conf,
-        operation = if (truncateFirst) "truncate"
-          else if (overwriteFilters.nonEmpty) "overwrite" else "append"
-      ) { cur =>
-        val removedNames: Set[String] =
-          if (truncateFirst) cur.dataFiles
-          else if (overwriteFilters.nonEmpty)
-            Dsv2Parquet.deleteDecisions(path, overwriteFilters).getOrElse(
-              throw new IllegalStateException(
-                "graft-parquet overwrite: the predicate is no longer " +
-                  s"file-aligned (${overwriteFilters.mkString(", ")}) — " +
-                  "a file changed between planning and commit"))
-              ._1.map(_.getName).toSet
-          else Set.empty[String]
-        removedCount = removedNames.size
-        val remaining = cur.dataFiles -- removedNames
-        Some(cur.copy(
-          dataFiles = remaining ++ stagedNames,
-          dvFiles = cur.dvFiles.filterNot(v =>
-            Dsv2Parquet.dvTarget(v).exists(removedNames.contains)),
-          // a truncate retires every file an equality delete could
-          // target, and an overwrite may retire a sidecar's LAST live
-          // target — either way the orphaned sidecar is dead weight
-          // that would pin the row-path probe forever (no live target
-          // left for compact_table to fold) and wedge row-level ops
-          // behind the fold-first guard
-          eqFiles =
-            if (truncateFirst) Set.empty
-            else if (removedNames.isEmpty) cur.eqFiles
-            else cur.eqFiles.filter(n =>
-              Dsv2Equality.read(new Path(path), n, conf)
-                .targets.exists(remaining.contains))))
-      }
-      fs.delete(new Path(stagingDir), true)
-      maintainClustering(fs, stagedNames)
-      Dsv2WriteProbe.forPath(path).lastTruncated.set(removedCount)
-      Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
-      Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
-        case GraftParquetCommitMessage(_, n) => n
-      }.sum)
-      Dsv2WriteProbe.forPath(path).lastCommitMillis.set(
-        (System.nanoTime() - t0) / 1000000L)
-      return
-    }
-    // overwrite: the old files move ASIDE (into a `_`-prefixed trash
-    // directory the listing never shows) rather than being deleted, so
-    // a driver crash between here and the staged renames leaves the
-    // previous table recoverable from the trash instead of empty; the
-    // trash drops only after every staged rename succeeded
-    // what the overwrite removes: everything (truncate), or exactly
-    // the files footer statistics PROVE all-match the overwrite
-    // predicate (re-proved against the files present NOW — a file
-    // landed since planning makes the commit fail with old data
-    // intact, never guess)
-    val removing: Array[Path] =
-      if (truncateFirst) Dsv2Parquet.dataFiles(path, conf).map(_.getPath)
-      else if (overwriteFilters.nonEmpty)
-        Dsv2Parquet.deleteDecisions(path, overwriteFilters).getOrElse(
-          throw new IllegalStateException(
-            "graft-parquet overwrite: the predicate is no longer " +
-              s"file-aligned (${overwriteFilters.mkString(", ")}) — " +
-              "a file changed between planning and commit"))._1
-      else Array.empty
-    Dsv2WriteProbe.forPath(path).lastTruncated.set(removing.length)
-    val trash: Option[Path] =
-      if (removing.isEmpty) None
-      else {
-        val t = new Path(path, s"_trash-$queryId")
-        fs.mkdirs(t)
-        removing.foreach { f =>
-          require(fs.rename(f, new Path(t, f.getName)),
-            s"graft-parquet commit: trash move of $f failed")
-        }
-        // an overwritten file's deletion vectors die with it
-        Dsv2Parquet.deleteDvsFor(fs, new Path(path), removing.map(_.getName))
-        Some(t)
-      }
+    // files retire LOGICALLY: the staged renames land invisibly (no
+    // manifest references them yet), and ONE CAS manifest publish is
+    // the commit point. Replaced files stay on disk for time travel
+    // until expire_snapshots. Losing the CAS re-reads the new base:
+    // appends commute (retry); truncate/overwrite recompute their
+    // removal set against the new state (overwrite-wins semantics,
+    // re-proved per attempt — a file landed since planning that breaks
+    // the predicate's file alignment fails the commit, never a guess).
+    val base = CommitLog.begin(path, conf)
     staged.foreach { f =>
       val dst = new Path(target, f.getName)
       require(fs.rename(f, dst),
         s"graft-parquet commit: rename $f -> $dst failed")
     }
-    trash.foreach(fs.delete(_, true))
+    val stagedNames = staged.map(_.getName).toSet
+    var removedCount = 0
+    CommitLog.commitUpdate(path, conf,
+      operation = if (truncateFirst) "truncate"
+        else if (overwriteFilters.nonEmpty) "overwrite" else "append",
+      base = Some(base)
+    ) { cur =>
+      // never this write's own files, whatever a concurrent import of
+      // the directory listed
+      val removedNames: Set[String] = (
+        if (truncateFirst) cur.dataFiles
+        else if (overwriteFilters.nonEmpty)
+          Dsv2Parquet.deleteDecisions(path, overwriteFilters).getOrElse(
+            throw new IllegalStateException(
+              "graft-parquet overwrite: the predicate is no longer " +
+                s"file-aligned (${overwriteFilters.mkString(", ")}) — " +
+                "a file changed between planning and commit"))
+            ._1.map(_.getName).toSet
+        else Set.empty[String]) -- stagedNames
+      removedCount = removedNames.size
+      val remaining = cur.dataFiles -- removedNames
+      Some(cur.copy(
+        dataFiles = remaining ++ stagedNames,
+        dvFiles = cur.dvFiles.filterNot(v =>
+          Dsv2Parquet.dvTarget(v).exists(removedNames.contains)),
+        // a truncate retires every file an equality delete could
+        // target, and an overwrite may retire a sidecar's LAST live
+        // target — either way the orphaned sidecar is dead weight
+        // that would pin the row-path probe forever (no live target
+        // left for compact_table to fold) and wedge row-level ops
+        // behind the fold-first guard
+        eqFiles =
+          if (truncateFirst) Set.empty
+          else if (removedNames.isEmpty) cur.eqFiles
+          else cur.eqFiles.filter(n =>
+            Dsv2Equality.read(new Path(path), n, conf)
+              .targets.exists(remaining.contains))))
+    }
     fs.delete(new Path(stagingDir), true)
-    maintainClustering(fs, staged.map(_.getName).toSet)
+    maintainClustering(fs, stagedNames)
+    Dsv2WriteProbe.forPath(path).lastTruncated.set(removedCount)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
       case GraftParquetCommitMessage(_, n) => n
     }.sum)
-    Dsv2WriteProbe.forPath(path).lastCommitMillis.set((System.nanoTime() - t0) / 1000000L)
+    Dsv2WriteProbe.forPath(path).lastCommitMillis.set(
+      (System.nanoTime() - t0) / 1000000L)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -358,16 +315,14 @@ private[sources] case class GraftParquetBatchWrite(path: String,
  * Markers are garbage-collected past [[GraftParquetStreamingWrite
  * .MarkerRetain]] epochs behind the latest — once the checkpoint has
  * advanced that far, the purged epochs can never be replayed — so a
- * long-running stream's directory listing stays flat. `truncate`
- * (outputMode = complete) replaces the committed snapshot each epoch,
- * so the directory always holds exactly the latest aggregate state.
+ * long-running stream's marker directory stays flat.
  *
- * On a COMMIT-LOGGED table each epoch additionally publishes one
- * manifest version after its renames (the files are invisible until
- * then), and complete-mode replacement is LOGICAL — prior epochs stay
- * on disk for time travel until expire_snapshots. Epoch replays stay
- * idempotent: deterministic destination names re-union (append) or
- * re-pin (complete) the manifest to the identical state.
+ * Each epoch publishes one manifest version after its renames (the
+ * files are invisible until then). `truncate` (outputMode = complete)
+ * replaces the table's snapshot each epoch LOGICALLY — prior epochs
+ * stay on disk for time travel until expire_snapshots. Epoch replays
+ * stay idempotent: deterministic destination names re-union (append)
+ * or re-pin (complete) the manifest to the identical state.
  */
 private[sources] case class GraftParquetStreamingWrite(path: String,
     schema: StructType, queryId: String, truncateFirst: Boolean)
@@ -432,7 +387,7 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     val conf = Dsv2Parquet.readConf
     val target = new Path(path)
     val fs = target.getFileSystem(conf)
-    val logged = CommitLog.enabled(path, conf)
+    val base = CommitLog.begin(path, conf)
     val staged = messages.collect {
       case GraftParquetCommitMessage(Some(f), _) => new Path(f)
     }.sortBy(_.getName)
@@ -440,21 +395,12 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
       if (fs.exists(marker(epochId))) readMarker(fs, epochId)
       else {
         // fresh commit: verify every reported file BEFORE any
-        // destructive step, truncate (complete mode) while nothing of
-        // this epoch is visible yet, then write the ledger — the
-        // atomic commit point. Destination names are deterministic in
-        // (queryId, epochId, staged index), never a fresh UUID, so a
-        // replayed rename lands on the same name instead of beside it.
+        // destructive step, then write the ledger. Destination names
+        // are deterministic in (queryId, epochId, staged index), never a
+        // fresh UUID, so a replayed rename lands on the same name
+        // instead of beside it.
         staged.foreach(f => require(fs.isFile(f),
           s"graft-parquet epoch $epochId commit: staged file missing: $f"))
-        if (truncateFirst && !logged) {
-          // on a commit-logged table the truncate is LOGICAL (the
-          // manifest publish below) — the replaced files stay on disk
-          // for time travel, never physically deleted here
-          val old = Dsv2Parquet.dataFiles(path, conf)
-          old.foreach(f => fs.delete(f.getPath, false))
-          Dsv2WriteProbe.forPath(path).lastTruncated.set(old.length)
-        }
         fs.mkdirs(target)
         val d = staged.indices.map(i =>
           new Path(target, f"part-$queryId-e$epochId-$i%05d.parquet")).toArray
@@ -476,32 +422,29 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
       }
       stagedIdx += 1
     }
-    if (logged) {
-      // COMMIT-LOGGED table: the renamed epoch files are invisible
-      // until a manifest references them — publish ONE version per
-      // epoch. Complete mode retires the previous snapshot logically
-      // (files stay for time travel); append unions. Replays are
-      // idempotent: the same deterministic destination names re-union
-      // (append) or re-pin (complete) to the identical state.
-      val dstNames = dsts.map(_.getName).toSet
-      var removed = 0
-      CommitLog.commitUpdate(path, conf, operation = "stream-epoch") { cur =>
-        if (truncateFirst) {
-          val retired = cur.dataFiles -- dstNames
-          removed = retired.size
-          Some(cur.copy(dataFiles = dstNames,
-            dvFiles = cur.dvFiles.filterNot(v =>
-              Dsv2Parquet.dvTarget(v).exists(retired.contains)),
-            // every file an equality delete could target is retired —
-            // carrying the sidecars forward would force the row-path
-            // probe forever (compact_table can't fold targets that no
-            // longer exist) and wedge row-level ops behind the
-            // fold-first guard
-            eqFiles = Set.empty))
-        } else Some(cur.copy(dataFiles = cur.dataFiles ++ dstNames))
-      }
-      if (truncateFirst) Dsv2WriteProbe.forPath(path).lastTruncated.set(removed)
+    // the renamed epoch files are invisible until a manifest references
+    // them — publish ONE version per epoch. Complete mode retires the
+    // previous snapshot logically (files stay for time travel); append
+    // unions.
+    val dstNames = dsts.map(_.getName).toSet
+    var removed = 0
+    CommitLog.commitUpdate(path, conf, operation = "stream-epoch",
+        base = Some(base)) { cur =>
+      if (truncateFirst) {
+        val retired = cur.dataFiles -- dstNames
+        removed = retired.size
+        Some(cur.copy(dataFiles = dstNames,
+          dvFiles = cur.dvFiles.filterNot(v =>
+            Dsv2Parquet.dvTarget(v).exists(retired.contains)),
+          // every file an equality delete could target is retired —
+          // carrying the sidecars forward would force the row-path
+          // probe forever (compact_table can't fold targets that no
+          // longer exist) and wedge row-level ops behind the
+          // fold-first guard
+          eqFiles = Set.empty))
+      } else Some(cur.copy(dataFiles = cur.dataFiles ++ dstNames))
     }
+    if (truncateFirst) Dsv2WriteProbe.forPath(path).lastTruncated.set(removed)
     fs.delete(new Path(stagingDir(epochId)), true)
     gcMarkers(fs, epochId)
     // a streaming epoch's files are never bucket-aligned — retract any
@@ -604,7 +547,7 @@ object Dsv2WriteProbe {
     val lastTruncated = new java.util.concurrent.atomic.AtomicInteger
     val epochsCommitted = new java.util.concurrent.atomic.AtomicLong
     /** Driver-side wall of the latest job commit (staging verify +
-     * optional truncate + renames) — the only O(#tasks) serial section
+     * renames + manifest publish) — the only O(#tasks) serial section
      * of the write path, measured by the ScaleSmoke dsv2write curve. */
     val lastCommitMillis = new java.util.concurrent.atomic.AtomicLong
     /** Merge-on-read evidence: files that received position deletes

@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.StructType
  *  - the groups this engine replaces are whole FILES; the scan records
  *    the exact file set it planned, and the commit replaces exactly
  *    that set — a concurrent append between scan and commit survives,
- *    while a scanned file that VANISHED is detected at commit as a
- *    concurrent-writer conflict and the operation aborts.
+ *    while a scanned file retired from the manifest is detected at
+ *    commit as a concurrent-writer conflict and the operation aborts.
  *
  * Scale shape: the scan implements RUNTIME GROUP FILTERING
  * ([[GraftReplaceScan]] is a `SupportsRuntimeV2Filtering` on the
@@ -45,9 +45,8 @@ import org.apache.spark.sql.types.StructType
  * the files that provably contain matching rows and a MERGE touching
  * 1% of files rewrites 1% of the table (measured damage-proportional:
  * ScaleSmoke merge, 1/8/32 touched files → proportional wall). The
- * two-phase commit (stage → trash scanned → rename staged → drop
- * trash) leaves the previous table recoverable at every crash point,
- * same discipline as the batch overwrite.
+ * commit is one manifest publish, the same as the batch overwrite: a
+ * crash before it leaves the previous version intact.
  */
 private[sources] case class GraftRowLevelOperation(path: String,
     tableSchema: StructType,
@@ -198,9 +197,10 @@ private[sources] case class GraftReplaceScan(path: String,
   }
 }
 
-/** The replace-commit: stage replacement files invisibly, verify, move
- * the SCANNED files (and only them) to a trash dir, rename staged in,
- * drop the trash — recoverable at every crash point. */
+/** The replace-commit: stage replacement files invisibly, verify, rename
+ * them in, and publish ONE manifest version swapping the SCANNED files
+ * (and only them) for the replacements. The replaced files stay on disk
+ * for time travel until expire_snapshots. */
 private[sources] case class GraftReplaceDataWrite(path: String,
     schema: StructType, queryId: String, op: GraftRowLevelOperation)
     extends BatchWrite {
@@ -224,107 +224,67 @@ private[sources] case class GraftReplaceDataWrite(path: String,
       throw new IllegalStateException(
         "graft-replace commit: the operation's scan never planned — " +
           "nothing to replace"))
-    if (CommitLog.enabled(path, conf)) {
-      // COMMIT-LOGGED table: the conflict check is version-based — a
-      // scanned file must still be in the CURRENT manifest, else a
-      // concurrent rewrite replaced it (this op's output carries stale
-      // copies of its rows) and the operation aborts; losing the CAS
-      // re-validates against the new version before retrying. Replaced
-      // files retire logically (manifest drop) — old versions stay
-      // readable for time travel.
-      staged.foreach { f =>
-        val dst = new Path(target, f.getName)
-        require(fs.rename(f, dst),
-          s"graft-replace commit: rename $f -> $dst failed")
-      }
-      val stagedNames = staged.map(_.getName).toSet
-      val scannedSet = scanned.toSet
-      CommitRaceProbe.beforeReplacePublish(path)
-      CommitLog.commitUpdate(path, conf, operation = "replace") { cur =>
-        val gone = scannedSet.filterNot(cur.dataFiles.contains)
-        if (gone.nonEmpty) throw new IllegalStateException(
-          "graft-replace commit: concurrent writer conflict — scanned " +
-            s"file(s) no longer in version ${cur.version}: " +
-            s"${gone.mkString(", ")}; aborting this operation (re-run " +
-            "it against the current table)")
-        // the op REQUIRED live-eq-empty at build time, so any sidecar
-        // now targeting a scanned file is a concurrent equality-delete
-        // commit this rewrite's output does not carry — publishing
-        // would silently lose those deletes (the same guard compaction
-        // applies; the eq commit's own target check covers the
-        // opposite ordering)
-        val newEq = cur.eqFiles.filter(n =>
-          Dsv2Equality.read(target, n, conf).targets
-            .exists(scannedSet.contains))
-        if (newEq.nonEmpty) throw new IllegalStateException(
-          "graft-replace commit: concurrent equality-delete commit " +
-            s"targets scanned file(s): ${newEq.mkString(", ")}; " +
-            "aborting this operation — publishing would lose those " +
-            "deletes")
-        // likewise a DV sidecar the scan did NOT apply: a concurrent
-        // delta commit's deletes on rows this rewrite carried forward
-        val appliedDvs = Option(op.scannedDvs.get()).getOrElse(Set.empty)
-        val newDvs = cur.dvFiles.filter(v =>
-          Dsv2Parquet.dvTarget(v).exists(scannedSet.contains)) -- appliedDvs
-        if (newDvs.nonEmpty) throw new IllegalStateException(
-          "graft-replace commit: concurrent delta commit landed " +
-            s"deletion vector(s) on scanned file(s): " +
-            s"${newDvs.mkString(", ")}; aborting this operation — " +
-            "publishing would lose those deletes")
-        Some(cur.copy(
-          dataFiles = cur.dataFiles -- scannedSet ++ stagedNames,
-          // a replaced file's deletion vectors die with it: the
-          // rewrite carried over only live rows
-          dvFiles = cur.dvFiles.filterNot(v =>
-            Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))))
-      }
-      fs.delete(new Path(stagingDir), true)
-      val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
-      if (fs.exists(clustering)) fs.delete(clustering, false)
-      Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
-      Dsv2WriteProbe.forPath(path).lastTruncated.set(scanned.length)
-      Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
-        case GraftParquetCommitMessage(_, n) => n
-      }.sum)
-      return
-    }
-    // replace exactly the scanned groups: files appended AFTER the
-    // scan are untouched, but a SCANNED file that vanished means a
-    // concurrent row-level operation or overwrite replaced it — this
-    // op's rewrite carries stale copies of that file's rows, and
-    // renaming them in beside the other writer's output would
-    // duplicate every carried-over row. Conflict → abort (Spark calls
-    // abort(), which drops the staged files); the other writer's
-    // commit stands. Same race-guard philosophy as the reference's
-    // read-before-delete (DBOperations.java:61-70), and Iceberg's
-    // validate-then-retry stance on copy-on-write commits.
-    val missing = scanned.filterNot(n => fs.exists(new Path(target, n)))
-    if (missing.nonEmpty) throw new IllegalStateException(
-      "graft-replace commit: concurrent writer conflict — scanned " +
-        s"file(s) no longer present: ${missing.mkString(", ")}; " +
-        "aborting this operation (re-run it against the current table)")
-    val trash = new Path(path, s"_trash-$queryId")
-    val present = scanned
-    if (present.nonEmpty) fs.mkdirs(trash)
-    present.foreach { n =>
-      require(fs.rename(new Path(target, n), new Path(trash, n)),
-        s"graft-replace commit: trash move of $n failed")
-    }
-    // a replaced file's deletion vectors die with it: the rewrite
-    // carried over only live rows
-    if (present.nonEmpty) Dsv2Parquet.deleteDvsFor(fs, target, present)
+    // the conflict check is version-based — a scanned file must still
+    // be in the CURRENT manifest, else a concurrent rewrite replaced it
+    // (this op's output carries stale copies of its rows) and the
+    // operation aborts; losing the CAS re-validates against the new
+    // version before retrying. Same race-guard philosophy as the
+    // reference's read-before-delete (DBOperations.java:61-70), and
+    // Iceberg's validate-then-retry stance on copy-on-write commits.
+    val base = CommitLog.begin(path, conf)
     staged.foreach { f =>
       val dst = new Path(target, f.getName)
       require(fs.rename(f, dst),
         s"graft-replace commit: rename $f -> $dst failed")
     }
-    if (present.nonEmpty) fs.delete(trash, true)
+    val stagedNames = staged.map(_.getName).toSet
+    val scannedSet = scanned.toSet
+    CommitRaceProbe.beforeReplacePublish(path)
+    CommitLog.commitUpdate(path, conf, operation = "replace",
+        base = Some(base)) { cur =>
+      val gone = scannedSet.filterNot(cur.dataFiles.contains)
+      if (gone.nonEmpty) throw new IllegalStateException(
+        "graft-replace commit: concurrent writer conflict — scanned " +
+          s"file(s) no longer in version ${cur.version}: " +
+          s"${gone.mkString(", ")}; aborting this operation (re-run " +
+          "it against the current table)")
+      // the op REQUIRED live-eq-empty at build time, so any sidecar
+      // now targeting a scanned file is a concurrent equality-delete
+      // commit this rewrite's output does not carry — publishing
+      // would silently lose those deletes (the same guard compaction
+      // applies; the eq commit's own target check covers the
+      // opposite ordering)
+      val newEq = cur.eqFiles.filter(n =>
+        Dsv2Equality.read(target, n, conf).targets
+          .exists(scannedSet.contains))
+      if (newEq.nonEmpty) throw new IllegalStateException(
+        "graft-replace commit: concurrent equality-delete commit " +
+          s"targets scanned file(s): ${newEq.mkString(", ")}; " +
+          "aborting this operation — publishing would lose those " +
+          "deletes")
+      // likewise a DV sidecar the scan did NOT apply: a concurrent
+      // delta commit's deletes on rows this rewrite carried forward
+      val appliedDvs = Option(op.scannedDvs.get()).getOrElse(Set.empty)
+      val newDvs = cur.dvFiles.filter(v =>
+        Dsv2Parquet.dvTarget(v).exists(scannedSet.contains)) -- appliedDvs
+      if (newDvs.nonEmpty) throw new IllegalStateException(
+        "graft-replace commit: concurrent delta commit landed " +
+          s"deletion vector(s) on scanned file(s): " +
+          s"${newDvs.mkString(", ")}; aborting this operation — " +
+          "publishing would lose those deletes")
+      Some(cur.copy(
+        dataFiles = cur.dataFiles -- scannedSet ++ stagedNames,
+        // a replaced file's deletion vectors die with it: the
+        // rewrite carried over only live rows
+        dvFiles = cur.dvFiles.filterNot(v =>
+          Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))))
+    }
     fs.delete(new Path(stagingDir), true)
     // a rewrite breaks any declared clustered layout
-    val clusteringSidecar = new Path(path, Dsv2Parquet.ClusteringFileName)
-    if (fs.exists(clusteringSidecar)) fs.delete(clusteringSidecar, false)
+    val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
+    if (fs.exists(clustering)) fs.delete(clustering, false)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
-    Dsv2WriteProbe.forPath(path).lastTruncated.set(present.length)
+    Dsv2WriteProbe.forPath(path).lastTruncated.set(scanned.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
       case GraftParquetCommitMessage(_, n) => n
     }.sum)
@@ -459,13 +419,13 @@ private[sources] class GraftDeltaWriter(stagingDir: String,
   override def close(): Unit = if (inserts != null) inserts.close()
 }
 
-/** The delta commit: verify staged inserts, UNION each touched file's
- * new deleted positions into its deletion vector (atomic sidecar
- * replace), rename inserts in, drop staging. Write cost is
- * proportional to damaged rows + inserted rows — never to table size.
- * Conflict stance mirrors the copy-on-write commit: a referenced data
- * file that vanished means a concurrent rewrite replaced it (its row
- * positions no longer name the same rows) — abort. */
+/** The delta commit: verify staged inserts, write each touched file's
+ * new deleted positions as a fresh deletion-vector sidecar, rename
+ * inserts in, publish one manifest version. Write cost is proportional
+ * to damaged rows + inserted rows — never to table size. Conflict
+ * stance mirrors the copy-on-write commit: a referenced data file
+ * retired from the manifest means a concurrent rewrite replaced it (its
+ * row positions no longer name the same rows) — abort. */
 private[sources] case class GraftDeltaBatchWrite(path: String,
     dataSchema: StructType, queryId: String, fileIdx: Int, posIdx: Int)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
@@ -486,74 +446,43 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
       s"graft-delta commit: staged insert file missing: $f"))
     val merged: Map[String, Array[Long]] = msgs.flatMap(_.deletes.toSeq)
       .groupBy(_._1).map { case (n, seqs) => n -> seqs.flatMap(_._2).toArray }
-    if (CommitLog.enabled(path, conf)) {
-      // COMMIT-LOGGED table: sidecars + inserts land invisibly, ONE
-      // CAS publish references them. Delta commits COMMUTE (immutable
-      // per-commit sidecars, unioned at read) so a lost CAS retries —
-      // but each attempt re-validates that every referenced data file
-      // is still in the new base version. A compaction that retired a
-      // referenced file between this op's scan and its publish makes
-      // the retry abort loudly: the maintenance-vs-delta race the
-      // listing semantics could only document is now a detected
-      // version conflict.
-      var totalPos0 = 0L
-      val sidecarNames = merged.map { case (name, pos) =>
-        totalPos0 += pos.length
-        Dsv2Parquet.writeDvSidecar(target, name, pos.distinct.sorted, conf)
-      }.toSet
-      staged.foreach { f =>
-        val dst = new Path(target, f.getName)
-        require(fs.rename(f, dst),
-          s"graft-delta commit: rename $f -> $dst failed")
-      }
-      val stagedNames = staged.map(_.getName).toSet
-      CommitRaceProbe.beforeDeltaPublish(path)
-      CommitLog.commitUpdate(path, conf, operation = "delta") { cur =>
-        val gone = merged.keys.filterNot(cur.dataFiles.contains)
-        if (gone.nonEmpty) throw new IllegalStateException(
-          "graft-delta commit: concurrent writer conflict — data " +
-            "file(s) referenced by position deletes no longer in " +
-            s"version ${cur.version}: ${gone.mkString(", ")}")
-        Some(cur.copy(dataFiles = cur.dataFiles ++ stagedNames,
-          dvFiles = cur.dvFiles ++ sidecarNames))
-      }
-      fs.delete(new Path(stagingDir), true)
-      if (staged.nonEmpty) {
-        val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
-        if (fs.exists(clustering)) fs.delete(clustering, false)
-      }
-      val probe0 = Dsv2WriteProbe.forPath(path)
-      probe0.lastCommittedFiles.set(staged.length)
-      probe0.lastCommittedRows.set(msgs.map(_.insert.rows).sum)
-      probe0.lastTruncated.set(0)
-      probe0.lastDvFiles.set(merged.size)
-      probe0.lastDvPositions.set(totalPos0)
-      return
-    }
-    val vanished = merged.keys.filterNot(n => fs.exists(new Path(target, n)))
-    if (vanished.nonEmpty) throw new IllegalStateException(
-      "graft-delta commit: concurrent writer conflict — data file(s) " +
-        s"referenced by position deletes no longer present: " +
-        s"${vanished.mkString(", ")}")
+    // sidecars + inserts land invisibly, ONE CAS publish references
+    // them. Delta commits COMMUTE (each commit publishes its OWN
+    // immutable sidecar, unioned at read — no read-modify-write) so a
+    // lost CAS retries — but each attempt re-validates that every
+    // referenced data file is still in the new base version. A
+    // compaction that retired a referenced file between this op's scan
+    // and its publish makes the retry abort loudly: the row positions
+    // no longer name the same rows.
+    val base = CommitLog.begin(path, conf)
     var totalPos = 0L
-    merged.foreach { case (name, pos) =>
-      // each commit publishes its OWN immutable sidecar — no
-      // read-modify-write, so concurrent delta commits to the same
-      // file COMMUTE (readers union all sidecars)
-      Dsv2Parquet.writeDvSidecar(target, name, pos.distinct.sorted, conf)
+    val sidecarNames = merged.map { case (name, pos) =>
       totalPos += pos.length
-    }
+      Dsv2Parquet.writeDvSidecar(target, name, pos.distinct.sorted, conf)
+    }.toSet
     staged.foreach { f =>
       val dst = new Path(target, f.getName)
       require(fs.rename(f, dst),
         s"graft-delta commit: rename $f -> $dst failed")
     }
+    val stagedNames = staged.map(_.getName).toSet
+    CommitRaceProbe.beforeDeltaPublish(path)
+    CommitLog.commitUpdate(path, conf, operation = "delta",
+        base = Some(base)) { cur =>
+      val gone = merged.keys.filterNot(cur.dataFiles.contains)
+      if (gone.nonEmpty) throw new IllegalStateException(
+        "graft-delta commit: concurrent writer conflict — data " +
+          "file(s) referenced by position deletes no longer in " +
+          s"version ${cur.version}: ${gone.mkString(", ")}")
+      Some(cur.copy(dataFiles = cur.dataFiles ++ stagedNames,
+        dvFiles = cur.dvFiles ++ sidecarNames))
+    }
     fs.delete(new Path(stagingDir), true)
     // inserted files are not bucket-aligned — retract any declared
     // clustering (position deletes alone preserve the layout claim)
     if (staged.nonEmpty) {
-      val clusteringSidecar = new Path(path, Dsv2Parquet.ClusteringFileName)
-      if (fs.exists(clusteringSidecar)) fs.delete(clusteringSidecar, false)
+      val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
+      if (fs.exists(clustering)) fs.delete(clustering, false)
     }
     val probe = Dsv2WriteProbe.forPath(path)
     probe.lastCommittedFiles.set(staged.length)

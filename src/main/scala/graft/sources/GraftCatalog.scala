@@ -182,7 +182,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         val vs = CommitLog.versions(dir, conf)
         require(vs.nonEmpty,
           s"graft catalog: TIMESTAMP AS OF on $ident, which has no " +
-            "commit log (set TBLPROPERTIES('graft.commit.log'='true'))")
+            "commit log (graft has never written it)")
         val eligible = vs.filter(v =>
           CommitLog.read(dir, v, conf).meta.get("ts")
             .flatMap(_.toLongOption).forall(_ <= millis))
@@ -200,6 +200,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     require(partitions.isEmpty,
       "graft catalog: partition transforms not supported")
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    checkCommitLog(properties)
     val p = pathOf(ident)
     writeDdl(p, schema)
     // honor the row-level operation mode, persisted next to the DDL so
@@ -207,10 +208,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val mor = parseMergeMode(properties)
     if (mor) writeProps(p, Map(
       Dsv2Parquet.MergeModeProperty -> Dsv2Parquet.MergeOnRead))
-    // TBLPROPERTIES('graft.commit.log'='true'): publish version 1 (an
-    // empty snapshot for a fresh table) — from here every commit is a
-    // CAS manifest publish and the table is time-travelable
-    if (parseCommitLog(properties)) CommitLog.enable(p, conf): Unit
+    // publish version 1, an empty snapshot — from here every commit is
+    // a CAS manifest publish and the table is time-travelable
+    CommitLog.enable(p, conf)
     GraftParquetTable(p, schema, mor)
   }
 
@@ -223,26 +223,23 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"(expected ${Dsv2Parquet.CopyOnWrite} | ${Dsv2Parquet.MergeOnRead})")
     }
 
-  private def parseCommitLog(properties: util.Map[String, String]): Boolean =
-    Option(properties.get(Dsv2Parquet.CommitLogProperty)) match {
-      case Some("true") => true
-      case Some("false") | None => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft catalog: ${Dsv2Parquet.CommitLogProperty} must be " +
-          s"'true' or 'false', got '$other'")
+  /** `graft.commit.log` is not a knob: every graft table has the log,
+   * so 'true' is accepted as a no-op and anything else refused. */
+  private def checkCommitLog(properties: util.Map[String, String]): Unit =
+    Option(properties.get(Dsv2Parquet.CommitLogProperty)).foreach { v =>
+      require(v == "true",
+        s"graft catalog: ${Dsv2Parquet.CommitLogProperty} is " +
+          s"enable-only, got '$v' — published manifests ARE the table " +
+          "state and cannot be disavowed (expire_snapshots reclaims " +
+          "history)")
     }
 
   /** Shared with [[GraftStagedTable]]: persist the graft.* properties
    * inside a (possibly still-invisible staging) table dir. */
   private[sources] def writeStagedProps(p: String,
-      properties: util.Map[String, String]): Unit = {
+      properties: util.Map[String, String]): Unit =
     if (parseMergeMode(properties)) writeProps(p, Map(
       Dsv2Parquet.MergeModeProperty -> Dsv2Parquet.MergeOnRead))
-    // a commit-logged CTAS publishes its version-1 manifest INSIDE the
-    // still-invisible staging dir (manifests list relative names, so
-    // the publish rename carries the log with the table)
-    if (parseCommitLog(properties)) CommitLog.enable(p, conf): Unit
-  }
 
   private def propsFile(p: String) = new Path(p, Dsv2Parquet.PropsFileName)
 
@@ -302,19 +299,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           if rm.property() == Dsv2Parquet.MergeModeProperty =>
         mor = false
         s
-      // ALTER TABLE … SET TBLPROPERTIES('graft.commit.log'='true'):
-      // start the log by snapshotting the CURRENT listing into version
-      // 1 (idempotent on an already-logged table). ENABLE-ONLY: once
-      // manifests exist they ARE the table state — unsetting would
-      // resurrect every file the log has since retired.
+      // ALTER TABLE … SET TBLPROPERTIES('graft.commit.log'='true'): a
+      // no-op, every table has the log. Any other value is refused:
+      // manifests ARE the table state — disavowing them would resurrect
+      // every file the log has since retired.
       case (s, set: TableChange.SetProperty)
           if set.property() == Dsv2Parquet.CommitLogProperty =>
-        require(parseCommitLog(java.util.Collections.singletonMap(
-          set.property(), set.value())),
-          s"graft catalog: ${Dsv2Parquet.CommitLogProperty} is " +
-            "enable-only — published manifests ARE the table state and " +
-            "cannot be disavowed (expire_snapshots reclaims history)")
-        CommitLog.enable(p, conf)
+        checkCommitLog(java.util.Collections.singletonMap(
+          set.property(), set.value()))
         s
       case (_, rm: TableChange.RemoveProperty)
           if rm.property() == Dsv2Parquet.CommitLogProperty =>
@@ -325,12 +317,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       case (_, other) => throw new UnsupportedOperationException(
         s"graft catalog: unsupported ALTER $other")
     }
+    // a schema change is a commit like any other: publish a version
+    // (file sets unchanged) so the history records it and VERSION AS
+    // OF at-or-after serves the new schema. A plain parquet table is
+    // imported first, while it still declares the old schema.
+    val base = if (next != current) Some(CommitLog.begin(p, conf)) else None
     writeDdl(p, next)
-    // on a logged table a schema change is a commit like any other:
-    // publish a version (file sets unchanged) so the history records
-    // it and VERSION AS OF at-or-after serves the new schema
-    if (next != current && CommitLog.enabled(p, conf))
-      CommitLog.commitUpdate(p, conf, "alter schema")(Some(_)): Unit
+    base.foreach(b =>
+      CommitLog.commitUpdate(p, conf, "alter schema", Some(b))(Some(_)))
     if (mor) writeProps(p, Map(
       Dsv2Parquet.MergeModeProperty -> Dsv2Parquet.MergeOnRead))
     else {
@@ -343,7 +337,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val p = new Path(pathOf(ident))
     val fs = p.getFileSystem(conf)
-    fs.exists(p) && fs.delete(p, true)
+    try fs.exists(p) && fs.delete(p, true)
+    finally CommitLog.forget(p)
   }
 
   /** ALTER TABLE RENAME — one directory rename (the whole table state:
@@ -359,6 +354,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     fs.mkdirs(dst.getParent)
     require(fs.rename(src, dst),
       s"graft catalog: RENAME $oldIdent -> $newIdent failed")
+    CommitLog.forget(src)
+    CommitLog.forget(dst)
   }
 
   // ---- atomic CTAS / RTAS (StagingTableCatalog): the staged write
@@ -372,6 +369,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       replacing: Boolean): GraftStagedTable = {
     require(partitions.isEmpty,
       "graft catalog: partition transforms not supported")
+    checkCommitLog(properties)
     val ns = (root +: ident.namespace().toSeq).mkString("/")
     val staging = new Path(ns,
       s".staging-${ident.name}-${java.util.UUID.randomUUID()}")
@@ -922,6 +920,8 @@ private[sources] case class GraftStagedTable(catalog: GraftCatalog,
       } else None
     require(fs.rename(staging, dst),
       s"graft catalog: publish rename $stagingPath -> $finalPath failed")
+    // the replaced table's cached manifests carry the same names
+    CommitLog.forget(dst)
     trash.foreach(fs.delete(_, true))
   }
 

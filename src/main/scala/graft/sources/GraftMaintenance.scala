@@ -14,26 +14,18 @@ import org.apache.spark.sql.functions.col
  *
  * Distributed shape: the rewrite is a Spark job over ONLY the
  * DV-carrying files (the provider scan applies the vectors, so the
- * staged output is exactly the live rows), then a driver-side
- * two-phase swap with the same crash-recoverable discipline as the
- * row-level replace commit: stage → trash old files + sidecars →
- * rename staged in → drop trash. Cost is proportional to the
- * DV-carrying fraction of the table, never the table.
+ * staged output is exactly the live rows), then ONE manifest publish
+ * swapping the file sets, the same commit as the row-level replace.
+ * Cost is proportional to the DV-carrying fraction of the table, never
+ * the table.
  *
- * Concurrency: on a LOG-LESS table, single-maintenance-writer
- * discipline (the documented stance of every file-backed catalog
- * here); a data file that vanishes mid-compaction fails the swap
- * loudly with the table recoverable from the trash, and maintenance
- * must not run CONCURRENTLY with row-level operations (the
- * check-then-act existence guards in the commits are best-effort
- * detectors, not a lock service). On a COMMIT-LOGGED table that
- * boundary disappears: maintenance commits through
- * [[CommitLog.commitUpdate]] — the manifest swap is the commit point,
- * NOTHING the prior version references is physically deleted (that is
- * [[expireSnapshots]]' job), and compaction-vs-delta is a detected
- * version conflict: whichever publishes second sees the other's
- * change, and the non-commuting loser aborts loudly — deletes are
- * never lost.
+ * Concurrency: maintenance commits through [[CommitLog.commitUpdate]]
+ * — the manifest swap is the commit point, NOTHING the prior version
+ * references is physically deleted (that is [[expireSnapshots]]' job),
+ * and compaction-vs-delta is a detected version conflict: whichever
+ * publishes second sees the other's change, and the non-commuting
+ * loser aborts loudly — deletes are never lost. A plain parquet
+ * directory is imported as version 1 first ([[CommitLog.begin]]).
  */
 object GraftMaintenance {
 
@@ -42,41 +34,33 @@ object GraftMaintenance {
    * ones) WITHOUT touching data files — bounds the per-scan sidecar
    * read fan-out between major compactions. Concurrent delta commits
    * stay safe: their new sidecars are never in the merged set, and the
-   * reader's union is idempotent. On a commit-logged table the swap is
-   * a manifest update (merged inputs retire logically, staying on disk
-   * for time travel); a data file retired mid-merge simply drops its
-   * merge — the retiring commit already owned its rows' delete state.
-   * Returns data files whose sidecars were merged. */
+   * reader's union is idempotent. The swap is a manifest update
+   * (merged inputs retire logically, staying on disk for time travel);
+   * a data file retired mid-merge simply drops its merge — the retiring
+   * commit already owned its rows' delete state. Returns data files
+   * whose sidecars were merged. */
   def compactDvSidecars(path: String): Int = {
     val conf = Dsv2Parquet.readConf
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val base = CommitLog.begin(path, conf)
     val multi = Dsv2Parquet.dvListing(path, conf).filter(_._2.length > 1)
     if (multi.isEmpty) return 0
-    if (CommitLog.enabled(path, conf)) {
-      val replacements = multi.toSeq.map { case (name, sidecars) =>
-        (name, sidecars.map(new Path(_).getName).toSet,
-          Dsv2Parquet.writeDvSidecar(dir, name,
-            Dsv2Parquet.readDvUnion(sidecars, conf), conf))
-      }
-      CommitLog.commitUpdate(path, conf,
-          operation = "compact-minor") { cur =>
-        var dv = cur.dvFiles
-        replacements.foreach { case (dataName, merged, union) =>
-          // swap only while every merged input is still current AND the
-          // data file lives — a concurrent rewrite/compaction that
-          // retired either already owns those rows' delete state
-          if (cur.dataFiles.contains(dataName) && merged.subsetOf(dv))
-            dv = dv -- merged + union
-        }
-        Some(cur.copy(dvFiles = dv))
-      }
-    } else {
-      multi.foreach { case (name, sidecars) =>
+    val replacements = multi.toSeq.map { case (name, sidecars) =>
+      (name, sidecars.map(new Path(_).getName).toSet,
         Dsv2Parquet.writeDvSidecar(dir, name,
-          Dsv2Parquet.readDvUnion(sidecars, conf), conf)
-        sidecars.foreach(s => fs.delete(new Path(s), false))
+          Dsv2Parquet.readDvUnion(sidecars, conf), conf))
+    }
+    CommitLog.commitUpdate(path, conf, operation = "compact-minor",
+        base = Some(base)) { cur =>
+      var dv = cur.dvFiles
+      replacements.foreach { case (dataName, merged, union) =>
+        // swap only while every merged input is still current AND the
+        // data file lives — a concurrent rewrite/compaction that
+        // retired either already owns those rows' delete state
+        if (cur.dataFiles.contains(dataName) && merged.subsetOf(dv))
+          dv = dv -- merged + union
       }
+      Some(cur.copy(dvFiles = dv))
     }
     multi.size
   }
@@ -87,17 +71,17 @@ object GraftMaintenance {
   def compactDeletionVectors(spark: SparkSession, path: String): Int = {
     val conf = Dsv2Parquet.readConf
     val dir = new Path(path)
-    // on a logged table, pin the WHOLE compaction (listing + scan +
-    // conflict check) to one base version
-    val base = CommitLog.latest(path, conf)
-    val dvNames = Dsv2Parquet.dvListing(path, conf,
-      base.map(_.version)).keySet
+    // pin the WHOLE compaction (listing + scan + conflict check) to one
+    // base version; an empty directory has nothing to compact
+    val base = CommitLog.begin(path, conf)
+    if (base.version == 0L) return 0
+    val dvNames = Dsv2Parquet.dvListing(path, conf, Some(base.version)).keySet
     // equality-delete targets still live in the base version rewrite
     // too — folding them is what retires the sidecars (and returns
     // scans to the vectorized zero-probe path)
-    val eqTargets: Set[String] = base.map(_.eqFiles.flatMap(n =>
-      Dsv2Equality.read(dir, n, conf).targets)).getOrElse(Set.empty)
-    val files = Dsv2Parquet.dataFiles(path, conf, base.map(_.version))
+    val eqTargets: Set[String] = base.eqFiles.flatMap(n =>
+      Dsv2Equality.read(dir, n, conf).targets)
+    val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
       .map(_.getPath).filter(f =>
         dvNames.contains(f.getName) || eqTargets.contains(f.getName))
     if (files.isEmpty) return 0
@@ -111,16 +95,17 @@ object GraftMaintenance {
    * tax (and at 100 TB, a NameNode/listing tax) that grows without
    * bound unless folded. Any DVs or equality deletes on the packed
    * files fold in with them. Same commit discipline as
-   * [[compactDeletionVectors]]: manifest swap on logged tables
-   * (nothing physically deleted), trash swap otherwise. Returns the
-   * number of input files packed (0 = nothing worth packing). */
+   * [[compactDeletionVectors]]: one manifest swap, nothing physically
+   * deleted. Returns the number of input files packed (0 = nothing
+   * worth packing). */
   def compactSmallFiles(spark: SparkSession, path: String,
       targetBytes: Long): Int = {
     require(targetBytes > 0, s"graft-compact: target_bytes must be " +
       s"positive, got $targetBytes")
     val conf = Dsv2Parquet.readConf
-    val base = CommitLog.latest(path, conf)
-    val smalls = Dsv2Parquet.dataFiles(path, conf, base.map(_.version))
+    val base = CommitLog.begin(path, conf)
+    if (base.version == 0L) return 0
+    val smalls = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
       .filter(_.getLen < targetBytes)
     if (smalls.length < 2) return 0 // a lone small file gains nothing
     val n = math.max(1, math.ceil(
@@ -139,9 +124,9 @@ object GraftMaintenance {
    * zero-exchange zero-sort storage-partitioned join. DVs and equality
    * deletes fold in (the rewrite carries live rows only).
    *
-   * Replace-ALL is non-commuting with everything: on a logged table
-   * the publish verifies the base version is still current and aborts
-   * on ANY concurrent commit. Returns the number of files replaced. */
+   * Replace-ALL is non-commuting with everything: the publish verifies
+   * the base version is still current and aborts on ANY concurrent
+   * commit. Returns the number of files replaced. */
   def reclusterTable(spark: SparkSession, path: String,
       clusterBy: Seq[String], buckets: Int,
       sortWithin: Seq[String] = Seq.empty): Int = {
@@ -151,17 +136,17 @@ object GraftMaintenance {
     val conf = Dsv2Parquet.readConf
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
-    val base = CommitLog.latest(path, conf)
-    val files = Dsv2Parquet.dataFiles(path, conf, base.map(_.version))
+    val base = CommitLog.begin(path, conf)
+    if (base.version == 0L) return 0
+    val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
     if (files.isEmpty) return 0
     val fmt = classOf[GraftParquetProvider].getName
     val schema = Dsv2Parquet.footerSchema(path)
     val staging = new Path(dir,
       s"_staging-recluster-${java.util.UUID.randomUUID()}")
-    val reader = spark.read.format(fmt)
-    base.foreach(s =>
-      reader.option(Dsv2Parquet.VersionAsOfOption, s.version.toString))
-    val w = reader.load(path)
+    val w = spark.read.format(fmt)
+      .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
+      .load(path)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .write.format(fmt)
       .option(Dsv2Parquet.SchemaOption, schema.toDDL)
@@ -171,38 +156,19 @@ object GraftMaintenance {
       w.option(Dsv2Parquet.SortWithinOption, sortWithin.mkString(","))
     else w).mode("append").save(staging.toString)
 
-    val scannedSet = files.map(_.getPath.getName).toSet
-    base match {
-      case Some(baseSnap) =>
-        val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
-          val dst = new Path(dir, s.getPath.getName)
-          require(fs.rename(s.getPath, dst),
-            s"graft-recluster: rename ${s.getPath} -> $dst failed")
-          dst.getName
-        }.toSet
-        CommitLog.commitUpdate(path, conf, operation = "recluster") { cur =>
-          if (cur.version != baseSnap.version) throw new IllegalStateException(
-            "graft-recluster: concurrent writer conflict — the table " +
-              s"moved from version ${baseSnap.version} to ${cur.version} " +
-              "during the rewrite; aborting (re-run against the current " +
-              "table)")
-          Some(CommitLog.Snapshot(cur.version, newNames, Set.empty))
-        }
-      case None =>
-        val trash = new Path(dir,
-          s"_trash-recluster-${java.util.UUID.randomUUID()}")
-        fs.mkdirs(trash)
-        files.foreach { f =>
-          require(fs.rename(f.getPath, new Path(trash, f.getPath.getName)),
-            s"graft-recluster: trash move of ${f.getPath} failed")
-        }
-        Dsv2Parquet.deleteDvsFor(fs, dir, scannedSet)
-        Dsv2Parquet.dataFiles(staging.toString, conf).foreach { s =>
-          val dst = new Path(dir, s.getPath.getName)
-          require(fs.rename(s.getPath, dst),
-            s"graft-recluster: rename ${s.getPath} -> $dst failed")
-        }
-        fs.delete(trash, true)
+    val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
+      val dst = new Path(dir, s.getPath.getName)
+      require(fs.rename(s.getPath, dst),
+        s"graft-recluster: rename ${s.getPath} -> $dst failed")
+      dst.getName
+    }.toSet
+    CommitLog.commitUpdate(path, conf, operation = "recluster") { cur =>
+      if (cur.version != base.version) throw new IllegalStateException(
+        "graft-recluster: concurrent writer conflict — the table " +
+          s"moved from version ${base.version} to ${cur.version} " +
+          "during the rewrite; aborting (re-run against the current " +
+          "table)")
+      Some(CommitLog.Snapshot(cur.version, newNames, Set.empty))
     }
     // promote the staged write's layout declaration to the table dir
     // (the staged commit declared it inside the staging dir)
@@ -221,7 +187,7 @@ object GraftMaintenance {
    * provider scan applies their deletion vectors and equality deletes;
    * untouched files never enter the job), stage, swap.
    *
-   * COMMIT-LOGGED swap: rename the rewritten files in (invisible until
+   * The swap: rename the rewritten files in (invisible until
    * a manifest references them) and publish ONE manifest version
    * swapping the file sets. Nothing the prior version references is
    * physically deleted — [[expireSnapshots]] reclaims history. The
@@ -234,11 +200,9 @@ object GraftMaintenance {
    * ALL rewritten are fully applied and retire; partially-covered ones
    * stay (their keys were folded out of the rewritten files, which are
    * new and therefore exempt — remaining targets still need the probe).
-   *
-   * Log-less swap: two-phase via a trash dir, recoverable at every
-   * crash point. */
+   * The replaced files stay on disk until expire_snapshots. */
   private def rewriteFiles(spark: SparkSession, path: String,
-      base: Option[CommitLog.Snapshot], files: Array[Path],
+      base: CommitLog.Snapshot, files: Array[Path],
       outPartitions: Option[Int]): Int = {
     val conf = Dsv2Parquet.readConf
     val dir = new Path(path)
@@ -247,10 +211,9 @@ object GraftMaintenance {
     val schema = Dsv2Parquet.footerSchema(path)
     val staging = new Path(dir, s"_staging-compact-${java.util.UUID.randomUUID()}")
     val targets = files.map(_.toString).toSet
-    val reader = spark.read.format(fmt)
-    base.foreach(s =>
-      reader.option(Dsv2Parquet.VersionAsOfOption, s.version.toString))
-    val live0 = reader.load(path)
+    val live0 = spark.read.format(fmt)
+      .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
+      .load(path)
       .withColumn("__f", col(Dsv2Parquet.FileMetaColumn))
       .filter(col("__f").isInCollection(targets))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
@@ -259,70 +222,50 @@ object GraftMaintenance {
       .option(Dsv2Parquet.SchemaOption, schema.toDDL)
       .mode("append").save(staging.toString)
 
-    base match {
-      case Some(baseSnap) =>
-        val scannedSet = files.map(_.getName).toSet
-        val baseDvs = baseSnap.dvFiles.filter(v =>
-          Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))
-        val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
-          val dst = new Path(dir, s.getPath.getName)
-          require(fs.rename(s.getPath, dst),
-            s"graft-compact: rename ${s.getPath} -> $dst failed")
-          dst.getName
-        }.toSet
-        CommitRaceProbe.beforeCompactionPublish(path)
-        CommitLog.commitUpdate(path, conf,
-            operation = if (outPartitions.isEmpty) "compact" else "binpack"
-        ) { cur =>
-          val gone = scannedSet.filterNot(cur.dataFiles.contains)
-          if (gone.nonEmpty) throw new IllegalStateException(
-            "graft-compact: concurrent writer conflict — compacted " +
-              s"file(s) no longer in version ${cur.version}: " +
-              s"${gone.mkString(", ")}; aborting this compaction")
-          val newDvs = cur.dvFiles.filter(v =>
-            Dsv2Parquet.dvTarget(v).exists(scannedSet.contains)) -- baseDvs
-          if (newDvs.nonEmpty) throw new IllegalStateException(
-            "graft-compact: concurrent delta commit landed deletion " +
-              s"vector(s) on file(s) being compacted: " +
-              s"${newDvs.mkString(", ")}; aborting this compaction — " +
-              "publishing would lose those deletes")
-          val newEq = (cur.eqFiles -- baseSnap.eqFiles).filter(n =>
-            Dsv2Equality.read(dir, n, conf).targets
-              .exists(scannedSet.contains))
-          if (newEq.nonEmpty) throw new IllegalStateException(
-            "graft-compact: concurrent equality-delete commit targets " +
-              s"file(s) being compacted: ${newEq.mkString(", ")}; " +
-              "aborting this compaction — publishing would lose those " +
-              "deletes")
-          // an eq sidecar retires only when every target still live in
-          // the base was rewritten — else its remaining targets keep it
-          val applied = baseSnap.eqFiles.filter(n =>
-            Dsv2Equality.read(dir, n, conf).targets
-              .intersect(baseSnap.dataFiles).subsetOf(scannedSet))
-          Some(cur.copy(
-            dataFiles = cur.dataFiles -- scannedSet ++ newNames,
-            dvFiles = cur.dvFiles -- baseDvs,
-            eqFiles = cur.eqFiles -- applied))
-        }
-        fs.delete(staging, true)
-      case None =>
-        // two-phase swap, recoverable at every crash point
-        val trash = new Path(dir,
-          s"_trash-compact-${java.util.UUID.randomUUID()}")
-        fs.mkdirs(trash)
-        files.foreach { f =>
-          require(fs.rename(f, new Path(trash, f.getName)),
-            s"graft-compact: trash move of $f failed")
-        }
-        Dsv2Parquet.deleteDvsFor(fs, dir, files.map(_.getName))
-        Dsv2Parquet.dataFiles(staging.toString, conf).foreach { s =>
-          val dst = new Path(dir, s.getPath.getName)
-          require(fs.rename(s.getPath, dst),
-            s"graft-compact: rename ${s.getPath} -> $dst failed")
-        }
-        fs.delete(trash, true)
-        fs.delete(staging, true)
+    val scannedSet = files.map(_.getName).toSet
+    val baseDvs = base.dvFiles.filter(v =>
+      Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))
+    val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
+      val dst = new Path(dir, s.getPath.getName)
+      require(fs.rename(s.getPath, dst),
+        s"graft-compact: rename ${s.getPath} -> $dst failed")
+      dst.getName
+    }.toSet
+    CommitRaceProbe.beforeCompactionPublish(path)
+    CommitLog.commitUpdate(path, conf,
+        operation = if (outPartitions.isEmpty) "compact" else "binpack"
+    ) { cur =>
+      val gone = scannedSet.filterNot(cur.dataFiles.contains)
+      if (gone.nonEmpty) throw new IllegalStateException(
+        "graft-compact: concurrent writer conflict — compacted " +
+          s"file(s) no longer in version ${cur.version}: " +
+          s"${gone.mkString(", ")}; aborting this compaction")
+      val newDvs = cur.dvFiles.filter(v =>
+        Dsv2Parquet.dvTarget(v).exists(scannedSet.contains)) -- baseDvs
+      if (newDvs.nonEmpty) throw new IllegalStateException(
+        "graft-compact: concurrent delta commit landed deletion " +
+          s"vector(s) on file(s) being compacted: " +
+          s"${newDvs.mkString(", ")}; aborting this compaction — " +
+          "publishing would lose those deletes")
+      val newEq = (cur.eqFiles -- base.eqFiles).filter(n =>
+        Dsv2Equality.read(dir, n, conf).targets
+          .exists(scannedSet.contains))
+      if (newEq.nonEmpty) throw new IllegalStateException(
+        "graft-compact: concurrent equality-delete commit targets " +
+          s"file(s) being compacted: ${newEq.mkString(", ")}; " +
+          "aborting this compaction — publishing would lose those " +
+          "deletes")
+      // an eq sidecar retires only when every target still live in
+      // the base was rewritten — else its remaining targets keep it
+      val applied = base.eqFiles.filter(n =>
+        Dsv2Equality.read(dir, n, conf).targets
+          .intersect(base.dataFiles).subsetOf(scannedSet))
+      Some(cur.copy(
+        dataFiles = cur.dataFiles -- scannedSet ++ newNames,
+        dvFiles = cur.dvFiles -- baseDvs,
+        eqFiles = cur.eqFiles -- applied))
     }
+    fs.delete(staging, true)
     // rewritten file names are not bucket-aligned — retract any
     // declared clustered layout rather than let the scan report a
     // partitioning the files no longer prove
@@ -387,8 +330,8 @@ object GraftMaintenance {
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     require(CommitLog.enabled(path, conf),
-      s"graft-rollback: $path has no commit log (set " +
-        "TBLPROPERTIES('graft.commit.log'='true'))")
+      s"graft-rollback: $path has no commit log (graft has never " +
+        "written it)")
     val target = CommitLog.read(dir, version, conf)
     (target.dataFiles ++ target.dvFiles ++ target.eqFiles).foreach { f =>
       require(fs.exists(new Path(dir, f)),
@@ -425,9 +368,9 @@ object GraftMaintenance {
    * `olderThanMs` age guard is what keeps a LIVE writer's
    * renamed-but-not-yet-manifested files safe (a batch commit renames
    * staged files in BEFORE publishing the manifest) — pass 0 only when
-   * no writer can be in flight. Requires the commit log: on a log-less
-   * table the listing IS the state and nothing is orphaned. Returns
-   * the deleted file count. */
+   * no writer can be in flight. Requires the commit log: in a directory
+   * graft never wrote the listing IS the state and nothing is
+   * orphaned. Returns the deleted file count. */
   def removeOrphanFiles(path: String, olderThanMs: Long): Int = {
     require(olderThanMs >= 0,
       s"graft-orphans: older_than_ms must be >= 0, got $olderThanMs")

@@ -1225,7 +1225,7 @@ object ScaleSmoke {
             s"expected $files committed files")
           require(spark.read.format(fmt).load(p).count() == n,
             "write round-trip row count")
-          // overwrite: truncate (delete `files` old) + rename `files` new
+          // overwrite: retire `files` old in the manifest + rename `files` new
           val (_, owWall) = timed {
             src.repartition(files).write.format(fmt)
               .mode("overwrite").save(p)

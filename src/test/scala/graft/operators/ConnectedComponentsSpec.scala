@@ -42,4 +42,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     val e = intercept[IllegalStateException](clusters(chain, maxIter = 3))
     assert(e.getMessage.contains("did not converge"))
   }
+
+  test("a label sum that overflows decimal(38,0) is an error, not convergence") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+    // with ANSI off the overflowing sum is null, which must not read as
+    // a stalled (converged) sum
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val big = new java.math.BigDecimal("9" + "0" * 37)
+      val labels = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(big), Row(big))),
+        StructType(Seq(StructField("label", DecimalType(38, 0)))))
+      val e = intercept[ArithmeticException](Dedup.labelSum(labels))
+      assert(e.getMessage.contains("overflowed"))
+      assert(Dedup.labelSum(labels.limit(1)).compareTo(big) == 0)
+      assert(Dedup.labelSum(labels.limit(0)).signum == 0)
+    } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+  }
 }

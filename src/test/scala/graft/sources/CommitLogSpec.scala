@@ -306,22 +306,25 @@ class CommitLogSpec extends SparkSpec {
     }
   }
 
-  test("ALTER TABLE SET TBLPROPERTIES starts the log on a live table") {
+  test("a plain parquet table is imported by its first graft write") {
     withCatalog { cat =>
-      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT)")
+      // a table directory graft never wrote: plain parquet output
       val p = s"${root(cat)}/db/t"
       spark.range(1, 1001).select(col("id").as("k")).coalesce(1)
-        .writeTo(s"$cat.db.t").append()
+        .write.parquet(p)
       spark.range(1001, 2001).select(col("id").as("k")).coalesce(1)
-        .writeTo(s"$cat.db.t").append()
-      assert(!CommitLog.enabled(p, conf))
+        .write.mode("append").parquet(p)
+      // reads do not import it, and 'true' is accepted as a no-op
+      assert(spark.sql(s"SELECT k FROM $cat.db.t").count() == 2000L)
       spark.sql(
         s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('graft.commit.log'='true')")
-      assert(CommitLog.latest(p, conf).get.version == 1L)
-      assert(CommitLog.latest(p, conf).get.dataFiles == parquetFilesOnDisk(p))
-      // a file-aligned metadata DELETE now retires LOGICALLY: the
-      // dropped file stays on disk, readable at version 1
+      assert(!CommitLog.enabled(p, conf))
+      // the first write — here a file-aligned metadata DELETE — imports
+      // the listing as version 1 and retires LOGICALLY at version 2:
+      // the dropped file stays on disk, readable at version 1
       spark.sql(s"DELETE FROM $cat.db.t WHERE k <= 1000")
+      assert(CommitLog.read(new Path(p), 1L, conf).dataFiles ==
+        parquetFilesOnDisk(p))
       assert(CommitLog.latest(p, conf).get.version == 2L)
       assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long].collect().toSet ==
         (1001L to 2000L).toSet)
@@ -732,8 +735,10 @@ class CommitLogSpec extends SparkSpec {
       assert(parquetFilesOnDisk(p).size == 1)
       assert(spark.sql(s"SELECT k FROM $cat.db.t").count() == 10L)
       assert(CommitLog.versions(new Path(p), conf).length == 2)
-      // a log-less table is refused — its listing IS the state
-      spark.sql(s"CREATE TABLE $cat.db.nolog (k BIGINT)")
+      // a directory graft never wrote is refused — its listing IS the
+      // state
+      spark.range(3).select(col("id").as("k"))
+        .write.parquet(s"${root(cat)}/db/nolog")
       assertCauseContains(intercept[Throwable] {
         spark.sql(s"CALL $cat.system.remove_orphan_files('db.nolog', 0)")
           .collect()

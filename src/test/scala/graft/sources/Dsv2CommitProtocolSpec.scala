@@ -98,20 +98,26 @@ class Dsv2CommitProtocolSpec extends SparkSpec {
     }
   }
 
-  test("overwrite stages the old files into a trash dir and drops it " +
-      "only after the staged renames land") {
+  test("overwrite retires old files in the manifest, leaving no staging " +
+      "residue") {
     withTmp { tmp =>
       val p = s"$tmp/t"
       spark.range(10).select(col("id").as("k")).write.format(fmt)
         .option(Dsv2Parquet.SchemaOption, "k BIGINT").mode("append").save(p)
       spark.range(100, 103).select(col("id").as("k")).write.format(fmt)
         .mode("overwrite").save(p)
-      // committed state is the replacement, and no trash residue remains
+      // committed state is the replacement; the replaced file stays on
+      // disk, readable at version 1, until expire_snapshots
+      assert(spark.read.format(fmt).load(p).as[Long].collect().sorted.toSeq ==
+        Seq(100L, 101L, 102L))
+      assert(spark.read.format(fmt).option(Dsv2Parquet.VersionAsOfOption, "1")
+        .load(p).count() == 10L)
+      val residue = new java.io.File(p).listFiles()
+        .map(_.getName).filter(_.startsWith("_staging-"))
+      assert(residue.isEmpty, residue.toSeq.toString)
+      GraftMaintenance.expireSnapshots(p, 1)
       assert(spark.read.parquet(p).as[Long].collect().sorted.toSeq ==
         Seq(100L, 101L, 102L))
-      val residue = new java.io.File(p).listFiles()
-        .map(_.getName).filter(_.startsWith("_trash-"))
-      assert(residue.isEmpty, residue.toSeq.toString)
     }
   }
 
@@ -127,7 +133,7 @@ class Dsv2CommitProtocolSpec extends SparkSpec {
         bw.commit(Array(GraftParquetCommitMessage(
           Some(s"$p/_staging-spec-vanish/ghost.parquet"), 1L)))
       }
-      // verification runs BEFORE the trash move: the table still reads
+      // verification runs BEFORE any rename: the table still reads
       assert(spark.read.parquet(p).count() == 5L)
     }
   }

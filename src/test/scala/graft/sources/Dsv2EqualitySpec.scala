@@ -312,14 +312,16 @@ class Dsv2EqualitySpec extends SparkSpec {
       spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
       try {
-        spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT)")
+        // a directory graft never wrote: the compaction imports it
         spark.range(1000).select(col("id").as("k")).repartition(5)
-          .writeTo(s"$cat.db.t").append()
+          .write.parquet(s"$tmp/db/t")
+        assert(!CommitLog.enabled(s"$tmp/db/t", conf))
         assert(Dsv2Parquet.dataFiles(s"$tmp/db/t", conf).length == 5)
         val packed = spark.sql(
           s"CALL $cat.system.compact_small_files('db.t', 64)").collect()
         assert(packed.head.getInt(0) == 5)
         assert(Dsv2Parquet.dataFiles(s"$tmp/db/t", conf).length == 1)
+        assert(CommitLog.latest(s"$tmp/db/t", conf).get.version == 2L)
         assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long]
           .collect().toSet == (0L until 1000L).toSet)
       } finally {
@@ -561,6 +563,63 @@ class Dsv2EqualitySpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
       val ks = spark.table(sink).select("k").as[Long].collect().toSet
       assert(ks == (1L until 200L by 2).toSet)
+    }
+  }
+
+  test("eq commit on a directory graft never wrote imports it first") {
+    withTmp { tmp =>
+      val p = s"$tmp/plain"
+      spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
+        .coalesce(1).write.parquet(p)
+      assert(!CommitLog.enabled(p, conf))
+      EqualityRepair.commit(spark, p, Seq("k"), Seq(3L, 4L).toDF("k"),
+        Seq((4L, 40L), (500L, 1L)).toDF("k", "v"))
+      // version 1 is the listing as found, version 2 the repair
+      assert(CommitLog.versions(new org.apache.hadoop.fs.Path(p), conf)
+        .toSeq == Seq(1L, 2L))
+      assert(spark.read.format(fmt).option(Dsv2Parquet.VersionAsOfOption, "1")
+        .load(p).count() == 100L)
+      val got = spark.read.format(fmt).load(p)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size == 100 - 2 + 2)
+      assert(!got.contains(3L) && got(4L) == 40L && got(500L) == 1L)
+    }
+  }
+
+  test("eq commit inserts follow store assignment: a mistyped column or " +
+      "an overflow fails with the table unchanged") {
+    withTmp { tmp =>
+      val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+      // with ANSI off a plain cast would commit null / a wrapped value
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try {
+        val p = mkTable(tmp)
+        val before = CommitLog.latest(p, conf).get.version
+        def unchanged(): Unit = {
+          assert(CommitLog.latest(p, conf).get.version == before)
+          assert(spark.read.format(fmt).load(p).count() == 1000L)
+        }
+        // a string into the BIGINT column v: refused before staging
+        val e1 = intercept[IllegalArgumentException] {
+          EqualityRepair.commit(spark, p, Seq("k"), Seq(7L).toDF("k"),
+            Seq((7L, "s7", "not a number")).toDF("k", "s", "v"))
+        }
+        assert(e1.getMessage.contains("cannot store insert column v"))
+        unchanged()
+        // 2^40 into an INT column: store-assignable, so the ANSI cast
+        // fails the job instead of wrapping
+        val q = s"$tmp/narrow"
+        Seq((1L, 1)).toDF("k", "i").coalesce(1).write.format(fmt)
+          .option(Dsv2Parquet.SchemaOption, "k BIGINT, i INT")
+          .mode("append").save(q)
+        intercept[Exception] {
+          EqualityRepair.commit(spark, q, Seq("k"), Seq(1L).toDF("k"),
+            Seq((1L, 1L << 40)).toDF("k", "i"))
+        }
+        assert(CommitLog.latest(q, conf).get.version == 1L)
+        assert(spark.read.format(fmt).load(q).as[(Long, Int)].collect()
+          .toSeq == Seq((1L, 1)))
+      } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
     }
   }
 }

@@ -79,7 +79,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
         w.mode("append").save(p)
 
         // random deletion vector: subset positions, split across 1-3
-        // sidecars to exercise the union
+        // sidecars to exercise the union, published in one version
         val conf = new org.apache.hadoop.conf.Configuration()
         val dv: Set[Long] =
           if (rnd.nextInt(3) == 0) Set.empty
@@ -88,8 +88,10 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
           val fileName = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
           val parts = dv.toArray.sorted
             .grouped(math.max(1, dv.size / (1 + rnd.nextInt(3)))).toSeq
-          parts.foreach(ps => Dsv2Parquet.writeDvSidecar(
+          val sidecars = parts.map(ps => Dsv2Parquet.writeDvSidecar(
             new org.apache.hadoop.fs.Path(p), fileName, ps, conf))
+          CommitLog.commitUpdate(p, conf, "delta")(cur =>
+            Some(cur.copy(dvFiles = cur.dvFiles ++ sidecars)))
         }
 
         def norm(r: Row): Seq[String] = r.toSeq.map {
@@ -227,15 +229,17 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
   }
 
   /** Randomized OPERATION SEQUENCES against a driver-side model: each
-   * iteration creates a catalog table (random copy-on-write /
-   * merge-on-read, random commit-log-from-birth) and runs a random
-   * program of append / row-level DELETE / MERGE / INSERT OVERWRITE /
-   * TRUNCATE / major+minor compaction / merge-mode switch / mid-life
-   * log enable / equality repair / rollback_to_version /
+   * iteration starts from one of two states — a catalog table from
+   * CREATE TABLE (random copy-on-write / merge-on-read), or a plain
+   * parquet directory that the first graft write imports — and runs a
+   * random program of append / row-level DELETE / MERGE / INSERT
+   * OVERWRITE / TRUNCATE / major+minor compaction / merge-mode switch /
+   * no-op `graft.commit.log` SET / equality repair / rollback_to_version /
    * remove_orphan_files / complete-mode streaming epoch, comparing the
-   * FULL table contents with an in-memory Map after every step. On logged tables every published version's expected
-   * state is recorded and re-read via SQL `VERSION AS OF` at the end,
-   * then expire_snapshots(1) must keep exactly the final state. The
+   * FULL table contents with an in-memory Map after every step. Every
+   * published version's expected state after a step is recorded and
+   * re-read via SQL `VERSION AS OF` at the end, then
+   * expire_snapshots(1) must keep exactly the final state. The
    * randomized complement of CommitLogSpec's shape-targeted cases:
    * commit composition (delta-after-compact, overwrite-after-delta,
    * mode switches with live DVs) arises by volume. Seeded, so any
@@ -252,14 +256,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
         val p = s"$tmp/db/t"
         val conf = Dsv2Parquet.readConf
         var mor = rnd.nextBoolean()
-        var logged = rnd.nextBoolean()
-        val props = Seq(
-          Some(s"'${Dsv2Parquet.MergeModeProperty}'='" +
-            s"${if (mor) Dsv2Parquet.MergeOnRead else Dsv2Parquet.CopyOnWrite}'"),
-          if (logged) Some(s"'${Dsv2Parquet.CommitLogProperty}'='true'")
-          else None).flatten.mkString(", ")
-        spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
-          s"TBLPROPERTIES ($props)")
+        val plain = rnd.nextBoolean()
 
         val model = scala.collection.mutable.Map.empty[Long, Long]
         var nextKey = 0L
@@ -271,17 +268,26 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
         def freshRows(m: Int): Seq[(Long, Long)] = (0 until m).map { _ =>
           nextKey += 1; (nextKey, rnd.nextInt(1 << 20).toLong)
         }
-        def checkpoint(): Unit = if (logged)
-          history(CommitLog.latest(p, conf).get.version) = model.toMap
+        if (plain) {
+          // a directory graft never wrote, in the default mode
+          mor = false
+          val rows = freshRows(50 + rnd.nextInt(200))
+          df(rows).write.parquet(p)
+          model ++= rows
+        } else spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+          s"TBLPROPERTIES ('${Dsv2Parquet.MergeModeProperty}'='" +
+          s"${if (mor) Dsv2Parquet.MergeOnRead else Dsv2Parquet.CopyOnWrite}')")
+        def checkpoint(): Unit =
+          CommitLog.latest(p, conf).foreach(s => history(s.version) = model.toMap)
 
         // row-level operations refuse live equality deletes — fold
         // first, exactly as a production maintenance schedule would
         def foldEqIfLive(): Unit =
-          if (logged && CommitLog.latest(p, conf).exists(_.eqFiles.nonEmpty))
+          if (CommitLog.latest(p, conf).exists(_.eqFiles.nonEmpty))
             GraftMaintenance.compactDeletionVectors(spark, p): Unit
 
         (0 until 6).foreach { step =>
-          rnd.nextInt(if (logged) 13 else 9) match {
+          rnd.nextInt(13) match {
             case 0 | 1 => // append a fresh batch
               val rows = freshRows(50 + rnd.nextInt(200))
               df(rows).writeTo(s"$cat.db.t").append()
@@ -327,17 +333,15 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
                 else Dsv2Parquet.CopyOnWrite
               spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES " +
                 s"('${Dsv2Parquet.MergeModeProperty}'='$mode')")
-            case 7 => // mid-life log enable (idempotent when already on)
+            case 7 => // 'true' is accepted, and changes nothing
               spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES " +
                 s"('${Dsv2Parquet.CommitLogProperty}'='true')")
-              logged = true
             case 8 => // TRUNCATE TABLE: the deleteWhere(AlwaysTrue) face
-              // — logical retire on logged tables (and eq/DV sidecar
-              // pruning), physical delete otherwise
+              // — logical retire (and eq/DV sidecar pruning)
               spark.sql(s"TRUNCATE TABLE $cat.db.t")
               model.clear()
             case 9 => // equality repair: delete a band by KEY + insert
-              // fresh rows in one manifest commit (logged tables only)
+              // fresh rows in one manifest commit
               val m = 6 + rnd.nextInt(6)
               val r = rnd.nextInt(m)
               val victims = model.keys.filter(_ % m == r).toSeq.sorted
@@ -347,7 +351,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
               victims.foreach(model.remove)
               model ++= inserts
             case 10 => // rollback to a recorded version: the model IS
-              // that version's recorded expected state (logged only)
+              // that version's recorded expected state
               if (history.nonEmpty) {
                 val versions = history.keys.toSeq.sorted
                 val target = versions(rnd.nextInt(versions.length))
@@ -358,12 +362,14 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
                 model ++= history(target)
               }
             case 11 => // orphan GC mid-program: must delete nothing any
-              // published version references (step + end checks prove it)
-              spark.sql(s"CALL $cat.system.remove_orphan_files('db.t', 0)")
-                .collect(): Unit
+              // published version references (step + end checks prove
+              // it); a directory not yet imported is refused
+              if (CommitLog.enabled(p, conf))
+                spark.sql(s"CALL $cat.system.remove_orphan_files('db.t', 0)")
+                  .collect(): Unit
             case 12 => // complete-mode streaming epoch: the published
               // snapshot IS the epoch's rows — prior files (and any eq
-              // sidecars targeting them) retire logically (logged only)
+              // sidecars targeting them) retire logically
               val rows = freshRows(20 + rnd.nextInt(50))
               val schema = org.apache.spark.sql.types.StructType.fromDDL(
                 "k BIGINT, v BIGINT")
@@ -395,7 +401,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
           assert(got == expected, s"iter=$iter VERSION AS OF $version")
         }
-        if (logged) {
+        if (CommitLog.enabled(p, conf)) {
           spark.sql(s"CALL $cat.system.expire_snapshots('db.t', 1)").collect()
           val got = spark.sql(s"SELECT k, v FROM $cat.db.t").collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -72,8 +72,11 @@ class Dsv2WriteSpec extends SparkSpec {
       val repl = fixture.filter(col("k") < 10)
       repl.write.format(fmt).mode("overwrite").save(p)
       assert(Dsv2WriteProbe.forPath(p).lastTruncated.get() > 0)
-      assert(rows(spark.read.parquet(p)) == rows(repl))
       assert(rows(spark.read.format(fmt).load(p)) == rows(repl))
+      // the truncated files stay on disk until expire_snapshots
+      assert(spark.read.parquet(p).count() == 200L + repl.count())
+      GraftMaintenance.expireSnapshots(p, 1)
+      assert(rows(spark.read.parquet(p)) == rows(repl))
     }
   }
 
