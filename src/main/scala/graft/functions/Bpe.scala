@@ -52,7 +52,7 @@ final class BpeMerges(val pairs: Array[(String, String)]) extends Serializable {
    * ~64k entries; @transient — the task binary ships the merges,
    * each executor warms its own memo. Entries are immutable
    * UTF8String arrays, safe to share across rows and threads.
-   * Measured (Profile, sf0.1): encode 0.72s → 0.49s, parity with the
+   * Measured r15 (BASELINE.md, sf0.1): encode 0.72s → 0.49s, parity with the
    * subword hash-probe kernel. */
   @transient private lazy val memo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[UTF8String]]()

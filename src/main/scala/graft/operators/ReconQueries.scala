@@ -67,7 +67,7 @@ object ReconQueries {
    * primary key — unique by construction, like any real Cassandra scan
    * — so the wired queries run with `trustUniquePk` (the defensive
    * first-element dropDuplicates is pure cost here: 1.11s → 0.73s
-   * classify at sf0.1, tools/Profile r07). Parity mode stays the
+   * classify at sf0.1, measured r07 — BASELINE.md). Parity mode stays the
    * engine default and keeps its duplicate-keys spec. */
   private val Trusted = Settings(trustUniquePk = true)
 

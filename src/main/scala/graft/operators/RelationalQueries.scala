@@ -41,7 +41,7 @@ object RelationalQueries {
    * last-ulp disagreements double sums do, and there is no per-row
    * double→BigDecimal conversion the way the previous decimal(18,4)
    * cast had (that cast was 3× of q1's aggregate time: 1.03s → 0.36s
-   * median at sf0.1 — see tools/Profile).
+   * median at sf0.1 — recorded in BASELINE.md's r06 row).
    *
    * Overflow headroom: the scaled values are split into high/low long
    * sums via bit ops (shiftright/mask — Column./ is DOUBLE division in

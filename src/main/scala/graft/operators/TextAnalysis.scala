@@ -75,8 +75,8 @@ object TextAnalysis {
    * ARRAY is materialized as an attribute in a first projection
    * (higher-order `filter` keeps these projections out of whole-stage
    * codegen, where no common-subexpression elimination runs — the
-   * inlined form re-split the text per consumer; measured in
-   * tools/TokGateProbe). */
+   * inlined form re-split the text per consumer; measured r15, see
+   * BASELINE.md's r15 row). */
   private def labeledDocs(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).select(
       col("doc_id"), toks.as("t0"),

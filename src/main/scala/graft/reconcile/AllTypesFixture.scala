@@ -84,15 +84,23 @@ object AllTypesFixture {
    * while the DuckDB oracle still derives its side independently from
    * `range()` (the design guarantee — no parquet fixture file — is
    * untouched, and AllTypesFixtureSpec pins checkpoint ≡ fresh build).
-   * Keyed per application: a restarted context re-derives (checkpointed
-   * blocks die with their executors). */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+   * Keyed per (application id, side): a restarted context re-derives
+   * (checkpointed blocks die with their executors), and adding a key
+   * drops every other application's entries, so a stopped context's
+   * frames do not outlive it. */
+  private[reconcile] val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), DataFrame]()
 
-  private def memoized(spark: SparkSession, mvSide: Boolean): DataFrame =
-    memo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}-$mvSide",
-      _ => build(spark, mvSide).localCheckpoint())
+  private def memoized(spark: SparkSession, mvSide: Boolean): DataFrame = {
+    val app = spark.sparkContext.applicationId
+    val hit = memo.get((app, mvSide))
+    if (hit != null) hit
+    else {
+      memo.keySet().removeIf(_._1 != app)
+      memo.computeIfAbsent((app, mvSide),
+        _ => build(spark, mvSide).localCheckpoint())
+    }
+  }
 
   def base(spark: SparkSession): DataFrame = memoized(spark, mvSide = false)
   def mv(spark: SparkSession): DataFrame = memoized(spark, mvSide = true)

@@ -125,12 +125,7 @@ object CommitLog {
     require(fs.exists(p),
       s"graft-manifest: version $version of $dir does not exist " +
         "(never published, or expired)")
-    val in = fs.open(p)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-      bos.toString("UTF-8")
-    } finally in.close()
+    val text = Dsv2Parquet.readText(fs, p)
     val snap = parse(text, version)
     cache.put(key, snap)
     snap
@@ -284,12 +279,7 @@ object CommitLog {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val ddl = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val ddl = Dsv2Parquet.readText(fs, p)
       // the manifest format is line-based — a DDL that somehow grew a
       // newline is unrecordable, not a reason to fail the commit
       if (ddl.nonEmpty && !ddl.contains('\n')) Some(ddl) else None

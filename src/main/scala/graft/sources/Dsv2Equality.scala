@@ -283,8 +283,9 @@ object EqualityRepair {
       }
     }
     // a plain parquet directory is imported here, before the job below
-    // places any file in it
-    val base = CommitLog.begin(path, conf)
+    // stages any file
+    val commit = StagedCommit.fresh(path, "eq")
+    val base = commit.base
     // one key tuple per table: a second repair must agree with the
     // sidecars still LIVE (compaction retires them; sidecars whose
     // targets were all retired are inert and don't constrain the key)
@@ -308,9 +309,9 @@ object EqualityRepair {
     // IN SPARK (CAST AS STRING, null keys refused at runtime) exactly
     // as before; insert rows flow through the same
     // GraftRowParquetWriterBuilder the DSv2 writer uses (same codec,
-    // same InternalRow write support), staged invisibly and renamed in
-    // under the single CAS manifest publish. Only O(#partitions) file
-    // names return to the driver.
+    // same InternalRow write support). Both kinds are written into the
+    // commit's staging dir and promoted under the single CAS manifest
+    // publish. Only O(#partitions) file names return to the driver.
     //
     // The empty-insert guard stays SCHEMA-based, not isEmpty (r21):
     // isEmpty EXECUTED the whole insert subtree once. A pure-delete
@@ -321,7 +322,7 @@ object EqualityRepair {
     val bTargets = spark.sparkContext.broadcast(targets)
     val slices = math.min(8, math.max(1,
       deleteKeys.rdd.getNumPartitions))
-    val staging = s"$path/_staging-eq-${UUID.randomUUID()}"
+    val staging = commit.dir
     val delSide = deleteKeys.select(
       (canon.as("_ek") +: tableSchema.fields.toIndexedSeq.map(f =>
         lit(null).cast(f.dataType).as(f.name))): _*)
@@ -335,8 +336,7 @@ object EqualityRepair {
           tableSchema.fields.toIndexedSeq.map(f =>
             ansiCast(col(f.name), f.dataType).as(f.name))): _*))
     val writeSchema = tableSchema
-    try {
-    val names: Array[(Boolean, String)] =
+    val names: Array[String] = commit.stage {
       tagged.queryExecution.toRdd.mapPartitions { it =>
         import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
         val wConf = Dsv2Parquet.readConf
@@ -375,55 +375,40 @@ object EqualityRepair {
             file.getFileSystem(wConf).delete(file, false): Unit
           throw e
         }
-        val insertName = Option(file).map(f => (true, f.getName))
         val eqName =
           if (keys.isEmpty) None
-          else Some((false, Dsv2Equality.write(new Path(path), kc,
-            bTargets.value, keys.iterator, wConf)))
-        (insertName.iterator ++ eqName.iterator).toArray.iterator
+          else Some(Dsv2Equality.write(new Path(staging), kc,
+            bTargets.value, keys.iterator, wConf))
+        (Option(file).map(_.getName).iterator ++ eqName.iterator)
       }.collect()
-    val eqNames: Array[String] = names.collect { case (false, n) => n }
-    val insertNames: Set[String] = {
-      val staged = names.collect { case (true, n) => n }
-      val fs = new Path(path).getFileSystem(conf)
-      staged.map { n =>
-        val dst = new Path(path, n)
-        require(fs.rename(new Path(staging, n), dst),
-          s"graft-eq: rename $staging/$n -> $dst failed")
-        dst.getName
-      }.toSet
     }
-      CommitRaceProbe.beforeEqPublish(path)
-      CommitLog.commitUpdate(path, conf, operation = "eq-repair",
-          base = Some(base)) { cur =>
-        // a targeted file retired by a concurrent rewrite means its
-        // replacement does NOT carry these deletes — abort, never lose
-        val gone = targets.filterNot(cur.dataFiles.contains)
-        if (gone.nonEmpty) throw new IllegalStateException(
-          "graft-eq commit: concurrent writer conflict — targeted " +
-            s"file(s) no longer in version ${cur.version}: " +
-            s"${gone.mkString(", ")}")
-        // re-prove the one-key-tuple invariant against CUR, not just
-        // the pre-job base (r20 advice): two concurrent FIRST repairs
-        // with different key tuples both passed the base check (no
-        // sidecars yet) — without this, both publish and every later
-        // scan fails the sidecars-agree require, including the
-        // compact_table fold needed to repair it
-        Dsv2Equality.liveSidecars(new Path(path), cur, conf)
-            .headOption.foreach { prev =>
-          if (!prev.keyCols.sameElements(kc)) throw new IllegalStateException(
-            "graft-eq commit: concurrent repair conflict — table now " +
-              s"carries equality deletes keyed by " +
-              s"${prev.keyCols.mkString(",")}, not ${kc.mkString(",")}; " +
-              "fold them (compact_table) before changing the key tuple")
-        }
-        Some(cur.copy(dataFiles = cur.dataFiles ++ insertNames,
-          eqFiles = cur.eqFiles ++ eqNames))
-      }: Unit
-    } finally {
-      val fs = new Path(path).getFileSystem(conf)
-      fs.delete(new Path(staging), true): Unit
-    }
+    val (eqNames, insertNames) =
+      names.partition(_.startsWith(Dsv2Equality.EqPrefix))
+    commit.publish("eq-repair", names.toSeq.map(new Path(staging, _))) { cur =>
+      // a targeted file retired by a concurrent rewrite means its
+      // replacement does NOT carry these deletes — abort, never lose
+      val gone = targets.filterNot(cur.dataFiles.contains)
+      if (gone.nonEmpty) throw new IllegalStateException(
+        "graft-eq commit: concurrent writer conflict — targeted " +
+          s"file(s) no longer in version ${cur.version}: " +
+          s"${gone.mkString(", ")}")
+      // re-prove the one-key-tuple invariant against CUR, not just
+      // the pre-job base (r20 advice): two concurrent FIRST repairs
+      // with different key tuples both passed the base check (no
+      // sidecars yet) — without this, both publish and every later
+      // scan fails the sidecars-agree require, including the
+      // compact_table fold needed to repair it
+      Dsv2Equality.liveSidecars(new Path(path), cur, conf)
+          .headOption.foreach { prev =>
+        if (!prev.keyCols.sameElements(kc)) throw new IllegalStateException(
+          "graft-eq commit: concurrent repair conflict — table now " +
+            s"carries equality deletes keyed by " +
+            s"${prev.keyCols.mkString(",")}, not ${kc.mkString(",")}; " +
+            "fold them (compact_table) before changing the key tuple")
+      }
+      Some(cur.copy(dataFiles = cur.dataFiles ++ insertNames,
+        eqFiles = cur.eqFiles ++ eqNames))
+    }: Unit
   }
 }
 

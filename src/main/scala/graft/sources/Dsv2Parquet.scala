@@ -1217,6 +1217,13 @@ private[graft] object Dsv2Parquet {
    * SMJ plans without per-partition sorts. */
   val ClusteringFileName = "_clustering"
 
+  /** A small metadata file's whole text (manifest, DDL, ledger, layout). */
+  private[sources] def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
   /** Parse the clustering sidecar; None when absent/undeclared.
    * (clusterCols, numBuckets, sortWithinCols — empty when unsorted). */
   def clustering(path: String, conf: Configuration)
@@ -1225,12 +1232,7 @@ private[graft] object Dsv2Parquet {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val text = readText(fs, p)
       text.split("\n").filter(_.nonEmpty) match {
         case Array(cols, num) =>
           num.toIntOption.map(n =>
@@ -1241,6 +1243,34 @@ private[graft] object Dsv2Parquet {
         case _ => None
       }
     }
+  }
+
+  /** Declare the table's clustered layout: written atomically (temp +
+   * rename over), the same discipline as the catalog DDL. */
+  private[sources] def declareClustering(path: String, cols: Array[String],
+      n: Int, sort: Array[String], conf: Configuration): Unit = {
+    val sidecar = new Path(path, ClusteringFileName)
+    val fs = sidecar.getFileSystem(conf)
+    val tmp = new Path(path,
+      s"$ClusteringFileName.tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write((cols.mkString(",") + "\n" + n +
+      (if (sort.nonEmpty) "\n" + sort.mkString(",") else "") + "\n")
+      .getBytes("UTF-8"))
+    finally out.close()
+    if (fs.exists(sidecar)) fs.delete(sidecar, false)
+    require(fs.rename(tmp, sidecar),
+      "graft-parquet commit: clustering sidecar rename failed")
+  }
+
+  /** Retract any declared layout: a commit whose files are not bucket
+   * aligned (an unclustered append, a row-level rewrite, compaction, a
+   * streaming epoch, a rollback) leaves the table without one. */
+  private[sources] def retractClustering(path: String,
+      conf: Configuration): Unit = {
+    val sidecar = new Path(path, ClusteringFileName)
+    val fs = sidecar.getFileSystem(conf)
+    if (fs.exists(sidecar)) fs.delete(sidecar, false): Unit
   }
 
   /** `_file` metadata column: the data file a row came from — the
@@ -1259,8 +1289,8 @@ private[graft] object Dsv2Parquet {
   // ---- deletion-vector sidecars (merge-on-read row-level ops) ----
   // `_dv-<datafile>-<uuid>.bin` beside its data file: sorted
   // file-absolute row positions the scan must drop. Format: magic,
-  // count, longs. Each delta COMMIT writes its own IMMUTABLE sidecar
-  // (atomic tmp + rename, never read-modify-write), and readers union
+  // count, longs. Each delta COMMIT stages its own IMMUTABLE sidecar
+  // (promoted with its commit, never read-modify-write), and readers union
   // every sidecar of their file — so concurrent delta commits COMMUTE
   // (set union): no lost deletes without any lock service, the
   // Iceberg multiple-delete-files stance. Sidecars die with their
@@ -1281,7 +1311,7 @@ private[graft] object Dsv2Parquet {
   val PropsFileName = "_props"
 
   /** JVM-wide deletion-vector cache. Sidecars are IMMUTABLE once
-   * renamed in, so the (path, mtime, length) key can never serve stale
+   * promoted, so the (path, mtime, length) key can never serve stale
    * positions; absence is never cached (readers get the sidecar LIST
    * from the driver's planning-time listing — snapshot semantics). */
   private val dvCache = new java.util.concurrent.ConcurrentHashMap[
@@ -1319,24 +1349,20 @@ private[graft] object Dsv2Parquet {
     else sidecars.flatMap(s => readDvSidecar(new Path(s), conf))
       .distinct.sorted
 
-  /** Publish ONE commit's positions for one data file as a fresh
-   * immutable sidecar (tmp + atomic rename to a unique name); returns
-   * the sidecar's name (the caller adds it to the next manifest). */
+  /** Write ONE commit's positions for one data file as a fresh
+   * immutable sidecar under `dir` (a commit's staging dir) and return
+   * its unique name; it is invisible until a manifest names it. */
   def writeDvSidecar(dir: Path, dataFileName: String,
       positions: Array[Long], conf: Configuration): String = {
-    val fs = dir.getFileSystem(conf)
-    val tmp = new Path(dir, s".dvtmp-${java.util.UUID.randomUUID()}")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
+    val name = s"$DvPrefix$dataFileName-${java.util.UUID.randomUUID()}.bin"
+    val out = new java.io.DataOutputStream(
+      dir.getFileSystem(conf).create(new Path(dir, name), true))
     try {
       out.writeInt(DvMagic)
       out.writeInt(positions.length)
       positions.foreach(out.writeLong)
     } finally out.close()
-    val dst = new Path(dir,
-      s"$DvPrefix$dataFileName-${java.util.UUID.randomUUID()}.bin")
-    require(fs.rename(tmp, dst),
-      s"graft-parquet: deletion-vector rename failed for $dst")
-    dst.getName
+    name
   }
 
   /** The table's sidecar map from ONE directory listing:
@@ -1767,12 +1793,7 @@ private[graft] object Dsv2Parquet {
       val sf = new Path(path, SchemaFileName)
       val fs = sf.getFileSystem(conf)
       require(fs.exists(sf), s"no parquet data files under $path")
-      val in = fs.open(sf)
-      val ddl = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val ddl = readText(fs, sf)
       return StructType.fromDDL(ddl)
     }
     fileFooters(files, conf).map { case (schema, _, _) =>

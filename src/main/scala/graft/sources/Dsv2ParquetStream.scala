@@ -79,12 +79,7 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
   private def loadLog(): Unit = {
     val fs = logPath.getFileSystem(conf)
     if (fs.exists(logPath)) {
-      val in = fs.open(logPath)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val text = Dsv2Parquet.readText(fs, logPath)
       text.split("\n").filter(_.nonEmpty).foreach { line =>
         val Array(file, rangesStr) = line.split("\t", 2)
         val ranges = rangesStr.split(",").filter(_.nonEmpty).map { r =>

@@ -30,22 +30,21 @@ import org.apache.spark.sql.types._
  * [[GraftParquetWriterFactory.createWriter]].
  *
  * Commit protocol (the part a file-based sink genuinely needs and a
- * CQL sink replaces with idempotent writes): every task writes to
- * `path/_staging-<queryId>/` — a `_`-prefixed directory [[Dsv2Parquet
- * .dataFiles]] never lists, so concurrent readers cannot observe
- * uncommitted rows. Task commit closes the file and reports it in the
- * [[GraftParquetCommitMessage]]; job [[GraftParquetBatchWrite.commit]]
- * renames exactly the files named by the messages into `path` (a retry
- * or speculative attempt whose message never reached the driver leaves
- * only invisible staging garbage, removed with the staging dir), and
- * ONE CAS manifest publish ([[CommitLog]]) is the commit point: renamed
- * files are invisible until a manifest names them. Job
- * [[GraftParquetBatchWrite.abort]] deletes the staging dir — committed
- * data is untouched by a failed write. TRUNCATE (mode=overwrite) and a
+ * CQL sink replaces with idempotent writes) is [[StagedCommit]]'s, the
+ * one every graft write shares: tasks write into its staging dir, which
+ * no listing sees; a task that fails deletes its partial file; task
+ * commit reports the closed file in a [[GraftParquetCommitMessage]].
+ * Job [[GraftParquetBatchWrite.commit]] hands exactly the reported
+ * files to [[StagedCommit.publish]], which promotes them and makes ONE
+ * CAS manifest publish ([[CommitLog]]) the commit point; a retry or
+ * speculative attempt whose message never reached the driver is
+ * dropped with the staging dir. A failed job
+ * ([[GraftParquetBatchWrite.abort]]) or a failed publish leaves the
+ * table and its directory as they were. TRUNCATE (mode=overwrite) and a
  * filter overwrite retire the replaced files from the manifest; the
  * files stay on disk for time travel until `expire_snapshots`. The
  * first write into a plain parquet directory imports its listing as
- * version 1 before any rename ([[CommitLog.begin]]).
+ * version 1 before any file is promoted ([[CommitLog.begin]]).
  *
  * Scale shape: one output file per non-empty task partition, written
  * through parquet's buffered page writer — no driver-side data, no
@@ -154,90 +153,57 @@ private[sources] case class GraftParquetBatchWrite(path: String,
     bloomNdv: Long = 0L)
     extends BatchWrite {
 
-  private val stagingDir = s"$path/_staging-$queryId"
+  private val staging = StagedCommit(path, queryId)
 
-  /** Maintain the clustering sidecar AFTER the data renames: a
-   * clustered fixed-width commit declares (or re-declares) the layout;
-   * any commit that breaks the every-file-is-one-bucket invariant —
-   * unclustered append, or a re-cluster whose columns/width differ
-   * from the declared ones on a non-truncating append — retracts it.
-   * Written atomically (temp + rename over), same discipline as the
-   * catalog DDL. */
-  private def maintainClustering(fs: org.apache.hadoop.fs.FileSystem,
-      committed: Set[String]): Unit = {
-    val sidecar = new Path(path, Dsv2Parquet.ClusteringFileName)
-    def desc(cols: Array[String], n: Int, sort: Array[String]): String =
-      cols.mkString(",") + "\n" + n +
-        (if (sort.nonEmpty) "\n" + sort.mkString(",") else "") + "\n"
-    val declared: Option[String] =
-      if (clusterBy.nonEmpty && numPartitions > 0)
-        Some(desc(clusterBy, numPartitions, sortWithin))
-      else None
-    val existing: Option[String] =
-      if (truncateFirst) None
-      else Dsv2Parquet.clustering(path, Dsv2Parquet.readConf)
-        .map { case (cols, n, sort) => desc(cols, n, sort) }
+  /** Maintain the clustering sidecar AFTER the publish: a clustered
+   * fixed-width commit declares (or re-declares) the layout; any commit
+   * that breaks the every-file-is-one-bucket invariant — unclustered
+   * append, or a re-cluster whose columns/width differ from the
+   * declared ones on a non-truncating append — retracts it. */
+  private def maintainClustering(committed: Set[String]): Unit = {
+    val conf = Dsv2Parquet.readConf
+    def sameAsDeclared: Boolean = Dsv2Parquet.clustering(path, conf)
+      .exists { case (cols, n, sort) => cols.sameElements(clusterBy) &&
+        n == numPartitions && sort.sameElements(sortWithin) }
     // pre-existing data the commit did NOT write: a clustered append
     // beside it may only declare when those files already carry the
     // same declared layout
     def tableWasEmpty: Boolean =
-      Dsv2Parquet.dataFiles(path, Dsv2Parquet.readConf)
+      Dsv2Parquet.dataFiles(path, conf)
         .forall(f => committed(f.getPath.getName))
-    declared match {
-      case Some(desc) if truncateFirst || existing.contains(desc) ||
-          tableWasEmpty =>
-        // declare: truncate replaced everything; or the append extends
-        // the identical declared layout; or this commit created the
-        // table's first files
-        val tmp = new Path(path,
-          s"${Dsv2Parquet.ClusteringFileName}.tmp-${UUID.randomUUID()}")
-        val out = fs.create(tmp, true)
-        try out.write(desc.getBytes("UTF-8")) finally out.close()
-        if (fs.exists(sidecar)) fs.delete(sidecar, false)
-        require(fs.rename(tmp, sidecar),
-          s"graft-parquet commit: clustering sidecar rename failed")
-      case _ =>
-        // retract: the directory no longer has a single declared layout
-        if (fs.exists(sidecar)) fs.delete(sidecar, false): Unit
-    }
+    // declare: truncate replaced everything; or the append extends the
+    // identical declared layout; or this commit created the table's
+    // first files. Otherwise retract: the directory no longer has a
+    // single declared layout.
+    if (clusterBy.nonEmpty && numPartitions > 0 &&
+        (truncateFirst || sameAsDeclared || tableWasEmpty))
+      Dsv2Parquet.declareClustering(path, clusterBy, numPartitions,
+        sortWithin, conf)
+    else Dsv2Parquet.retractClustering(path, conf)
   }
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    GraftParquetWriterFactory(stagingDir, schema, bloomFor, bloomNdv)
+    GraftParquetWriterFactory(staging.dir, schema, bloomFor, bloomNdv)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val t0 = System.nanoTime()
-    val conf = Dsv2Parquet.readConf
-    val target = new Path(path)
-    val fs = target.getFileSystem(conf)
     val staged = messages.collect {
       case GraftParquetCommitMessage(Some(f), _) => new Path(f)
     }
-    // verify every reported file actually exists BEFORE any destructive
-    // step — a missing staged file fails the job with old data intact
-    staged.foreach(f => require(fs.isFile(f),
-      s"graft-parquet commit: staged file missing: $f"))
-    // files retire LOGICALLY: the staged renames land invisibly (no
-    // manifest references them yet), and ONE CAS manifest publish is
-    // the commit point. Replaced files stay on disk for time travel
-    // until expire_snapshots. Losing the CAS re-reads the new base:
-    // appends commute (retry); truncate/overwrite recompute their
+    // files retire LOGICALLY: replaced files stay on disk for time
+    // travel until expire_snapshots. Losing the CAS re-reads the new
+    // base: appends commute (retry); truncate/overwrite recompute their
     // removal set against the new state (overwrite-wins semantics,
     // re-proved per attempt — a file landed since planning that breaks
     // the predicate's file alignment fails the commit, never a guess).
-    val base = CommitLog.begin(path, conf)
-    staged.foreach { f =>
-      val dst = new Path(target, f.getName)
-      require(fs.rename(f, dst),
-        s"graft-parquet commit: rename $f -> $dst failed")
-    }
+    val conf = Dsv2Parquet.readConf
     val stagedNames = staged.map(_.getName).toSet
     var removedCount = 0
-    CommitLog.commitUpdate(path, conf,
-      operation = if (truncateFirst) "truncate"
-        else if (overwriteFilters.nonEmpty) "overwrite" else "append",
-      base = Some(base)
+    staging.publish(
+      if (truncateFirst) "truncate"
+      else if (overwriteFilters.nonEmpty) "overwrite" else "append",
+      staged.toSeq
     ) { cur =>
       // never this write's own files, whatever a concurrent import of
       // the directory listed
@@ -270,8 +236,7 @@ private[sources] case class GraftParquetBatchWrite(path: String,
             Dsv2Equality.read(new Path(path), n, conf)
               .targets.exists(remaining.contains))))
     }
-    fs.delete(new Path(stagingDir), true)
-    maintainClustering(fs, stagedNames)
+    maintainClustering(stagedNames)
     Dsv2WriteProbe.forPath(path).lastTruncated.set(removedCount)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
@@ -281,18 +246,15 @@ private[sources] case class GraftParquetBatchWrite(path: String,
       (System.nanoTime() - t0) / 1000000L)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = Dsv2Parquet.readConf
-    val fs = new Path(stagingDir).getFileSystem(conf)
-    fs.delete(new Path(stagingDir), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort()
 }
 
 /**
  * Streaming (micro-batch) write — the sink half of a streaming
- * connector. Same staging discipline as the batch write, PER EPOCH:
- * each micro-batch stages under `path/_staging-<queryId>-e<epochId>`,
- * and epoch commit is IDEMPOTENT through a marker file under
+ * connector. Same [[StagedCommit]] as the batch write, PER EPOCH (tag
+ * `<queryId>-e<epochId>`) for staging, verify, publish and abort; only
+ * the promotion is its own, and epoch commit is IDEMPOTENT through a marker file under
  * `path/_epochs/` whose atomic creation (temp + rename) IS the commit
  * point. The marker is written BEFORE any staged file becomes visible
  * and records the epoch's deterministic destination names, so every
@@ -329,7 +291,7 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     extends StreamingWrite {
   import GraftParquetStreamingWrite.MarkerRetain
 
-  private def stagingDir(epochId: Long) = s"$path/_staging-$queryId-e$epochId"
+  private def staging(epochId: Long) = StagedCommit(path, s"$queryId-e$epochId")
   private def epochsDir = new Path(path, "_epochs")
   private def marker(epochId: Long) =
     new Path(epochsDir, s"epoch-$queryId-$epochId")
@@ -339,7 +301,7 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        new GraftParquetDataWriter(stagingDir(epochId), schema,
+        new GraftParquetDataWriter(staging(epochId).dir, schema,
           partitionId, taskId)
     }
 
@@ -359,12 +321,7 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
 
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
       epochId: Long): Array[Path] = {
-    val in = fs.open(marker(epochId))
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-      bos.toString("UTF-8")
-    } finally in.close()
+    val text = Dsv2Parquet.readText(fs, marker(epochId))
     text.split("\n").filter(_.nonEmpty).map(new Path(new Path(path), _))
   }
 
@@ -387,49 +344,45 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     val conf = Dsv2Parquet.readConf
     val target = new Path(path)
     val fs = target.getFileSystem(conf)
-    val base = CommitLog.begin(path, conf)
     val staged = messages.collect {
       case GraftParquetCommitMessage(Some(f), _) => new Path(f)
     }.sortBy(_.getName)
-    val dsts: Array[Path] =
-      if (fs.exists(marker(epochId))) readMarker(fs, epochId)
-      else {
-        // fresh commit: verify every reported file BEFORE any
-        // destructive step, then write the ledger. Destination names
-        // are deterministic in (queryId, epochId, staged index), never a
-        // fresh UUID, so a replayed rename lands on the same name
-        // instead of beside it.
-        staged.foreach(f => require(fs.isFile(f),
-          s"graft-parquet epoch $epochId commit: staged file missing: $f"))
-        fs.mkdirs(target)
-        val d = staged.indices.map(i =>
-          new Path(target, f"part-$queryId-e$epochId-$i%05d.parquet")).toArray
-        writeMarker(fs, epochId, d)
-        d
-      }
-    // reconcile the ledger: rename a re-/staged file onto each missing
+    var dsts = Array.empty[Path]
+    // the ledger reconcile, run by the helper after it verified every
+    // reported file: a fresh commit writes the ledger first. Destination
+    // names are deterministic in (queryId, epochId, staged index), never
+    // a fresh UUID, so a replayed rename lands on the same name instead
+    // of beside it. Then a re-/staged file is renamed onto each missing
     // destination; destinations already present are first-attempt
-    // commits and stay untouched
-    var stagedIdx = 0
-    dsts.foreach { dst =>
-      if (!fs.exists(dst)) {
-        require(stagedIdx < staged.length,
+    // commits and stay untouched.
+    def reconcileLedger(files: Seq[Path]): Seq[String] = {
+      dsts =
+        if (fs.exists(marker(epochId))) readMarker(fs, epochId)
+        else {
+          fs.mkdirs(target)
+          val d = files.indices.map(i =>
+            new Path(target, f"part-$queryId-e$epochId-$i%05d.parquet")).toArray
+          writeMarker(fs, epochId, d)
+          d
+        }
+      dsts.zipWithIndex.collect { case (dst, i) if !fs.exists(dst) =>
+        require(i < files.length,
           s"graft-parquet epoch $epochId replay: ledger names $dst but " +
             s"no staged file remains to fill it")
-        require(fs.rename(staged(stagedIdx), dst),
+        require(fs.rename(files(i), dst),
           s"graft-parquet epoch $epochId commit: rename " +
-            s"${staged(stagedIdx)} -> $dst failed")
-      }
-      stagedIdx += 1
+            s"${files(i)} -> $dst failed")
+        dst.getName
+      }.toSeq
     }
     // the renamed epoch files are invisible until a manifest references
     // them — publish ONE version per epoch. Complete mode retires the
     // previous snapshot logically (files stay for time travel); append
     // unions.
-    val dstNames = dsts.map(_.getName).toSet
     var removed = 0
-    CommitLog.commitUpdate(path, conf, operation = "stream-epoch",
-        base = Some(base)) { cur =>
+    staging(epochId).publishWith("stream-epoch", staged.toSeq,
+        reconcileLedger) { cur =>
+      val dstNames = dsts.map(_.getName).toSet
       if (truncateFirst) {
         val retired = cur.dataFiles -- dstNames
         removed = retired.size
@@ -445,21 +398,16 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
       } else Some(cur.copy(dataFiles = cur.dataFiles ++ dstNames))
     }
     if (truncateFirst) Dsv2WriteProbe.forPath(path).lastTruncated.set(removed)
-    fs.delete(new Path(stagingDir(epochId)), true)
     gcMarkers(fs, epochId)
     // a streaming epoch's files are never bucket-aligned — retract any
     // declared clustering so readers stop reporting it
-    val clusteringSidecar = new Path(path, Dsv2Parquet.ClusteringFileName)
-    if (fs.exists(clusteringSidecar)) fs.delete(clusteringSidecar, false)
+    Dsv2Parquet.retractClustering(path, conf)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(dsts.length)
     Dsv2WriteProbe.forPath(path).epochsCommitted.incrementAndGet(): Unit
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = Dsv2Parquet.readConf
-    val fs = new Path(stagingDir(epochId)).getFileSystem(conf)
-    fs.delete(new Path(stagingDir(epochId)), true)
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    staging(epochId).abort()
 }
 
 private[sources] object GraftParquetStreamingWrite {

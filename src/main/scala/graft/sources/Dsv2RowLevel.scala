@@ -197,29 +197,26 @@ private[sources] case class GraftReplaceScan(path: String,
   }
 }
 
-/** The replace-commit: stage replacement files invisibly, verify, rename
- * them in, and publish ONE manifest version swapping the SCANNED files
- * (and only them) for the replacements. The replaced files stay on disk
- * for time travel until expire_snapshots. */
+/** The replace-commit: a [[StagedCommit]] of the replacement files
+ * whose ONE manifest version swaps the SCANNED files (and only them)
+ * for the replacements. The replaced files stay on disk for time travel
+ * until expire_snapshots. */
 private[sources] case class GraftReplaceDataWrite(path: String,
     schema: StructType, queryId: String, op: GraftRowLevelOperation)
     extends BatchWrite {
 
-  private val stagingDir = s"$path/_staging-$queryId"
+  private val staging = StagedCommit(path, queryId)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    GraftParquetWriterFactory(stagingDir, schema)
+    GraftParquetWriterFactory(staging.dir, schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = Dsv2Parquet.readConf
     val target = new Path(path)
-    val fs = target.getFileSystem(conf)
     val staged = messages.collect {
       case GraftParquetCommitMessage(Some(f), _) => new Path(f)
     }
-    staged.foreach(f => require(fs.isFile(f),
-      s"graft-replace commit: staged file missing: $f"))
     val scanned = Option(op.scannedFiles.get()).getOrElse(
       throw new IllegalStateException(
         "graft-replace commit: the operation's scan never planned — " +
@@ -231,17 +228,9 @@ private[sources] case class GraftReplaceDataWrite(path: String,
     // version before retrying. Same race-guard philosophy as the
     // reference's read-before-delete (DBOperations.java:61-70), and
     // Iceberg's validate-then-retry stance on copy-on-write commits.
-    val base = CommitLog.begin(path, conf)
-    staged.foreach { f =>
-      val dst = new Path(target, f.getName)
-      require(fs.rename(f, dst),
-        s"graft-replace commit: rename $f -> $dst failed")
-    }
     val stagedNames = staged.map(_.getName).toSet
     val scannedSet = scanned.toSet
-    CommitRaceProbe.beforeReplacePublish(path)
-    CommitLog.commitUpdate(path, conf, operation = "replace",
-        base = Some(base)) { cur =>
+    staging.publish("replace", staged.toSeq) { cur =>
       val gone = scannedSet.filterNot(cur.dataFiles.contains)
       if (gone.nonEmpty) throw new IllegalStateException(
         "graft-replace commit: concurrent writer conflict — scanned " +
@@ -279,10 +268,8 @@ private[sources] case class GraftReplaceDataWrite(path: String,
         dvFiles = cur.dvFiles.filterNot(v =>
           Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))))
     }
-    fs.delete(new Path(stagingDir), true)
     // a rewrite breaks any declared clustered layout
-    val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
-    if (fs.exists(clustering)) fs.delete(clustering, false)
+    Dsv2Parquet.retractClustering(path, conf)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
     Dsv2WriteProbe.forPath(path).lastTruncated.set(scanned.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
@@ -290,10 +277,8 @@ private[sources] case class GraftReplaceDataWrite(path: String,
     }.sum)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(stagingDir).getFileSystem(Dsv2Parquet.readConf)
-    fs.delete(new Path(stagingDir), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort()
 }
 
 // ---------------------------------------------------------------------
@@ -419,9 +404,9 @@ private[sources] class GraftDeltaWriter(stagingDir: String,
   override def close(): Unit = if (inserts != null) inserts.close()
 }
 
-/** The delta commit: verify staged inserts, write each touched file's
- * new deleted positions as a fresh deletion-vector sidecar, rename
- * inserts in, publish one manifest version. Write cost is proportional
+/** The delta commit: write each touched file's new deleted positions as
+ * a fresh deletion-vector sidecar beside the staged inserts, then one
+ * [[StagedCommit]] publish of both. Write cost is proportional
  * to damaged rows + inserted rows — never to table size. Conflict
  * stance mirrors the copy-on-write commit: a referenced data file
  * retired from the manifest means a concurrent rewrite replaced it (its
@@ -430,20 +415,16 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
     dataSchema: StructType, queryId: String, fileIdx: Int, posIdx: Int)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
-  private val stagingDir = s"$path/_staging-$queryId"
+  private val staging = StagedCommit(path, queryId)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    GraftDeltaWriterFactory(stagingDir, dataSchema, fileIdx, posIdx)
+    GraftDeltaWriterFactory(staging.dir, dataSchema, fileIdx, posIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = Dsv2Parquet.readConf
-    val target = new Path(path)
-    val fs = target.getFileSystem(conf)
     val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
     val staged = msgs.flatMap(_.insert.file).map(new Path(_))
-    staged.foreach(f => require(fs.isFile(f),
-      s"graft-delta commit: staged insert file missing: $f"))
     val merged: Map[String, Array[Long]] = msgs.flatMap(_.deletes.toSeq)
       .groupBy(_._1).map { case (n, seqs) => n -> seqs.flatMap(_._2).toArray }
     // sidecars + inserts land invisibly, ONE CAS publish references
@@ -454,21 +435,16 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
     // compaction that retired a referenced file between this op's scan
     // and its publish makes the retry abort loudly: the row positions
     // no longer name the same rows.
-    val base = CommitLog.begin(path, conf)
+    val stagingDir = new Path(staging.dir)
     var totalPos = 0L
-    val sidecarNames = merged.map { case (name, pos) =>
+    val sidecars = merged.map { case (name, pos) =>
       totalPos += pos.length
-      Dsv2Parquet.writeDvSidecar(target, name, pos.distinct.sorted, conf)
-    }.toSet
-    staged.foreach { f =>
-      val dst = new Path(target, f.getName)
-      require(fs.rename(f, dst),
-        s"graft-delta commit: rename $f -> $dst failed")
-    }
+      new Path(stagingDir,
+        Dsv2Parquet.writeDvSidecar(stagingDir, name, pos.distinct.sorted, conf))
+    }.toSeq
+    val sidecarNames = sidecars.map(_.getName).toSet
     val stagedNames = staged.map(_.getName).toSet
-    CommitRaceProbe.beforeDeltaPublish(path)
-    CommitLog.commitUpdate(path, conf, operation = "delta",
-        base = Some(base)) { cur =>
+    staging.publish("delta", staged.toSeq ++ sidecars) { cur =>
       val gone = merged.keys.filterNot(cur.dataFiles.contains)
       if (gone.nonEmpty) throw new IllegalStateException(
         "graft-delta commit: concurrent writer conflict — data " +
@@ -477,13 +453,9 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
       Some(cur.copy(dataFiles = cur.dataFiles ++ stagedNames,
         dvFiles = cur.dvFiles ++ sidecarNames))
     }
-    fs.delete(new Path(stagingDir), true)
     // inserted files are not bucket-aligned — retract any declared
     // clustering (position deletes alone preserve the layout claim)
-    if (staged.nonEmpty) {
-      val clustering = new Path(path, Dsv2Parquet.ClusteringFileName)
-      if (fs.exists(clustering)) fs.delete(clustering, false)
-    }
+    if (staged.nonEmpty) Dsv2Parquet.retractClustering(path, conf)
     val probe = Dsv2WriteProbe.forPath(path)
     probe.lastCommittedFiles.set(staged.length)
     probe.lastCommittedRows.set(msgs.map(_.insert.rows).sum)
@@ -492,8 +464,6 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
     probe.lastDvPositions.set(totalPos)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(stagingDir).getFileSystem(Dsv2Parquet.readConf)
-    fs.delete(new Path(stagingDir), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staging.abort()
 }

@@ -80,12 +80,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val fs = new Path(p).getFileSystem(conf)
     if (!fs.exists(schemaFile(p))) None
     else {
-      val in = fs.open(schemaFile(p))
-      val ddl = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val ddl = Dsv2Parquet.readText(fs, schemaFile(p))
       Some(StructType.fromDDL(ddl))
     }
   }
@@ -255,12 +250,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val fs = new Path(p).getFileSystem(conf)
     if (!fs.exists(propsFile(p))) false
     else {
-      val in = fs.open(propsFile(p))
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-        bos.toString("UTF-8")
-      } finally in.close()
+      val text = Dsv2Parquet.readText(fs, propsFile(p))
       text.linesIterator.map(_.trim).exists(
         _ == s"${Dsv2Parquet.MergeModeProperty}=${Dsv2Parquet.MergeOnRead}")
     }

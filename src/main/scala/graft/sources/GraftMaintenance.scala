@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions.col
  * Cost is proportional to the DV-carrying fraction of the table, never
  * the table.
  *
- * Concurrency: maintenance commits through [[CommitLog.commitUpdate]]
- * — the manifest swap is the commit point, NOTHING the prior version
+ * Every rewrite and sidecar merge commits through [[StagedCommit]]: its
+ * output is staged, promoted and published in one step, and a commit
+ * that fails — a failed job or a lost conflict — leaves no file behind.
+ * The manifest swap is the commit point, NOTHING the prior version
  * references is physically deleted (that is [[expireSnapshots]]' job),
  * and compaction-vs-delta is a detected version conflict: whichever
  * publishes second sees the other's change, and the non-commuting
@@ -41,17 +43,18 @@ object GraftMaintenance {
    * whose sidecars were merged. */
   def compactDvSidecars(path: String): Int = {
     val conf = Dsv2Parquet.readConf
-    val dir = new Path(path)
-    val base = CommitLog.begin(path, conf)
+    val commit = StagedCommit.fresh(path, "compact-minor")
+    commit.base: Unit
     val multi = Dsv2Parquet.dvListing(path, conf).filter(_._2.length > 1)
     if (multi.isEmpty) return 0
-    val replacements = multi.toSeq.map { case (name, sidecars) =>
+    val staging = new Path(commit.dir)
+    val replacements = commit.stage(multi.toSeq.map { case (name, sidecars) =>
       (name, sidecars.map(new Path(_).getName).toSet,
-        Dsv2Parquet.writeDvSidecar(dir, name,
+        Dsv2Parquet.writeDvSidecar(staging, name,
           Dsv2Parquet.readDvUnion(sidecars, conf), conf))
-    }
-    CommitLog.commitUpdate(path, conf, operation = "compact-minor",
-        base = Some(base)) { cur =>
+    })
+    commit.publish("compact-minor",
+        replacements.map(r => new Path(staging, r._3))) { cur =>
       var dv = cur.dvFiles
       replacements.foreach { case (dataName, merged, union) =>
         // swap only while every merged input is still current AND the
@@ -73,7 +76,8 @@ object GraftMaintenance {
     val dir = new Path(path)
     // pin the WHOLE compaction (listing + scan + conflict check) to one
     // base version; an empty directory has nothing to compact
-    val base = CommitLog.begin(path, conf)
+    val commit = StagedCommit.fresh(path, "compact")
+    val base = commit.base
     if (base.version == 0L) return 0
     val dvNames = Dsv2Parquet.dvListing(path, conf, Some(base.version)).keySet
     // equality-delete targets still live in the base version rewrite
@@ -85,7 +89,7 @@ object GraftMaintenance {
       .map(_.getPath).filter(f =>
         dvNames.contains(f.getName) || eqTargets.contains(f.getName))
     if (files.isEmpty) return 0
-    rewriteFiles(spark, path, base, files, outPartitions = None)
+    rewriteFiles(spark, commit, files, outPartitions = None)
   }
 
   /** BIN-PACK compaction (Iceberg's rewrite_data_files binpack): fold
@@ -103,15 +107,15 @@ object GraftMaintenance {
     require(targetBytes > 0, s"graft-compact: target_bytes must be " +
       s"positive, got $targetBytes")
     val conf = Dsv2Parquet.readConf
-    val base = CommitLog.begin(path, conf)
+    val commit = StagedCommit.fresh(path, "compact")
+    val base = commit.base
     if (base.version == 0L) return 0
     val smalls = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
       .filter(_.getLen < targetBytes)
     if (smalls.length < 2) return 0 // a lone small file gains nothing
     val n = math.max(1, math.ceil(
       smalls.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    rewriteFiles(spark, path, base, smalls.map(_.getPath),
-      outPartitions = Some(n))
+    rewriteFiles(spark, commit, smalls.map(_.getPath), outPartitions = Some(n))
   }
 
   /** RE-CLUSTER maintenance: rewrite the WHOLE table through the
@@ -134,16 +138,13 @@ object GraftMaintenance {
       s"graft-recluster: need cluster columns and a positive bucket " +
         s"count, got ${clusterBy.mkString(",")} / $buckets")
     val conf = Dsv2Parquet.readConf
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    val base = CommitLog.begin(path, conf)
+    val commit = StagedCommit.fresh(path, "recluster")
+    val base = commit.base
     if (base.version == 0L) return 0
     val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
     if (files.isEmpty) return 0
     val fmt = classOf[GraftParquetProvider].getName
     val schema = Dsv2Parquet.footerSchema(path)
-    val staging = new Path(dir,
-      s"_staging-recluster-${java.util.UUID.randomUUID()}")
     val w = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
       .load(path)
@@ -152,17 +153,14 @@ object GraftMaintenance {
       .option(Dsv2Parquet.SchemaOption, schema.toDDL)
       .option(Dsv2Parquet.ClusterByOption, clusterBy.mkString(","))
       .option(Dsv2Parquet.NumPartitionsOption, buckets.toString)
-    (if (sortWithin.nonEmpty)
-      w.option(Dsv2Parquet.SortWithinOption, sortWithin.mkString(","))
-    else w).mode("append").save(staging.toString)
-
-    val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
-      val dst = new Path(dir, s.getPath.getName)
-      require(fs.rename(s.getPath, dst),
-        s"graft-recluster: rename ${s.getPath} -> $dst failed")
-      dst.getName
-    }.toSet
-    CommitLog.commitUpdate(path, conf, operation = "recluster") { cur =>
+    val staged = commit.stage {
+      (if (sortWithin.nonEmpty)
+        w.option(Dsv2Parquet.SortWithinOption, sortWithin.mkString(","))
+      else w).mode("append").save(commit.dir)
+      Dsv2Parquet.dataFiles(commit.dir, conf).map(_.getPath).toSeq
+    }
+    val newNames = staged.map(_.getName).toSet
+    commit.publish("recluster", staged) { cur =>
       if (cur.version != base.version) throw new IllegalStateException(
         "graft-recluster: concurrent writer conflict — the table " +
           s"moved from version ${base.version} to ${cur.version} " +
@@ -170,16 +168,8 @@ object GraftMaintenance {
           "table)")
       Some(CommitLog.Snapshot(cur.version, newNames, Set.empty))
     }
-    // promote the staged write's layout declaration to the table dir
-    // (the staged commit declared it inside the staging dir)
-    val stagedSidecar = new Path(staging, Dsv2Parquet.ClusteringFileName)
-    val sidecar = new Path(dir, Dsv2Parquet.ClusteringFileName)
-    require(fs.exists(stagedSidecar),
-      "graft-recluster: the staged write declared no clustered layout")
-    if (fs.exists(sidecar)) fs.delete(sidecar, false)
-    require(fs.rename(stagedSidecar, sidecar),
-      "graft-recluster: clustering sidecar promote failed")
-    fs.delete(staging, true)
+    Dsv2Parquet.declareClustering(path, clusterBy.toArray, buckets,
+      sortWithin.toArray, conf)
     files.length
   }
 
@@ -201,15 +191,14 @@ object GraftMaintenance {
    * stay (their keys were folded out of the rewritten files, which are
    * new and therefore exempt — remaining targets still need the probe).
    * The replaced files stay on disk until expire_snapshots. */
-  private def rewriteFiles(spark: SparkSession, path: String,
-      base: CommitLog.Snapshot, files: Array[Path],
-      outPartitions: Option[Int]): Int = {
+  private def rewriteFiles(spark: SparkSession, commit: StagedCommit,
+      files: Array[Path], outPartitions: Option[Int]): Int = {
     val conf = Dsv2Parquet.readConf
+    val path = commit.path
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val base = commit.base
     val fmt = classOf[GraftParquetProvider].getName
     val schema = Dsv2Parquet.footerSchema(path)
-    val staging = new Path(dir, s"_staging-compact-${java.util.UUID.randomUUID()}")
     val targets = files.map(_.toString).toSet
     val live0 = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
@@ -218,23 +207,19 @@ object GraftMaintenance {
       .filter(col("__f").isInCollection(targets))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val live = outPartitions.fold(live0)(live0.repartition)
-    live.write.format(fmt)
-      .option(Dsv2Parquet.SchemaOption, schema.toDDL)
-      .mode("append").save(staging.toString)
+    val staged = commit.stage {
+      live.write.format(fmt)
+        .option(Dsv2Parquet.SchemaOption, schema.toDDL)
+        .mode("append").save(commit.dir)
+      Dsv2Parquet.dataFiles(commit.dir, conf).map(_.getPath).toSeq
+    }
 
     val scannedSet = files.map(_.getName).toSet
     val baseDvs = base.dvFiles.filter(v =>
       Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))
-    val newNames = Dsv2Parquet.dataFiles(staging.toString, conf).map { s =>
-      val dst = new Path(dir, s.getPath.getName)
-      require(fs.rename(s.getPath, dst),
-        s"graft-compact: rename ${s.getPath} -> $dst failed")
-      dst.getName
-    }.toSet
-    CommitRaceProbe.beforeCompactionPublish(path)
-    CommitLog.commitUpdate(path, conf,
-        operation = if (outPartitions.isEmpty) "compact" else "binpack"
-    ) { cur =>
+    val newNames = staged.map(_.getName).toSet
+    commit.publish(if (outPartitions.isEmpty) "compact" else "binpack",
+        staged) { cur =>
       val gone = scannedSet.filterNot(cur.dataFiles.contains)
       if (gone.nonEmpty) throw new IllegalStateException(
         "graft-compact: concurrent writer conflict — compacted " +
@@ -265,12 +250,10 @@ object GraftMaintenance {
         dvFiles = cur.dvFiles -- baseDvs,
         eqFiles = cur.eqFiles -- applied))
     }
-    fs.delete(staging, true)
     // rewritten file names are not bucket-aligned — retract any
     // declared clustered layout rather than let the scan report a
     // partitioning the files no longer prove
-    val clusteringSidecar = new Path(dir, Dsv2Parquet.ClusteringFileName)
-    if (fs.exists(clusteringSidecar)) fs.delete(clusteringSidecar, false)
+    Dsv2Parquet.retractClustering(path, conf)
     files.length
   }
 
@@ -342,8 +325,7 @@ object GraftMaintenance {
     // declared AFTER the target version — retract any clustering claim
     // rather than let the scan report a partitioning the restored
     // files no longer prove (same conservatism as compaction).
-    val clustering = new Path(dir, Dsv2Parquet.ClusteringFileName)
-    if (fs.exists(clustering)) fs.delete(clustering, false)
+    Dsv2Parquet.retractClustering(path, conf)
     // Rollback restores DATA, not schema — deliberately (and pinned by
     // the schema-evolution fuzz's model: "contents revert, schema
     // stays current"). The new manifest is stamped with the CURRENT
@@ -354,23 +336,24 @@ object GraftMaintenance {
     // back under live readers/writers would turn a data-repair tool
     // into a schema change, and ALTER is the explicit surface for
     // that. (r20 advice noted the asymmetry; this documents it.)
-    CommitRaceProbe.beforeRollbackPublish(path)
-    CommitLog.commitUpdate(path, conf,
-      operation = s"rollback to $version")(_ => Some(target)).get.version
+    val operation = s"rollback to $version"
+    CommitRaceProbe.beforePublish(path, operation)
+    CommitLog.commitUpdate(path, conf, operation)(_ => Some(target)).get.version
   }
 
   /** `remove_orphan_files`: delete files in the table directory that
    * match a table-file shape (data `*.parquet`, DV `_dv-*.bin`,
    * equality `_eq-*.bin`) but are referenced by NO published commit-log
-   * version — crashed writes' promoted-then-never-committed leftovers
-   * and externally copied-in strays. Manifests, staging dirs, epoch
-   * markers and the clustering sidecar are never candidates. The
-   * `olderThanMs` age guard is what keeps a LIVE writer's
-   * renamed-but-not-yet-manifested files safe (a batch commit renames
-   * staged files in BEFORE publishing the manifest) — pass 0 only when
-   * no writer can be in flight. Requires the commit log: in a directory
-   * graft never wrote the listing IS the state and nothing is
-   * orphaned. Returns the deleted file count. */
+   * version, plus abandoned `_staging-*` dirs and manifest temps. A
+   * commit that fails cleans up after itself ([[StagedCommit]]), so
+   * these leftovers come only from a driver that died mid-commit, or
+   * from files copied in from outside. Manifests, epoch markers and the
+   * clustering sidecar are never candidates. The `olderThanMs` age
+   * guard is what keeps a LIVE writer's files safe (its staging dir,
+   * and the files it promotes just BEFORE publishing the manifest) —
+   * pass 0 only when no writer can be in flight. Requires the commit
+   * log: in a directory graft never wrote the listing IS the state and
+   * nothing is orphaned. Returns the deleted file count. */
   def removeOrphanFiles(path: String, olderThanMs: Long): Int = {
     require(olderThanMs >= 0,
       s"graft-orphans: older_than_ms must be >= 0, got $olderThanMs")
@@ -408,22 +391,13 @@ object GraftMaintenance {
   }
 }
 
-/** Test seam for the commit-race specs: callbacks fired on the driver
- * immediately before a manifest publish, letting a spec land a
- * concurrent commit deterministically inside the race window (the
- * window is real — the hook only widens it to a test's timescale).
- * No-ops in production. */
+/** Test seam for the commit-race and commit-failure specs: called on
+ * the driver with (table path, operation name) immediately before a
+ * manifest publish — by [[StagedCommit]] for every staged commit and by
+ * `rollbackTo`. A spec lands a concurrent commit inside the race window
+ * (the window is real — the hook only widens it to a test's timescale)
+ * or throws to fail the publish. A no-op in production. */
 object CommitRaceProbe {
-  @volatile var beforeCompactionPublish: String => Unit = _ => ()
-  @volatile var beforeDeltaPublish: String => Unit = _ => ()
-  @volatile var beforeEqPublish: String => Unit = _ => ()
-  @volatile var beforeRollbackPublish: String => Unit = _ => ()
-  @volatile var beforeReplacePublish: String => Unit = _ => ()
-  def reset(): Unit = {
-    beforeCompactionPublish = _ => ()
-    beforeDeltaPublish = _ => ()
-    beforeEqPublish = _ => ()
-    beforeRollbackPublish = _ => ()
-    beforeReplacePublish = _ => ()
-  }
+  @volatile var beforePublish: (String, String) => Unit = (_, _) => ()
+  def reset(): Unit = beforePublish = (_, _) => ()
 }

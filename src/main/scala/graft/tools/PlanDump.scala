@@ -44,26 +44,7 @@ object PlanDump {
           graft.operators.Multimodal.wavMediaTable(s, d)).toDF()),
       "mm_resize_decode_inline_encode" -> ((s, d) =>
         graft.operators.Multimodal.resizeDecoded(
-          graft.operators.Multimodal.pngMediaTable(s, d)).toDF()),
-      // the r21 substr-keeper shape (stacked aggregates, each planning
-      // its OWN exchange) — the r22 BEFORE plan, kept constructible for
-      // the plans/r22 evidence pair
-      "dedup_substr_self_r22pre" -> { (s, d) =>
-        import org.apache.spark.sql.functions._
-        val tiles = graft.operators.Dedup.tileHashTable(s, d)
-        val perDoc = tiles.groupBy("h", "doc_id")
-          .agg(count(lit(1)).as("c"), min(col("pos")).as("mpos"))
-        val repeated = perDoc.groupBy("h")
-          .agg(sum(col("c")).as("n_occ"),
-            min(col("doc_id")).as("keep_doc_id"),
-            min_by(col("mpos"), col("doc_id")).as("keep_pos"))
-          .filter(col("n_occ") >= 2)
-        tiles.join(repeated, Seq("h"))
-          .filter(!(col("doc_id") === col("keep_doc_id") &&
-            col("pos") === col("keep_pos")))
-          .select(col("doc_id"), col("pos"),
-            col("keep_doc_id"), col("keep_pos"), col("n_occ"))
-      })
+          graft.operators.Multimodal.pngMediaTable(s, d)).toDF()))
     names.foreach { n =>
       val df = extra.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
       val txt = df.queryExecution.explainString(

@@ -41,4 +41,17 @@ class AllTypesFixtureSpec extends SparkSpec {
     assert(AllTypesFixture.mv(spark).count() ==
       (0L until n).count(_ % 19 != 0))
   }
+
+  test("a new memo entry drops every other application's entries") {
+    val app = spark.sparkContext.applicationId
+    // force base(spark) to add its key, beside a stopped context's entry
+    AllTypesFixture.memo.remove((app, false))
+    AllTypesFixture.memo.put(("stale-app", false),
+      AllTypesFixture.derive(spark, mvSide = false))
+    assert(AllTypesFixture.base(spark).count() > 0L)
+    val apps = AllTypesFixture.memo.keySet().toArray.toSeq
+      .map(_.asInstanceOf[(String, Boolean)]._1)
+    assert(!apps.contains("stale-app"), apps.toString)
+    assert(AllTypesFixture.memo.containsKey((app, false)))
+  }
 }

@@ -363,8 +363,10 @@ class CommitLogSpec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
       assert(Dsv2WriteProbe.forPath(p).lastDvPositions.get() == 10L)
       // a delta commit lands INSIDE compaction's publish window
-      CommitRaceProbe.beforeCompactionPublish = { _ =>
-        spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 7"): Unit
+      CommitRaceProbe.beforePublish = {
+        case (_, "compact") =>
+          spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 7"): Unit
+        case _ =>
       }
       try {
         val e = intercept[IllegalStateException] {
@@ -372,6 +374,7 @@ class CommitLogSpec extends SparkSpec {
         }
         assert(e.getMessage.contains("concurrent delta commit landed"))
       } finally CommitRaceProbe.reset()
+      CommitResidue.assertNone(p)
       // loser aborted, NOTHING lost: both delete sets visible
       assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long].collect().toSet ==
         (0L until 100L).filterNot(k => k % 10 == 3 || k % 10 == 7).toSet)
@@ -393,15 +396,18 @@ class CommitLogSpec extends SparkSpec {
         .coalesce(2).writeTo(s"$cat.db.t").append()
       spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
       // a compaction wins the version INSIDE the delta's publish window
-      CommitRaceProbe.beforeDeltaPublish = { _ =>
-        CommitRaceProbe.beforeDeltaPublish = _ => () // one-shot
-        GraftMaintenance.compactDeletionVectors(spark, p): Unit
+      CommitRaceProbe.beforePublish = {
+        case (_, "delta") =>
+          CommitRaceProbe.reset() // one-shot
+          GraftMaintenance.compactDeletionVectors(spark, p): Unit
+        case _ =>
       }
       try {
         assertCauseContains(intercept[Throwable] {
           spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 7")
         }, "concurrent writer conflict")
       } finally CommitRaceProbe.reset()
+      CommitResidue.assertNone(p)
       // the table is the compaction's state: first deletes folded in,
       // the aborted delta invisible — not partially applied
       assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long].collect().toSet ==
@@ -426,17 +432,20 @@ class CommitLogSpec extends SparkSpec {
       // — its deletes target the files the replace is about to retire,
       // and the replace's output (scanned pre-repair) does not carry
       // them: the replace must abort, never silently drop the repair
-      CommitRaceProbe.beforeReplacePublish = { _ =>
-        CommitRaceProbe.beforeReplacePublish = _ => () // one-shot
-        EqualityRepair.commit(spark, p, Seq("k"),
-          spark.range(5).select((col("id") * 10 + 5).as("k")),
-          spark.emptyDataFrame.selectExpr())
+      CommitRaceProbe.beforePublish = {
+        case (_, "replace") =>
+          CommitRaceProbe.reset() // one-shot
+          EqualityRepair.commit(spark, p, Seq("k"),
+            spark.range(5).select((col("id") * 10 + 5).as("k")),
+            spark.emptyDataFrame.selectExpr())
+        case _ =>
       }
       try {
         assertCauseContains(intercept[Throwable] {
           spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
         }, "concurrent equality-delete commit")
       } finally CommitRaceProbe.reset()
+      CommitResidue.assertNone(p)
       // the repair's state stands; the aborted replace is invisible
       val repaired = Set(5L, 15L, 25L, 35L, 45L)
       assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long].collect().toSet ==
@@ -459,19 +468,22 @@ class CommitLogSpec extends SparkSpec {
       // a delta-style commit lands a DV on a scanned file INSIDE the
       // replace's publish window — deletes the replace's rewrite does
       // not carry (its scan ran pre-DV): abort, never lose them
-      CommitRaceProbe.beforeReplacePublish = { _ =>
-        CommitRaceProbe.beforeReplacePublish = _ => () // one-shot
-        val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
-        val dv = Dsv2Parquet.writeDvSidecar(
-          new org.apache.hadoop.fs.Path(p), fn, Array(0L, 1L), conf)
-        CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>
-          Some(cur.copy(dvFiles = cur.dvFiles + dv))): Unit
+      CommitRaceProbe.beforePublish = {
+        case (_, "replace") =>
+          CommitRaceProbe.reset() // one-shot
+          val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+          val dv = Dsv2Parquet.writeDvSidecar(
+            new org.apache.hadoop.fs.Path(p), fn, Array(0L, 1L), conf)
+          CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>
+            Some(cur.copy(dvFiles = cur.dvFiles + dv))): Unit
+        case _ =>
       }
       try {
         assertCauseContains(intercept[Throwable] {
           spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
         }, "concurrent delta commit landed")
       } finally CommitRaceProbe.reset()
+      CommitResidue.assertNone(p)
       // the DV's two rows are dead, the aborted band is still present
       val afterAbort = spark.sql(s"SELECT k FROM $cat.db.t")
         .as[Long].collect().toSet
@@ -678,10 +690,12 @@ class CommitLogSpec extends SparkSpec {
       // an append wins a version INSIDE the rollback's publish window:
       // the rollback must RETRY (CAS loss) and still set the table to
       // the target — "set the table to version N" means exactly that
-      CommitRaceProbe.beforeRollbackPublish = { _ =>
-        CommitRaceProbe.beforeRollbackPublish = _ => () // one-shot
-        spark.range(20, 30).select(col("id").as("k")).coalesce(1)
-          .writeTo(s"$cat.db.t").append()               // v4 (racer)
+      CommitRaceProbe.beforePublish = {
+        case (_, op) if op.startsWith("rollback") =>
+          CommitRaceProbe.reset() // one-shot
+          spark.range(20, 30).select(col("id").as("k")).coalesce(1)
+            .writeTo(s"$cat.db.t").append()             // v4 (racer)
+        case _ =>
       }
       try {
         val v = spark.sql(

@@ -208,8 +208,10 @@ class Dsv2EqualitySpec extends SparkSpec {
       val before = spark.read.format(fmt).load(p).count()
       // a compaction retires the targeted files INSIDE the eq commit's
       // publish window — the eq commit must abort, never lose deletes
-      CommitRaceProbe.beforeEqPublish = { _ =>
-        GraftMaintenance.compactDeletionVectors(spark, p): Unit
+      CommitRaceProbe.beforePublish = {
+        case (_, "eq-repair") =>
+          GraftMaintenance.compactDeletionVectors(spark, p): Unit
+        case _ =>
       }
       try {
         val e = intercept[IllegalStateException] {
@@ -218,6 +220,7 @@ class Dsv2EqualitySpec extends SparkSpec {
         }
         assert(e.getMessage.contains("concurrent writer conflict"))
       } finally CommitRaceProbe.reset()
+      CommitResidue.assertNone(p)
       // the aborted delete is invisible; the compaction's state stands
       // (the DV'd rows were already dead in `before` and stay folded)
       assert(spark.read.format(fmt).load(p).count() == before)
@@ -241,10 +244,12 @@ class Dsv2EqualitySpec extends SparkSpec {
       // re-proof both published, and every later scan (including the
       // compact_table fold needed to repair it) failed the
       // sidecars-agree require: a permanently wedged table (r20 advice)
-      CommitRaceProbe.beforeEqPublish = { _ =>
-        CommitRaceProbe.beforeEqPublish = _ => () // one-shot, no recursion
-        EqualityRepair.commit(spark, p, Seq("s"),
-          Seq("s1").toDF("s"), spark.emptyDataFrame.selectExpr())
+      CommitRaceProbe.beforePublish = {
+        case (_, "eq-repair") =>
+          CommitRaceProbe.reset() // one-shot, no recursion
+          EqualityRepair.commit(spark, p, Seq("s"),
+            Seq("s1").toDF("s"), spark.emptyDataFrame.selectExpr())
+        case _ =>
       }
       try {
         val e = intercept[IllegalStateException] {

@@ -364,6 +364,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
         write.commit(Array(msg))
       }
       assert(ex.getMessage.contains("concurrent writer conflict"))
+      CommitResidue.assertNone(s"$tmp/db/cf")
       // nothing changed: no DV appeared, rows intact
       assert(!Dsv2Parquet.hasDvs(s"$tmp/db/cf",
         new org.apache.hadoop.conf.Configuration()))

@@ -122,6 +122,7 @@ class Dsv2RowLevelSpec extends SparkSpec {
         write.commit(Array.empty)
       }
       assert(ex.getMessage.contains("concurrent writer conflict"))
+      CommitResidue.assertNone(path)
       // the loser changed nothing: operation 2's result stands exactly
       val t = spark.table(s"$cat.db.y")
       assert(t.count() == 20L)
