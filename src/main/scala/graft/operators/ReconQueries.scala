@@ -459,7 +459,7 @@ object ReconQueries {
    * periodic 100 TB job over connector tables would actually run: both
    * sides written into a [[graft.sources.GraftCatalog]] through the
    * sink-demanded `graft.clusterBy` hash exchange, then read back with
-   * the layout DECLARED (`SupportsReportPartitioning` reporting
+   * the layout CLAIMED (`SupportsReportPartitioning` reporting
    * `bucket(8, pk)` per row-group partition, resolved against the
    * catalog's FunctionCatalog), so Spark's storage-partitioned-join
    * planning co-locates equal buckets and the full-outer SMJ plans

@@ -4,7 +4,7 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /**
  * A MINIMAL COMMIT LOG for [[GraftParquetProvider]] tables — versioned
@@ -22,7 +22,11 @@ import org.apache.hadoop.fs.Path
  *    the table's data files and deletion-vector sidecars BY NAME. The
  *    manifest with the highest N IS the table state; files in the
  *    directory but not in it are invisible (uncommitted, orphaned, or
- *    historical).
+ *    historical). Entry tags: `D` data file, `V` deletion vector, `E`
+ *    equality delete, `M key value` commit metadata, `L
+ *    width|cols|sortWithin` the clustered layout, and `B id name` a data
+ *    file's bucket id under it — so the layout is a per-version fact
+ *    that time travel and rollback carry with the file set.
  *  - Publishing version N+1 is a CAS: the manifest is staged to a
  *    temp name and promoted with an atomic create-if-absent (POSIX
  *    `link(2)` on local filesystems — EEXIST is the "lost the race"
@@ -57,13 +61,30 @@ object CommitLog {
   val Suffix = ".manifest"
   private val Header = "graft-manifest 1"
 
+  /** A clustered layout: every file holding it carries exactly the keys
+   * whose murmur3(cols) pmod `width` equals its bucket id, sorted by
+   * `sortWithin` inside the file when that is non-empty. */
+  final case class Layout(cols: Seq[String], width: Int,
+      sortWithin: Seq[String])
+
   /** One published table version: data files + DV sidecars +
    * equality-delete files, all by NAME (relative to the table dir),
    * plus free-form commit metadata (`operation`, `ts` millis — the
-   * DESCRIBE HISTORY columns). */
+   * DESCRIBE HISTORY columns), the clustered layout a clustered write
+   * recorded, and each data file's bucket id under it (only files that
+   * clustered write placed have one). */
   final case class Snapshot(version: Long, dataFiles: Set[String],
       dvFiles: Set[String], eqFiles: Set[String] = Set.empty,
-      meta: Map[String, String] = Map.empty) {
+      meta: Map[String, String] = Map.empty,
+      layout: Option[Layout] = None, buckets: Map[String, Int] = Map.empty) {
+    /** The layout this version's files PROVE: its recorded layout, when
+     * it has at least one data file and every one carries a bucket id
+     * below the width. A commit that adds a file without a bucket id
+     * (a repair, a rewrite, an unclustered append) turns it off. */
+    def claimedLayout: Option[Layout] = layout.filter(l =>
+      dataFiles.nonEmpty &&
+        dataFiles.forall(f => buckets.get(f).exists(_ < l.width)))
+
     /** data file name → its DV sidecar paths under `dir` (the same
      * shape [[Dsv2Parquet.dvListing]] serves from a raw listing). */
     def dvMapUnder(dir: Path): Map[String, Array[String]] =
@@ -92,26 +113,46 @@ object CommitLog {
     var dv = Set.empty[String]
     var eq = Set.empty[String]
     var meta = Map.empty[String, String]
+    var layout = Option.empty[Layout]
+    var buckets = Map.empty[String, Int]
     lines.drop(1).filter(_.nonEmpty).foreach { l =>
       val tag = l.charAt(0)
       require(l.length > 2 && l.charAt(1) == ' ',
         s"graft-manifest: bad line '$l' in version $version")
       val name = l.substring(2)
+      // `K first rest`: rest may contain spaces (a metadata value, a
+      // file name)
+      def split(what: String): (String, String) = {
+        val cut = name.indexOf(' ')
+        require(cut > 0,
+          s"graft-manifest: bad $what line '$l' in version $version")
+        (name.substring(0, cut), name.substring(cut + 1))
+      }
       tag match {
         case 'D' => data += name
         case 'V' => dv += name
         case 'E' => eq += name
-        case 'M' =>
-          // commit metadata: `M key value` (value may contain spaces)
-          val cut = name.indexOf(' ')
-          require(cut > 0,
-            s"graft-manifest: bad metadata line '$l' in version $version")
-          meta += name.substring(0, cut) -> name.substring(cut + 1)
+        case 'M' => meta += split("metadata")
+        case 'B' =>
+          val (id, file) = split("bucket")
+          val b = id.toIntOption.filter(_ >= 0 && file.nonEmpty).getOrElse(
+            throw new IllegalArgumentException(
+              s"graft-manifest: bad bucket line '$l' in version $version"))
+          buckets += file -> b
+        case 'L' =>
+          layout = name.split("\\|", -1) match {
+            case Array(w, cols, sort) if w.toIntOption.exists(_ > 0) &&
+                cols.nonEmpty =>
+              Some(Layout(cols.split(",").toSeq, w.toInt,
+                sort.split(",").filter(_.nonEmpty).toSeq))
+            case _ => throw new IllegalArgumentException(
+              s"graft-manifest: bad layout line '$l' in version $version")
+          }
         case other => throw new IllegalArgumentException(
           s"graft-manifest: unknown entry tag '$other' in version $version")
       }
     }
-    Snapshot(version, data, dv, eq, meta)
+    Snapshot(version, data, dv, eq, meta, layout, buckets)
   }
 
   /** Read one version's manifest (cached; fails if absent — an expired
@@ -133,14 +174,18 @@ object CommitLog {
 
   /** All published versions under `dir`, ascending (empty = the table
    * has no commit log). */
-  def versions(dir: Path, conf: Configuration): Array[Long] = {
+  def versions(dir: Path, conf: Configuration): Array[Long] =
+    listing(dir, conf).flatMap(s => versionOf(s.getPath.getName)).sorted
+
+  /** `dir`'s entries; empty when it is missing or not a directory. */
+  private[sources] def listing(dir: Path,
+      conf: Configuration): Array[FileStatus] = {
     val fs = dir.getFileSystem(conf)
     try {
       if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory)
-        Array.empty[Long]
+        Array.empty[FileStatus]
       else fs.listStatus(dir)
-        .flatMap(s => versionOf(s.getPath.getName)).sorted
-    } catch { case _: java.io.FileNotFoundException => Array.empty[Long] }
+    } catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
   }
 
   def enabled(path: String, conf: Configuration): Boolean =
@@ -158,13 +203,24 @@ object CommitLog {
    * listing). An explicit version there fails loudly — silently
    * serving current state would misanswer a time-travel query. */
   def snapshotFor(path: String, conf: Configuration,
-      versionAsOf: Option[Long]): Option[Snapshot] = versionAsOf match {
-    case Some(v) =>
-      require(enabled(path, conf),
-        s"graft-manifest: VERSION AS OF $v on $path, which has no " +
-          "commit log (graft has never written it)")
-      Some(read(new Path(path), v, conf))
-    case None => latest(path, conf)
+      versionAsOf: Option[Long]): Option[Snapshot] = {
+    val dir = new Path(path)
+    snapshotIn(dir, listing(dir, conf), conf, versionAsOf)
+  }
+
+  /** [[snapshotFor]] over a listing of `dir` already taken — the scan
+   * pins its snapshot from the same listing that finds its files. */
+  def snapshotIn(dir: Path, listed: Array[FileStatus], conf: Configuration,
+      versionAsOf: Option[Long]): Option[Snapshot] = {
+    val vs = listed.flatMap(f => versionOf(f.getPath.getName))
+    versionAsOf match {
+      case Some(v) =>
+        require(vs.nonEmpty,
+          s"graft-manifest: VERSION AS OF $v on $dir, which has no " +
+            "commit log (graft has never written it)")
+        Some(read(dir, v, conf))
+      case None => vs.maxOption.map(read(dir, _, conf))
+    }
   }
 
   /** CAS-publish `snap` as version `snap.version`: true iff THIS call
@@ -175,9 +231,16 @@ object CommitLog {
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val dst = new Path(dir, manifestName(snap.version))
+    snap.layout.foreach(l => require(
+      (l.cols ++ l.sortWithin).forall(c => !c.exists("|,\n".contains(_))),
+      s"graft-manifest: layout column names cannot hold '|', ',' or a " +
+        s"newline: ${(l.cols ++ l.sortWithin).mkString(", ")}"))
     val body = (Seq(Header) ++
       snap.meta.toSeq.sortBy(_._1).map { case (k, v) => s"M $k $v" } ++
+      snap.layout.map(l => s"L ${l.width}|${l.cols.mkString(",")}|" +
+        l.sortWithin.mkString(",")) ++
       snap.dataFiles.toSeq.sorted.map("D " + _) ++
+      snap.buckets.toSeq.map(_.swap).sorted.map { case (b, f) => s"B $b $f" } ++
       snap.dvFiles.toSeq.sorted.map("V " + _) ++
       snap.eqFiles.toSeq.sorted.map("E " + _)).mkString("", "\n", "\n")
     if (fs.getScheme == "file") {
@@ -362,7 +425,9 @@ object CommitLog {
         case Some(next0) =>
           val next = next0.copy(version = cur.version + 1,
             meta = (if (operation.isEmpty) next0.meta
-              else stamp(operation)) ++ schemaMeta)
+              else stamp(operation)) ++ schemaMeta,
+            // a retired file's bucket id retires with it
+            buckets = next0.buckets.filter(b => next0.dataFiles(b._1)))
           if (tryCommit(path, next, conf)) return Some(next)
       }
       attempts += 1

@@ -259,6 +259,9 @@ private[sources] class GraftParquetScanBuilder(path: String,
   private var pushed: Array[Filter] = Array.empty
   private var aggResult: Option[(StructType, Array[Any], String)] = None
   private var limit: Option[Int] = None
+  /** The one planning view the footer-aggregate gate and the built scan
+   * share. */
+  private lazy val view = PlanningView(path, versionAsOf)
 
   /** PARTIAL limit pushdown: the scan plans only enough row groups to
    * cover the limit when no predicate is in play, and every reader
@@ -315,12 +318,10 @@ private[sources] class GraftParquetScanBuilder(path: String,
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty) return None
     // deletion vectors make footer row counts/stats over-counts —
     // a table with DVs answers aggregates from real (DV-filtered) rows
-    if (Dsv2Parquet.dvListing(path, Dsv2Parquet.readConf,
-        versionAsOf).nonEmpty) return None
+    if (view.dvMap.nonEmpty) return None
     // equality deletes likewise: footer counts ignore the key probe
-    if (CommitLog.snapshotFor(path, Dsv2Parquet.readConf, versionAsOf)
-        .exists(_.eqFiles.nonEmpty)) return None
-    val blocks = footerBlocks
+    if (view.snapshot.exists(_.eqFiles.nonEmpty)) return None
+    val blocks = view.footerBlocks.map(_._2)
     def col(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[(String, DataType)] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -388,21 +389,53 @@ private[sources] class GraftParquetScanBuilder(path: String,
     }
   }
 
-  private lazy val footerBlocks
-      : Array[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
-    val conf = Dsv2Parquet.readConf
-    Dsv2Parquet.fileFooters(
-      Dsv2Parquet.dataFiles(path, conf, versionAsOf), conf)
-      .flatMap { case (_, blocks, _) => blocks }
-  }
-
   override def build(): Scan = aggResult match {
     case Some((schema, values, desc)) =>
       GraftParquetAggScan(schema, values, desc)
     case None =>
       GraftParquetScan(path, required, pushed, maxRowGroupsPerTrigger, limit,
-        vectorize, versionAsOf)
+        vectorize, versionAsOf, Some(view))
   }
+}
+
+/** ONE planning listing and the commit-log snapshot it pins (None for a
+ * directory graft never wrote, whose listing is its state). Every
+ * planning fact of a scan derives from it — data files and their
+ * footers, deletion vectors, equality deletes, the footer-aggregate
+ * gate, the clustered layout — so no two can come from different
+ * versions, and a planning pays one listing RPC however many of them
+ * it consults. Equal by what it pins, so scans that share one still
+ * compare by their fields. */
+private[sources] final case class PlanningView(path: String,
+    versionAsOf: Option[Long]) {
+  @transient private lazy val listing: (Array[FileStatus], Boolean) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(Dsv2Parquet.readConf)
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) (fs.listStatus(p), true) else (Array(st), false)
+  }
+
+  @transient lazy val snapshot: Option[CommitLog.Snapshot] =
+    if (!listing._2) None
+    else CommitLog.snapshotIn(new Path(path), listing._1,
+      Dsv2Parquet.readConf, versionAsOf)
+
+  @transient lazy val dataFiles: Array[FileStatus] =
+    Dsv2Parquet.dataFilesFrom(listing._1, new Path(path), listing._2,
+      snapshot)
+
+  /** Each data file's row groups, keyed by the file's full path. */
+  @transient lazy val footerBlocks
+      : Array[(String, org.apache.parquet.hadoop.metadata.BlockMetaData)] =
+    dataFiles.zip(Dsv2Parquet.fileFooters(dataFiles, Dsv2Parquet.readConf))
+      .flatMap { case (f, (_, blocks, _)) =>
+        blocks.map(b => f.getPath.toString -> b)
+      }
+
+  /** Data file name → its deletion-vector sidecar paths. */
+  @transient lazy val dvMap: Map[String, Array[String]] =
+    Dsv2Parquet.dvListingFrom(listing._1.map(_.getPath), new Path(path),
+      snapshot)
 }
 
 /** The metadata-only aggregate scan: one partition, one row, values
@@ -439,7 +472,8 @@ private[sources] case class GraftParquetScan(path: String,
     maxRowGroupsPerTrigger: Option[Int] = None,
     limit: Option[Int] = None,
     vectorize: Boolean = true,
-    versionAsOf: Option[Long] = None) extends Scan with Batch
+    versionAsOf: Option[Long] = None,
+    planned: Option[PlanningView] = None) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -500,40 +534,18 @@ private[sources] case class GraftParquetScan(path: String,
       s"ReadSchema: ${required.catalogString}" +
       limit.map(l => s", PushedLimit: LIMIT $l").getOrElse("")
 
-  /** Footer metadata, read ONCE per scan: Spark plans partitions at
+  /** Planning state, resolved ONCE per scan from one listing (the
+   * builder's, when it built this scan): Spark plans partitions at
    * least twice when runtime filtering engages (initial plan, then the
-   * post-[[filter]] re-plan), and at fleet scale the footer pass over a
-   * large file count is itself real IO — cache it on the driver-side
-   * scan instance so the re-plan prunes from memory. */
-  /** ONE planning listing, shared by the data-file, deletion-vector
-   * and commit-log views below — a commit landing mid-planning cannot
-   * make them disagree (and a 100k-file table pays one listing RPC per
-   * planning, not three). */
-  @transient private lazy val tableListing
-      : (Array[org.apache.hadoop.fs.FileStatus], Boolean) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(Dsv2Parquet.readConf)
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory) (fs.listStatus(p), true) else (Array(st), false)
-  }
+   * post-[[filter]] re-plan), and the footer pass over a large file
+   * count is itself real IO — the re-plan prunes from memory. */
+  @transient private lazy val view =
+    planned.getOrElse(PlanningView(path, versionAsOf))
+  @transient private lazy val footerBlocks = view.footerBlocks
 
-  @transient private lazy val footerBlocks
-      : Array[(String, org.apache.parquet.hadoop.metadata.BlockMetaData)] = {
-    val conf = Dsv2Parquet.readConf
-    val files = Dsv2Parquet.dataFilesFrom(tableListing._1, new Path(path),
-      tableListing._2, conf, versionAsOf)
-    files.zip(Dsv2Parquet.fileFooters(files, conf)).flatMap {
-      case (f, (_, blocks, _)) => blocks.map(b => f.getPath.toString -> b)
-    }
-  }
-
-  /** Planning-time deletion-vector snapshot (data file name → sidecar
-   * paths). Non-empty ⇒ row counts are inexact — gates limit
-   * truncation; readers get the map through the factory. */
-  @transient private lazy val dvMap: Map[String, Array[String]] =
-    Dsv2Parquet.dvListingFrom(tableListing._1.map(_.getPath), new Path(path),
-      Dsv2Parquet.readConf, versionAsOf)
-  @transient private lazy val dvPresent: Boolean = dvMap.nonEmpty
+  /** Planning-time deletion vectors present ⇒ row counts are inexact —
+   * gates limit truncation; readers get the map through the factory. */
+  @transient private lazy val dvPresent: Boolean = view.dvMap.nonEmpty
 
   /** Planning-time EQUALITY-DELETE snapshot ([[Dsv2Equality]]): the
    * key fields and one bloom-gated key filter per sidecar. Non-empty ⇒
@@ -542,66 +554,51 @@ private[sources] case class GraftParquetScan(path: String,
    * fallback probes per row) and the limit/row-count shortcuts are
    * off — transient state compact_table folds away. */
   @transient private lazy val eqInfo: Option[(Array[StructField],
-      Array[(Set[String], Dsv2Equality.KeyFilter)])] = {
-    val conf = Dsv2Parquet.readConf
-    val vs = tableListing._1
-      .flatMap(f => CommitLog.versionOf(f.getPath.getName)).sorted
-    val snap: Option[CommitLog.Snapshot] = versionAsOf match {
-      case Some(v) =>
-        require(vs.nonEmpty,
-          s"graft-manifest: VERSION AS OF $v on $path, which has no " +
-            "commit log")
-        Some(CommitLog.read(new Path(path), v, conf))
-      case None => vs.lastOption.map(CommitLog.read(new Path(path), _, conf))
-    }
-    if (snap.forall(_.eqFiles.isEmpty)) None
-    // schema resolution PINNED to this scan's version (the latest
-    // manifest may hold a different — even empty — file set), and
-    // by-name: forSnapshot touches it only after at least one LIVE
-    // sidecar is found, which implies live target files with footers
-    else Dsv2Equality.forSnapshot(path, snap,
-      Dsv2Parquet.footerSchema(path, versionAsOf), conf)
-  }
+      Array[(Set[String], Dsv2Equality.KeyFilter)])] =
+    // schema resolution by-name and PINNED to this scan's files (the
+    // latest manifest may hold a different — even empty — file set):
+    // forSnapshot touches it only after at least one LIVE sidecar is
+    // found, which implies live target files with footers
+    Dsv2Equality.forSnapshot(path, view.snapshot,
+      Dsv2Parquet.footerSchemaOf(path, view.dataFiles), Dsv2Parquet.readConf)
   @transient private lazy val eqPresent: Boolean = eqInfo.nonEmpty
 
-  /** The declared clustered layout, validated against the actual file
-   * set: Some iff the sidecar exists and EVERY data file's name parses
-   * a bucket id below the declared width. Third element = the distinct
-   * bucket ids present (reported as the partitioning's width — empty
-   * buckets simply have no partitions, which Spark's partition-value
-   * push handles on the join side). */
+  /** The clustered layout the pinned snapshot's files prove
+   * ([[CommitLog.Snapshot.claimedLayout]]), with the manifest's bucket
+   * id of every data file. A table with no row group reports no
+   * partitioning (a zero-partition KeyGroupedPartitioning is not a
+   * layout claim). */
   @transient private lazy val clusteringInfo
-      : Option[(Array[String], Int, Array[Int], Array[String])] =
-    Dsv2Parquet.clustering(path, Dsv2Parquet.readConf).flatMap {
-      case (cols, num, sortCols) =>
-        val buckets = footerBlocks.map { case (file, _) =>
-          Dsv2Parquet.bucketOfFile(new Path(file).getName)
-        }
-        // an empty table reports no partitioning (a zero-partition
-        // KeyGroupedPartitioning is not a meaningful layout claim)
-        if (buckets.isEmpty ||
-            buckets.exists(b => b.isEmpty || b.get >= num)) None
-        else Some((cols, num, buckets.map(_.get).distinct.sorted, sortCols))
-    }
+      : Option[(CommitLog.Layout, Map[String, Int])] =
+    view.snapshot.flatMap(s => s.claimedLayout.map(_ -> s.buckets))
+      .filter(_ => footerBlocks.nonEmpty)
 
   /** STORAGE-PARTITIONED JOIN surface (SupportsReportPartitioning):
-   * a table written through the sink-demanded `graft.clusterBy`
-   * exchange reads back with its hash layout DECLARED — each file is
-   * one bucket of murmur3(clusterCols) pmod N, so Spark's key-grouped
+   * a version whose files a clustered write placed through the
+   * sink-demanded `graft.clusterBy` exchange reads back with its hash
+   * layout CLAIMED — each file is one bucket of murmur3(clusterCols)
+   * pmod N, recorded per file in the manifest, so Spark's key-grouped
    * planning co-locates equal buckets of two such tables and the
    * reconcile full-outer SMJ plans with ZERO exchanges (the DSv2 twin
    * of the bucketed-catalog configuration; at 100 TB the eliminated
-   * exchange IS the network cost of the join). The `bucket` transform
+   * exchange IS the network cost of the join). The claim is derived
+   * from the scan's pinned version, never declared: time travel and
+   * rollback see their own version's layout. The `bucket` transform
    * resolves against [[GraftCatalog]]'s FunctionCatalog, whose bound
    * function replicates the writer-side hash exactly. */
   override def outputPartitioning(): Partitioning = clusteringInfo match {
-    case Some((cols, num, present, _)) =>
+    case Some((l, buckets)) =>
+      // the distinct ids present are the partitioning's width — empty
+      // buckets simply have no partitions, which Spark's partition-value
+      // push handles on the join side
       new KeyGroupedPartitioning(
-        Array(Expressions.bucket(num, cols.toIndexedSeq: _*)), present.length)
+        Array(Expressions.bucket(l.width, l.cols: _*)),
+        footerBlocks.map(fb => buckets(new Path(fb._1).getName))
+          .distinct.length)
     case None => new UnknownPartitioning(0)
   }
 
-  /** The declared WITHIN-FILE sort (`graft.sortWithin` at write time),
+  /** The recorded WITHIN-FILE sort (`graft.sortWithin` at write time),
    * reported so a key-grouped SMJ can skip its per-partition sorts —
    * Spark honors it only when every key group holds exactly one
    * partition (a concatenation of row groups makes no order claim),
@@ -610,9 +607,10 @@ private[sources] case class GraftParquetScan(path: String,
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
     clusteringInfo match {
-      case Some((_, _, _, sortCols)) =>
-        sortCols.map(c => Expressions.sort(Expressions.column(c),
+      case Some((l, _)) =>
+        l.sortWithin.map(c => Expressions.sort(Expressions.column(c),
           org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+          .toArray
       case None => Array.empty
     }
 
@@ -647,14 +645,13 @@ private[sources] case class GraftParquetScan(path: String,
       case _ => survivors
     }
     val parts: Array[InputPartition] = clusteringInfo match {
-      case Some(_) =>
+      case Some((_, buckets)) =>
         // keyed partitions: Spark groups same-bucket row groups into
         // one task under spark.sql.sources.v2.bucketing.enabled
         limited.map { case (file, b) =>
           GraftParquetBucketPartition(file, b.getStartingPos,
             b.getStartingPos + b.getCompressedSize,
-            Dsv2Parquet.bucketOfFile(new Path(file).getName).get)
-            : InputPartition
+            buckets(new Path(file).getName)): InputPartition
         }
       case None =>
         // SMALL-SPLIT PACKING (the builtin source's discipline, and
@@ -713,7 +710,7 @@ private[sources] case class GraftParquetScan(path: String,
       // reader-level early stop counts PRE-probe rows — with equality
       // deletes in play Spark's own Limit takes the whole cut
       if (eqPresent) None else limit,
-      vectorize, dvMap = dvMap,
+      vectorize, dvMap = view.dvMap,
       eqKeyFields = eqInfo.map(_._1).getOrElse(Array.empty),
       eqFilters = eqInfo.map(_._2).getOrElse(Array.empty))
   }
@@ -767,7 +764,7 @@ private[sources] case class GraftParquetPartition(file: String, start: Long,
 private[sources] case class GraftParquetPackedPartition(
     ranges: Array[GraftParquetPartition]) extends InputPartition
 
-/** A row-group partition of a declared-clustered table: carries the
+/** A row-group partition of a layout-claiming scan: carries the
  * file's bucket id as its partition key so key-grouped planning can
  * co-locate it with the matching bucket of another clustered scan. */
 private[sources] case class GraftParquetBucketPartition(file: String,
@@ -1205,72 +1202,11 @@ private[graft] object Dsv2Parquet {
    * createTable and the empty-after-delete persistence. */
   val SchemaFileName = "_schema.ddl"
 
-  /** Clustering sidecar (`cols\nnumBuckets[\nsortCols]\n`): written by
-   * a clustered+fixed-width batch commit, deleted by any commit that
-   * breaks the invariant (unclustered append, mismatched re-cluster,
-   * streaming epoch). Presence means EVERY data file holds exactly the
-   * keys whose murmur3-pmod bucket equals the id in its file name —
-   * what [[GraftParquetScan.outputPartitioning]] reports for
-   * storage-partitioned joins. The optional third line records a
-   * sink-demanded WITHIN-FILE sort (`graft.sortWithin`), which the
-   * scan reports through `SupportsReportOrdering` so a key-grouped
-   * SMJ plans without per-partition sorts. */
-  val ClusteringFileName = "_clustering"
-
-  /** A small metadata file's whole text (manifest, DDL, ledger, layout). */
+  /** A small metadata file's whole text (manifest, DDL, ledger). */
   private[sources] def readText(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): String = {
     val in = fs.open(p)
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
-  /** Parse the clustering sidecar; None when absent/undeclared.
-   * (clusterCols, numBuckets, sortWithinCols — empty when unsorted). */
-  def clustering(path: String, conf: Configuration)
-      : Option[(Array[String], Int, Array[String])] = {
-    val p = new Path(path, ClusteringFileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val text = readText(fs, p)
-      text.split("\n").filter(_.nonEmpty) match {
-        case Array(cols, num) =>
-          num.toIntOption.map(n =>
-            (cols.split(",").map(_.trim), n, Array.empty[String]))
-        case Array(cols, num, sort) =>
-          num.toIntOption.map(n =>
-            (cols.split(",").map(_.trim), n, sort.split(",").map(_.trim)))
-        case _ => None
-      }
-    }
-  }
-
-  /** Declare the table's clustered layout: written atomically (temp +
-   * rename over), the same discipline as the catalog DDL. */
-  private[sources] def declareClustering(path: String, cols: Array[String],
-      n: Int, sort: Array[String], conf: Configuration): Unit = {
-    val sidecar = new Path(path, ClusteringFileName)
-    val fs = sidecar.getFileSystem(conf)
-    val tmp = new Path(path,
-      s"$ClusteringFileName.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write((cols.mkString(",") + "\n" + n +
-      (if (sort.nonEmpty) "\n" + sort.mkString(",") else "") + "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(sidecar)) fs.delete(sidecar, false)
-    require(fs.rename(tmp, sidecar),
-      "graft-parquet commit: clustering sidecar rename failed")
-  }
-
-  /** Retract any declared layout: a commit whose files are not bucket
-   * aligned (an unclustered append, a row-level rewrite, compaction, a
-   * streaming epoch, a rollback) leaves the table without one. */
-  private[sources] def retractClustering(path: String,
-      conf: Configuration): Unit = {
-    val sidecar = new Path(path, ClusteringFileName)
-    val fs = sidecar.getFileSystem(conf)
-    if (fs.exists(sidecar)) fs.delete(sidecar, false): Unit
   }
 
   /** `_file` metadata column: the data file a row came from — the
@@ -1379,43 +1315,20 @@ private[graft] object Dsv2Parquet {
   def dvListing(path: String, conf: Configuration,
       versionAsOf: Option[Long]): Map[String, Array[String]] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val all =
-      try {
-        if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-        else Array.empty[Path]
-      } catch { case _: java.io.FileNotFoundException => Array.empty[Path] }
-    dvListingFrom(all, p, conf, versionAsOf)
+    val all = CommitLog.listing(p, conf)
+    dvListingFrom(all.map(_.getPath), p,
+      CommitLog.snapshotIn(p, all, conf, versionAsOf))
   }
 
-  /** [[dvListing]] over a listing ALREADY TAKEN — the scan consolidates
-   * data files, sidecars and the commit-log snapshot onto ONE
-   * `listStatus`, so all three views of planning agree even when a
-   * commit lands mid-planning. */
-  def dvListingFrom(all: Array[Path], p: Path, conf: Configuration,
-      versionAsOf: Option[Long]): Map[String, Array[String]] = {
-    val entries = all.filter(_.getName.startsWith(DvPrefix))
-    val vs = all.flatMap(x => CommitLog.versionOf(x.getName))
-    val snapped: Array[Path] = versionAsOf match {
-      case Some(v) =>
-        require(vs.nonEmpty,
-          s"graft-manifest: VERSION AS OF $v on $p, which has no " +
-            "commit log")
-        val s = CommitLog.read(p, v, conf)
-        val byName = entries.map(e => e.getName -> e).toMap
-        s.dvFiles.toArray.sorted.map(n => byName.getOrElse(n,
-          throw new IllegalStateException(
-            s"graft-manifest: version ${s.version} of $p references " +
-              s"missing deletion vector $n")))
-      case None if vs.nonEmpty =>
-        val s = CommitLog.read(p, vs.max, conf)
-        entries.filter(e => s.dvFiles.contains(e.getName))
-      case None => entries
-    }
-    snapped.flatMap(s => dvTarget(s.getName).map(_ -> s.toString))
-      .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
-  }
+  /** [[dvListing]] over a listing ALREADY TAKEN and the snapshot it
+   * pins ([[PlanningView]]): the snapshot's sidecars, or for a
+   * directory graft never wrote every sidecar listed. */
+  def dvListingFrom(all: Array[Path], p: Path,
+      snap: Option[CommitLog.Snapshot]): Map[String, Array[String]] =
+    snap.fold {
+      all.flatMap(s => dvTarget(s.getName).map(_ -> s.toString))
+        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
+    }(_.dvMapUnder(p))
 
   /** `_dv-<datafile>-<uuid>.bin` → `<datafile>`; data file names always
    * end in .parquet (and contain hyphens, as does the uuid), so the
@@ -1447,14 +1360,6 @@ private[graft] object Dsv2Parquet {
     case WtMeta(c) => s"writetime_$c"
     case TtlMeta(c) => s"ttl_$c"
     case n => n
-  }
-
-  /** Bucket id from a committed data file's name (`part-<pid>-…`), the
-   * id the sink-demanded hash exchange assigned its writer task. */
-  private val BucketFilePattern = "part-(\\d+)-.*".r
-  def bucketOfFile(name: String): Option[Int] = name match {
-    case BucketFilePattern(b) => b.toIntOption
-    case _ => None
   }
 
   /** Spark schema → parquet message type, the exact inverse of
@@ -1723,30 +1628,22 @@ private[graft] object Dsv2Parquet {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory) fs.listStatus(p)
-      else Array(st)
-    dataFilesFrom(files, p, st.isDirectory, conf, versionAsOf)
+    if (!st.isDirectory) dataFilesFrom(Array(st), p, isDir = false, None)
+    else {
+      val files = fs.listStatus(p)
+      dataFilesFrom(files, p, isDir = true,
+        CommitLog.snapshotIn(p, files, conf, versionAsOf))
+    }
   }
 
-  /** [[dataFiles]] over a listing already taken (see [[dvListingFrom]]). */
+  /** [[dataFiles]] over a listing already taken and the snapshot it
+   * pins ([[CommitLog.snapshotIn]]; None serves the listing). */
   def dataFilesFrom(all: Array[FileStatus], p: Path, isDir: Boolean,
-      conf: Configuration, versionAsOf: Option[Long]): Array[FileStatus] = {
+      snap: Option[CommitLog.Snapshot]): Array[FileStatus] = {
     val files = if (isDir) all.filter(_.isFile) else all
     val base = files.filter { f =>
       val n = f.getPath.getName
       n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!isDir) return base
-    val vs = files.flatMap(f => CommitLog.versionOf(f.getPath.getName))
-    val snap: Option[CommitLog.Snapshot] = versionAsOf match {
-      case Some(v) =>
-        require(vs.nonEmpty,
-          s"graft-manifest: VERSION AS OF $v on $p, which has no " +
-            "commit log")
-        Some(CommitLog.read(p, v, conf))
-      case None =>
-        if (vs.isEmpty) None else Some(CommitLog.read(p, vs.max, conf))
     }
     snap match {
       case None => base
@@ -1783,9 +1680,12 @@ private[graft] object Dsv2Parquet {
    * runs over exactly THAT version's files, so an undeclared
    * (path-read) table's time-travel schema is the as-of one — a
    * column that exists only in later files does not leak in. */
-  def footerSchema(path: String, versionAsOf: Option[Long]): StructType = {
-    val conf = Dsv2Parquet.readConf
-    val files = dataFiles(path, conf, versionAsOf)
+  def footerSchema(path: String, versionAsOf: Option[Long]): StructType =
+    footerSchemaOf(path, dataFiles(path, readConf, versionAsOf))
+
+  /** [[footerSchema]] over a file set already resolved. */
+  def footerSchemaOf(path: String, files: Array[FileStatus]): StructType = {
+    val conf = readConf
     if (files.isEmpty) {
       // an EMPTIED table: the delete that dropped the last data file
       // persisted the declared DDL precisely so the table doesn't

@@ -178,7 +178,8 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
     val st = fs.getFileStatus(dir)
     val all = if (st.isDirectory) fs.listStatus(dir) else Array(st)
     val listed = Dsv2Parquet.dataFilesFrom(all, dir, st.isDirectory,
-      conf, versionAsOf = None).map(_.getPath.toString)
+      if (st.isDirectory) CommitLog.snapshotIn(dir, all, conf, None)
+      else None).map(_.getPath.toString)
     val vs = all.flatMap(s => CommitLog.versionOf(s.getPath.getName)).sorted
     val skip: Set[String] =
       if (initialized) maintenanceIntroduced(vs) else Set.empty

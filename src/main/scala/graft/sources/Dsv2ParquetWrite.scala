@@ -42,7 +42,11 @@ import org.apache.spark.sql.types._
  * ([[GraftParquetBatchWrite.abort]]) or a failed publish leaves the
  * table and its directory as they were. TRUNCATE (mode=overwrite) and a
  * filter overwrite retire the replaced files from the manifest; the
- * files stay on disk for time travel until `expire_snapshots`. The
+ * files stay on disk for time travel until `expire_snapshots`. A
+ * clustered fixed-width write (`graft.clusterBy` + `graft.numPartitions`)
+ * records its layout and each file's bucket id — its task's partition
+ * id — in the manifest it publishes, which is all the scan's
+ * storage-partitioning claim reads; no other file holds it. The
  * first write into a plain parquet directory imports its listing as
  * version 1 before any file is promoted ([[CommitLog.begin]]).
  *
@@ -140,9 +144,10 @@ private[sources] case class GraftParquetWriteBuilder(path: String,
 }
 
 /** Per-task output: the staged file (None for an empty partition — no
- * zero-row files) and its row count, summed into the probe at commit. */
+ * zero-row files), its row count, summed into the probe at commit, and
+ * the task's partition id — the file's bucket under a clustered write. */
 private[sources] case class GraftParquetCommitMessage(file: Option[String],
-    rows: Long) extends WriterCommitMessage
+    rows: Long, partition: Int = 0) extends WriterCommitMessage
 
 private[sources] case class GraftParquetBatchWrite(path: String,
     schema: StructType, queryId: String, truncateFirst: Boolean,
@@ -155,32 +160,11 @@ private[sources] case class GraftParquetBatchWrite(path: String,
 
   private val staging = StagedCommit(path, queryId)
 
-  /** Maintain the clustering sidecar AFTER the publish: a clustered
-   * fixed-width commit declares (or re-declares) the layout; any commit
-   * that breaks the every-file-is-one-bucket invariant — unclustered
-   * append, or a re-cluster whose columns/width differ from the
-   * declared ones on a non-truncating append — retracts it. */
-  private def maintainClustering(committed: Set[String]): Unit = {
-    val conf = Dsv2Parquet.readConf
-    def sameAsDeclared: Boolean = Dsv2Parquet.clustering(path, conf)
-      .exists { case (cols, n, sort) => cols.sameElements(clusterBy) &&
-        n == numPartitions && sort.sameElements(sortWithin) }
-    // pre-existing data the commit did NOT write: a clustered append
-    // beside it may only declare when those files already carry the
-    // same declared layout
-    def tableWasEmpty: Boolean =
-      Dsv2Parquet.dataFiles(path, conf)
-        .forall(f => committed(f.getPath.getName))
-    // declare: truncate replaced everything; or the append extends the
-    // identical declared layout; or this commit created the table's
-    // first files. Otherwise retract: the directory no longer has a
-    // single declared layout.
-    if (clusterBy.nonEmpty && numPartitions > 0 &&
-        (truncateFirst || sameAsDeclared || tableWasEmpty))
-      Dsv2Parquet.declareClustering(path, clusterBy, numPartitions,
-        sortWithin, conf)
-    else Dsv2Parquet.retractClustering(path, conf)
-  }
+  /** The layout a clustered fixed-width write places its files in. */
+  private val layout =
+    if (clusterBy.isEmpty || numPartitions <= 0) None
+    else Some(CommitLog.Layout(clusterBy.toSeq, numPartitions,
+      sortWithin.toSeq))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -189,8 +173,12 @@ private[sources] case class GraftParquetBatchWrite(path: String,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val t0 = System.nanoTime()
     val staged = messages.collect {
-      case GraftParquetCommitMessage(Some(f), _) => new Path(f)
+      case GraftParquetCommitMessage(Some(f), _, _) => new Path(f)
     }
+    // under a clustered write a task's partition id IS its file's bucket
+    val bucketOf = messages.collect {
+      case GraftParquetCommitMessage(Some(f), _, b) => new Path(f).getName -> b
+    }.toMap
     // files retire LOGICALLY: replaced files stay on disk for time
     // travel until expire_snapshots. Losing the CAS re-reads the new
     // base: appends commute (retry); truncate/overwrite recompute their
@@ -219,7 +207,15 @@ private[sources] case class GraftParquetBatchWrite(path: String,
         else Set.empty[String]) -- stagedNames
       removedCount = removedNames.size
       val remaining = cur.dataFiles -- removedNames
+      // this write's layout becomes the table's when nothing else
+      // survives; beside surviving files its files carry bucket ids only
+      // when it extends their recorded layout — else they carry none and
+      // the scan claims no layout
+      val bucketed = layout.isDefined &&
+        (remaining.isEmpty || cur.layout == layout)
       Some(cur.copy(
+        layout = if (remaining.isEmpty) layout else cur.layout,
+        buckets = if (bucketed) cur.buckets ++ bucketOf else cur.buckets,
         dataFiles = remaining ++ stagedNames,
         dvFiles = cur.dvFiles.filterNot(v =>
           Dsv2Parquet.dvTarget(v).exists(removedNames.contains)),
@@ -236,11 +232,10 @@ private[sources] case class GraftParquetBatchWrite(path: String,
             Dsv2Equality.read(new Path(path), n, conf)
               .targets.exists(remaining.contains))))
     }
-    maintainClustering(stagedNames)
     Dsv2WriteProbe.forPath(path).lastTruncated.set(removedCount)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
-      case GraftParquetCommitMessage(_, n) => n
+      case GraftParquetCommitMessage(_, n, _) => n
     }.sum)
     Dsv2WriteProbe.forPath(path).lastCommitMillis.set(
       (System.nanoTime() - t0) / 1000000L)
@@ -345,7 +340,7 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     val target = new Path(path)
     val fs = target.getFileSystem(conf)
     val staged = messages.collect {
-      case GraftParquetCommitMessage(Some(f), _) => new Path(f)
+      case GraftParquetCommitMessage(Some(f), _, _) => new Path(f)
     }.sortBy(_.getName)
     var dsts = Array.empty[Path]
     // the ledger reconcile, run by the helper after it verified every
@@ -399,9 +394,6 @@ private[sources] case class GraftParquetStreamingWrite(path: String,
     }
     if (truncateFirst) Dsv2WriteProbe.forPath(path).lastTruncated.set(removed)
     gcMarkers(fs, epochId)
-    // a streaming epoch's files are never bucket-aligned — retract any
-    // declared clustering so readers stop reporting it
-    Dsv2Parquet.retractClustering(path, conf)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(dsts.length)
     Dsv2WriteProbe.forPath(path).epochsCommitted.incrementAndGet(): Unit
   }
@@ -469,7 +461,7 @@ private[sources] class GraftParquetDataWriter(stagingDir: String,
 
   override def commit(): WriterCommitMessage = {
     if (writer != null) { writer.close(); writer = null }
-    GraftParquetCommitMessage(Option(file).map(_.toString), rows)
+    GraftParquetCommitMessage(Option(file).map(_.toString), rows, partitionId)
   }
 
   override def abort(): Unit = {

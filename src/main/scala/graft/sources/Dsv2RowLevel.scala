@@ -215,7 +215,7 @@ private[sources] case class GraftReplaceDataWrite(path: String,
     val conf = Dsv2Parquet.readConf
     val target = new Path(path)
     val staged = messages.collect {
-      case GraftParquetCommitMessage(Some(f), _) => new Path(f)
+      case GraftParquetCommitMessage(Some(f), _, _) => new Path(f)
     }
     val scanned = Option(op.scannedFiles.get()).getOrElse(
       throw new IllegalStateException(
@@ -268,12 +268,10 @@ private[sources] case class GraftReplaceDataWrite(path: String,
         dvFiles = cur.dvFiles.filterNot(v =>
           Dsv2Parquet.dvTarget(v).exists(scannedSet.contains))))
     }
-    // a rewrite breaks any declared clustered layout
-    Dsv2Parquet.retractClustering(path, conf)
     Dsv2WriteProbe.forPath(path).lastCommittedFiles.set(staged.length)
     Dsv2WriteProbe.forPath(path).lastTruncated.set(scanned.length)
     Dsv2WriteProbe.forPath(path).lastCommittedRows.set(messages.collect {
-      case GraftParquetCommitMessage(_, n) => n
+      case GraftParquetCommitMessage(_, n, _) => n
     }.sum)
   }
 
@@ -453,9 +451,6 @@ private[sources] case class GraftDeltaBatchWrite(path: String,
       Some(cur.copy(dataFiles = cur.dataFiles ++ stagedNames,
         dvFiles = cur.dvFiles ++ sidecarNames))
     }
-    // inserted files are not bucket-aligned — retract any declared
-    // clustering (position deletes alone preserve the layout claim)
-    if (staged.nonEmpty) Dsv2Parquet.retractClustering(path, conf)
     val probe = Dsv2WriteProbe.forPath(path)
     probe.lastCommittedFiles.set(staged.length)
     probe.lastCommittedRows.set(msgs.map(_.insert.rows).sum)

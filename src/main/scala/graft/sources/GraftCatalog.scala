@@ -600,9 +600,10 @@ private[sources] case class GraftBinpackProcedure(root: String)
 
 /** `rewrite_clustered('ns.table', 'c1,c2', buckets, 'sort1,...')`:
  * rewrite the whole table through the sink-demanded hash exchange and
- * re-declare the clustered layout ([[GraftMaintenance.reclusterTable]])
- * — restores the zero-exchange storage-partitioned reconcile after
- * repairs retracted it. Pass '' for sort_within to skip the
+ * publish it with its clustered layout recorded
+ * ([[GraftMaintenance.reclusterTable]]) — restores the zero-exchange
+ * storage-partitioned reconcile after repairs turned the claim off.
+ * Pass '' for sort_within to skip the
  * within-bucket sort. Returns one row with the replaced file count. */
 private[sources] case class GraftReclusterProcedure(root: String)
     extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
@@ -611,7 +612,7 @@ private[sources] case class GraftReclusterProcedure(root: String)
 
   override def name(): String = "rewrite_clustered"
   override def description(): String =
-    "rewrite the table hash-clustered and re-declare the SPJ layout"
+    "rewrite the table hash-clustered and record the SPJ layout"
 
   override def bind(inputType: StructType): BoundProcedure = this
   override def isDeterministic: Boolean = false

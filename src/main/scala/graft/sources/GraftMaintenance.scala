@@ -120,11 +120,12 @@ object GraftMaintenance {
 
   /** RE-CLUSTER maintenance: rewrite the WHOLE table through the
    * sink-demanded hash exchange (`graft.clusterBy` + strict partition
-   * count + optional within-bucket sort) and re-declare the clustered
-   * layout. This is the restore half of the SPJ story: row-level
-   * repairs and compactions RETRACT a declared layout (their output
-   * files are not bucket-aligned), after which the periodic reconcile
-   * pays its exchange again — a scheduled re-cluster brings back the
+   * count + optional within-bucket sort) and publish it with the
+   * layout and per-file bucket ids its staged write recorded. This is
+   * the restore half of the SPJ story: row-level repairs and
+   * compactions add files without a bucket id, which turns the scan's
+   * layout claim off, after which the periodic reconcile pays its
+   * exchange again — a scheduled re-cluster brings back the
    * zero-exchange zero-sort storage-partitioned join. DVs and equality
    * deletes fold in (the rewrite carries live rows only).
    *
@@ -153,23 +154,24 @@ object GraftMaintenance {
       .option(Dsv2Parquet.SchemaOption, schema.toDDL)
       .option(Dsv2Parquet.ClusterByOption, clusterBy.mkString(","))
       .option(Dsv2Parquet.NumPartitionsOption, buckets.toString)
-    val staged = commit.stage {
+    // the staged write is itself a clustered graft write: its snapshot
+    // records the layout and every file's bucket id
+    val written = commit.stage {
       (if (sortWithin.nonEmpty)
         w.option(Dsv2Parquet.SortWithinOption, sortWithin.mkString(","))
       else w).mode("append").save(commit.dir)
-      Dsv2Parquet.dataFiles(commit.dir, conf).map(_.getPath).toSeq
+      CommitLog.latest(commit.dir, conf).get
     }
-    val newNames = staged.map(_.getName).toSet
-    commit.publish("recluster", staged) { cur =>
+    commit.publish("recluster",
+        written.dataFiles.toSeq.map(new Path(commit.dir, _))) { cur =>
       if (cur.version != base.version) throw new IllegalStateException(
         "graft-recluster: concurrent writer conflict — the table " +
           s"moved from version ${base.version} to ${cur.version} " +
           "during the rewrite; aborting (re-run against the current " +
           "table)")
-      Some(CommitLog.Snapshot(cur.version, newNames, Set.empty))
+      Some(CommitLog.Snapshot(cur.version, written.dataFiles, Set.empty,
+        layout = written.layout, buckets = written.buckets))
     }
-    Dsv2Parquet.declareClustering(path, clusterBy.toArray, buckets,
-      sortWithin.toArray, conf)
     files.length
   }
 
@@ -250,10 +252,6 @@ object GraftMaintenance {
         dvFiles = cur.dvFiles -- baseDvs,
         eqFiles = cur.eqFiles -- applied))
     }
-    // rewritten file names are not bucket-aligned — retract any
-    // declared clustered layout rather than let the scan report a
-    // partitioning the files no longer prove
-    Dsv2Parquet.retractClustering(path, conf)
     files.length
   }
 
@@ -297,12 +295,13 @@ object GraftMaintenance {
     n
   }
 
-  /** `rollback_to_version`: publish a NEW version whose file sets are
-   * exactly those of `version` — a metadata-only undo (zero data
-   * movement, the same face as Iceberg's `rollback_to_snapshot`) that
-   * PRESERVES history: the rolled-over versions stay readable via
-   * `VERSION AS OF` until `expire_snapshots` reclaims them, and the
-   * rollback itself appears in `snapshots` as one more commit. Fails
+  /** `rollback_to_version`: publish a NEW version whose file sets and
+   * clustered layout are exactly those of `version` — a metadata-only
+   * undo (zero data movement, the same face as Iceberg's
+   * `rollback_to_snapshot`) that PRESERVES history: the rolled-over
+   * versions stay readable via `VERSION AS OF` until
+   * `expire_snapshots` reclaims them, and the rollback itself appears
+   * in `snapshots` as one more commit. Fails
    * if the target version has expired or any file it references has
    * been physically reclaimed. Rollback is last-write-wins BY DESIGN:
    * the published state ignores the current snapshot entirely, so a
@@ -321,11 +320,6 @@ object GraftMaintenance {
         s"graft-rollback: version $version references $f, which " +
           "expire_snapshots has physically reclaimed — unrecoverable")
     }
-    // The restored file names may not be bucket-aligned with a layout
-    // declared AFTER the target version — retract any clustering claim
-    // rather than let the scan report a partitioning the restored
-    // files no longer prove (same conservatism as compaction).
-    Dsv2Parquet.retractClustering(path, conf)
     // Rollback restores DATA, not schema — deliberately (and pinned by
     // the schema-evolution fuzz's model: "contents revert, schema
     // stays current"). The new manifest is stamped with the CURRENT
@@ -347,13 +341,13 @@ object GraftMaintenance {
    * version, plus abandoned `_staging-*` dirs and manifest temps. A
    * commit that fails cleans up after itself ([[StagedCommit]]), so
    * these leftovers come only from a driver that died mid-commit, or
-   * from files copied in from outside. Manifests, epoch markers and the
-   * clustering sidecar are never candidates. The `olderThanMs` age
-   * guard is what keeps a LIVE writer's files safe (its staging dir,
-   * and the files it promotes just BEFORE publishing the manifest) —
-   * pass 0 only when no writer can be in flight. Requires the commit
-   * log: in a directory graft never wrote the listing IS the state and
-   * nothing is orphaned. Returns the deleted file count. */
+   * from files copied in from outside. Manifests and epoch markers are
+   * never candidates. The `olderThanMs` age guard is what keeps a LIVE
+   * writer's files safe (its staging dir, and the files it promotes
+   * just BEFORE publishing the manifest) — pass 0 only when no writer
+   * can be in flight. Requires the commit log: in a directory graft
+   * never wrote the listing IS the state and nothing is orphaned.
+   * Returns the deleted file count. */
   def removeOrphanFiles(path: String, olderThanMs: Long): Int = {
     require(olderThanMs >= 0,
       s"graft-orphans: older_than_ms must be >= 0, got $olderThanMs")

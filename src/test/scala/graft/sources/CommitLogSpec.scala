@@ -240,6 +240,38 @@ class CommitLogSpec extends SparkSpec {
         CommitLog.read(new Path(tmp), 9L, conf)
       }, "does not exist")
     }
+    // the clustered layout and per-file bucket ids round-trip
+    withTmp { tmp =>
+      val snap = CommitLog.Snapshot(1L, Set("a.parquet", "b c.parquet"),
+        Set.empty, layout = Some(CommitLog.Layout(Seq("k", "j"), 8, Seq("k"))),
+        buckets = Map("a.parquet" -> 3, "b c.parquet" -> 7))
+      assert(CommitLog.tryCommit(tmp, snap, conf))
+      val back = CommitLog.read(new Path(tmp), 1L, conf)
+      assert(back.layout == snap.layout && back.buckets == snap.buckets)
+      assert(back.claimedLayout == snap.layout)
+    }
+    Seq("B x a.parquet", "B 3", "B -1 a.parquet").foreach { bad =>
+      withTmp { tmp =>
+        writeManifest(tmp, s"graft-manifest 1\nD a.parquet\n$bad\n")
+        assertCauseContains(intercept[IllegalArgumentException] {
+          CommitLog.read(new Path(tmp), 1L, conf)
+        }, "bad bucket line")
+      }
+    }
+    withTmp { tmp =>
+      writeManifest(tmp, "graft-manifest 1\nL 8|k\nD a.parquet\n")
+      assertCauseContains(intercept[IllegalArgumentException] {
+        CommitLog.read(new Path(tmp), 1L, conf)
+      }, "bad layout line")
+    }
+    // a manifest from before the layout tags parses with no layout
+    withTmp { tmp =>
+      writeManifest(tmp, "graft-manifest 1\nM operation append\nD a.parquet\n")
+      val old = CommitLog.read(new Path(tmp), 1L, conf)
+      assert(old.dataFiles == Set("a.parquet"))
+      assert(old.layout.isEmpty && old.buckets.isEmpty &&
+        old.claimedLayout.isEmpty)
+    }
   }
 
   test("enable is idempotent and snapshots the current listing") {

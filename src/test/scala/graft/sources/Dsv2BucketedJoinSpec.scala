@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /**
  * STORAGE-PARTITIONED JOIN through the DSv2 provider (r16 verdict #3):
  * two tables written via the sink-demanded `graft.clusterBy` hash
- * exchange read back with their layout declared
+ * exchange read back with their layout claimed
  * (SupportsReportPartitioning + HasPartitionKey + the catalog's
  * `bucket` function), so an equi-join on the cluster keys plans with
  * ZERO shuffle exchanges — the DSv2 twin of the bucketed-catalog
@@ -63,19 +63,56 @@ class Dsv2BucketedJoinSpec extends SparkSpec {
       .option(Dsv2Parquet.NumPartitionsOption, n.toString)
       .create()
 
+  private def conf = new org.apache.hadoop.conf.Configuration()
+
+  /** The layout the table's latest version claims. */
+  private def claimed(p: String): Option[CommitLog.Layout] =
+    CommitLog.latest(p, conf).flatMap(_.claimedLayout)
+
+  /** The bucket width each graft scan in `df`'s plan reports (None for a
+   * scan that claims no layout). */
+  private def widths(df: DataFrame): Seq[Option[Int]] = {
+    val Bucket = "bucket\\((\\d+),.*".r
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan
+    }.collect { case s: GraftParquetScan =>
+      s.outputPartitioning() match {
+        case k: org.apache.spark.sql.connector.read.partitioning
+            .KeyGroupedPartitioning =>
+          k.keys().head.describe() match { case Bucket(n) => Some(n.toInt) }
+        case _ => None
+      }
+    }
+  }
+
+  /** `f`'s rows (a full outer join's two key columns) must be the same
+   * with storage-partitioned joins on as with bucketing off; a failure
+   * counts each plan's one-sided rows. */
+  private def assertSpjMatchesPlain(what: String)(f: => DataFrame): Unit = {
+    def rows = f.collect().map(_.toString).toSeq.sorted
+    val spj = rows
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+    val plain =
+      try rows
+      finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    def sides(rs: Seq[String]) = (rs.count(_.startsWith("[null,")),
+      rs.count(_.endsWith(",null]")))
+    if (spj != plain) fail(s"$what: SPJ and plain plans differ — " +
+      s"(right-only, left-only) rows: SPJ ${sides(spj)}, plain ${sides(plain)}")
+  }
+
   test("clustered write declares the layout; unclustered append retracts it") {
     withTmp { tmp =>
       withSpj(tmp) { cat =>
         val df = spark.range(100).select(col("id").as("k"),
           (col("id") * 2).as("v"))
         writeClustered(df, cat, "t", "k", 4)
-        assert(Dsv2Parquet.clustering(s"$tmp/db/t",
-          new org.apache.hadoop.conf.Configuration())
-          .exists { case (c, n, _) => c.sameElements(Array("k")) && n == 4 })
-        // unclustered append breaks the invariant → sidecar retracted
+        assert(claimed(s"$tmp/db/t").exists(l =>
+          l.cols == Seq("k") && l.width == 4))
+        // unclustered append breaks the invariant → no layout claimed
         df.limit(5).writeTo(s"$cat.db.t").append()
-        assert(Dsv2Parquet.clustering(s"$tmp/db/t",
-          new org.apache.hadoop.conf.Configuration()).isEmpty)
+        assert(claimed(s"$tmp/db/t").isEmpty)
       }
     }
   }
@@ -210,10 +247,9 @@ class Dsv2BucketedJoinSpec extends SparkSpec {
         // clustered layout claim survives (a subset of a bucket is
         // still exactly that bucket)
         spark.sql(s"DELETE FROM $cat.db.sa WHERE k % 10 = 3")
-        val conf = new org.apache.hadoop.conf.Configuration()
         assert(Dsv2Parquet.hasDvs(s"$tmp/db/sa", conf))
-        assert(Dsv2Parquet.clustering(s"$tmp/db/sa", conf).nonEmpty,
-          "delete-only delta commit retracted the clustering sidecar")
+        assert(claimed(s"$tmp/db/sa").nonEmpty,
+          "delete-only delta commit turned the layout claim off")
         val j = spark.table(s"$cat.db.sa")
           .join(spark.table(s"$cat.db.sb"), "k")
         assert(shuffles(j) == 0, "MoR delete broke the zero-exchange join")
@@ -229,21 +265,92 @@ class Dsv2BucketedJoinSpec extends SparkSpec {
         val df = spark.range(500).select(col("id").as("k"),
           concat(lit("s"), col("id")).as("s"))
         writeClustered(df, cat, "bf", "k", 8)
-        // every row of every file must evaluate to the bucket in the
-        // file's name under the catalog's bound function
+        // every row of every file must evaluate to the file's bucket in
+        // the manifest under the catalog's bound function
         val bound = GraftBucketFunction.bind(org.apache.spark.sql.types
           .StructType.fromDDL("n INT, k BIGINT"))
           .asInstanceOf[GraftBucketBound]
+        val buckets = CommitLog.latest(s"$tmp/db/bf", conf).get.buckets
         val perFile = spark.read.parquet(s"$tmp/db/bf")
           .select(col("k"), input_file_name().as("f")).collect()
         perFile.foreach { r =>
-          val fileBucket = Dsv2Parquet.bucketOfFile(
-            new org.apache.hadoop.fs.Path(r.getString(1)).getName).get
+          val fileBucket = buckets(
+            new org.apache.hadoop.fs.Path(r.getString(1)).getName)
           val row = new org.apache.spark.sql.catalyst.expressions
             .GenericInternalRow(Array[Any](8, r.getLong(0)))
           assert(bound.produceResult(row) == fileBucket,
             s"k=${r.getLong(0)} file bucket $fileBucket")
         }
+      }
+    }
+  }
+
+  test("an equality repair of a clustered MV leaves no false layout claim") {
+    // the reconcile's full outer join of base and MV, each clustered
+    // into 64 buckets: an eq commit's insert files are not bucket
+    // aligned, so after it the MV scan must claim no layout — else
+    // key-grouped planning pairs inserted keys with the wrong base
+    // bucket and the SPJ plan reports them missing on both sides
+    withTmp { tmp =>
+      withSpj(tmp) { cat =>
+        val saved = spark.conf.getOption(
+          "spark.sql.requireAllClusterKeysForCoPartition")
+        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        try {
+          val base = spark.range(3000).select(col("id").as("k"),
+            (col("id") * 3).as("v"))
+          writeClustered(base, cat, "base", "k", 64)
+          writeClustered(base.filter(col("k") % 20 =!= 7), cat, "mv", "k", 64)
+          EqualityRepair.commit(spark, s"$tmp/db/mv", Seq("k"),
+            spark.range(3000).filter(col("id") % 50 === 3)
+              .select(col("id").as("k")),
+            base.filter(col("k") % 20 === 7))
+          assert(spark.table(s"$cat.db.mv").count() == 2940L)
+          assertSpjMatchesPlain("reconcile after an eq repair") {
+            spark.table(s"$cat.db.base").as("b")
+              .join(spark.table(s"$cat.db.mv").as("m"),
+                col("b.k") === col("m.k") && col("b.v") === col("m.v"),
+                "full_outer")
+              .select(col("b.k"), col("m.k"))
+          }
+        } finally saved.fold(spark.conf.unset(
+          "spark.sql.requireAllClusterKeysForCoPartition"))(
+          spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", _))
+      }
+    }
+  }
+
+  test("time travel and rollback claim their own version's layout") {
+    withTmp { tmp =>
+      withSpj(tmp) { cat =>
+        val p = s"$tmp/db/tt"
+        writeClustered(spark.range(3000).select(col("id").as("k"),
+          (col("id") % 101).as("v")), cat, "tt", "k", 8)
+        writeClustered(spark.range(1000, 4000).select(col("id").as("k"),
+          lit(1L).as("w")), cat, "r16", "k", 16)
+        val v8 = CommitLog.latest(p, conf).get.version
+        spark.sql(s"CALL $cat.system.rewrite_clustered('db.tt', 'k', 16, '')")
+          .collect()
+        def joined(t: DataFrame): DataFrame = t.as("t")
+          .join(spark.table(s"$cat.db.r16").as("r"),
+            col("t.k") === col("r.k"), "full_outer")
+          .select(col("t.k"), col("r.k"))
+        def asOf = spark.sql(s"SELECT * FROM $cat.db.tt VERSION AS OF $v8")
+        // the pre-recluster version never claims the newer width
+        assert(!widths(asOf).contains(Some(16)))
+        assertSpjMatchesPlain("VERSION AS OF the 8-bucket version")(joined(asOf))
+        assert(widths(spark.table(s"$cat.db.tt")) == Seq(Some(16)))
+        // rollback restores the target version's layout with its files
+        spark.sql(s"CALL $cat.system.rollback_to_version('db.tt', $v8)")
+          .collect()
+        assert(widths(spark.table(s"$cat.db.tt")) == Seq(Some(8)))
+        // a later eq repair with inserts turns the claim off
+        EqualityRepair.commit(spark, p, Seq("k"),
+          spark.range(0, 3000, 7).select(col("id").as("k")),
+          spark.range(5000, 5100).select(col("id").as("k"), lit(0L).as("v")))
+        assert(widths(spark.table(s"$cat.db.tt")) == Seq(None))
+        assertSpjMatchesPlain("after the eq repair")(
+          joined(spark.table(s"$cat.db.tt")))
       }
     }
   }

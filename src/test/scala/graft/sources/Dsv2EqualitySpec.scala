@@ -352,16 +352,17 @@ class Dsv2EqualitySpec extends SparkSpec {
           .option(Dsv2Parquet.NumPartitionsOption, "4")
           .option(Dsv2Parquet.SortWithinOption, "k")
           .mode("append").save(p)
-        assert(Dsv2Parquet.clustering(p, conf).exists(_._2 == 4))
-        // a MoR repair lands DVs + insert files → layout retracted
+        def claimed = CommitLog.latest(p, conf).flatMap(_.claimedLayout)
+        assert(claimed.exists(_.width == 4))
+        // a MoR repair lands DVs + insert files → no layout claimed
         spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
         spark.sql(
           s"""MERGE INTO $cat.db.t t
              |USING (SELECT 5000 + id AS k, 1 AS v FROM range(10)) s
              |ON t.k = s.k WHEN NOT MATCHED THEN INSERT (k, v)
              |VALUES (s.k, s.v)""".stripMargin)
-        assert(Dsv2Parquet.clustering(p, conf).isEmpty,
-          "the repair should have retracted the declared layout")
+        assert(claimed.isEmpty,
+          "the repair's insert files should have turned the claim off")
         val expect = spark.sql(s"SELECT k, v FROM $cat.db.t")
           .as[(Long, Long)].collect().toSet
         val preVersion = CommitLog.latest(p, conf).get.version
@@ -369,19 +370,17 @@ class Dsv2EqualitySpec extends SparkSpec {
           s"CALL $cat.system.rewrite_clustered('db.t', 'k', 4, 'k')")
           .collect().head.getInt(0)
         assert(replaced > 0)
-        // layout re-declared, every file a bucket, DVs folded, state exact
-        assert(Dsv2Parquet.clustering(p, conf)
-          .contains((Array("k"), 4, Array("k"))) ||
-          Dsv2Parquet.clustering(p, conf).exists { case (c, n, s) =>
-            c.sameElements(Array("k")) && n == 4 && s.sameElements(Array("k"))
-          })
+        // layout re-recorded, every file a bucket, DVs folded, state exact
+        assert(claimed.contains(CommitLog.Layout(Seq("k"), 4, Seq("k"))))
         assert(CommitLog.latest(p, conf).get.dvFiles.isEmpty)
         assert(spark.sql(s"SELECT k, v FROM $cat.db.t")
           .as[(Long, Long)].collect().toSet == expect)
-        // every rewritten file parses a bucket id below the width —
-        // the invariant the scan's KeyGroupedPartitioning report needs
+        // every rewritten file carries a bucket id below the width in
+        // the manifest — the invariant the scan's
+        // KeyGroupedPartitioning report needs
+        val buckets = CommitLog.latest(p, conf).get.buckets
         assert(Dsv2Parquet.dataFiles(p, conf).forall(f =>
-          Dsv2Parquet.bucketOfFile(f.getPath.getName).exists(_ < 4)))
+          buckets.get(f.getPath.getName).exists(_ < 4)))
         // pre-recluster history stays readable (replace-all was logical)
         assert(spark.sql(
           s"SELECT k FROM $cat.db.t VERSION AS OF $preVersion").count() ==

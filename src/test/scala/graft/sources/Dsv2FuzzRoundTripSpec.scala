@@ -280,6 +280,42 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
         def checkpoint(): Unit =
           CommitLog.latest(p, conf).foreach(s => history(s.version) = model.toMap)
 
+        // the scan's layout claim: a full outer join against a fixed
+        // 8-bucket table must answer the same with storage-partitioned
+        // joins on as with bucketing off, whatever layout (or none) the
+        // table's latest version — or a recorded earlier one, read
+        // VERSION AS OF — claims
+        spark.range(0, 4000).select(col("id").as("k"), (col("id") * 7).as("rv"))
+          .writeTo(s"$cat.db.ref")
+          .option(Dsv2Parquet.ClusterByOption, "k")
+          .option(Dsv2Parquet.NumPartitionsOption, "8")
+          .create()
+        def spjMatchesPlain(step: Int): Unit = {
+          val spj = "spark.sql.sources.v2.bucketing.enabled"
+          val keys = Seq(spj, "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.enabled")
+          val saved = keys.map(k => k -> spark.conf.getOption(k))
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+          spark.conf.set("spark.sql.adaptive.enabled", "false")
+          val asOf = if (history.isEmpty) "" else {
+            val vs = history.keys.toSeq.sorted
+            s" VERSION AS OF ${vs(rnd.nextInt(vs.length))}"
+          }
+          def joined(from: String, bucketing: Boolean): Seq[String] = {
+            spark.conf.set(spj, bucketing.toString)
+            spark.sql(s"SELECT k, v FROM $cat.db.t$from")
+              .join(spark.table(s"$cat.db.ref"), Seq("k"), "full_outer")
+              .collect().map(_.toString).toSeq.sorted
+          }
+          try Seq("", asOf).distinct.foreach { from =>
+            if (joined(from, true) != joined(from, false))
+              fail(s"iter=$iter step=$step SPJ join of t$from differs " +
+                "from the plain plan")
+          } finally saved.foreach { case (k, v) =>
+            v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+          }
+        }
+
         // row-level operations refuse live equality deletes — fold
         // first, exactly as a production maintenance schedule would
         def foldEqIfLive(): Unit =
@@ -287,7 +323,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
             GraftMaintenance.compactDeletionVectors(spark, p): Unit
 
         (0 until 6).foreach { step =>
-          rnd.nextInt(13) match {
+          rnd.nextInt(15) match {
             case 0 | 1 => // append a fresh batch
               val rows = freshRows(50 + rnd.nextInt(200))
               df(rows).writeTo(s"$cat.db.t").append()
@@ -384,8 +420,26 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
               sw.commit(1L, Array(w.commit()))
               model.clear()
               model ++= rows
+            case 13 | 14 => // a clustered append, or a re-cluster of
+              // the whole table — drawn twice as often as the other
+              // operations, so that a claimed layout often meets the
+              // commits and time travel that must not inherit it. Either
+              // may make the latest version claim 8 buckets, which join
+              // the reference without an exchange, or 16, which do not
+              val width = if (rnd.nextBoolean()) 8 else 16
+              if (rnd.nextBoolean()) {
+                val rows = freshRows(20 + rnd.nextInt(80))
+                df(rows).writeTo(s"$cat.db.t")
+                  .option(Dsv2Parquet.ClusterByOption, "k")
+                  .option(Dsv2Parquet.NumPartitionsOption, width.toString)
+                  .append()
+                model ++= rows
+              } else spark.sql(s"CALL $cat.system.rewrite_clustered('db.t', " +
+                s"'k', $width, '${if (rnd.nextBoolean()) "k" else ""}')")
+                .collect(): Unit
           }
           checkpoint()
+          spjMatchesPlain(step)
           val got = spark.sql(s"SELECT k, v FROM $cat.db.t").collect()
             .map(r => r.getLong(0) -> r.getLong(1))
           assert(got.length == got.map(_._1).distinct.length,

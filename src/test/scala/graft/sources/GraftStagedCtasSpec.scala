@@ -83,10 +83,9 @@ class GraftStagedCtasSpec extends SparkSpec {
         .create()
       assert(spark.table(s"$cat.db.cc").count() == 500L)
       // the published table carries the declared clustered layout
-      val info = Dsv2Parquet.clustering(s"$tmp/db/cc",
-        new org.apache.hadoop.conf.Configuration())
-      assert(info.exists { case (c, n, s) =>
-        c.sameElements(Array("k")) && n == 4 && s.sameElements(Array("k")) })
+      val info = CommitLog.latest(s"$tmp/db/cc",
+        new org.apache.hadoop.conf.Configuration()).flatMap(_.claimedLayout)
+      assert(info.contains(CommitLog.Layout(Seq("k"), 4, Seq("k"))))
     }
   }
 }

@@ -171,7 +171,8 @@ class PlainImportSpec extends SparkSpec {
       val original = plain(p)
       assert(GraftMaintenance.reclusterTable(spark, p, Seq("k"), 3) == 2)
       imported(p, original)
-      assert(Dsv2Parquet.clustering(p, conf).map(_._2).contains(3))
+      assert(CommitLog.latest(p, conf).flatMap(_.claimedLayout)
+        .map(_.width).contains(3))
       assert(keys(spark.read.format(fmt).load(p)) == (0L until 100L).toSet)
     }
   }
