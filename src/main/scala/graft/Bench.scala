@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Sessions
+import org.apache.logging.log4j.LogManager
 
 /**
  * Benchmark entry: headline queries at the bench scale factor, one JSON
@@ -16,6 +17,8 @@ import org.apache.spark.sql.SparkSession
  * compare/classify pipeline).
  */
 object Bench {
+
+  private val logger = LogManager.getLogger(getClass)
 
   val headline: Seq[String] = Seq(
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
@@ -88,16 +91,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.create("graft-bench")
     // Untimed warmup pass: JVM JIT, whole-stage-codegen compilation and
     // parquet footer caching are one-time session costs, not per-query
     // throughput — the timed pass below measures steady state (the
@@ -130,7 +125,7 @@ object Bench {
       ts(1)
     }
     val calibration = median3 { () =>
-      spark.range(0, 1L << 33, 1, cpus.toInt)
+      spark.range(0, 1L << 33, 1, cpus)
         .selectExpr("xxhash64(id) AS h")
         // bit_xor, not sum: summing 8.6e9 hashes overflows Long under
         // ANSI arithmetic
@@ -138,17 +133,17 @@ object Bench {
           org.apache.spark.sql.functions.col("h"))).collect(): Unit
     }
     val calibrationShuffle = median3 { () =>
-      spark.range(0, 30L << 20, 1, cpus.toInt)
+      spark.range(0, 30L << 20, 1, cpus)
         .selectExpr("id", "xxhash64(id) AS h")
         .repartition(64, org.apache.spark.sql.functions.col("h"))
         .agg(org.apache.spark.sql.functions.bit_xor(
           org.apache.spark.sql.functions.col("h"))).collect(): Unit
     }
-    System.err.println(f"[bench] calibration=${calibration}%.3fs cpu, " +
+    logger.info(f"[bench] calibration=${calibration}%.3fs cpu, " +
       f"${calibrationShuffle}%.3fs shuffle (fixed work, no file IO)")
     (headline ++ extended).foreach { name =>
       try execute(SparkEntry.queries(name)(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[bench-warmup] $name: $e") }
+      catch { case e: Throwable => logger.warn(s"[bench-warmup] $name: $e") }
     }
     // Median of 3 timed passes per query: a single pass is dominated by
     // GC/JIT jitter at these sub-5s scales (r4's q1 "regression" from
@@ -163,7 +158,7 @@ object Bench {
       val t0 = System.nanoTime()
       try execute(SparkEntry.queries(name)(spark, sfDir))
       catch { case e: Throwable =>
-        failed += name; System.err.println(s"[bench] $name: $e")
+        failed += name; logger.warn(s"[bench] $name: $e")
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -252,11 +247,11 @@ object Bench {
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND): Unit
     catch { case e: Throwable =>
-      System.err.println(s"[bench] PLAN_FPS.log append failed: $e")
+      logger.warn(s"[bench] PLAN_FPS.log append failed: $e")
     }
     spark.stop()
     if (failed.nonEmpty) {
-      System.err.println(s"[bench] FAILED queries: ${failed.toSeq.sorted.mkString(", ")}")
+      logger.warn(s"[bench] FAILED queries: ${failed.toSeq.sorted.mkString(", ")}")
       sys.exit(1)
     }
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.config.Settings
+import graft.obs.Sessions
 import graft.reconcile.MvReconciler.{Consistent, Inconsistent, MissingInBase,
   MissingInMv, NotInScope}
 import graft.schema.TableSchema
@@ -72,14 +73,7 @@ object MvSyncDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft-mvsync-demo")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-mvsync-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-mvsync-demo")
 
     // orders has no o_orderdate in the projected schema — re-read wide:
     val settings = Settings(

@@ -1,6 +1,7 @@
 package graft
 
 import graft.config.Settings
+import graft.obs.Sessions
 import graft.reconcile.MvReconciler
 import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportWriter, StatsCollector}
@@ -57,13 +58,7 @@ object MvSyncJob {
    * mirroring the reference's cluster-metadata discovery.
    */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-mvsync")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-mvsync")
     def conf(k: String): Option[String] =
       spark.conf.getOption(s"cass.mv.$k").orElse(spark.conf.getOption(s"spark.cass.mv.$k"))
     def need(i: Int, k: String): String =

@@ -1,9 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.obs.Sessions
+import org.apache.logging.log4j.LogManager
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val logger = LogManager.getLogger(getClass)
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // builder-side: optional trailing query names restrict the dump
@@ -15,17 +17,7 @@ object Verify {
     // silently pass. A later run of a query overwrites its directory
     // (mode overwrite), clearing the marker.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 refuses by
-      // default; read it as an exact nanosecond LongType instead.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -33,7 +25,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        logger.warn(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     if (only.nonEmpty)

@@ -21,9 +21,9 @@ import org.apache.spark.sql.types._
  * grown as log₂C — at the price of APPROXIMATE assignment: a vector
  * whose true nearest centroid hashes outside every probed bucket gets
  * its nearest PROBED centroid instead. That is IVF's own nprobe trade,
- * applied to the quantizer; the scale smoke measures both the
- * agreement rate against exact assignment and the end-to-end keeper
- * recall (ScaleSmoke `ivfindex`). The oracle-wired queries keep the
+ * applied to the quantizer; BASELINE.md regime `ivfindex` records both
+ * the agreement rate against exact assignment and the end-to-end
+ * keeper recall. The oracle-wired queries keep the
  * exact kernel — their DuckDB oracles replay exact Lloyd.
  *
  * Index layout: sorted bucket keys + member offsets into one positions

@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
  */
 object Curation {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
@@ -548,7 +550,7 @@ object Curation {
     import spark.implicits._
     val cached = dictCacheKey.flatMap(k => Option(dictMemo.get(k)))
     cached.orElse(dictCacheKey.map(_ => ())).foreach { _ =>
-      System.err.println(s"[graft-acdict] dictionary memo " +
+      logger.info(s"[graft-acdict] dictionary memo " +
         s"${if (cached.isDefined) "HIT" else "MISS"} ${dictCacheKey.get}")
     }
     val (totalBytes, allShardStats): (Long, IndexedSeq[Array[(String, Long, Long)]]) =
@@ -959,8 +961,8 @@ object Curation {
    * re-derives the whole curation chain AND the bit interleave in
    * DuckDB, so a row lost, duplicated, or mutated anywhere in the
    * clustered write round-trip turns the hash red. File-level pruning
-   * on this exact written layout is MEASURED in ScaleSmoke `curation`
-   * (curated-output probe). The write is tmpfs IO, so the query is
+   * on this exact written layout is recorded in BASELINE.md regime
+   * `curation` (curated-output probe). The write is tmpfs IO, so the query is
    * benchExcluded like the CSV round-trip. */
   def pipelineCurateLayout(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-curated-z").toString

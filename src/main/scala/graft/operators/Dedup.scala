@@ -280,43 +280,26 @@ object Dedup {
     minhashLshPairs(docs(spark, dir))
 
   /** The MinHash+LSH pipeline over any `(doc_id, text)` frame —
-   * exposed so scale smokes / callers with their own corpus reuse the
-   * exact wired plan. `materialize = true` checkpoints the signature
-   * tables (`d`, `banded`) so each is computed once; `false` lets every
-   * consumer recompute the hash kernels from the text scan. The smoke
-   * keeps the trade measured per round.
+   * exposed so callers with their own corpus reuse the exact wired plan.
    *
-   * Default history: r10 checkpointed both ("hash once"); r11 measured
-   * materialization 2.2× ahead at 40× (8.8 vs 19.5 s) and kept it. r22
-   * re-measured: the kernels got ~2× faster over r12–r21, and the r11
-   * ranking no longer reproduces — five warmed best-of-2 runs at 40×
-   * read materialized 9.6–14.6 s vs recompute 8.6–13.3 s (tie within
-   * host variance), and at the bench SF an interleaved 5-run A/B reads
-   * 0.46 vs 0.36 s for recompute. The default STAYS materialized on
-   * first-principles I/O math (guide §1.3): the recompute plan scans
-   * the corpus parquet EIGHT times (plan-verified), ~800 TB of source
-   * reads at target scale, vs one scan + signature traffic through
-   * block storage (~5 signature-sized passes) for the checkpoint form —
-   * and both smoke regimes sit in page cache, so the 40× tie cannot
-   * arbitrate real I/O. The 0.10 s sf0.1 delta is two small-corpus
-   * checkpoint jobs — a local-mode artifact, not a scale signal.
-   * Re-measured every `ScaleSmoke dedup` run; revisit only with an
-   * out-of-cache measurement. */
-  def minhashLshPairs(corpus: DataFrame, materialize: Boolean = true): DataFrame = {
-    def mat(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint() else df
+   * The signature tables `d` and `banded` are local checkpoints, so each
+   * is computed once: `d` feeds the banding AND both rerank re-attach
+   * joins, `banded` feeds both sides of the bucket self-join, and Spark
+   * does not dedupe common subtrees — unmaterialized, the shingle kernel
+   * runs four times and the minhash fold twice (8 corpus scans in the
+   * physical plan). In-page-cache runs read the two forms as a tie (r22,
+   * 40×), so source reads decide: one corpus scan plus ~5
+   * signature-sized passes here against eight corpus scans. */
+  def minhashLshPairs(corpus: DataFrame): DataFrame = {
     // No size(sh)>0 filter (see `shingled`): posexplode drops empty band
     // arrays itself, and the pushed-down filter would re-run the hash
     // kernel serially below the spread repartition.
-    // `d` feeds the banding AND both rerank re-attach joins, `banded`
-    // feeds both sides of the bucket self-join, and Spark does not
-    // dedupe common subtrees — unmaterialized, the shingle kernel runs
-    // four times and the minhash fold twice (8 corpus scans in the
-    // physical plan).
-    val d = mat(spread(corpus) // CPU-bound hashing scan
-      .select(col("doc_id"), shingle_hashes(col("text"), 3).as("sh")))
-    val banded = mat(d.select(col("doc_id"),
+    val d = spread(corpus) // CPU-bound hashing scan
+      .select(col("doc_id"), shingle_hashes(col("text"), 3).as("sh"))
+      .localCheckpoint()
+    val banded = d.select(col("doc_id"),
       posexplode(minhash_bands(col("sh"), NumBands, RowsPerBand)))
-      .toDF("doc_id", "band", "bucket"))
+      .toDF("doc_id", "band", "bucket").localCheckpoint()
     val pairs = banded.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
       .join(banded.select(col("band"), col("bucket"), col("doc_id").as("id_b")),
         Seq("band", "bucket"))
@@ -518,8 +501,8 @@ object Dedup {
    * even a pathologically hot tile arrives at its reducer as one
    * partial row per map task, and the join-back's skew is AQE's to
    * split. No stage is pairwise in the corpus: cost is O(chars) scan +
-   * O(tiles) shuffle however much repetition exists (ScaleSmoke
-   * `substrself` pins near-linear growth under replication), and the
+   * O(tiles) shuffle however much repetition exists (BASELINE.md regime
+   * `substrself`: near-linear growth under replication), and the
    * output alone is repetition-proportional. Digesting with md5 keeps
    * the oracle value-exact: DuckDB folds tiles through the same
    * function, so both engines group identically even under a
@@ -569,7 +552,7 @@ object Dedup {
    * codegen). Same rows, bit-for-bit: n_occ = Σ per-doc counts, and
    * (keep_doc_id, keep_pos) = lexicographic min exactly.
    *
-   * r22 refinement (ScaleSmoke `r21ab`, measured at 40×): the r21
+   * r22 refinement (BASELINE.md regime `r21ab`, measured at 40×): the r21
    * stacked shape let each aggregate plan its own exchange — the tile
    * stats crossed the network TWICE (by (h, doc_id), then by h), and
    * at 40× replication that read 0.68–0.81× the OLD min(struct) form's
@@ -728,12 +711,11 @@ object Dedup {
   }
 
   /** The cell-bucketed keeper search behind [[dedupSemantic]],
-   * parameterized over the quantizer so the scale smoke can grow the
-   * centroid count with the corpus (the contract that keeps per-cell
-   * pairing bounded). `indexPlanes = Some(p)` assigns through the
-   * bucket-pruned [[graft.functions.CentroidIndex]] instead of the flat
-   * kernel — the C ≳ 10⁴ path, recall measured in ScaleSmoke
-   * `ivfindex`. */
+   * parameterized over the quantizer so a caller can grow the centroid
+   * count with the corpus (the contract that keeps per-cell pairing
+   * bounded). `indexPlanes = Some(p)` assigns through the bucket-pruned
+   * [[graft.functions.CentroidIndex]] instead of the flat kernel — the
+   * C ≳ 10⁴ path, recall recorded in BASELINE.md regime `ivfindex`. */
   def semanticKeepers(e: DataFrame, cents: Similarity.Centroids,
       threshold: Double = 0.4, indexPlanes: Option[Int] = None): DataFrame = {
     val lists = indexPlanes match {

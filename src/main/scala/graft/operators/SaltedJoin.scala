@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
  * salt NEVER affects the result set — any salt distribution yields the
  * same joined rows, only the reducer placement changes.
  *
- * When to reach for it (measured, ScaleSmoke r06): only when a single
- * key's shuffle partition exceeds task memory/time limits AND AQE
- * skew-split is unavailable. At local smoke scale (2M-row hot key,
- * fits one task) the ×factor dim replication costs MORE than the skew
- * it cures (5.0s vs 3.3s unsalted, AQE off in both) — prefer AQE
+ * When to reach for it (measured r06, BASELINE.md regime `skew`):
+ * only when a single key's shuffle partition exceeds task memory/time
+ * limits AND AQE skew-split is unavailable. At local scale (2M-row
+ * hot key, fits one task) the ×factor dim replication costs MORE than
+ * the skew it cures (5.0s vs 3.3s unsalted, AQE off in both) — prefer AQE
  * (result-neutral, on by default) and treat salting as the manual
  * escape hatch for the genuinely pathological regime.
  */

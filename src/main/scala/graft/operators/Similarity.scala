@@ -196,7 +196,8 @@ object Similarity {
    * `numPlanes >= 2`: a vector whose nearest centroid hashes outside
    * every probed bucket lands in its nearest probed cell instead
    * (IVF's own nprobe trade, applied to the quantizer); agreement and
-   * end-to-end keeper recall are MEASURED in ScaleSmoke `ivfindex`.
+   * end-to-end keeper recall are measured in BASELINE.md ("Bucket-pruned
+   * quantizer assignment", regime `ivfindex`).
    * EXACT at `numPlanes = 1` (the probe set covers both buckets) —
    * driver-verified against the exact-Lloyd oracle via
    * [[simAnnIvfPruned]]. */
@@ -263,8 +264,8 @@ object Similarity {
    * the indexed argmax scans every centroid and is provably exact —
    * this query must hash-match the SAME exact-Lloyd DuckDB oracle as
    * [[simAnnIvf]]. Sub-linear pruning at realistic plane counts is
-   * measured separately in ScaleSmoke `ivfindex` (P-sweep agreement +
-   * keeper recall). */
+   * measured separately in BASELINE.md, regime `ivfindex` (P-sweep
+   * agreement + keeper recall). */
   def simAnnIvfPruned(spark: SparkSession, dir: String): DataFrame =
     simAnnIvfWith(spark, dir)(ivfAssignPruned(_, _, numPlanes = 1))
 
@@ -465,8 +466,8 @@ object Similarity {
 
   /** The ids-only IVF candidate generation alone — (query_id,
    * neighbor_id) for every vector in a query's nprobe probed cells;
-   * shared by [[simAnnIvfPqWith]] and the ScaleSmoke ivfpq block's
-   * candidate-fraction measurement. */
+   * shared by [[simAnnIvfPqWith]] and the candidate-fraction
+   * measurement of BASELINE.md regime `ivfpq`. */
   def ivfPqCandidates(spark: SparkSession, dir: String, e: DataFrame,
       c: Int, nprobe: Int): DataFrame = {
     val cents = loadOrFitCentroids(spark, dir, e, c)

@@ -494,7 +494,7 @@ object TextAnalysis {
    * ASC UTF-8) total order, and the collect is byte-guarded BEFORE it
    * runs (r15 verdict #1 — this was the repo's one driver-side state
    * that grew with corpus content rather than a chosen parameter;
-   * ScaleSmoke `bpe` measures the dict flat as the corpus
+   * BASELINE.md regime `bpe` measured the dict flat as the corpus
    * replicates). The loop lives in [[graft.functions.BpeKernels
    * .train]] so the specs pin the production code path on
    * hand-checked cases. Oracle: the SAME loop unrolled as [[bpeCtes]]
@@ -521,8 +521,8 @@ object TextAnalysis {
       .localCheckpoint()
 
   /** Measured driver cost of collecting a dict: UTF-8 payload plus a
-   * fixed per-entry overhead allowance. Shared with the ScaleSmoke
-   * `bpe` curve so the smoke measures exactly the guarded quantity. */
+   * fixed per-entry overhead allowance — the quantity BASELINE.md
+   * regime `bpe` recorded flat under replication. */
   private[graft] def dictBytes(dict: DataFrame): Long = {
     val r = dict.agg(coalesce(sum(octet_length(col("w"))), lit(0L)),
       count(lit(1))).head()

@@ -53,7 +53,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * schema-evolved directories (per-file projection + null fill, union
  * schema inference), column-index page skipping, and measured AT or
  * ABOVE the built-in source's decode throughput on the smoke shapes
- * (ScaleSmoke dsv2scan). What it deliberately skips is Hive-style
+ * (BASELINE.md regime `dsv2scan`). What it deliberately skips is Hive-style
  * partition-directory discovery — the catalog + clustered layouts
  * cover that ground here.
  *

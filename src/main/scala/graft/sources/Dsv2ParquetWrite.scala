@@ -488,7 +488,7 @@ object Dsv2WriteProbe {
     val epochsCommitted = new java.util.concurrent.atomic.AtomicLong
     /** Driver-side wall of the latest job commit (staging verify +
      * renames + manifest publish) — the only O(#tasks) serial section
-     * of the write path, measured by the ScaleSmoke dsv2write curve. */
+     * of the write path (BASELINE.md regime `dsv2write`). */
     val lastCommitMillis = new java.util.concurrent.atomic.AtomicLong
     /** Merge-on-read evidence: files that received position deletes
      * and total positions deleted in the latest delta commit. */

@@ -44,7 +44,8 @@ import org.apache.spark.sql.types.StructType
  * `_file` metadata column — see its scaladoc), so "scanned" shrinks to
  * the files that provably contain matching rows and a MERGE touching
  * 1% of files rewrites 1% of the table (measured damage-proportional:
- * ScaleSmoke merge, 1/8/32 touched files → proportional wall). The
+ * BASELINE.md regime `merge`, 1/8/32 touched files → proportional
+ * wall; Dsv2RowLevelSpec pins the replaced-file counts). The
  * commit is one manifest publish, the same as the batch overwrite: a
  * crash before it leaves the previous version intact.
  */
@@ -122,7 +123,7 @@ private[sources] case class GraftReplaceScanBuilder(path: String,
  * rule's subquery is complete by construction; anything unparseable is
  * ignored in the safe direction (keep every file).
  *
- * Engagement note (measured, `ScaleSmoke merge` + the SMJ variant):
+ * Engagement note (measured, BASELINE.md regime `merge` + its SMJ variant):
  * Spark plans the group-filter subquery with onlyInBroadcast=false, so
  * it engages for ANY source size — reusing the command join's
  * broadcast when one exists, and executing the matching-rows subquery
@@ -139,6 +140,12 @@ private[sources] case class GraftReplaceScan(path: String,
     s"GraftReplaceScan ReadSchema: ${required.catalogString}"
 
   @transient private var keepFiles: Option[Set[String]] = None
+
+  /** The one listing and snapshot this operation reads: the file set
+   * and the deletion vectors both come from it, so they are of one
+   * version however the partition planning and the reader factory
+   * interleave with other commits. */
+  @transient private lazy val view = PlanningView(path, None)
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -173,13 +180,12 @@ private[sources] case class GraftReplaceScan(path: String,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = Dsv2Parquet.readConf
-    val all = Dsv2Parquet.dataFiles(path, conf)
+    val all = view.dataFiles
     val files = all.filter(f => keepFiles.forall(_.contains(f.getPath.toString)))
     op.scannedFiles.set(files.map(_.getPath.getName))
     Dsv2RuntimeProbe.forPath(s"$path#replace").lastPlanned.set(all.length)
     Dsv2RuntimeProbe.forPath(s"$path#replace").lastKept.set(files.length)
-    files.zip(Dsv2Parquet.fileFooters(files, conf)).flatMap {
+    files.zip(Dsv2Parquet.fileFooters(files, Dsv2Parquet.readConf)).flatMap {
       case (f, (_, blocks, _)) =>
         blocks.map(b => GraftParquetPartition(f.getPath.toString,
           b.getStartingPos, b.getStartingPos + b.getCompressedSize)
@@ -190,7 +196,7 @@ private[sources] case class GraftReplaceScan(path: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     // deletion vectors (if a mode-mixed table carries them) apply in
     // both readers — the rewrite must carry over LIVE rows only
-    val dvMap = Dsv2Parquet.dvListing(path, Dsv2Parquet.readConf)
+    val dvMap = view.dvMap
     op.scannedDvs.set(dvMap.values.flatten
       .map(s => new Path(s).getName).toSet)
     GraftParquetReaderFactory(required, Array.empty[Filter], dvMap = dvMap)

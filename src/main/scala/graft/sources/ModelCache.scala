@@ -20,11 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * If a concurrent writer wins the rename, ours is discarded; all fits
  * are required to be deterministic, so both artifacts are bit-identical.
  *
- * One diagnosable HIT/MISS line per load (the r8 bench showed a
- * fit-included cost with no way to tell whether the cache missed or
- * something regressed; the log line settles it).
+ * One diagnosable HIT/MISS line per load, logged at INFO (the r8 bench
+ * showed a fit-included cost with no way to tell whether the cache
+ * missed or something regressed; the log line settles it).
  */
 object ModelCache {
+
+  private val logger = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** Cache directory for (data at `dataPath`) × (fit variant). */
   def cachePath(dataPath: String, variant: String, root: String): String = {
@@ -59,9 +61,9 @@ object ModelCache {
       fit: => DataFrame): DataFrame = {
     val path = cachePath(dataPath, variant, root)
     if (new java.io.File(path, "_SUCCESS").exists()) {
-      System.err.println(s"[$tag] model cache HIT $path")
+      logger.info(s"[$tag] model cache HIT $path")
     } else {
-      System.err.println(s"[$tag] model cache MISS $path (fitting)")
+      logger.info(s"[$tag] model cache MISS $path (fitting)")
       sweepStaleTmp(new java.io.File(path))
       val tmp = new java.io.File(
         path + s".tmp-${java.lang.ProcessHandle.current().pid()}-${System.nanoTime()}")
@@ -144,7 +146,7 @@ object ModelCache {
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
         }
-        System.err.println(s"[model-cache] sweeping stale ${stale.getPath}")
+        logger.info(s"[model-cache] sweeping stale ${stale.getPath}")
         rm(stale)
       }
   }

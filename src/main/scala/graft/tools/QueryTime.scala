@@ -1,13 +1,12 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.obs.Sessions
 
-/** Targeted query timer (builder-side, r21): times named queries with
- * the bench's exact methodology (bench session config, untimed warmup,
- * noop sink, median of 3) so a single operator's before/after can be
- * measured without a full sweep. Accepts the same extra targets as
- * [[PlanDump]] (the r21 mm_* inline-encode BEFORE shapes).
+/** Targeted query timer: times named queries with the bench's exact
+ * methodology (the [[graft.obs.Sessions]] session, untimed warmup, noop
+ * sink, median of 3) so a single operator's before/after can be
+ * measured without a full sweep.
  *
  * `--cold` (r22, VERDICT #4): clear the in-JVM model/dictionary memos
  * (ModelCache.memo, Curation dictMemo/acMemo) before EVERY run —
@@ -26,33 +25,13 @@ object QueryTime {
     val cold = rawArgs.contains("--cold")
     val args = rawArgs.filterNot(_ == "--cold")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val extra: Map[String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
-      "mm_decode_inline_encode" -> ((s, d) =>
-        graft.operators.Multimodal.decodeImages(
-          graft.operators.Multimodal.pngMediaTable(s, d)).toDF()),
-      "mm_decode_wav_inline_encode" -> ((s, d) =>
-        graft.operators.Multimodal.decodeAudio(
-          graft.operators.Multimodal.wavMediaTable(s, d)).toDF()),
-      "mm_resize_decode_inline_encode" -> ((s, d) =>
-        graft.operators.Multimodal.resizeDecoded(
-          graft.operators.Multimodal.pngMediaTable(s, d)).toDF()))
+    val spark = Sessions.create("graft-querytime")
     def clearMemos(): Unit = {
       graft.sources.ModelCache.clearMemo()
       graft.operators.Curation.clearDictMemo()
     }
     def run(n: String): Unit =
-      extra.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
+      SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     def timed(n: String): Double = {
       val t0 = System.nanoTime(); run(n); (System.nanoTime() - t0) / 1e9

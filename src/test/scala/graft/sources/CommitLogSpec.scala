@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** A RawLocalFileSystem under a non-`file` scheme: forces
@@ -627,6 +628,26 @@ class CommitLogSpec extends SparkSpec {
       // retaining more than history is a no-op
       assert(spark.sql(s"CALL $cat.system.expire_snapshots('db.t', 5)")
         .collect().head.getInt(0) == 0)
+    }
+  }
+
+  test("history depth and its expiry leave a read's answer unchanged") {
+    withTmp { tmp =>
+      val p = s"$tmp/t"
+      spark.range(1, 4001).select(col("id").as("k"),
+        (col("id") * 0.25).as("v")).repartition(4).write.parquet(p)
+      CommitLog.enable(p, conf)
+      def read(): Row = spark.read.format(fmt).load(p)
+        .agg(count(lit(1)), sum("v")).head()
+      val shallow = read()
+      (1 to 40).foreach { _ =>
+        CommitLog.commitUpdate(p, conf, "noop")(Some(_)): Unit
+      }
+      assert(CommitLog.versions(new Path(p), conf).length == 41)
+      assert(read() == shallow)
+      assert(GraftMaintenance.expireSnapshots(p, 1) == 40)
+      assert(CommitLog.versions(new Path(p), conf).toSeq == Seq(41L))
+      assert(read() == shallow)
     }
   }
 

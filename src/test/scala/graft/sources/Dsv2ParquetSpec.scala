@@ -146,7 +146,9 @@ class Dsv2ParquetSpec extends SparkSpec {
       val confs = Seq(
         "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
         "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false")
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      val dppKey = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+      val saved = (confs.map(_._1) :+ dppKey)
+        .map(k => k -> spark.conf.getOption(k))
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         Dsv2RuntimeProbe.forPath(s"$tmp/fact").reset()
@@ -166,6 +168,15 @@ class Dsv2ParquetSpec extends SparkSpec {
         assert(Dsv2RuntimeProbe.forPath(s"$tmp/fact").lastKept.get() < Dsv2RuntimeProbe.forPath(s"$tmp/fact").lastPlanned.get(),
           s"kept=${Dsv2RuntimeProbe.forPath(s"$tmp/fact").lastKept.get()} " +
             s"planned=${Dsv2RuntimeProbe.forPath(s"$tmp/fact").lastPlanned.get()}")
+        // the same DSv2 join with pruning OFF reads every row group and
+        // gives the same answer
+        spark.conf.set(dppKey, "false")
+        Dsv2RuntimeProbe.forPath(s"$tmp/fact").reset()
+        val off = spark.read.format(fmt).load(s"$tmp/fact")
+          .join(broadcast(dim), col("k") === col("fk"))
+          .agg(count(lit(1)), sum("v")).collect().head
+        assert(off == got)
+        assert(Dsv2RuntimeProbe.forPath(s"$tmp/fact").filterCalls.get() == 0)
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
  * must never re-deliver rows. The continuous trigger's discover()
  * races the maintenance publishes — with the skip-set computed before
  * the listing, a compaction landing between the two steps streamed
- * its output (caught by the streammaint ScaleSmoke at 150k rows,
- * leaking at cycle 7 of 10); listing-then-skip closes the window. */
+ * its output (caught at 150k rows, leaking at cycle 7 of 10 —
+ * BASELINE.md regime `streammaint`); listing-then-skip closes the
+ * window. This spec is that regime's correctness evidence. */
 class StreamMaintReproSpec extends SparkSpec {
 
   private def fmt = classOf[GraftParquetProvider].getName
