@@ -3,22 +3,29 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Single-pass shingle hashing for MinHash dedup — the scan-side kernel of
- * the 100 TB near-dup path.
+ * The kernels of the MinHash dedup path, each called from generated code
+ * so its stage stays inside WholeStageCodegen like a built-in:
  *
- * The composable form (`split` → `transform`/`slice`/`concat_ws` →
- * `array_distinct` → 16 × `transform`+`array_min`) evaluates interpreted
- * (higher-order functions have no codegen) and allocates one string per
- * shingle per pass — measured ~1 ms/doc single-threaded at sf0.1. These
- * expressions do the whole thing in one UTF-8 scan with no intermediate
- * strings, called from generated code, so a corpus scan stays inside
- * WholeStageCodegen like a built-in.
+ *  - `shingle_hashes`: the scan-side kernel. The composable form (`split`
+ *    → `transform`/`slice`/`concat_ws` → `array_distinct` → 16 ×
+ *    `transform`+`array_min`) evaluates interpreted (higher-order
+ *    functions have no codegen) and allocates one string per shingle per
+ *    pass — measured ~1 ms/doc single-threaded at sf0.1. This does the
+ *    whole thing in one UTF-8 scan with no intermediate strings.
+ *  - `minhash_bands`: the band buckets of one shingle-hash set.
+ *  - `sorted_intersect_size`: the rerank kernel, |a ∩ b| of two
+ *    shingle-hash sets in one linear merge. `size(array_intersect)` builds
+ *    a hash set and a result array per evaluation, and the planner
+ *    evaluates it several times per candidate pair; the merge allocates
+ *    nothing, because `shingle_hashes` already emits sorted distinct
+ *    arrays.
  */
 object ShingleHash extends Serializable {
 
@@ -128,6 +135,53 @@ object ShingleHash extends Serializable {
     }
     new GenericArrayData(out)
   }
+
+  /**
+   * |a ∩ b| of two strictly ascending `long` arrays (signed order — what
+   * [[shingleHashes]] emits) in one merge pass, allocating nothing. The
+   * contract is checked, one compare per element of each array, the
+   * unmerged tails included (an out-of-order tail can hide a common
+   * element): an input that is not strictly ascending throws, so a
+   * count is never wrong.
+   */
+  def sortedIntersectSize(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var n = 0
+    var x = if (na > 0) a.getLong(0) else 0L
+    var y = if (nb > 0) b.getLong(0) else 0L
+    while (i < na && j < nb) {
+      if (x < y) {
+        i += 1
+        if (i < na) x = ascending(a, i, x)
+      } else if (x > y) {
+        j += 1
+        if (j < nb) y = ascending(b, j, y)
+      } else {
+        n += 1
+        i += 1
+        if (i < na) x = ascending(a, i, x)
+        j += 1
+        if (j < nb) y = ascending(b, j, y)
+      }
+    }
+    i += 1
+    while (i < na) { x = ascending(a, i, x); i += 1 }
+    j += 1
+    while (j < nb) { y = ascending(b, j, y); j += 1 }
+    n
+  }
+
+  /** Element `k` of `arr`, which must exceed its predecessor `prev`. */
+  private def ascending(arr: ArrayData, k: Int, prev: Long): Long = {
+    val v = arr.getLong(k)
+    if (v <= prev) throw new IllegalArgumentException(
+      s"sorted_intersect_size: input not strictly ascending at index $k " +
+        s"($prev then $v)")
+    v
+  }
 }
 
 /** `shingle_hashes(text, n)`: sorted distinct 64-bit hashes of the word
@@ -167,9 +221,40 @@ case class MinHashBands(child: Expression, bands: Int, rows: Int)
     copy(child = newChild)
 }
 
+/** `sorted_intersect_size(a, b)`: |a ∩ b| of two strictly ascending
+ * `array<bigint>` by one merge (see [[ShingleHash.sortedIntersectSize]]);
+ * throws on an input that is not strictly ascending. */
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "sorted_intersect_size"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (Seq(left, right).forall(_.dataType == ArrayType(LongType, containsNull = false)))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      "sorted_intersect_size takes two array<bigint> without null elements, got " +
+        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ShingleHash.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = ShingleHash.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $cls.sortedIntersectSize($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectSize =
+    copy(left = newLeft, right = newRight)
+}
+
 object ShingleFunctions {
   def shingle_hashes(c: Column, n: Int): Column =
     GraftSqlBridge.column(ShingleHashes(GraftSqlBridge.expression(c), n))
   def minhash_bands(c: Column, bands: Int, rows: Int): Column =
     GraftSqlBridge.column(MinHashBands(GraftSqlBridge.expression(c), bands, rows))
+  def sorted_intersect_size(a: Column, b: Column): Column =
+    GraftSqlBridge.column(SortedIntersectSize(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -166,7 +166,9 @@ object Dedup {
   /** Exact n-gram (word 3-shingle) Jaccard near-dup pairs, brute-force —
    * the rerank kernel, oracle-checked at small SF. Jaccard is integer
    * arithmetic (|∩|/|∪|) so engines agree exactly. At 100 TB this runs
-   * only WITHIN LSH buckets (see dedupMinhashLsh), never all-pairs. */
+   * only WITHIN LSH buckets (see dedupMinhashLsh), never all-pairs.
+   * `array_intersect` stays here: string shingles from `array_distinct`
+   * are not sorted, so the sorted-merge kernel's contract does not hold. */
   def dedupJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
     val d = shingled(spark, dir)
     val a = d.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
@@ -268,7 +270,12 @@ object Dedup {
    *  3. self-join per bucket → candidate pairs (shuffle carries only
    *     (band, bucket, id) rows, AQE handles hot buckets);
    *  4. exact Jaccard rerank of candidates over the hashed shingle sets
-   *     (64-bit hashes: collision odds ~ |sh|²/2⁶⁴, immaterial).
+   *     (64-bit hashes: collision odds ~ |sh|²/2⁶⁴, immaterial): |∩| by
+   *     one sorted merge (SortedIntersectSize), which relies on
+   *     ShingleHashes emitting each set sorted ascending and distinct and
+   *     throws if an input is not — no hash set or result array per
+   *     pair, where `size(array_intersect)` built both on each of the
+   *     ~4 evaluations the planner makes per candidate pair.
    * Banding (4 bands × 4 rows) makes P(candidate) ≈ 1-(1-j^4)^4 — steep
    * around j≈0.7, so ≥0.8-similar pairs are found w.h.p. while unrelated
    * pairs rarely collide. The shingle arrays never ride the self-join;
@@ -308,7 +315,7 @@ object Dedup {
     pairs
       .join(d.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(d.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("n_inter", sorted_intersect_size(col("sh_a"), col("sh_b")))
       .withColumn("n_union",
         size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))
       // n_union > 0: empty-shingle docs share every band bucket (the

@@ -318,26 +318,28 @@ object Similarity {
 
   val PqM = 2          // subspaces
   val PqK = 8          // codewords per subspace
-  val PqSubDim = 32    // 64-dim vectors split in half
+  val PqSubDim: Int = 64 / PqM  // dims per subspace
   val PqCand = 50      // PQ-scored candidates per query before exact rerank
 
+  /** Subspace `i` (of [[PqM]]) of a 64-dim vector. */
+  private def pqSub(i: Int)(v: Column): Column =
+    slice(v, 1 + i * PqSubDim, PqSubDim)
+
   /** Per-subspace PQ codebooks — the same deterministic Lloyd fit as the
-   * IVF quantizer, run on each `64/m`-dim slice of the 1/3 fit sample,
+   * IVF quantizer, run on each [[PqSubDim]]-dim slice of the 1/3 fit sample,
    * and persisted as ONE (m, cid, cvec) model table via ModelCache (a PQ
    * index fits its codebooks once and stores them beside the codes). */
-  def loadOrFitPqCodebooks(spark: SparkSession, dir: String, e: DataFrame,
-      m: Int = PqM, k: Int = PqK): Map[Int, Centroids] = {
+  def loadOrFitPqCodebooks(spark: SparkSession, dir: String,
+      e: DataFrame): Map[Int, Centroids] = {
     import spark.implicits._
-    val subDim = 64 / m
-    def sub(i: Int)(v: Column): Column = slice(v, 1 + i * subDim, subDim)
     graft.sources.ModelCache.loadOrFitModel(spark, s"$dir/embeddings.parquet",
-      s"pq-m$m-k$k-i$LloydIters-s3",
+      s"pq-m$PqM-k$PqK-i$LloydIters-s3",
       sys.env.getOrElse("GRAFT_IVF_CACHE", "/tmp/graft-ivf-cache"), "graft-pq") {
-      (0 until m).flatMap { i =>
+      (0 until PqM).flatMap { i =>
         fitCentroids(
           e.filter(col("vec_id") % 3 === 0)
-            .select(col("vec_id"), sub(i)(col("embedding")).as("embedding")),
-          c = k, iters = LloydIters)
+            .select(col("vec_id"), pqSub(i)(col("embedding")).as("embedding")),
+          c = PqK, iters = LloydIters)
           .map { case (cid, v) => (i, cid, v.toSeq) }
       }.toDF("m", "cid", "cvec")
     } { df => df.collect()
@@ -365,47 +367,11 @@ object Similarity {
    * ([[HashOracleSql.annPq]]) reproduces fit, codes, LUT scores,
    * candidate cut, and rerank value-for-value.
    */
-  def simAnnPq(spark: SparkSession, dir: String): DataFrame =
-    simAnnPqWith(spark, dir)
-
-  /** The persisted PQ CODE TABLE — one scan-local encode projection, m
-   * kernel argmaxes per row: the only pass that touches the full
-   * vectors (coalesce: plan hygiene, see ivfAssign). The code table IS
-   * the PQ index: built once per corpus snapshot and persisted
-   * (gramCounts pattern, partitioning kept — at scale this is an
-   * index-build table), so repeat queries scan 2-3 B/vec codes, never
-   * the 256 B/vec vectors. Deterministic encode ⇒ hit and miss are
-   * byte-identical. Shared by [[simAnnPq]] and [[simAnnIvfPq]] — one
-   * table, one cache key. */
-  def loadOrEncodePqCodes(spark: SparkSession, dir: String, e: DataFrame,
-      books: Map[Int, Centroids], m: Int, k: Int): DataFrame = {
-    val subDim = 64 / m
-    def sub(i: Int)(v: Column): Column = slice(v, 1 + i * subDim, subDim)
-    graft.sources.ModelCache.loadOrFit(spark,
-      s"$dir/embeddings.parquet", s"pqcodes-m$m-k$k-i$LloydIters-s3",
-      sys.env.getOrElse("GRAFT_IVF_CACHE", "/tmp/graft-ivf-cache"),
-      "graft-pq", singleFile = false) {
-      e.select(
-        col("vec_id").as("neighbor_id") +:
-          (0 until m).map(i => coalesce(
-            assignCid(sub(i)(col("embedding")), books(i)), lit(-1)).as(s"c$i")): _*)
-    }
-  }
-
-  /** [[simAnnPq]]'s parameterized core. The oracle row runs the
-   * demo-sized default (m=2, k=8 — value-level-verifiable SQL); the
-   * scale smoke runs the production shape (m=4, k=64 → 24-bit codes)
-   * on a replicated corpus. Left-to-right `s0 + s1 + …` addition order
-   * is part of the contract with the oracle. */
-  def simAnnPqWith(spark: SparkSession, dir: String, m: Int = PqM,
-      k: Int = PqK, nCand: Int = PqCand): DataFrame = {
+  def simAnnPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    require(64 % m == 0, s"PQ subspaces must divide dim 64, got $m")
-    val subDim = 64 / m
-    def sub(i: Int)(v: Column): Column = slice(v, 1 + i * subDim, subDim)
     val e = emb(spark, dir)
-    val books = loadOrFitPqCodebooks(spark, dir, e, m, k)
-    val codes = loadOrEncodePqCodes(spark, dir, e, books, m, k)
+    val books = loadOrFitPqCodebooks(spark, dir, e)
+    val codes = loadOrEncodePqCodes(spark, dir, e, books)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
     // per-query LUT: Q×k rows per subspace, via the same kernel — tiny,
@@ -415,20 +381,22 @@ object Similarity {
         .toDF("cid", s"cvec$i")
       queries.crossJoin(broadcast(book))
         .select(col("query_id"), col("cid").as(s"c$i"),
-          cosine(sub(i)(col("q")), col(s"cvec$i")).as(s"s$i"))
+          cosine(pqSub(i)(col("q")), col(s"cvec$i")).as(s"s$i"))
     }
     val wApprox = Window.partitionBy("query_id")
       .orderBy(col("approx").desc, col("neighbor_id"))
-    val withLuts = (1 until m).foldLeft(
+    val withLuts = (1 until PqM).foldLeft(
       codes.join(broadcast(lut(0)), Seq("c0"))) { (acc, i) =>
       acc.join(broadcast(lut(i)), Seq("query_id", s"c$i"))
     }
+    // left-to-right `s0 + s1 + …` addition order is part of the
+    // contract with the oracle
     val cand = withLuts
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("approx",
-        (1 until m).foldLeft[Column](col("s0"))((a, i) => a + col(s"s$i")))
+        (1 until PqM).foldLeft[Column](col("s0"))((a, i) => a + col(s"s$i")))
       .withColumn("crank", row_number().over(wApprox))
-      .filter(col("crank") <= nCand)
+      .filter(col("crank") <= PqCand)
       .select("query_id", "neighbor_id", "approx")
     val wRank = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -443,6 +411,27 @@ object Similarity {
         col("rank").cast("bigint").as("rank"), round(col("cos"), 6).as("cos"),
         round(col("approx"), 6).as("approx_score"))
   }
+
+  /** The persisted PQ CODE TABLE — one scan-local encode projection, m
+   * kernel argmaxes per row: the only pass that touches the full
+   * vectors (coalesce: plan hygiene, see ivfAssign). The code table IS
+   * the PQ index: built once per corpus snapshot and persisted
+   * (gramCounts pattern, partitioning kept — at scale this is an
+   * index-build table), so repeat queries scan 2-3 B/vec codes, never
+   * the 256 B/vec vectors. Deterministic encode ⇒ hit and miss are
+   * byte-identical. Shared by [[simAnnPq]] and [[simAnnIvfPq]] — one
+   * table, one cache key. */
+  def loadOrEncodePqCodes(spark: SparkSession, dir: String, e: DataFrame,
+      books: Map[Int, Centroids]): DataFrame =
+    graft.sources.ModelCache.loadOrFit(spark,
+      s"$dir/embeddings.parquet", s"pqcodes-m$PqM-k$PqK-i$LloydIters-s3",
+      sys.env.getOrElse("GRAFT_IVF_CACHE", "/tmp/graft-ivf-cache"),
+      "graft-pq", singleFile = false) {
+      e.select(
+        col("vec_id").as("neighbor_id") +:
+          (0 until PqM).map(i => coalesce(
+            assignCid(pqSub(i)(col("embedding")), books(i)), lit(-1)).as(s"c$i")): _*)
+    }
 
   /**
    * The COMPOSED IVF-ADC ANN — the FAISS IVFADC shape, and the one a
@@ -461,38 +450,11 @@ object Similarity {
    * DuckDB oracle composes the same shared CTEs — fit, assignment,
    * probes, codes, LUTs, cut, and rerank all value-level.
    */
-  def simAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    simAnnIvfPqWith(spark, dir)
-
-  /** The ids-only IVF candidate generation alone — (query_id,
-   * neighbor_id) for every vector in a query's nprobe probed cells;
-   * shared by [[simAnnIvfPqWith]] and the candidate-fraction
-   * measurement of BASELINE.md regime `ivfpq`. */
-  def ivfPqCandidates(spark: SparkSession, dir: String, e: DataFrame,
-      c: Int, nprobe: Int): DataFrame = {
-    val cents = loadOrFitCentroids(spark, dir, e, c)
-    val lists = ivfAssign(e, cents)
-      .select(col("vec_id").as("neighbor_id"), col("cid"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"),
-        explode(probeTopK(col("embedding"), cents, nprobe)).as("cid"))
-    lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
-  }
-
-  /** [[simAnnIvfPq]]'s parameterized core (same knob pattern as
-   * [[simAnnPqWith]]): the oracle row runs the demo shape (m=2, k=8,
-   * C=16, nprobe=3); the scale smoke runs the production shape. */
-  def simAnnIvfPqWith(spark: SparkSession, dir: String, m: Int = PqM,
-      k: Int = PqK, nCand: Int = PqCand, c: Int = NumCentroids,
-      nprobe: Int = NumProbes): DataFrame = {
+  def simAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val subDim = 64 / m
-    def sub(i: Int)(v: Column): Column = slice(v, 1 + i * subDim, subDim)
     val e = emb(spark, dir)
-    val books = loadOrFitPqCodebooks(spark, dir, e, m, k)
-    val codes = loadOrEncodePqCodes(spark, dir, e, books, m, k)
+    val books = loadOrFitPqCodebooks(spark, dir, e)
+    val codes = loadOrEncodePqCodes(spark, dir, e, books)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
     def lut(i: Int): DataFrame = {
@@ -500,19 +462,28 @@ object Similarity {
         .toDF("cid", s"cvec$i")
       queries.crossJoin(broadcast(book))
         .select(col("query_id"), col("cid").as(s"c$i"),
-          cosine(sub(i)(col("q")), col(s"cvec$i")).as(s"s$i"))
+          cosine(pqSub(i)(col("q")), col(s"cvec$i")).as(s"s$i"))
     }
-    val cand = ivfPqCandidates(spark, dir, e, c, nprobe)
-    val withLuts = (0 until m).foldLeft(cand.join(codes, Seq("neighbor_id"))) {
+    // ids-only IVF candidates: every vector in a query's NumProbes
+    // probed cells
+    val cents = loadOrFitCentroids(spark, dir, e)
+    val lists = ivfAssign(e, cents)
+      .select(col("vec_id").as("neighbor_id"), col("cid"))
+    val probes = queries.select(col("query_id"),
+      explode(probeTopK(col("q"), cents, NumProbes)).as("cid"))
+    val cand = lists.join(broadcast(probes), Seq("cid"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select("query_id", "neighbor_id")
+    val withLuts = (0 until PqM).foldLeft(cand.join(codes, Seq("neighbor_id"))) {
       (acc, i) => acc.join(broadcast(lut(i)), Seq("query_id", s"c$i"))
     }
     val wApprox = Window.partitionBy("query_id")
       .orderBy(col("approx").desc, col("neighbor_id"))
     val cut = withLuts
       .withColumn("approx",
-        (1 until m).foldLeft[Column](col("s0"))((a, i) => a + col(s"s$i")))
+        (1 until PqM).foldLeft[Column](col("s0"))((a, i) => a + col(s"s$i")))
       .withColumn("crank", row_number().over(wApprox))
-      .filter(col("crank") <= nCand)
+      .filter(col("crank") <= PqCand)
       .select("query_id", "neighbor_id", "approx")
     val wRank = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))

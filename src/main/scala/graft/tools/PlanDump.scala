@@ -6,7 +6,8 @@ import graft.obs.Sessions
 /** Plan snapshot tool: writes `.explain("formatted")` of the named
  * queries to `plans/<tag>/<name>_<suffix>.txt` under the working
  * directory, from a [[graft.obs.Sessions]] session — the one Bench
- * measures in, so the captured plans are the bench's plans.
+ * measures in, so the captured plans are the bench's plans. RDD call
+ * sites are written as `at <site>`.
  *
  * Usage: runMain graft.tools.PlanDump <tag> <suffix> <query> [query...]
  */
@@ -22,8 +23,12 @@ object PlanDump {
     java.nio.file.Files.createDirectories(dir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
+      // an RDD's call site (`localCheckpoint at Dedup.scala:306`) moves
+      // with any edit above it; normalized, a diff of two dumps shows
+      // only plan changes
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        .replaceAll("""at \w+\.scala:\d+""", "at <site>")
       java.nio.file.Files.writeString(dir.resolve(s"${n}_$suffix.txt"), txt)
       println(s"[plandump] wrote ${dir.resolve(s"${n}_$suffix.txt")}")
     }

@@ -33,6 +33,43 @@ class LlmOpsSpec extends SparkSpec {
       "planted near-dup pair should share a minhash band")
   }
 
+  test("minhashLshPairs reranks without array_intersect and returns the old rerank's rows") {
+    import graft.functions.ShingleFunctions._
+    // 10 groups of an original, an exact copy and a one-word variant,
+    // plus two docs too short to shingle (empty sets share every bucket)
+    val texts = (0 until 10).flatMap { g =>
+      val base = doc(g + 300)
+      Seq(base, base, base.split(" ").updated(5, "XX").mkString(" "))
+    } ++ Seq("too short", "")
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val got = Dedup.minhashLshPairs(corpus)
+    val rows = got.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(!got.queryExecution.executedPlan.toString.contains("array_intersect"))
+
+    // the rerank as it was: size(array_intersect) over the same candidates
+    val d = corpus.select(col("doc_id"), shingle_hashes(col("text"), 3).as("sh"))
+    val banded = d.select(col("doc_id"),
+      posexplode(minhash_bands(col("sh"), Dedup.NumBands, Dedup.RowsPerBand)))
+      .toDF("doc_id", "band", "bucket")
+    val old = banded.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
+      .join(banded.select(col("band"), col("bucket"), col("doc_id").as("id_b")),
+        Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+      .join(d.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(d.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("n_union",
+        size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))
+      .filter(col("n_inter") * 2 >= col("n_union") && col("n_union") > 0)
+      .select(col("id_a"), col("id_b"),
+        round(col("n_inter").cast("double") / col("n_union"), 6).as("jaccard"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(rows.length >= 30, "each group's copies and variant pair up")
+    assert(rows.sorted.toSeq == old.sorted.toSeq)
+  }
+
   test("shingle_hashes matches the composable string-shingle pipeline") {
     val docsDf = (0 to 20).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
     import graft.functions.ShingleFunctions._
