@@ -319,50 +319,11 @@ object Curation {
 
   // --------------------------------------------------- decontamination
 
-  /**
-   * Benchmark decontamination core — the n-gram–overlap check every
-   * serious training corpus runs before training: for each candidate
-   * document, how many of its distinct word-3-shingles also occur
-   * anywhere in the benchmark corpus? Emits
-   * `(doc_id, n_shingles, n_contaminated, contamination)` for every
-   * candidate sharing ≥ 1 shingle; a pipeline drops documents above a
-   * contamination threshold. Both inputs are `(doc_id, text)` frames.
-   *
-   * Scale shape: shingles are 64-bit hashes from the codegen'd
-   * ShingleHashes kernel (no token strings materialized). The benchmark
-   * shingle set is tiny relative to the corpus (eval suites are MBs,
-   * corpora are TBs) → `broadcast` hash join against the exploded
-   * candidate shingles, so the corpus never shuffles; the per-doc count
-   * is map-side partial-aggregated.
-   */
-  def ngramContamination(candidates: DataFrame, benchmark: DataFrame): DataFrame = {
-    // No size(sh)>0 guard: `explode` drops empty shingle arrays by
-    // itself, and an explicit filter would be PUSHED DOWN below the
-    // spread repartition, evaluating the hash kernel a second time —
-    // serially, on the pre-spread scan (observed in the r07 plan audit).
-    def shingled(df: DataFrame) = spread(df)
-      .select(col("doc_id"), shingle_hashes(col("text"), 3).as("sh"))
-    // explode of a BARE attribute triggers InferFiltersFromGenerate,
-    // whose size(e)>0 filter gets alias-substituted during pushdown into
-    // a second shingle_hashes evaluation below the spread (r07 plan
-    // audit). A complex generator child (array_distinct — an identity
-    // here, the kernel's output is already distinct) is excluded from
-    // that inference (SPARK-36715 limits it to attribute children).
-    val bench = shingled(benchmark)
-      .select(explode(array_distinct(col("sh"))).as("s")).distinct()
-    shingled(candidates)
-      .select(col("doc_id"), size(col("sh")).cast("bigint").as("n_shingles"),
-        explode(array_distinct(col("sh"))).as("s"))
-      .join(broadcast(bench), Seq("s"))
-      .groupBy("doc_id", "n_shingles")
-      .agg(count(lit(1)).as("n_contaminated"))
-      .select(col("doc_id"), col("n_shingles"), col("n_contaminated"),
-        round(col("n_contaminated").cast("double") / col("n_shingles"), 6)
-          .as("contamination"))
-  }
-
-  /** Persisted `(doc_id, n_shingles, s)` shingle-hash table — the decon
-   * analogue of [[TextAnalysis.gramCounts]]: one exploded row per
+  /** Persisted `(doc_id, n_shingles, s)` shingle-hash table — the
+   * benchmark-decontamination core (for each candidate document, how
+   * many of its distinct word-3-shingles also occur anywhere in the
+   * benchmark corpus) and the decon analogue of
+   * [[TextAnalysis.gramCounts]]: one exploded row per
    * distinct word-3-shingle hash per document, with the per-doc
    * distinct count carried alongside (the kernel's output is already
    * distinct, so `n_shingles` is also the doc's row count). Shingling
@@ -377,8 +338,10 @@ object Curation {
       "shinglehashes-v1",
       sys.env.getOrElse("GRAFT_GRAMS_CACHE", "/tmp/graft-grams-cache"),
       "graft-shingles", singleFile = false) {
-      // same explode discipline as ngramContamination below: complex
-      // generator child, no size guard (r07 pushdown trap)
+      // a complex generator child (array_distinct, an identity here)
+      // and no size guard: over a bare attribute InferFiltersFromGenerate
+      // pushes a size(e)>0 filter that re-evaluates shingle_hashes below
+      // the spread (r07 plan audit, SPARK-36715)
       spread(docs(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), shingle_hashes(col("text"), 3).as("sh"))
         .select(col("doc_id"),
@@ -388,8 +351,10 @@ object Curation {
 
   /** The overlap aggregation over slices of the persisted
    * [[shingleHashTable]] — the benchmark side distinct-aggregated and
-   * broadcast, the candidate side counted per doc; identical rows to
-   * [[ngramContamination]] on the same split. */
+   * broadcast (eval suites are MBs, corpora TBs: the corpus never
+   * shuffles), the candidate side counted per doc into
+   * `(doc_id, n_shingles, n_contaminated, contamination)` for every
+   * candidate sharing ≥ 1 shingle. */
   private def contaminationFromTable(t: DataFrame, benchSide: Column,
       candidateSide: Column): DataFrame = {
     val bench = t.filter(benchSide).select(col("s")).distinct()
@@ -412,7 +377,7 @@ object Curation {
 
   /**
    * Exact-substring decontamination — the verbatim-overlap check that
-   * complements [[ngramContamination]]'s fuzzy shingle overlap (the
+   * complements [[deconNgramOverlap]]'s fuzzy shingle overlap (the
    * GPT-3 appendix-C / Pile recipe: flag a training doc when a
    * benchmark document's distinctive snippet occurs in it EXACTLY).
    *

@@ -5,34 +5,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Write-side data layout — the operations that decide how fast every
- * LATER query runs at 100 TB. Three tools:
+ * Write-side data layout — how fast every LATER query runs at 100 TB
+ * depends on it.
  *
- *  - [[clusterByRange]]: range-partition + sort on the query keys, so
- *    each output file covers a disjoint key interval and parquet
- *    row-group min/max statistics prune point/range scans to a handful
- *    of files (the `ORDER BY` table layout of warehouse engines).
- *  - [[clusterByZOrder]]: the two-dimensional version — cluster on the
- *    Morton interleave of two key columns (codegen'd
- *    [[graft.functions.Morton2]] kernel), so filters on EITHER column
- *    prune, at a modest cost to each single column's clustering
- *    (Delta/Iceberg OPTIMIZE ZORDER semantics).
- *  - [[compact]]: bin-pack a directory of small files into
- *    ~`targetBytes` outputs — the small-file problem of incremental
- *    ingest; a coalesce (no shuffle) since only the file count shrinks.
+ *  - [[clusterByZOrder]]: cluster on the Morton interleave of two key
+ *    columns (codegen'd [[graft.functions.Morton2]] kernel), so filters
+ *    on EITHER column prune through parquet row-group min/max
+ *    statistics, at a modest cost to each single column's clustering
+ *    (Delta/Iceberg OPTIMIZE ZORDER semantics). A one-key range layout
+ *    is the graft writer's `graft.orderBy` option, and small-file
+ *    compaction of a graft table is `CALL <cat>.system.compact_table`.
  *
- * None of these change row contents — `q_zorder_values` oracle-checks
- * the Morton kernel itself value-level; LayoutSpec asserts the layout
- * properties (disjoint per-file ranges, file counts, row preservation).
+ * Clustering never changes row contents — `q_zorder_values`
+ * oracle-checks the Morton kernel itself value-level; LayoutSpec
+ * asserts the layout property (disjoint per-file Morton ranges, row
+ * preservation).
  */
 object Layout {
-
-  /** Range-cluster `df` on `cols`: `partitions` output splits, each
-   * sorted and covering a disjoint key interval. The range partitioner
-   * samples split bounds, so skewed keys still yield balanced files. */
-  def clusterByRange(df: DataFrame, partitions: Int, cols: Column*): DataFrame =
-    df.repartitionByRange(partitions, cols: _*)
-      .sortWithinPartitions(cols: _*)
 
   /** Z-order-cluster `df` on two integral key columns via their Morton
    * code. The code column is used for partitioning and intra-file order
@@ -40,30 +29,6 @@ object Layout {
   def clusterByZOrder(df: DataFrame, partitions: Int, x: Column, y: Column): DataFrame = {
     val z = morton2(x.cast("long"), y.cast("long"))
     df.repartitionByRange(partitions, z).sortWithinPartitions(z)
-  }
-
-  /** Compact the parquet directory `inDir` into ~`targetBytes` files at
-   * `outDir`. Returns the ACTUAL written file count — coalesce can only
-   * MERGE partitions, so when the computed target exceeds the scan's
-   * partition count (a few oversized inputs with a small `targetBytes`)
-   * the output has fewer files than the target; oversized files are
-   * never split (splitting is a shuffle — use [[clusterByRange]] when
-   * re-spreading is the goal). Coalesce, not repartition: merging
-   * partitions needs no exchange, and the input order (e.g. a prior
-   * clusterByRange) is preserved within each merged file. */
-  def compact(spark: SparkSession, inDir: String, outDir: String,
-      targetBytes: Long): Int = {
-    def parquetFiles(dir: String) = {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(path)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    }
-    val totalBytes = parquetFiles(inDir).map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).coalesce(n)
-      .write.mode("overwrite").parquet(outDir)
-    parquetFiles(outDir).length
   }
 
   /** Oracle-checked Morton kernel query: the z-value of every document's

@@ -20,26 +20,26 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /**
- * VECTORIZED read path for [[GraftParquetProvider]] — the decode shape
- * a production connector ships (r16 verdict #1: the row-at-a-time
- * `PartitionReader[InternalRow]` costs ~2× per core on every scan, and
- * that tax grows linearly with data; at 100 TB the non-vectorized
- * decode would dominate the scan CPU). The reader decodes each parquet
- * row group COLUMN BY COLUMN straight into Spark
- * [[OnHeapColumnVector]]s and hands Spark [[ColumnarBatch]]es, so the
- * per-row costs of the Group path (one object tree per record, boxed
- * field access, per-field type dispatch) collapse into tight per-column
- * loops with one virtual call per value — and Spark's ColumnarToRow
- * transition is whole-stage-codegen'd on top.
+ * The read path of [[GraftParquetProvider]] — the vectorized decode
+ * shape a production connector ships (a row-at-a-time
+ * `PartitionReader[InternalRow]` measured ~2× the CPU per core on every
+ * scan, a tax that grows linearly with data). The reader decodes each
+ * parquet row group COLUMN BY COLUMN straight into Spark
+ * [[OnHeapColumnVector]]s and hands Spark [[ColumnarBatch]]es, so
+ * per-row costs (one object tree per record, boxed field access,
+ * per-field type dispatch) collapse into tight per-column loops with
+ * one virtual call per value — and Spark's ColumnarToRow transition is
+ * whole-stage-codegen'd on top.
  *
  * Decode engine: parquet-column's [[ColumnReadStoreImpl]] triplet
  * cursors (definition level, repetition level, value) — the same
  * public API parquet's own tooling reads columns with. Flat columns
  * are one triplet per record; LIST/MAP columns re-assemble records
  * from repetition levels into Spark's offset+child-vector layout
- * (`appendArray` + child appends), covering the full type surface the
- * row reader serves: the 11 flat primitives, the 4 decimal physical
- * encodings, 3-level LIST and 3-level MAP (SURVEY §1.2 via §1.3).
+ * (`appendArray` + child appends), covering the provider's whole type
+ * surface: the 11 flat primitives, the 4 decimal physical encodings,
+ * 3-level LIST and 3-level MAP of primitives (SURVEY §1.2 via §1.3).
+ * Any other type is refused at planning ([[Dsv2Columnar.requireReadable]]).
  *
  * Semantics preserved exactly (the oracle rows that pin them:
  * `recon_classify_dsv2`, `recon_classify_alltypes_dsv2`,
@@ -74,10 +74,6 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
  */
 private[sources] object Dsv2Columnar {
   val BatchSize = 4096
-
-  /** Default-on; `graft.vectorized=false` keeps the row reader (the
-   * debugging/fallback switch every vectorized source carries). */
-  val VectorizedOption = "graft.vectorized"
 
   private def primitiveSupported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | BooleanType |
@@ -120,17 +116,20 @@ private[sources] object Dsv2Columnar {
     }
   }
 
-  /** The columnar decoder serves every type the row reader does — this
-   * gate exists so an unforeseen type falls back to the row path
-   * instead of failing, and because Spark requires the columnar
-   * decision be uniform across partitions (it depends only on the
-   * schema here, never on the partition). */
-  def supported(schema: StructType): Boolean = schema.fields.forall { f =>
-    f.dataType match {
-      case ArrayType(e, _) => primitiveSupported(e)
-      case MapType(k, v, _) => primitiveSupported(k) && primitiveSupported(v)
-      case dt => primitiveSupported(dt)
-    }
+  /** Planning-time gate of every scan: the first projected column
+   * whose type the decoders cannot serve (a STRUCT, a nested
+   * collection) fails the query with the column named, before any
+   * task runs — never a null-filled column or an anonymous task
+   * failure. */
+  def requireReadable(schema: StructType): Unit = schema.fields.foreach { f =>
+    require(f.dataType match {
+        case ArrayType(e, _) => primitiveSupported(e)
+        case MapType(k, v, _) => primitiveSupported(k) && primitiveSupported(v)
+        case dt => primitiveSupported(dt)
+      },
+      s"graft-parquet: cannot read column '${f.name}' of type " +
+        s"${f.dataType.sql} — the reader serves flat primitives, " +
+        "decimals, and arrays/maps of them")
   }
 
   /** Minimal converter tree for [[ColumnReadStoreImpl]]. Dictionary
@@ -246,7 +245,8 @@ private[sources] class GraftColumnarPartitionReader(p: GraftParquetPartition,
     required.fieldNames.contains(Dsv2Parquet.PosMetaColumn)
 
   /** Record-level filter from the pushed+runtime predicates THIS file
-   * can serve (same per-file cut as the row reader): drives parquet's
+   * can serve (a predicate on a column the file lacks is dropped —
+   * every one is residual-advisory): drives parquet's
    * row-group statistics, dictionary, and COLUMN-INDEX (page-level
    * min/max) filtering — surviving rows are a superset of the matches,
    * Spark's residual filter takes the exact cut. DV application
@@ -307,9 +307,10 @@ private[sources] class GraftColumnarPartitionReader(p: GraftParquetPartition,
     required.fieldNames.map(Dsv2Parquet.physicalName)
   private val uniquePhys: Array[String] = physNames.distinct
 
-  /** Requested unique columns THIS file has, in first-appearance order
-   * — the same per-file projection discipline as
-   * ProjectingGroupReadSupport, deduplicated. */
+  /** Requested unique columns THIS file has, in first-appearance order:
+   * the projection is resolved against each file's OWN schema, so one
+   * directory may mix column sets (missing columns null-fill) and
+   * writers whose repetitions differ. */
   private val present: Array[String] =
     uniquePhys.filter(fileSchema.containsField)
   private val projection: Option[MessageType] =

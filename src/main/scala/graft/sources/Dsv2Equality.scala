@@ -30,16 +30,14 @@ import org.apache.spark.sql.types._
  *    driver) and are invisible until ONE CAS manifest publish commits
  *    them together with the staged insert files ([[EqualityRepair
  *    .commit]]).
- *  - VECTORIZED scans translate them to POSITION deletes at range
+ *  - Scans translate them to POSITION deletes at range
  *    open: a narrow vectorized key pass (key columns + `_pos`) over
  *    each TARGETED file probes every row's key — raw-long binary
  *    search for the single-integral-key shape, bloom-gated canonical
  *    probe otherwise — and the dead positions ride the columnar DV
  *    skip, so the FULL projection decodes at full speed (eqdelete
  *    smoke: read tax ≈ 1.0×). Untargeted files (rows inserted after
- *    the repair) pay nothing. The row reader (fallback path) applies
- *    the same probe per assembled row, with key columns widened into
- *    the physical read and dropped after.
+ *    the repair) pay nothing.
  *  - Equality deletes are TRANSIENT state: `compact_table` folds them
  *    into rewritten files and retires the sidecars from the manifest,
  *    removing even the key pass. The window is
@@ -410,51 +408,4 @@ object EqualityRepair {
         eqFiles = cur.eqFiles ++ eqNames))
     }: Unit
   }
-}
-
-/** Row-reader wrapper applying equality deletes: probes each assembled
- * row's canonical key against the filters targeting its file, then
- * projects the widened read schema back down to the requested one
- * (identity when the projection already carried the key columns). */
-private[sources] final class EqFilteringReader(
-    inner: org.apache.spark.sql.connector.read.PartitionReader[InternalRow],
-    widened: StructType, out: StructType, keyIdx: Array[Int],
-    keyTypes: Array[DataType], filters: Array[Dsv2Equality.KeyFilter])
-    extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-  private val identity = widened.length == out.length
-  private val outIdx = out.fields.map(f => widened.fieldIndex(f.name))
-  private val outTypes = out.fields.map(_.dataType)
-  private var cur: InternalRow = _
-
-  override def next(): Boolean = {
-    while (inner.next()) {
-      val r = inner.get()
-      val dead = filters.nonEmpty && {
-        val k = Dsv2Equality.canonicalOf(r, keyIdx, keyTypes)
-        var i = 0
-        var hit = false
-        while (!hit && i < filters.length) {
-          hit = filters(i).contains(k); i += 1
-        }
-        hit
-      }
-      if (!dead) { cur = r; return true }
-    }
-    false
-  }
-
-  override def get(): InternalRow =
-    if (identity) cur
-    else {
-      val vals = new Array[Any](outIdx.length)
-      var i = 0
-      while (i < outIdx.length) {
-        vals(i) =
-          if (cur.isNullAt(outIdx(i))) null else cur.get(outIdx(i), outTypes(i))
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-    }
-
-  override def close(): Unit = inner.close()
 }

@@ -6,15 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser, PrimitiveType, Type}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -27,7 +23,7 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * DataSource V2 `TableProvider` over parquet files — the API seam a
@@ -234,8 +230,6 @@ private[sources] case class GraftParquetTable(path: String,
     new GraftParquetScanBuilder(path, schema,
       Option(options.get(Dsv2Parquet.MaxRowGroupsPerTriggerOption))
         .map(_.toInt),
-      Option(options.get(Dsv2Columnar.VectorizedOption))
-        .forall(_.toBoolean),
       // SQL `VERSION AS OF` (catalog loadTable) or the read option —
       // either pins every planning listing to that manifest
       versionAsOf.orElse(
@@ -251,7 +245,6 @@ private[sources] case class GraftParquetTable(path: String,
 private[sources] class GraftParquetScanBuilder(path: String,
     tableSchema: StructType,
     maxRowGroupsPerTrigger: Option[Int] = None,
-    vectorize: Boolean = true,
     versionAsOf: Option[Long] = None) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates with SupportsPushDownLimit {
@@ -393,8 +386,9 @@ private[sources] class GraftParquetScanBuilder(path: String,
     case Some((schema, values, desc)) =>
       GraftParquetAggScan(schema, values, desc)
     case None =>
+      Dsv2Columnar.requireReadable(required)
       GraftParquetScan(path, required, pushed, maxRowGroupsPerTrigger, limit,
-        vectorize, versionAsOf, Some(view))
+        versionAsOf, Some(view))
   }
 }
 
@@ -471,7 +465,6 @@ private[sources] case class GraftParquetScan(path: String,
     required: StructType, pushed: Array[Filter],
     maxRowGroupsPerTrigger: Option[Int] = None,
     limit: Option[Int] = None,
-    vectorize: Boolean = true,
     versionAsOf: Option[Long] = None,
     planned: Option[PlanningView] = None) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
@@ -485,7 +478,7 @@ private[sources] case class GraftParquetScan(path: String,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftParquetMicroBatchStream(path, required, pushed,
-      checkpointLocation, maxRowGroupsPerTrigger, vectorize)
+      checkpointLocation, maxRowGroupsPerTrigger)
 
   /** Exact row count and uncompressed byte size from the cached
    * footers — what Spark's planner (join strategy selection, DPP
@@ -549,10 +542,9 @@ private[sources] case class GraftParquetScan(path: String,
 
   /** Planning-time EQUALITY-DELETE snapshot ([[Dsv2Equality]]): the
    * key fields and one bloom-gated key filter per sidecar. Non-empty ⇒
-   * columnar readers synthesize position deletes from a narrow key
-   * pass at range open (the scan stays vectorized; the row-reader
-   * fallback probes per row) and the limit/row-count shortcuts are
-   * off — transient state compact_table folds away. */
+   * the readers synthesize position deletes from a narrow key pass at
+   * range open and the limit/row-count shortcuts are off — transient
+   * state compact_table folds away. */
   @transient private lazy val eqInfo: Option[(Array[StructField],
       Array[(Set[String], Dsv2Equality.KeyFilter)])] =
     // schema resolution by-name and PINNED to this scan's files (the
@@ -618,13 +610,12 @@ private[sources] case class GraftParquetScan(path: String,
     val bounds = Dsv2Parquet.inBounds(runtime)
     val survivors = footerBlocks.filter { case (_, b) =>
       // one partition per row group, addressed by byte range —
-      // ParquetReader selects row groups by midpoint offset;
+      // parquet selects row groups by midpoint offset;
       // runtime-filtered re-plans drop row groups whose footer
       // min/max exclude every join-side value BEFORE any task
       // launches (the IO win dynamic pruning exists for), and PUSHED
-      // band predicates prune the same way (the row reader used to do
-      // this executor-side through parquet's stats filter; doing it
-      // here serves both readers and never launches the task)
+      // band predicates prune the same way (driver-side, so a pruned
+      // row group never launches a task)
       Dsv2Parquet.blockMayMatch(b, bounds) &&
         Dsv2Parquet.blockMayMatchFilters(b, pushed)
     }
@@ -702,15 +693,13 @@ private[sources] case class GraftParquetScan(path: String,
     // so `runtime` is populated here whenever pruning ran. Correctness
     // never depends on it: the join that produced the filter re-checks
     // every surviving row. The requested projection is resolved against
-    // EACH FILE's own schema inside ReadSupport.init (see
-    // ProjectingGroupReadSupport) — one directory may mix writers whose
-    // repetitions differ, and parquet's containment check demands an
-    // exact repetition match per file.
+    // EACH FILE's own schema when its reader opens — one directory may
+    // mix writers whose column sets and repetitions differ.
     GraftParquetReaderFactory(required, pushed ++ runtime,
       // reader-level early stop counts PRE-probe rows — with equality
       // deletes in play Spark's own Limit takes the whole cut
       if (eqPresent) None else limit,
-      vectorize, dvMap = view.dvMap,
+      dvMap = view.dvMap,
       eqKeyFields = eqInfo.map(_._1).getOrElse(Array.empty),
       eqFilters = eqInfo.map(_._2).getOrElse(Array.empty))
   }
@@ -777,15 +766,13 @@ private[sources] case class GraftParquetBucketPartition(file: String,
 private[sources] case class GraftParquetReaderFactory(
     required: StructType, pushed: Array[Filter],
     limit: Option[Int] = None,
-    vectorize: Boolean = true,
     /** data file name → DV sidecar paths, from the scan's planning-time
      * listing (snapshot semantics); empty for DV-free tables. */
     dvMap: Map[String, Array[String]] = Map.empty,
     /** EQUALITY-DELETE snapshot ([[Dsv2Equality]]): the table's key
      * fields and one shared bloom-gated filter per sidecar with its
-     * target file set. Columnar reads translate them to position
-     * deletes at range open ([[eqDeadPositions]]); the row reader
-     * probes per assembled row (key columns widened into the read). */
+     * target file set, translated to position deletes at range open
+     * ([[eqDeadPositions]]). */
     eqKeyFields: Array[StructField] = Array.empty,
     eqFilters: Array[(Set[String], Dsv2Equality.KeyFilter)] = Array.empty)
     extends PartitionReaderFactory {
@@ -804,70 +791,46 @@ private[sources] case class GraftParquetReaderFactory(
       case pk: GraftParquetPackedPartition => pk.ranges
     }
 
+  private def open(r: GraftParquetPartition): PartitionReader[ColumnarBatch] =
+    new GraftColumnarPartitionReader(r, required, pushed, limit,
+      dvOf(r), eqDeadPositions(r))
+
   /** Drain one reader per range in order; ranges after the first open
    * lazily, so a pushed-limit early stop never opens them. */
-  private final class ChainedReader[T](rs: Array[GraftParquetPartition],
-      mk: GraftParquetPartition => PartitionReader[T])
-      extends PartitionReader[T] {
+  private final class ChainedReader(rs: Array[GraftParquetPartition])
+      extends PartitionReader[ColumnarBatch] {
     private var idx = 0
-    private var cur: PartitionReader[T] =
-      if (rs.nonEmpty) mk(rs(0)) else null
+    private var cur: PartitionReader[ColumnarBatch] =
+      if (rs.nonEmpty) open(rs(0)) else null
     override def next(): Boolean = {
       while (cur != null) {
         if (cur.next()) return true
         cur.close()
         idx += 1
-        cur = if (idx < rs.length) mk(rs(idx)) else null
+        cur = if (idx < rs.length) open(rs(idx)) else null
       }
       false
     }
-    override def get(): T = cur.get()
+    override def get(): ColumnarBatch = cur.get()
     override def close(): Unit = if (cur != null) { cur.close(); cur = null }
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val rs = ranges(p)
-    def mk(r: GraftParquetPartition): PartitionReader[InternalRow] =
-      if (eqFilters.isEmpty)
-        new GraftParquetPartitionReader(r, required, pushed, limit, dvOf(r))
-      else {
-        // equality deletes: read the WIDENED schema (projection ∪ key
-        // columns), probe each assembled row's canonical key against
-        // the filters targeting this file, project back down
-        val widened = StructType(required.fields ++
-          eqKeyFields.filterNot(f => required.fieldNames.contains(f.name)))
-        val applicable = eqFilters.collect {
-          case (targets, f) if targets.contains(new Path(r.file).getName) => f
-        }
-        new EqFilteringReader(
-          new GraftParquetPartitionReader(r, widened, pushed, None, dvOf(r)),
-          widened, required,
-          eqKeyFields.map(f => widened.fieldIndex(f.name)),
-          eqKeyFields.map(_.dataType), applicable)
-      }
-    if (rs.length == 1) mk(rs(0))
-    else new ChainedReader[InternalRow](rs, mk)
-  }
+  /** Every scan decodes columnar ([[createColumnarReader]]); Spark
+   * still requires the row entry point. */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft-parquet: scans are columnar only")
 
-  /** Columnar whenever the projection's types allow (all of them, for
-   * the type surface this provider serves — see [[Dsv2Columnar]]).
-   * The decision depends only on the schema, never the partition, as
-   * Spark requires (all partitions of a scan must agree). Equality
-   * deletes do NOT force the row path: they are translated to
-   * position deletes at range open (see [[eqDeadPositions]]) and ride
-   * the columnar DV skip. */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    vectorize && Dsv2Columnar.supported(required)
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
-  /** EQUALITY deletes → POSITION deletes, per range: row-read ONLY the
+  /** EQUALITY deletes → POSITION deletes, per range: read ONLY the
    * key columns (+ `_pos`) of this range, probe each key against the
    * filters targeting this file, and hand the dead rows' file-absolute
-   * positions to the columnar reader's DV skip. The scan stays
-   * vectorized for the FULL projection; untargeted files (rows
-   * inserted after the repair — the exemption that makes upsert work)
-   * pay nothing; targeted files pay one narrow key pass instead of a
-   * full-width row-path read. Transient either way — compact_table
-   * folds the sidecars and removes even the key pass. */
+   * positions to the columnar reader's DV skip. The FULL projection
+   * decodes at full speed; untargeted files (rows inserted after the
+   * repair — the exemption that makes upsert work) pay nothing;
+   * targeted files pay one narrow key pass. Transient either way —
+   * compact_table folds the sidecars and removes even the key pass. */
   private def eqDeadPositions(r: GraftParquetPartition): Array[Long] = {
     if (eqFilters.isEmpty) return Array.empty
     val applicable = eqFilters.collect {
@@ -939,207 +902,10 @@ private[sources] case class GraftParquetReaderFactory(
   }
 
   override def createColumnarReader(
-      p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      p: InputPartition): PartitionReader[ColumnarBatch] = {
     val rs = ranges(p)
-    def mk(r: GraftParquetPartition) =
-      new GraftColumnarPartitionReader(r, required, pushed, limit,
-        dvOf(r), eqDeadPositions(r))
-    if (rs.length == 1) mk(rs(0))
-    else new ChainedReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-      rs, mk)
+    if (rs.length == 1) open(rs(0)) else new ChainedReader(rs)
   }
-}
-
-/** Per-file projection: parquet's schema-containment check demands the
- * requested repetition EQUAL the file's, and one directory may mix
- * writers (Spark's builtin source writes non-nullable columns as
- * `required`; this provider's writer stages everything `optional`), so
- * the requested MessageType is derived from each file's OWN schema in
- * `init` — the hook parquet provides for exactly this. Field order
- * follows `cols`, so the reader's positional access stays aligned with
- * the Spark-side required schema. */
-private[sources] class ProjectingGroupReadSupport(cols: Array[String])
-    extends GroupReadSupport {
-  override def init(context: org.apache.parquet.hadoop.api.InitContext)
-      : ReadSupport.ReadContext = {
-    val fileSchema = context.getFileSchema
-    // project only the requested columns THIS file has — a directory
-    // may mix files with heterogeneous column sets (schema evolution:
-    // a wider writer appending beside older narrow files), and the
-    // reader null-fills what a file lacks. A file containing NONE of
-    // the requested columns still needs one physical column to drive
-    // row iteration — its first, values never read.
-    val present = cols.filter(fileSchema.containsField)
-    val fields =
-      if (present.nonEmpty) present.map(n => fileSchema.getType(Seq(n): _*))
-      else Array(fileSchema.getType(0))
-    new ReadSupport.ReadContext(
-      new MessageType(fileSchema.getName, fields.toIndexedSeq: _*))
-  }
-}
-
-private[sources] class GraftParquetPartitionReader(p: GraftParquetPartition,
-    required: StructType, pushed: Array[Filter],
-    limit: Option[Int] = None,
-    dvSidecars: Array[String] = Array.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** THIS file's schema (one extra footer parse per task — the price
-   * of heterogeneous directories; parquet re-reads the footer during
-   * reader init regardless, so this doubles a metadata read, not a
-   * data read). Drives the null-fill index map and the
-   * applicable-predicate cut below. */
-  private val fileSchema: MessageType = Dsv2Parquet.singleFileSchema(p.file)
-
-  /** Physical column per required field (metadata names map onto their
-   * wide writetime_/ttl_ siblings; everything else is itself). */
-  private val physNames: Array[String] =
-    required.fieldNames.map(Dsv2Parquet.physicalName)
-
-  // TYPE-drift guard (same stance as the columnar reader): a column
-  // this file stores under an incompatible physical type fails with
-  // the column named instead of a bare ClassCastException mid-decode —
-  // missing columns null-fill, changed types need a rewrite.
-  required.fields.zip(physNames).foreach { case (f, phys) =>
-    if (fileSchema.containsField(phys) &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType]) {
-      val t = fileSchema.getType(Seq(phys): _*)
-      if (t.isPrimitive)
-        require(
-          Dsv2Columnar.physicalCompatible(f.dataType, t.asPrimitiveType()),
-          s"graft-parquet: column '$phys' of ${p.file} stores $t, but " +
-            s"the scan requires ${f.dataType} — TYPE drift across a " +
-            "directory's files is not supported (missing columns " +
-            "null-fill; changed types need a rewrite)")
-    }
-  }
-
-  /** `_file` metadata fields: a per-partition constant, no bytes read. */
-  private val fileConst: Array[UTF8String] =
-    required.fieldNames.map(n =>
-      if (n == Dsv2Parquet.FileMetaColumn) UTF8String.fromString(p.file)
-      else null)
-
-  /** `_pos` metadata fields: served per row from parquet's exact
-   * current row index (file-absolute, filter- and page-skip-proof). */
-  private val posSlots: Array[Boolean] =
-    required.fieldNames.map(_ == Dsv2Parquet.PosMetaColumn)
-
-  /** This file's deletion vector (merge-on-read): union of its
-   * planning-time sidecars, sorted. */
-  private val dv: Array[Long] =
-    Dsv2Parquet.readDvUnion(dvSidecars, Dsv2Parquet.readConf)
-
-  private val reader: ParquetReader[Group] = {
-    val conf = Dsv2Parquet.readConf
-    val b = ParquetReader.builder(
-        // distinct: one physical column can back two required fields
-        // (both spellings of a provenance column) — project it once
-        new ProjectingGroupReadSupport(
-          physNames.distinct.filterNot(n =>
-            n == Dsv2Parquet.FileMetaColumn ||
-              n == Dsv2Parquet.PosMetaColumn)),
-        new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.start, p.end)
-    // a record-level predicate on a column THIS file lacks would fail
-    // parquet's filter validation; drop it — every pushed predicate is
-    // residual-advisory, Spark re-applies it (the absent column reads
-    // as null, which comparison predicates reject — same result)
-    val preds = pushed
-      .filter(_.references.forall(fileSchema.containsField))
-      .flatMap(Dsv2Parquet.translate(_, required))
-    (if (preds.isEmpty) b
-     else b.withFilter(FilterCompat.get(preds.reduce(FilterApi.and)))).build()
-  }
-  private var row: Group = _
-  private var emitted = 0L
-
-  /** required-field index → PROJECTED field index, or -1 when this
-   * file lacks the column (null-filled). Projection order mirrors
-   * ProjectingGroupReadSupport: requested columns present in the
-   * file, in required order. */
-  private val idxMap: Array[Int] = {
-    val present = physNames.distinct
-      .filterNot(n => n == Dsv2Parquet.FileMetaColumn ||
-        n == Dsv2Parquet.PosMetaColumn)
-      .filter(fileSchema.containsField)
-    physNames.map(present.indexOf(_))
-  }
-
-  /** Early stop at the pushed limit: any `limit` rows satisfy an
-   * unordered LIMIT (an ordered one plans TopN, which is never pushed
-   * here), and `emitted` counts post-record-filter rows, so this is
-   * safe under pushed and runtime predicates alike. Rows whose
-   * file-absolute index sits in the deletion vector are dropped here
-   * (exact under filters: `getCurrentRowIndex` is parquet's own row
-   * lineage, not an emit counter). */
-  override def next(): Boolean = {
-    if (limit.exists(emitted >= _)) return false
-    row = reader.read()
-    if (dv.nonEmpty) {
-      while (row != null &&
-          java.util.Arrays.binarySearch(dv, reader.getCurrentRowIndex) >= 0)
-        row = reader.read()
-    }
-    if (row != null) emitted += 1L
-    row != null
-  }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val fi = idxMap(i)
-      vals(i) =
-        if (fileConst(i) != null) fileConst(i)
-        else if (posSlots(i)) reader.getCurrentRowIndex
-        else if (fi < 0 || row.getFieldRepetitionCount(fi) == 0) null
-        else required.fields(i).dataType match {
-          case ArrayType(elem, _) =>
-            // 3-level LIST: outer group → repeated `list` entries →
-            // single-child element, accessed by POSITION (the child is
-            // `element` from Spark, `item` from pyarrow)
-            val outer = row.getGroup(fi, 0)
-            val n = outer.getFieldRepetitionCount(0)
-            val arr = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val entry = outer.getGroup(0, j)
-              arr(j) =
-                if (entry.getFieldRepetitionCount(0) == 0) null
-                else Dsv2Parquet.readPrimitive(entry, 0, 0, elem)
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-          case MapType(kt, vt, _) =>
-            // 3-level MAP: outer group → repeated key_value entries →
-            // (required key, optional value), by position
-            val outer = row.getGroup(fi, 0)
-            val n = outer.getFieldRepetitionCount(0)
-            val keys = new Array[Any](n)
-            val values = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val kv = outer.getGroup(0, j)
-              keys(j) = Dsv2Parquet.readPrimitive(kv, 0, 0, kt)
-              values(j) =
-                if (kv.getFieldRepetitionCount(1) == 0) null
-                else Dsv2Parquet.readPrimitive(kv, 1, 0, vt)
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(values))
-          case dt => Dsv2Parquet.readPrimitive(row, fi, 0, dt)
-        }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = reader.close()
 }
 
 private[graft] object Dsv2Parquet {
@@ -1187,7 +953,7 @@ private[graft] object Dsv2Parquet {
    * FILTERS for — the missing rung of the selective-scan ladder for
    * HIGH-cardinality point lookups, where min/max can't prune an
    * unsorted layout and the dictionary overflows to plain encoding.
-   * Readers exploit them automatically: both read paths open with a
+   * Readers exploit them automatically: a flat scan opens with a
    * record filter, and parquet's row-group filtering consults blooms
    * (executor-side — footer stats stay the driver-side prune). */
   val BloomForOption = "graft.bloomFor"
@@ -1211,15 +977,15 @@ private[graft] object Dsv2Parquet {
 
   /** `_file` metadata column: the data file a row came from — the
    * group identity row-level operations regroup by (and the standard
-   * connector debugging surface). Served as a per-partition constant
-   * by both readers; never a physical column. */
+   * connector debugging surface). Served as a per-partition constant;
+   * never a physical column. */
   val FileMetaColumn = "_file"
 
   /** `_pos` metadata column: a row's FILE-ABSOLUTE row index — the
    * second half of the (file, position) row identity merge-on-read
-   * delta writes address deletes by. Served by the row reader from
-   * parquet's exact `getCurrentRowIndex` (correct even under record
-   * filters and page-index skipping); never a physical column. */
+   * delta writes address deletes by. Served by the columnar reader's
+   * decode cursor, which reads the full sequential row stream whenever
+   * `_pos` is projected; never a physical column. */
   val PosMetaColumn = "_pos"
 
   // ---- deletion-vector sidecars (merge-on-read row-level ops) ----
@@ -1436,37 +1202,6 @@ private[graft] object Dsv2Parquet {
       b.addField(t)
     }
     b.named("graft")
-  }
-
-  /** One primitive value out of a Group, decoded to Spark's internal
-   * representation. Decimals branch on the FILE's physical encoding
-   * (INT32 / INT64 unscaled, or two's-complement BINARY / FLBA) — one
-   * directory can mix writers whose decimal encodings differ. */
-  def readPrimitive(g: Group, fi: Int, vi: Int, dt: DataType): Any = dt match {
-    case LongType | TimestampType | TimestampNTZType => g.getLong(fi, vi)
-    case IntegerType | DateType => g.getInteger(fi, vi)
-    case ShortType => g.getInteger(fi, vi).toShort
-    case ByteType => g.getInteger(fi, vi).toByte
-    case DoubleType => g.getDouble(fi, vi)
-    case FloatType => g.getFloat(fi, vi)
-    case BooleanType => g.getBoolean(fi, vi)
-    case StringType => UTF8String.fromBytes(g.getBinary(fi, vi).getBytes)
-    case BinaryType => g.getBinary(fi, vi).getBytes
-    case d: DecimalType =>
-      g.getType.getType(fi).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getInteger(fi, vi).toLong, d.precision, d.scale)
-        case PrimitiveTypeName.INT64 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getLong(fi, vi), d.precision, d.scale)
-        case _ =>
-          val unscaled = new java.math.BigInteger(g.getBinary(fi, vi).getBytes)
-          org.apache.spark.sql.types.Decimal(
-            BigDecimal(unscaled, d.scale), d.precision, d.scale)
-      }
-    case other => throw new UnsupportedOperationException(
-      s"graft-parquet: unsupported read type $other")
   }
 
   /** Per-file DELETE-WHERE decisions from footer statistics: Some((

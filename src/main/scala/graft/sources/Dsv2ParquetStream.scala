@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.StructType
  */
 private[sources] class GraftParquetMicroBatchStream(path: String,
     required: StructType, pushed: Array[Filter], checkpointLocation: String,
-    maxPerTrigger: Option[Int], vectorize: Boolean = true)
+    maxPerTrigger: Option[Int])
     extends MicroBatchStream with SupportsAdmissionControl {
 
   private val conf = new Configuration()
@@ -248,16 +248,15 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // projection resolution is per file inside ReadSupport.init
-    // (ProjectingGroupReadSupport) — micro-batches routinely span
-    // files from different writers
+    // projection resolution is per file when each reader opens —
+    // micro-batches routinely span files from different writers
     val conf = Dsv2Parquet.readConf
     // equality deletes apply to streamed micro-batches exactly like
     // batch scans (the key probe composes with the DV application)
     val eqInfo = CommitLog.latest(path, conf).filter(_.eqFiles.nonEmpty)
       .flatMap(s => Dsv2Equality.forSnapshot(path, Some(s),
         Dsv2Parquet.footerSchema(path), conf))
-    GraftParquetReaderFactory(required, pushed, vectorize = vectorize,
+    GraftParquetReaderFactory(required, pushed,
       dvMap = Dsv2Parquet.dvListing(path, conf),
       eqKeyFields = eqInfo.map(_._1).getOrElse(Array.empty),
       eqFilters = eqInfo.map(_._2).getOrElse(Array.empty))

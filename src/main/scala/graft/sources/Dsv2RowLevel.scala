@@ -105,7 +105,10 @@ private[sources] case class GraftReplaceScanBuilder(path: String,
   private var required: StructType = tableSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = GraftReplaceScan(path, required, op)
+  override def build(): Scan = {
+    Dsv2Columnar.requireReadable(required)
+    GraftReplaceScan(path, required, op)
+  }
 }
 
 /** Whole-group scan: every row group of every surviving data file,
@@ -194,8 +197,8 @@ private[sources] case class GraftReplaceScan(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // deletion vectors (if a mode-mixed table carries them) apply in
-    // both readers — the rewrite must carry over LIVE rows only
+    // deletion vectors (if a mode-mixed table carries them) apply —
+    // the rewrite must carry over LIVE rows only
     val dvMap = view.dvMap
     op.scannedDvs.set(dvMap.values.flatten
       .map(s => new Path(s).getName).toSet)

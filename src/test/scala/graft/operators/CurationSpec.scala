@@ -135,20 +135,34 @@ class CurationSpec extends SparkSpec {
   }
 
   test("contamination flags a planted benchmark copy, not unrelated docs") {
+    // the `decon_ngram_overlap` path: doc_id % 50 == 0 is the benchmark
+    // side (doc 100), every other doc a candidate
     val benchText = doc(1)
-    val bench = Seq((100L, benchText)).toDF("doc_id", "text")
-    // candidate 0: exact copy of the benchmark doc; candidate 1: copy
-    // with one word changed (still heavily contaminated); candidate 2:
+    // candidate 1: exact copy of the benchmark doc; candidate 2: copy
+    // with one word changed (still heavily contaminated); candidate 3:
     // from a different vocabulary — zero shingle overlap
     val near = benchText.split(" ").updated(3, "XX").mkString(" ")
-    val candidates = Seq(
-      (0L, benchText), (1L, near),
-      (2L, Seq.fill(40)("zzz qqq vvv").mkString(" "))).toDF("doc_id", "text")
-    val out = Curation.ngramContamination(candidates, bench)
-      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(out(0L) == 1.0)
-    assert(out(1L) > 0.8 && out(1L) < 1.0)
-    assert(!out.contains(2L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-decon").toString
+    // the shingle table is cached by the corpus's content: resolve its
+    // path after the corpus is written
+    lazy val table = graft.sources.ModelCache.cachePath(s"$dir/documents.parquet",
+      "shinglehashes-v1",
+      sys.env.getOrElse("GRAFT_GRAMS_CACHE", "/tmp/graft-grams-cache"))
+    def rm(x: java.io.File): Unit = {
+      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
+    }
+    try {
+      Seq((100L, benchText), (1L, benchText), (2L, near),
+        (3L, Seq.fill(40)("zzz qqq vvv").mkString(" ")))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val out = Curation.deconNgramOverlap(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
+      assert(out(1L) == 1.0)
+      assert(out(2L) > 0.8 && out(2L) < 1.0)
+      assert(!out.contains(3L) && !out.contains(100L))
+    } finally {
+      rm(new java.io.File(table)); rm(new java.io.File(dir))
+    }
   }
 
   test("exact-substring decon flags only verbatim snippet carriers") {

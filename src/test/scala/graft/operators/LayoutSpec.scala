@@ -4,8 +4,8 @@ import graft.SparkSpec
 import graft.functions.LayoutKernels
 import org.apache.spark.sql.functions._
 
-/** Layout operators: Morton kernel arithmetic, disjoint per-file key
- * ranges after clustering, and small-file compaction. */
+/** Layout operators: Morton kernel arithmetic and disjoint per-file
+ * Morton ranges after Z-order clustering. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,28 +24,6 @@ class LayoutSpec extends SparkSpec {
       yield ((x, y), LayoutKernels.morton2(x, y))
     val lowQuadrant = codes.filter { case ((x, y), _) => x < 4 && y < 4 }.map(_._2)
     assert(lowQuadrant.max < codes.filter { case ((x, y), _) => x >= 4 && y >= 4 }.map(_._2).min)
-  }
-
-  test("clusterByRange writes files with disjoint sorted key ranges") {
-    val tmp = java.nio.file.Files.createTempDirectory("layout-range").toString
-    val df = spark.range(0, 10000).select(
-      (col("id") * 2654435761L % 10000).as("k"), col("id").as("v"))
-    Layout.clusterByRange(df, 8, col("k")).write.mode("overwrite").parquet(tmp)
-    val files = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-    assert(files.length == 8)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f).agg(min("k"), max("k"), count(lit(1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    assert(ranges.map(_._3).sum == 10000L)
-    val sorted = ranges.sortBy(_._1)
-    sorted.sliding(2).foreach { case Array((_, hi, _), (lo, _, _)) =>
-      assert(hi < lo, s"file ranges overlap: $hi >= $lo")
-    }
-    // each file is internally sorted
-    val first = spark.read.parquet(files.head).select("k").collect().map(_.getLong(0))
-    assert(first.sameElements(first.sorted))
   }
 
   test("clusterByZOrder yields disjoint per-file morton ranges, schema unchanged") {
@@ -68,38 +46,5 @@ class LayoutSpec extends SparkSpec {
     ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
       assert(hi <= lo, s"morton ranges overlap: $hi > $lo")
     }
-  }
-
-  test("compact bin-packs small files without losing rows") {
-    val in = java.nio.file.Files.createTempDirectory("compact-in").toString
-    val out = java.nio.file.Files.createTempDirectory("compact-out").toString
-    spark.range(0, 20000).toDF("id").repartition(32)
-      .write.mode("overwrite").parquet(in)
-    val inFiles = new java.io.File(in).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(inFiles.length == 32)
-    val totalBytes = inFiles.map(_.length).sum
-    val n = Layout.compact(spark, in, out, targetBytes = totalBytes / 2 + 1)
-    assert(n == 2)
-    val outFiles = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(outFiles.length == 2)
-    assert(spark.read.parquet(out).count() == 20000)
-  }
-
-  test("compact reports the actual file count when the target exceeds it") {
-    val in = java.nio.file.Files.createTempDirectory("compact-in2").toString
-    val out = java.nio.file.Files.createTempDirectory("compact-out2").toString
-    // ONE oversized input file with a tiny targetBytes: the computed
-    // target (totalBytes/target many files) is far above the scan's
-    // partition count, coalesce cannot split, and compact must report
-    // what was actually written — not the unreachable target
-    spark.range(0, 20000).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(in)
-    val n = Layout.compact(spark, in, out, targetBytes = 1024L)
-    val outFiles = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(n == outFiles.length)
-    assert(spark.read.parquet(out).count() == 20000)
   }
 }

@@ -46,10 +46,9 @@ class Dsv2EqualitySpec extends SparkSpec {
       EqualityRepair.commit(spark, p, Seq("k"), deletes, inserts)
       val snap = CommitLog.latest(p, conf).get
       assert(snap.version == 2L && snap.eqFiles.nonEmpty)
-      // LIVE equality deletes no longer force the row path: they are
-      // translated to position deletes at range open and the scan
-      // stays vectorized (the read tax is one narrow key pass over
-      // targeted files, not a full-width row-path read)
+      // LIVE equality deletes are translated to position deletes at
+      // range open and the scan stays vectorized (the read tax is one
+      // narrow key pass over targeted files)
       assert(spark.read.format(fmt).load(p)
         .queryExecution.executedPlan.toString.contains("ColumnarToRow"),
         "eq-live scan must stay columnar")

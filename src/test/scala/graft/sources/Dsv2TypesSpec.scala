@@ -89,9 +89,6 @@ class Dsv2TypesSpec extends SparkSpec {
         org.apache.spark.sql.types.TimestampNTZType)
       assert(rows(spark.read.parquet(p)) == rows(df))
       assert(rows(spark.read.format(fmt).load(p)) == rows(df))
-      // the row reader too (graft.vectorized=false)
-      assert(rows(spark.read.format(fmt)
-        .option(Dsv2Columnar.VectorizedOption, "false").load(p)) == rows(df))
     }
   }
 

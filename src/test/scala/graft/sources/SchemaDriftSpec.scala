@@ -23,7 +23,7 @@ class SchemaDriftSpec extends SparkSpec {
         .coalesce(1).write.format(fmt)
         .option(Dsv2Parquet.SchemaOption, "k BIGINT, d DECIMAL(12,2)")
         .mode("append").save(p)
-      // vectorized: the drift guard names the column
+      // the drift guard names the column
       val e = intercept[Throwable] {
         spark.read.format(fmt)
           .option(Dsv2Parquet.SchemaOption, "k BIGINT, d DECIMAL(12,2)")
@@ -32,17 +32,6 @@ class SchemaDriftSpec extends SparkSpec {
       val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .flatMap(c => Option(c.getMessage)).mkString(" | ")
       assert(msgs.contains("TYPE drift") && msgs.contains("'d'"), msgs)
-      // row reader: the same named error (not a bare ClassCastException
-      // from deep inside record conversion)
-      val e2 = intercept[Throwable] {
-        spark.read.format(fmt)
-          .option(Dsv2Parquet.SchemaOption, "k BIGINT, d DECIMAL(12,2)")
-          .option(Dsv2Columnar.VectorizedOption, "false")
-          .load(p).collect()
-      }
-      val msgs2 = Iterator.iterate(e2)(_.getCause).takeWhile(_ != null)
-        .flatMap(c => Option(c.getMessage)).mkString(" | ")
-      assert(msgs2.contains("TYPE drift") && msgs2.contains("'d'"), msgs2)
     } finally {
       def rm(x: java.io.File): Unit = {
         Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
@@ -70,6 +59,32 @@ class SchemaDriftSpec extends SparkSpec {
       val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .flatMap(c => Option(c.getMessage)).mkString(" | ")
       assert(msgs.contains("TYPE drift") && msgs.contains("'d'"), msgs)
+    } finally {
+      def rm(x: java.io.File): Unit = {
+        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
+      }
+      rm(new java.io.File(tmp))
+    }
+  }
+
+  test("a type the reader cannot serve is refused at planning, column named") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-unserved").toString
+    val p = s"$tmp/t"
+    try {
+      spark.range(10).select(col("id").as("k")).coalesce(1).write.format(fmt)
+        .option(Dsv2Parquet.SchemaOption, "k BIGINT").mode("append").save(p)
+      // the files lack both columns: a decoder that null-filled them
+      // would answer nulls where the declared type cannot be read at all
+      Seq("st" -> "k BIGINT, st STRUCT<a: INT>",
+          "nest" -> "k BIGINT, nest ARRAY<ARRAY<BIGINT>>").foreach {
+        case (c, ddl) =>
+          val df = spark.read.format(fmt)
+            .option(Dsv2Parquet.SchemaOption, ddl).load(p)
+          val e = intercept[Throwable](df.queryExecution.executedPlan)
+          val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .flatMap(x => Option(x.getMessage)).mkString(" | ")
+          assert(msgs.contains(s"'$c'") && msgs.contains("cannot read"), msgs)
+      }
     } finally {
       def rm(x: java.io.File): Unit = {
         Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
