@@ -6,7 +6,7 @@ import graft.reconcile.MvReconciler
 import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportWriter, StatsCollector}
 import graft.schema.TableSchema
-import graft.sources.Source
+import graft.sources.{ParquetSource, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -19,7 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * Scan, join and classify run ONCE, as one Catalyst plan with a single
  * shuffle (the join — mirroring the reference's single cogroup shuffle,
- * MvSync.java:286-287). That pass counts every category through
+ * MvSync.java:286-287): a shuffled hash join built on the MV side while
+ * that side fits Spark's local-hash-map bound, else a sort-merge join
+ * (MvReconciler). Row writetime bounds are computed only for a
+ * time-scoped job. That pass counts every category through
  * `Dataset.observe` and materializes only the non-consistent rows; like
  * the reference (MvSync.java:374-414), consistent and out-of-scope keys
  * are counted, never kept. Reports, the mutation plan and the caller's
@@ -54,8 +57,10 @@ object MvSyncJob {
    * the offline-mode table locations and MV key come from args or conf —
    * `args = [basePath, mvPath, mvPk(comma-sep), basePk(comma-sep)]`, or
    * `cass.mv.{base.path, mv.path, mv.pk, base.pk}`. Schemas are
-   * discovered from the parquet footers (TableSchema.fromDataFrame),
-   * mirroring the reference's cluster-metadata discovery.
+   * discovered from one parquet footer per table, read on the driver
+   * (ParquetSource.footerSchema → TableSchema.fromSchema), mirroring the
+   * reference's cluster-metadata discovery; no Spark job runs before the
+   * reconcile.
    */
   def main(args: Array[String]): Unit = {
     val spark = Sessions.create("graft-mvsync")
@@ -70,10 +75,10 @@ object MvSyncJob {
     val basePk = args.lift(3).orElse(conf("base.pk"))
       .map(_.split(",").toSeq).getOrElse(mvPk.tail)
     val settings = Settings.fromSession(spark)
-    val baseSchema = TableSchema.fromDataFrame(spark.read.parquet(basePath), basePk)
-    val mvSchema = TableSchema.fromDataFrame(spark.read.parquet(mvPath), mvPk)
-    val result = run(spark, sources.ParquetSource(basePath),
-      sources.ParquetSource(mvPath), baseSchema, mvSchema, settings)
+    def schemaOf(path: String, pk: Seq[String]) =
+      TableSchema.fromSchema(ParquetSource.footerSchema(spark, path), pk)
+    val result = run(spark, ParquetSource(basePath), ParquetSource(mvPath),
+      schemaOf(basePath, basePk), schemaOf(mvPath, mvPk), settings)
     println(result.stats.toString)
   }
 

@@ -19,16 +19,26 @@ import org.apache.spark.sql.functions._
  * Spark-native restatement: `base.join(mv, pk, "full_outer")` with the
  * diff/classify logic as generated Column expressions, so the whole thing
  * is one shuffle (the join) inside whole-stage codegen — Catalyst handles
- * column pruning, predicate pushdown, AQE skew handling. At 100 TB both
- * sides shuffle-hash/sort-merge on the MV PK; no driver-side state.
+ * column pruning, predicate pushdown, AQE skew handling; no driver-side
+ * state.
+ *
+ * Join choice: like the reference's hash cogroup, a shuffled hash join
+ * with the MV side as the build side, when the MV side's estimated size
+ * (`optimizedPlan.stats.sizeInBytes`) is under Spark's local-hash-map
+ * bound, `autoBroadcastJoinThreshold × shuffle.partitions`
+ * ([[fitsLocalHashMap]]). A larger MV side, or a threshold of -1, keeps
+ * the sort-merge join, which spills. Pre-bucketed inputs plan no
+ * exchange either way.
  *
  * Output columns: MV-PK columns, then
+ *   base_<c>, base_writetime_<c>, base_ttl_<c>, base_present, mv_<c>, ...
+ *                     payload; `<side>_min_wt` / `<side>_max_wt` (row
+ *                     writetime bounds) only when the job is time-scoped
  *   problem           one of CONSISTENT / MISSING_IN_BASE_TABLE /
  *                     MISSING_IN_MV_TABLE / INCONSISTENT / NOT_IN_SCOPE
  *   mismatch_col      name of the FIRST differing common column in
  *                     name-sorted order, else null (MvSync.java:486)
  *   mismatch_base / mismatch_mv   rendered string values of that column
- *   base_<c>, base_writetime_<c>, base_ttl_<c>, mv_<c>, ...  payload
  */
 object MvReconciler {
 
@@ -61,55 +71,53 @@ object MvReconciler {
     val pk = mvSchema.sortedPk
     val common = TableSchema.commonRegular(baseSchema, mvSchema)
 
-    // Per-side prep: presence marker, row-level min/max cell writetime
+    // Per-side prep, one select: the MV-PK columns, then every other
+    // column prefixed with the side, a presence marker and, only when
+    // the job is time-scoped, the row-level min/max cell writetime
     // (reference getTheLeastAndMostModificationTimeInMicroSeconds,
-    // MvSync.java:452-479 — over non-null, non-collection cells only),
-    // then prefix every non-PK column. First-element-per-key cogroup
-    // semantics (MvSync.java:325-338) ≡ dropDuplicates on the PK.
+    // MvSync.java:452-479 — over non-null, non-collection cells only).
+    // First-element-per-key cogroup semantics (MvSync.java:325-338) ≡
+    // dropDuplicates on the PK.
     def prep(df: DataFrame, schema: TableSchema, side: String): DataFrame = {
       // Reference shouldSkip receives commonNonPrimaryKeyColumns only
       // (MvSync.java:327-346, 452-479) — min/max writetime is computed over
       // the COMMON regular columns, not each side's full schema, so scoping
       // agrees even when base/MV schemas differ. A cell participates only
       // when its VALUE is non-null (MvSync.java:459), and a non-null cell
-      // with no writetime is an error when scoping is active
-      // (MvSync.java:468-473).
-      val wtCols = common
-        .filterNot(schema.isCollection)
-        .filter(c => df.columns.contains(schema.writetimeCol(c)))
-        .map { c =>
-          val wt =
-            if (!settings.timeScoped) col(schema.writetimeCol(c))
-            else coalesce(col(schema.writetimeCol(c)),
+      // with no writetime is an error (MvSync.java:468-473).
+      def scope: Seq[(String, Column)] = {
+        val wtCols = common
+          .filterNot(schema.isCollection)
+          .filter(c => df.columns.contains(schema.writetimeCol(c)))
+          .map { c =>
+            when(col(c).isNotNull, coalesce(col(schema.writetimeCol(c)),
               raise_error(lit(s"Modification time is not present for $c"))
-                .cast("long"))
-          when(col(c).isNotNull, wt)
+                .cast("long")))
+          }
+        // least/greatest require ≥2 args — degrade gracefully for 0/1
+        // writetime-carrying columns
+        def fold(f: Seq[Column] => Column): Column = wtCols match {
+          case Seq() => lit(null).cast("long")
+          case Seq(only) => only
+          case many => f(many)
         }
-      // least/greatest require ≥2 args — degrade gracefully for 0/1
-      // writetime-carrying columns
-      def fold(f: Seq[Column] => Column): Column = wtCols match {
-        case Seq() => lit(null).cast("long")
-        case Seq(only) => only
-        case many => f(many)
+        Seq("min_wt" -> fold(cs => least(cs: _*)),
+          "max_wt" -> fold(cs => greatest(cs: _*)))
       }
-      val minWt = fold(cs => least(cs: _*))
-      val maxWt = fold(cs => greatest(cs: _*))
-      // First-element-per-key parity via dropDuplicates — skippable when
-      // the source guarantees unique PKs (Settings.trustUniquePk: any
-      // real Cassandra scan), where the defensive aggregate is pure cost
+      // skippable when the source guarantees unique PKs
+      // (Settings.trustUniquePk: any real Cassandra scan), where the
+      // defensive aggregate is pure cost
       val deduped = if (settings.trustUniquePk) df else df.dropDuplicates(pk)
-      val withMeta = deduped
-        .withColumn("present", lit(true))
-        .withColumn("min_wt", minWt)
-        .withColumn("max_wt", maxWt)
-      val nonPk = withMeta.columns.filterNot(pk.contains)
-      withMeta.select(pk.map(col) ++ nonPk.map(c => col(c).as(s"${side}_$c")): _*)
+      val meta = ("present" -> lit(true)) +: (if (settings.timeScoped) scope else Nil)
+      val payload = df.columns.toSeq.filterNot(pk.contains).map(c => c -> col(c)) ++ meta
+      deduped.select(pk.map(col) ++
+        payload.map { case (n, c) => c.as(s"${side}_$n") }: _*)
     }
 
     val b = prep(base, baseSchema, "base")
     val m = prep(mv, mvSchema, "mv")
-
-    val joined = b.join(m, pk, "full_outer")
+    val joined = b.join(
+      if (fitsLocalHashMap(m)) m.hint("SHUFFLE_HASH") else m, pk, "full_outer")
 
     // Time-scope: the reference compares SECOND-truncated writetimes —
     // minWt/1_000_000 < startSec or maxWt/1_000_000 > endSec with integer
@@ -153,17 +161,29 @@ object MvReconciler {
         .when(col("mv_present").isNull, MissingInMv)
         .when(col("_mismatch").isNotNull, Inconsistent)
         .otherwise(Consistent)
+    def ifInconsistent(field: String): Column =
+      when(problem === Inconsistent, col(s"_mismatch.$field"))
 
-    joined
-      .withColumn("_mismatch", mismatch)
-      .withColumn(ProblemCol, problem)
-      .withColumn("mismatch_col",
-        when(col(ProblemCol) === Inconsistent, col("_mismatch.col")))
-      .withColumn("mismatch_base",
-        when(col(ProblemCol) === Inconsistent, col("_mismatch.b")))
-      .withColumn("mismatch_mv",
-        when(col(ProblemCol) === Inconsistent, col("_mismatch.m")))
-      .drop("_mismatch")
+    // two projections, not one: the diff is referenced four times, so it
+    // is computed once below the classification
+    joined.select(col("*"), mismatch.as("_mismatch")).select(
+      joined.columns.toSeq.map(col) ++ Seq(
+        problem.as(ProblemCol),
+        ifInconsistent("col").as("mismatch_col"),
+        ifInconsistent("b").as("mismatch_base"),
+        ifInconsistent("m").as("mismatch_mv")): _*)
+  }
+
+  /** Spark's own bound for a per-partition hash map
+   * (`JoinSelectionHelper.canBuildLocalHashMapBySize`): the side's
+   * estimated size under `autoBroadcastJoinThreshold ×
+   * shuffle.partitions`. A shuffled hash join builds its map in memory
+   * and cannot spill, so a side over the bound (or any side, when the
+   * threshold is -1) keeps the sort-merge join. */
+  private def fitsLocalHashMap(side: DataFrame): Boolean = {
+    val conf = side.sparkSession.sessionState.conf
+    side.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(conf.autoBroadcastJoinThreshold) * conf.numShufflePartitions
   }
 
   /**

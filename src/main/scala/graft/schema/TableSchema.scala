@@ -55,11 +55,12 @@ object TableSchema {
   /**
    * Schema discovery for an arbitrary wide table (operator R,
    * MvSync.java:171-214 — there against cluster metadata, here against
-   * the DataFrame's own StructType): non-PK data columns are the fields
+   * a table's Spark schema): non-PK data columns are the fields
    * that aren't `writetime_`/`ttl_` siblings; CQL type names derive from
    * the reverse of the §1.2 Spark-type mapping.
    */
-  def fromDataFrame(df: org.apache.spark.sql.DataFrame, pk: Seq[String]): TableSchema = {
+  def fromSchema(schema: org.apache.spark.sql.types.StructType,
+      pk: Seq[String]): TableSchema = {
     import org.apache.spark.sql.types._
     def cqlOf(dt: DataType): String = dt match {
       case StringType => "TEXT"
@@ -79,9 +80,9 @@ object TableSchema {
       case MapType(k, v, _) => s"MAP<${cqlOf(k)},${cqlOf(v)}>"
       case other => other.simpleString.toUpperCase
     }
-    val dataFields = df.schema.fields.filterNot(f =>
+    val dataFields = schema.fields.filterNot(f =>
       f.name.startsWith("writetime_") || f.name.startsWith("ttl_"))
-    val missing = pk.filterNot(df.columns.contains)
+    val missing = pk.filterNot(schema.fieldNames.contains)
     require(missing.isEmpty, s"PK columns absent from the table: $missing")
     TableSchema(pk, dataFields.map(f => f.name -> cqlOf(f.dataType)).toMap)
   }

@@ -318,13 +318,14 @@ object EqualityRepair {
     // open), so nothing stages and nothing renames.
     val canon = Dsv2Equality.canonicalExpr(kc.toIndexedSeq)
     val bTargets = spark.sparkContext.broadcast(targets)
-    val slices = math.min(8, math.max(1,
-      deleteKeys.rdd.getNumPartitions))
     val staging = commit.dir
+    // at most 8 sidecars: a narrow coalesce, so the cap adds no shuffle
+    // and no job, and never runs the delete frame's own stages to count
+    // its partitions
     val delSide = deleteKeys.select(
       (canon.as("_ek") +: tableSchema.fields.toIndexedSeq.map(f =>
         lit(null).cast(f.dataType).as(f.name))): _*)
-      .repartition(slices)
+      .coalesce(8)
     def ansiCast(c: Column, t: DataType): Column = GraftSqlBridge.column(
       Cast(GraftSqlBridge.expression(c), t, None, EvalMode.ANSI))
     val tagged =

@@ -2,7 +2,13 @@ package graft.sources
 
 import graft.config.Settings
 import graft.schema.TableSchema
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Table source abstraction (reference operator A: the connector scan,
@@ -37,10 +43,45 @@ object Source {
   }
 }
 
-/** Parquet-backed table: path + projection to the schema's columns. */
+/** Parquet-backed table: path + projection to the schema's columns.
+ * The read schema is [[ParquetSource.footerSchema]], so a load runs no
+ * Spark job. */
 final case class ParquetSource(path: String) extends Source {
   override def load(spark: SparkSession, schema: TableSchema): DataFrame =
-    Source.project(spark.read.parquet(path), schema)
+    Source.project(
+      spark.read.schema(ParquetSource.footerSchema(spark, path)).parquet(path),
+      schema)
+}
+
+object ParquetSource {
+  /** The schema `spark.read.parquet(path)` infers, read on the driver.
+   * Spark's inference (`ParquetUtils.inferSchema` without mergeSchema,
+   * no summary files) reads ONE footer, the first data file's in path
+   * order, but submits a one-task Spark job to do it. This reads the
+   * same footer here and converts it the same way
+   * (`ParquetFileFormat.readSchemaFromFooter`: the Spark schema a Spark
+   * writer stored in the footer, else `ParquetToSparkSchemaConverter`
+   * under the session's conf, every field nullable). Hidden names
+   * (`_x`, `.x`) are skipped as Spark's file index skips them. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      name.startsWith(".") || name.startsWith("_") && !name.contains("=")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(f => hidden(f.getPath.getName)).flatMap(leaves)
+    val file = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      .headOption.getOrElse(throw new IllegalArgumentException(
+        s"no parquet data files under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    GraftSqlBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
 }
 
 /**

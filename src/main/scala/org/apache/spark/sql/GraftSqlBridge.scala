@@ -14,4 +14,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Every field nullable, nested ones too: the posture a file source
+   * gives the schema it reads (`private[spark]`). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }

@@ -118,8 +118,8 @@ class MvSyncJobSpec extends SparkSpec {
     assert(result.classified.count() == 0 && result.mutations.count() == 0)
   }
 
-  test("a second run after the repair commit reads the repaired table, not a cache") {
-    val tmp = tmpDir("graft-mvsync-stale")
+  /** A parquet base and a commit-logged graft MV under `tmp`. */
+  private def tables(tmp: String): (String, String) = {
     val (basePath, mvPath) = (s"$tmp/base", s"$tmp/mv")
     base.write.parquet(basePath)
     val damaged = mv
@@ -127,6 +127,26 @@ class MvSyncJobSpec extends SparkSpec {
       .option(Dsv2Parquet.SchemaOption, damaged.schema.toDDL)
       .mode("append").save(mvPath)
     CommitLog.enable(mvPath, Dsv2Parquet.readConf)
+    (basePath, mvPath)
+  }
+
+  test("run on a parquet base and a graft MV submits exactly 4 Spark jobs") {
+    // the reconcile's two shuffle-map stages and its result stage (AQE
+    // runs each as a job), then the one reports + stats job; loading
+    // either side runs none
+    val tmp = tmpDir("graft-mvsync-jobs")
+    val (basePath, mvPath) = tables(tmp)
+    val (result, ran) = org.apache.spark.SparkJobCount.of(spark) {
+      MvSyncJob.run(spark, ParquetSource(basePath), Dsv2ParquetSource(mvPath),
+        baseSchema, mvSchema, Fixing.copy(outputDir = s"$tmp/reports"))
+    }
+    assert(result.stats.totRecords == 4)
+    assert(ran.jobs == 4 && ran.shuffleStages == 2, s"MvSyncJob.run ran $ran")
+  }
+
+  test("a second run after the repair commit reads the repaired table, not a cache") {
+    val tmp = tmpDir("graft-mvsync-stale")
+    val (basePath, mvPath) = tables(tmp)
     val settings = Fixing.copy(outputDir = s"$tmp/reports")
     def runOnce() = MvSyncJob.run(spark, ParquetSource(basePath),
       Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings, writeReports = false)

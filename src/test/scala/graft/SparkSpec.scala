@@ -24,4 +24,8 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The directory of the parquet tables the flagship query reads. */
+  lazy val flagshipDir: String = new java.io.File(
+    SparkEntry.entry(spark).inputFiles.head.stripPrefix("file:")).getParent
 }

@@ -25,7 +25,7 @@ class SaltedJoinSpec extends SparkSpec {
       .toDF("id", "name", "score", "tags", "attrs")
       .withColumn("writetime_name", lit(1L))
       .withColumn("ttl_name", lit(null: java.lang.Integer))
-    val s = TableSchema.fromDataFrame(df, pk = Seq("id"))
+    val s = TableSchema.fromSchema(df.schema, pk = Seq("id"))
     assert(s.cqlType("id") == "BIGINT" && s.cqlType("name") == "TEXT")
     assert(s.cqlType("score") == "DOUBLE")
     assert(s.cqlType("tags") == "LIST<INT>" && s.isCollection("tags"))

@@ -110,6 +110,26 @@ class Dsv2EqualitySpec extends SparkSpec {
     }
   }
 
+  test("a 12-partition delete frame stages at most 8 sidecars, in one job " +
+      "and with no shuffle of the commit's own") {
+    withTmp { tmp =>
+      val p = mkTable(tmp)
+      // range partitions run no shuffle, so any shuffle stage below is
+      // the commit's own (AQE on: it would run as a job of its own too)
+      val deletes = spark.range(0, 1000, 7, 12).toDF("k")
+      assert(deletes.rdd.getNumPartitions == 12)
+      val (_, ran) = org.apache.spark.SparkJobCount.of(spark) {
+        EqualityRepair.commit(spark, p, Seq("k"), deletes,
+          Seq((7L, "patched", 777L)).toDF("k", "s", "v"))
+      }
+      assert(ran.jobs == 1 && ran.shuffleStages == 0, s"eq commit ran $ran")
+      val snap = CommitLog.latest(p, conf).get
+      assert(snap.eqFiles.nonEmpty && snap.eqFiles.size <= 8, snap.eqFiles)
+      val got = spark.read.format(fmt).load(p).select("k").as[Long].collect().toSet
+      assert(got == ((0L until 1000L).toSet -- (0L until 1000L by 7)) + 7L)
+    }
+  }
+
   test("zero-ROW insert frame with columns commits a pure-delete repair") {
     // r21: the isEmpty pre-check (which executed the insert subtree
     // once before the write executed it again) was replaced by a
@@ -405,7 +425,9 @@ class Dsv2EqualitySpec extends SparkSpec {
           .option(Dsv2Parquet.SchemaOption, "k BIGINT, v BIGINT")
           .mode("append").save(p)
         CommitLog.enable(p, conf)
-        EqualityRepair.commit(spark, p, Seq("k"), Seq(3L, 700L).toDF("k"),
+        // one delete partition stages one sidecar (each non-empty
+        // partition writes its own, up to 8)
+        EqualityRepair.commit(spark, p, Seq("k"), Seq(3L, 700L).toDF("k").coalesce(1),
           spark.emptyDataFrame.selectExpr())
         assert(CommitLog.latest(p, conf).get.eqFiles.size == 1)
         // overwrite HALF the targets: the sidecar still guards the
