@@ -6,16 +6,17 @@ import graft.reconcile.MvReconciler
 import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportWriter, StatsCollector}
 import graft.schema.TableSchema
-import graft.sources.{ParquetSource, Source}
+import graft.sources.{Dsv2ParquetSource, EqualityRepair, GraftParquetProvider, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /**
  * End-to-end reconciliation job: the Spark-native restatement of the
  * reference's `buildAndRunSparkJob` (MvSync.java:108-156).
  *
  *   source(base) → source(mv) → full-outer join on MV PK → classify →
- *   keep the rows that need action → [mutation plan → sink] →
- *   categorized report + stats line
+ *   keep the rows that need action → mutation plan →
+ *   categorized report + stats line → [repair commit]
  *
  * Scan, join and classify run ONCE, as one Catalyst plan with a single
  * shuffle (the join — mirroring the reference's single cogroup shuffle,
@@ -25,10 +26,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * time-scoped job. That pass counts every category through
  * `Dataset.observe` and materializes only the non-consistent rows; like
  * the reference (MvSync.java:374-414), consistent and out-of-scope keys
- * are counted, never kept. Reports, the mutation plan and the caller's
- * repair then read those few rows. Repair applies from a *plan
- * DataFrame* (plan/apply split) so mutations are testable,
- * idempotent-ish and re-runnable — see RepairPlanner.
+ * are counted, never kept. Reports, the mutation plan and [[repair]]
+ * then read those few rows.
  */
 object MvSyncJob {
 
@@ -43,8 +42,7 @@ object MvSyncJob {
   /** Fail-fast validation (reference MvSync.java:92-106): repair flags
    * set + un-repairable column types → error before any scan. */
   def validate(settings: Settings, mvSchema: TableSchema): Unit = {
-    val fixing = settings.fixMissingMv || settings.fixOrphanMv || settings.fixInconsistentMv
-    if (fixing) {
+    if (fixing(settings)) {
       val bad = TableSchema.unsupportedForRepair(mvSchema)
       require(bad.isEmpty,
         s"Automated repair does not support column types of: ${bad.mkString(", ")}")
@@ -56,11 +54,14 @@ object MvSyncJob {
    * settings come from `cass.mv.*` session conf (Settings.fromSession);
    * the offline-mode table locations and MV key come from args or conf —
    * `args = [basePath, mvPath, mvPk(comma-sep), basePk(comma-sep)]`, or
-   * `cass.mv.{base.path, mv.path, mv.pk, base.pk}`. Schemas are
-   * discovered from one parquet footer per table, read on the driver
-   * (ParquetSource.footerSchema → TableSchema.fromSchema), mirroring the
-   * reference's cluster-metadata discovery; no Spark job runs before the
-   * reconcile.
+   * `cass.mv.{base.path, mv.path, mv.pk, base.pk}`. Both tables are
+   * read through the graft connector (Dsv2ParquetSource), so a
+   * commit-logged table reads as its current snapshot, and each schema
+   * is the one the connector serves: the union over the snapshot's live
+   * files, not one listed file's (TableSchema.fromSchema), mirroring the
+   * reference's cluster-metadata discovery. When a `cass.mv.fix*` flag
+   * is set, [[repair]] commits the repair to the MV table before the
+   * stats line prints.
    */
   def main(args: Array[String]): Unit = {
     val spark = Sessions.create("graft-mvsync")
@@ -75,12 +76,18 @@ object MvSyncJob {
     val basePk = args.lift(3).orElse(conf("base.pk"))
       .map(_.split(",").toSeq).getOrElse(mvPk.tail)
     val settings = Settings.fromSession(spark)
-    def schemaOf(path: String, pk: Seq[String]) =
-      TableSchema.fromSchema(ParquetSource.footerSchema(spark, path), pk)
-    val result = run(spark, ParquetSource(basePath), ParquetSource(mvPath),
-      schemaOf(basePath, basePk), schemaOf(mvPath, mvPk), settings)
+    def schemaOf(path: String, pk: Seq[String]) = TableSchema.fromSchema(
+      spark.read.format(classOf[GraftParquetProvider].getName).load(path).schema, pk)
+    val (base, baseSchema) = (Dsv2ParquetSource(basePath), schemaOf(basePath, basePk))
+    val mvSchema = schemaOf(mvPath, mvPk)
+    val result = run(spark, base, Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings)
+    if (fixing(settings))
+      repair(spark, result, mvPath, base, baseSchema, mvSchema, settings)
     println(result.stats.toString)
   }
+
+  private def fixing(s: Settings): Boolean =
+    s.fixMissingMv || s.fixOrphanMv || s.fixInconsistentMv
 
   def run(
       spark: SparkSession,
@@ -108,5 +115,37 @@ object MvSyncJob {
         ReportWriter.writeObserved(classified, obs, baseSchema, mvSchema, settings)
       else StatsCollector.fromObservation(obs, settings)
     Result(classified, mutations, stats)
+  }
+
+  /**
+   * Commits `result`'s repair to the MV table at `mvPath` as ONE
+   * [[graft.sources.EqualityRepair]] commit, the reference's in-job
+   * repair (MvSync.java:380-414):
+   *  - deletes: the plan's DELETE keys that a fresh read of `baseSource`
+   *    does not hold (read-before-delete, DBOperations.java:196-228, via
+   *    [[RepairPlanner.verifyDeletesAgainst]]), plus every upserted key;
+   *  - inserts: [[RepairPlanner.upsertRows]] for the MISSING_IN_MV_TABLE
+   *    and INCONSISTENT keys the flags repair — equal cells keep the MV's
+   *    value, writetime and TTL, the others take the base cell's.
+   * An upsert thus replaces its key's row whether or not the table
+   * holds one, so committing the same result twice leaves the same live
+   * rows. A key outside the flags' categories is untouched.
+   */
+  def repair(
+      spark: SparkSession,
+      result: Result,
+      mvPath: String,
+      baseSource: Source,
+      baseSchema: TableSchema,
+      mvSchema: TableSchema,
+      settings: Settings): Unit = {
+    val pk = mvSchema.sortedPk.map(col)
+    val orphans = RepairPlanner.verifyDeletesAgainst(
+        result.mutations, baseSource.load(spark, baseSchema), mvSchema.sortedPk)
+      .filter(col("op") === "DELETE").select(pk: _*)
+    val upserts = RepairPlanner.upsertRows(
+      result.classified, mvSchema, settings, System.currentTimeMillis() * 1000L)
+    EqualityRepair.commit(spark, mvPath, mvSchema.sortedPk,
+      orphans.unionByName(upserts.select(pk: _*)), upserts)
   }
 }

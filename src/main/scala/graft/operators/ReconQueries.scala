@@ -1,10 +1,12 @@
 package graft.operators
 
-import graft.MvSyncDemo
+import graft.{MvSyncDemo, MvSyncJob}
 import graft.config.Settings
 import graft.reconcile.{AllTypesFixture, MvReconciler}
-import graft.repair.{RepairApplier, RepairPlanner}
+import graft.repair.RepairPlanner
 import graft.report.{ReportFormatter, ReportWriter, StatsCollector}
+import graft.sources.{CommitLog, Dsv2Parquet, Dsv2ParquetSource, GraftCatalog,
+  GraftParquetProvider, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,11 +94,8 @@ object ReconQueries {
     import graft.sources.CsvSource
     // per-invocation private tmp dir: a shared dir-keyed path would let
     // two concurrent runs race each other's overwrite (r9 advice), and
-    // the files are now cleaned up after the eager materialization below
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csv-source").toString
-    // try/finally: the tmp dir must not outlive a failed write or
-    // reconcile (r13 advice — the leak only bit under failure)
-    try {
+    // the files are cleaned up after the eager materialization below
+    withTempDir("graft-csv-source") { tmp =>
       val base = MvSyncDemo.baseDf(spark, dir)
       val mv = MvSyncDemo.mvDf(spark, dir)
       // default emptyValue (quoted "") + explicit null marker: NULL and
@@ -115,13 +114,35 @@ object ReconQueries {
         MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
         .select("o_custkey", "o_orderkey", "problem", "mismatch_col")
         .localCheckpoint()
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
+
+  /** `f` over a fresh temp directory, deleted afterwards even when `f`
+   * fails, so a failed run leaks nothing. */
+  private def withTempDir[A](prefix: String)(f: String => A): A = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try f(tmp) finally deleteRecursively(new java.io.File(tmp))
+  }
+
+  /** `f(catalog, root)` with a [[GraftCatalog]] registered under a fresh
+   * name `<prefix>_<hex>`, rooted in a fresh temp directory; the
+   * registration and the directory go afterwards. */
+  private def withCatalog[A](spark: SparkSession, prefix: String)(
+      f: (String, String) => A): A =
+    withTempDir(s"graft-$prefix") { root =>
+      val cat = s"${prefix}_${java.lang.Long.toHexString(System.nanoTime())}"
+      spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+      try f(cat, root) finally {
+        spark.conf.unset(s"spark.sql.catalog.$cat")
+        spark.conf.unset(s"spark.sql.catalog.$cat.root")
+      }
+    }
 
   /** The same classification through a [[graft.sources.JsonSource]]
    * round-trip — the third Source implementation driver-verified
@@ -132,9 +153,7 @@ object ReconQueries {
    * explicit schema. */
   def reconClassifyJson(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.JsonSource
-    val tmp = java.nio.file.Files.createTempDirectory("graft-json-source").toString
-    // try/finally: same failure-leak guard as the CSV twin (r13 advice)
-    try {
+    withTempDir("graft-json-source") { tmp =>
       val base = MvSyncDemo.baseDf(spark, dir)
       val mv = MvSyncDemo.mvDf(spark, dir)
       base.write.json(s"$tmp/base")
@@ -145,7 +164,7 @@ object ReconQueries {
         MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
         .select("o_custkey", "o_orderkey", "problem", "mismatch_col")
         .localCheckpoint()
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** The same classification through [[graft.sources.Dsv2ParquetSource]]
@@ -216,9 +235,8 @@ object ReconQueries {
    * passing the slow way. */
   def dsv2LimitPushdown(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dsv2RuntimeProbe
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-limit").toString
-    try {
+    val fmt = classOf[GraftParquetProvider].getName
+    withTempDir("graft-dsv2-limit") { tmp =>
       spark.read.parquet(s"$dir/orders.parquet")
         .select("o_orderkey", "o_custkey")
         .repartition(8).write.parquet(s"$tmp/orders")
@@ -233,7 +251,7 @@ object ReconQueries {
         "dsv2_limit_pushdown: no row group was truncated " +
           s"(${probe.lastKept.get()}/${probe.lastPlanned.get()})")
       forced
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** The SINK-REQUESTED distribution contract driver-verified
@@ -250,9 +268,8 @@ object ReconQueries {
    * dropped or duplicated row in the exchange+sort+commit chain turns
    * the hash red. */
   def dsv2OrderedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-ordered").toString
-    try {
+    val fmt = classOf[GraftParquetProvider].getName
+    withTempDir("graft-dsv2-ordered") { tmp =>
       val p = s"$tmp/orders"
       spark.read.parquet(s"$dir/orders.parquet").select("o_orderkey")
         .repartition(8)
@@ -275,7 +292,7 @@ object ReconQueries {
         case _ => ()
       }
       spark.read.format(fmt).load(p).localCheckpoint()
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** The CATALOG + METADATA-DELETE surfaces driver-verified: orders
@@ -291,13 +308,8 @@ object ReconQueries {
    * hash. */
   def dsv2DeleteWhere(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dsv2DeleteProbe
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-cat").toString
-    val cat = s"gq_${java.lang.Long.toHexString(System.nanoTime())}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    val fmt = classOf[GraftParquetProvider].getName
+    withCatalog(spark, "gq") { (cat, tmp) =>
       val p = s"$tmp/db/orders"
       val keys = spark.read.parquet(s"$dir/orders.parquet").select("o_orderkey")
       keys.filter(col("o_orderkey") <= 1000).coalesce(1).write.format(fmt)
@@ -310,10 +322,6 @@ object ReconQueries {
         s"dsv2_delete_where: expected 1 dropped + 1 kept file, got " +
           s"${dp.lastDropped.get()}/${dp.lastKept.get()}")
       spark.sql(s"SELECT o_orderkey FROM $cat.db.orders").localCheckpoint()
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -330,12 +338,7 @@ object ReconQueries {
    * dropped, or double-written flips the hash. */
   def dsv2OverwriteWhere(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dsv2WriteProbe
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-ow").toString
-    val cat = s"gow_${java.lang.Long.toHexString(System.nanoTime())}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    withCatalog(spark, "gow") { (cat, tmp) =>
       val keys = spark.read.parquet(s"$dir/orders.parquet").select("o_orderkey")
       keys.filter(col("o_orderkey") <= 1000).coalesce(1)
         .writeTo(s"$cat.db.orders").create()
@@ -348,10 +351,6 @@ object ReconQueries {
         s"dsv2_overwrite_where: expected exactly the lower-band file " +
           s"replaced, got ${probe.lastTruncated.get()}")
       spark.sql(s"SELECT o_orderkey FROM $cat.db.orders").localCheckpoint()
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -432,12 +431,7 @@ object ReconQueries {
    * off and the two spellings diverge from the derivation AND from
    * each other). */
   def dsv2MetadataColumns(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-meta").toString
-    val cat = s"gmeta_${java.lang.Long.toHexString(System.nanoTime())}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    withCatalog(spark, "gmeta") { (cat, _) =>
       MvSyncDemo.baseDf(spark, dir).writeTo(s"$cat.db.base").create()
       spark.sql(
         s"""SELECT o_custkey, o_orderkey,
@@ -447,10 +441,6 @@ object ReconQueries {
            |       ttl_o_totalprice AS ttl_wide
            |FROM $cat.db.base""".stripMargin)
         .localCheckpoint()
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -478,56 +468,50 @@ object ReconQueries {
    * range-partitioned Cassandra connector reports exactly this shape:
    * partition-key hash, clustering columns unrepresented. */
   def reconClassifyBucketedDsv2(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-spj").toString
-    val cat = s"gspj_${java.lang.Long.toHexString(System.nanoTime())}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.requireAllClusterKeysForCoPartition")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      def writeClustered(df: DataFrame, table: String): Unit =
-        df.writeTo(s"$cat.db.$table")
-          .option("graft.clusterBy", "o_orderkey")
-          .option("graft.numPartitions", "8")
-          // within-file sort in JOIN-KEY order: the scan reports it
-          // (SupportsReportOrdering), so the SMJ also plans without
-          // per-partition sorts — scan-merge-join, nothing else
-          .option("graft.sortWithin", "o_custkey,o_orderkey")
-          .create()
-      writeClustered(MvSyncDemo.baseDf(spark, dir), "base")
-      writeClustered(MvSyncDemo.mvDf(spark, dir), "mv")
-      val out = MvReconciler.reconcile(
-        spark.table(s"$cat.db.base"), spark.table(s"$cat.db.mv"),
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .select("o_custkey", "o_orderkey", "problem", "mismatch_col")
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int =
-        (if (p.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) 1
-         else 0) + p.children.map(shuffles).sum
-      val n = shuffles(out.queryExecution.executedPlan)
-      require(n == 0, s"storage-partitioned reconcile planned $n exchanges " +
-        "— the connector zero-exchange configuration regressed")
-      def sorts(p: org.apache.spark.sql.execution.SparkPlan): Int =
-        (if (p.isInstanceOf[org.apache.spark.sql.execution.SortExec]) 1
-         else 0) + p.children.map(sorts).sum
-      val ns = sorts(out.queryExecution.executedPlan)
-      require(ns == 0, s"storage-partitioned reconcile planned $ns sorts " +
-        "— the declared within-file ordering regressed")
-      out.localCheckpoint()
-    } finally {
-      saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    withCatalog(spark, "gspj") { (cat, _) =>
+      val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.requireAllClusterKeysForCoPartition")
+        .map(k => k -> spark.conf.getOption(k))
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+      try {
+        def writeClustered(df: DataFrame, table: String): Unit =
+          df.writeTo(s"$cat.db.$table")
+            .option("graft.clusterBy", "o_orderkey")
+            .option("graft.numPartitions", "8")
+            // within-file sort in JOIN-KEY order: the scan reports it
+            // (SupportsReportOrdering), so the SMJ also plans without
+            // per-partition sorts — scan-merge-join, nothing else
+            .option("graft.sortWithin", "o_custkey,o_orderkey")
+            .create()
+        writeClustered(MvSyncDemo.baseDf(spark, dir), "base")
+        writeClustered(MvSyncDemo.mvDf(spark, dir), "mv")
+        val out = MvReconciler.reconcile(
+          spark.table(s"$cat.db.base"), spark.table(s"$cat.db.mv"),
+          MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
+          .select("o_custkey", "o_orderkey", "problem", "mismatch_col")
+        def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int =
+          (if (p.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) 1
+           else 0) + p.children.map(shuffles).sum
+        val n = shuffles(out.queryExecution.executedPlan)
+        require(n == 0, s"storage-partitioned reconcile planned $n exchanges " +
+          "— the connector zero-exchange configuration regressed")
+        def sorts(p: org.apache.spark.sql.execution.SparkPlan): Int =
+          (if (p.isInstanceOf[org.apache.spark.sql.execution.SortExec]) 1
+           else 0) + p.children.map(sorts).sum
+        val ns = sorts(out.queryExecution.executedPlan)
+        require(ns == 0, s"storage-partitioned reconcile planned $ns sorts " +
+          "— the declared within-file ordering regressed")
+        out.localCheckpoint()
+      } finally {
+        saved.foreach { case (k, v) =>
+          v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+        }
       }
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -624,54 +608,70 @@ object ReconQueries {
       .select("o_custkey", "o_orderkey", "op", "column", "value", "writetime", "ttl", "flavor")
   }
 
-  /** Full repair round-trip (operators L/M applied): plan the mutations,
-   * apply them to the MV (RepairApplier), reconcile AGAIN — the repaired
-   * MV must be keystroke-identical to the base, so the second pass
-   * classifies every surviving key CONSISTENT. The oracle states that
-   * invariant independently: exactly the non-orphan base keys remain. */
-  def reconPostRepair(spark: SparkSession, dir: String): DataFrame = {
-    val fix = Trusted.copy(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-    // RepairApplier consumes the plan twice (deletes + upserts branches),
-    // and each consumption would re-run the whole upstream reconcile
-    // join — checkpoint the plan (tiny: proportional to the damage, not
-    // the table) so the base/MV scan+join executes once. MvSyncJob.run
-    // checkpoints its non-consistent rows for the same reason; at
-    // 100 TB the recompute is two extra full-table shuffles.
-    val plan = RepairPlanner.plan(classified(spark, dir, fix),
-      MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, fix)
-      .localCheckpoint(eager = false)
-    val repaired = RepairApplier.applyPlan(
-      MvSyncDemo.mvDf(spark, dir), plan, MvSyncDemo.mvSchema)
-    // applyPlan merges per key, so the repaired MV keeps unique PKs —
-    // the post-check reconcile skips the defensive dedup too
-    MvReconciler.reconcile(
-      MvSyncDemo.baseDf(spark, dir), repaired,
-      MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-      .groupBy("problem").agg(count(lit(1)).as("n"))
+  /** The product repair under the oracle (operators K/L/M applied):
+   * the damaged MV written as a commit-logged graft table, reconciled
+   * and repaired in place by [[repairedMv]] (`MvSyncJob.run`, then
+   * `MvSyncJob.repair` with every fix flag), then reconciled AGAIN
+   * through the connector — the repaired MV must hold exactly the base
+   * rows, so the second pass classifies every surviving key CONSISTENT.
+   * The oracle states that invariant independently: exactly the
+   * non-orphan base keys remain. */
+  def reconPostRepair(spark: SparkSession, dir: String): DataFrame =
+    withTempDir("graft-repair") { tmp =>
+      healedCounts(spark, dir, repairedMv(spark, dir, tmp))
+    }
+
+  private val Fixing =
+    Trusted.copy(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
+
+  /** The damaged demo MV as a commit-logged graft table at `<tmp>/mv`,
+   * repaired by the product job: one `MvSyncJob.run` (no reports) and
+   * its `MvSyncJob.repair` commit. Returns the table path. */
+  private def repairedMv(spark: SparkSession, dir: String, tmp: String): String = {
+    val path = s"$tmp/mv"
+    val damaged = MvSyncDemo.mvDf(spark, dir)
+    damaged.write.format(classOf[GraftParquetProvider].getName)
+      .option(Dsv2Parquet.SchemaOption, damaged.schema.toDDL)
+      .mode("append").save(path)
+    CommitLog.enable(path, Dsv2Parquet.readConf)
+    val base: Source = (s, _) => MvSyncDemo.baseDf(s, dir)
+    val result = MvSyncJob.run(spark, base, Dsv2ParquetSource(path),
+      MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Fixing, writeReports = false)
+    MvSyncJob.repair(spark, result, path, base,
+      MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Fixing)
+    path
   }
 
-  /** The repair MUTATION path through the DataSource V2 WRITE seam —
-   * the API a live connector's delete/upsert binding sits behind
-   * (reference DBOperations.java:58-194,240-387; r16 write half of the
+  /** Problem counts of the base against the MV read back through the
+   * connector, materialized so the table may go. */
+  private def healedCounts(spark: SparkSession, dir: String, mvPath: String): DataFrame =
+    MvReconciler.reconcile(
+      MvSyncDemo.baseDf(spark, dir),
+      Dsv2ParquetSource(mvPath).load(spark, MvSyncDemo.mvSchema),
+      MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
+      .groupBy("problem").agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+
+  /** The DataSource V2 WRITE seam around a repair — the API a live
+   * connector's bulk rewrite sits behind (r16 write half of the
    * connector ladder). The damaged MV is first APPENDED through the V2
    * writer into a fresh directory (schema resolved from the
    * `graft.schema` option — no footers exist yet, the cluster-catalog
-   * stand-in), then OVERWRITTEN with the repaired MV (Catalyst lowers
-   * mode=overwrite to the WriteBuilder's truncate()), then read back
-   * through the V2 scan and re-reconciled against base. Shares
-   * recon_post_repair's oracle verbatim, so a hash match proves the
-   * two-phase commit forwarded every repaired row and value exactly AND
+   * stand-in), then OVERWRITTEN with the repaired state — the base
+   * projected onto the MV's columns, the source the MERGE rows use —
+   * (Catalyst lowers mode=overwrite to the WriteBuilder's truncate()),
+   * then read back through the V2 scan and re-reconciled against base.
+   * Shares recon_post_repair's oracle verbatim, so a hash match proves
+   * the two-phase commit forwarded every row and value exactly AND
    * that truncate removed every damaged file — a silently failed
    * truncate would leave stale/duplicate keys and flip the
    * classification counts. The require()s make the row meaningful: if
    * either write stops engaging the probe, the query fails rather than
    * passing by accident. */
   def reconPostRepairDsv2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{Dsv2ParquetSource, Dsv2WriteProbe}
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val fix = Trusted.copy(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-write").toString
-    try {
+    import graft.sources.Dsv2WriteProbe
+    val fmt = classOf[GraftParquetProvider].getName
+    withTempDir("graft-dsv2-write") { tmp =>
       val mvPath = s"$tmp/mv"
       val damaged = MvSyncDemo.mvDf(spark, dir)
       damaged.write.format(fmt)
@@ -679,63 +679,56 @@ object ReconQueries {
         .mode("append").save(mvPath)
       require(Dsv2WriteProbe.forPath(mvPath).lastCommittedRows.get() > 0,
         "recon_post_repair_dsv2: append committed no rows")
-      val plan = RepairPlanner.plan(classified(spark, dir, fix),
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, fix)
-        .localCheckpoint(eager = false)
-      val repaired = RepairApplier.applyPlan(
-        MvSyncDemo.mvDf(spark, dir), plan, MvSyncDemo.mvSchema)
-      repaired.write.format(fmt).mode("overwrite").save(mvPath)
+      MvSyncDemo.baseDf(spark, dir).selectExpr(damaged.columns.toIndexedSeq: _*)
+        .write.format(fmt).mode("overwrite").save(mvPath)
       require(Dsv2WriteProbe.forPath(mvPath).lastTruncated.get() > 0,
         "recon_post_repair_dsv2: overwrite did not truncate the damaged files")
-      MvReconciler.reconcile(
-        MvSyncDemo.baseDf(spark, dir),
-        Dsv2ParquetSource(mvPath).load(spark, MvSyncDemo.mvSchema),
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .groupBy("problem").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-    } finally deleteRecursively(new java.io.File(tmp))
+      healedCounts(spark, dir, mvPath)
+    }
+  }
+
+  /** The repair as ONE catalog MERGE into `<cat>.db.mv`, the MV table
+   * with columns `mvColumns`: the base projected onto those columns is
+   * the source; `WHEN MATCHED UPDATE` restates the inconsistent-row
+   * upserts (DBOperations.java:240-387), `WHEN NOT MATCHED INSERT` the
+   * missing-in-MV upserts and `WHEN NOT MATCHED BY SOURCE DELETE` the
+   * orphan deletes (DBOperations.java:58-194). */
+  private def mergeBaseIntoMv(spark: SparkSession, dir: String, cat: String,
+      mvColumns: Seq[String]): Unit = {
+    val view = s"${cat}_merge_src"
+    MvSyncDemo.baseDf(spark, dir).selectExpr(mvColumns: _*)
+      .createOrReplaceTempView(view)
+    val pk = MvSyncDemo.mvSchema.sortedPk
+    val setList = mvColumns.filterNot(pk.contains)
+      .map(c => s"t.$c = s.$c").mkString(", ")
+    try spark.sql(
+      s"""MERGE INTO $cat.db.mv t USING $view s
+         |ON t.o_custkey = s.o_custkey AND t.o_orderkey = s.o_orderkey
+         |WHEN MATCHED THEN UPDATE SET $setList
+         |WHEN NOT MATCHED THEN INSERT (${mvColumns.mkString(", ")})
+         |  VALUES (${mvColumns.map(c => s"s.$c").mkString(", ")})
+         |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin): Unit
+    finally spark.catalog.dropTempView(view): Unit
   }
 
   /** The ENTIRE repair applied as ONE catalog SQL statement — the
    * row-level-operations face of the connector (r16 verdict #4,
    * `SupportsRowLevelOperations` → group-based copy-on-write): the
-   * damaged MV lives in a [[graft.sources.GraftCatalog]] table and a
-   * single `MERGE INTO` restates the reference's full mutation
-   * semantics — `WHEN MATCHED UPDATE` (the inconsistent-row upserts,
-   * DBOperations.java:240-387), `WHEN NOT MATCHED INSERT` (the
-   * missing-in-MV upserts) and `WHEN NOT MATCHED BY SOURCE DELETE`
-   * (the orphan deletes, DBOperations.java:58-194). Catalyst's
-   * RewriteMergeIntoTable drives the provider's row-level scan (whole
-   * groups, no row drops) and replace-commit (scanned files swapped
-   * for rewritten ones, two-phase). The require() pins the rewrite
-   * actually replacing files. Re-reconciling the merged table against
-   * base shares recon_post_repair's oracle verbatim: every surviving
-   * key CONSISTENT, count = the non-orphan base keys. */
+   * damaged MV lives in a [[graft.sources.GraftCatalog]] table and
+   * [[mergeBaseIntoMv]]'s single `MERGE INTO` restates the reference's
+   * full mutation semantics. Catalyst's RewriteMergeIntoTable drives the
+   * provider's row-level scan (whole groups, no row drops) and
+   * replace-commit (scanned files swapped for rewritten ones,
+   * two-phase). The require() pins the rewrite actually replacing
+   * files. Re-reconciling the merged table against base shares
+   * recon_post_repair's oracle verbatim: every surviving key
+   * CONSISTENT, count = the non-orphan base keys. */
   def reconPostRepairMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dsv2WriteProbe
-    val tmp = java.nio.file.Files.createTempDirectory("graft-merge").toString
-    val tag = java.lang.Long.toHexString(System.nanoTime())
-    val cat = s"gmrg_$tag"
-    val view = s"graft_merge_src_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    withCatalog(spark, "gmrg") { (cat, tmp) =>
       val damaged = MvSyncDemo.mvDf(spark, dir)
       damaged.writeTo(s"$cat.db.mv").create()
-      // the repair source: base truth projected onto the MV's columns
-      MvSyncDemo.baseDf(spark, dir).selectExpr(damaged.columns: _*)
-        .createOrReplaceTempView(view)
-      val pk = MvSyncDemo.mvSchema.sortedPk
-      val setList = damaged.columns.filterNot(pk.contains)
-        .map(c => s"t.$c = s.$c").mkString(", ")
-      spark.sql(
-        s"""MERGE INTO $cat.db.mv t USING $view s
-           |ON t.o_custkey = s.o_custkey AND t.o_orderkey = s.o_orderkey
-           |WHEN MATCHED THEN UPDATE SET $setList
-           |WHEN NOT MATCHED THEN INSERT (${damaged.columns.mkString(", ")})
-           |  VALUES (${damaged.columns.map(c => s"s.$c").mkString(", ")})
-           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+      mergeBaseIntoMv(spark, dir, cat, damaged.columns.toIndexedSeq)
       require(Dsv2WriteProbe.forPath(s"$tmp/db/mv").lastTruncated.get() > 0,
         "recon_post_repair_merge: the copy-on-write commit replaced no files")
       MvReconciler.reconcile(
@@ -743,11 +736,6 @@ object ReconQueries {
         MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
         .groupBy("problem").agg(count(lit(1)).as("n"))
         .localCheckpoint()
-    } finally {
-      spark.catalog.dropTempView(view)
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -762,31 +750,13 @@ object ReconQueries {
    * the mode a 100 TB periodic repair with per-mille damage runs. */
   def reconPostRepairMor(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dsv2WriteProbe
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mor").toString
-    val tag = java.lang.Long.toHexString(System.nanoTime())
-    val cat = s"gmor_$tag"
-    val view = s"graft_mor_src_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    withCatalog(spark, "gmor") { (cat, tmp) =>
       val damaged = MvSyncDemo.mvDf(spark, dir)
       spark.sql(
         s"""CREATE TABLE $cat.db.mv (${damaged.schema.toDDL})
            |TBLPROPERTIES ('graft.merge.mode'='merge-on-read')""".stripMargin)
       damaged.writeTo(s"$cat.db.mv").append()
-      MvSyncDemo.baseDf(spark, dir).selectExpr(damaged.columns: _*)
-        .createOrReplaceTempView(view)
-      val pk = MvSyncDemo.mvSchema.sortedPk
-      val setList = damaged.columns.filterNot(pk.contains)
-        .map(c => s"t.$c = s.$c").mkString(", ")
-      spark.sql(
-        s"""MERGE INTO $cat.db.mv t USING $view s
-           |ON t.o_custkey = s.o_custkey AND t.o_orderkey = s.o_orderkey
-           |WHEN MATCHED THEN UPDATE SET $setList
-           |WHEN NOT MATCHED THEN INSERT (${damaged.columns.mkString(", ")})
-           |  VALUES (${damaged.columns.map(c => s"s.$c").mkString(", ")})
-           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+      mergeBaseIntoMv(spark, dir, cat, damaged.columns.toIndexedSeq)
       val probe = Dsv2WriteProbe.forPath(s"$tmp/db/mv")
       require(probe.lastTruncated.get() == 0,
         "recon_post_repair_mor: a file rewrite happened — not merge-on-read")
@@ -797,21 +767,13 @@ object ReconQueries {
         MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
         .groupBy("problem").agg(count(lit(1)).as("n"))
         .localCheckpoint()
-    } finally {
-      spark.catalog.dropTempView(view)
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
-  /** EQUALITY-DELETE repair under the oracle — the connector face a
-   * STREAMING repairer drives: the damaged MV lives in a COMMIT-LOGGED
-   * path table; the repair is computed from the CLASSIFICATION alone —
-   * keys to remove (orphans + inconsistent pre-images) and base rows
-   * to insert (missing + inconsistent) — and lands as ONE
-   * [[graft.sources.EqualityRepair]] commit: executor-written `_eq-`
-   * key sidecars plus staged insert files, with no `_file`/`_pos`
+  /** EQUALITY-DELETE repair under the oracle — the connector face the
+   * product repair commits through: [[repairedMv]] lands the repair as
+   * ONE [[graft.sources.EqualityRepair]] commit of executor-written
+   * `_eq-` key sidecars plus staged insert files, with no `_file`/`_pos`
    * knowledge anywhere (the reference's repair statements bind KEYS,
    * never storage positions — DBOperations.java:58-194,240-387). The
    * read-back reconcile shares recon_post_repair's oracle verbatim.
@@ -819,54 +781,27 @@ object ReconQueries {
    * rewrites), and `compact_table` afterwards folds them away with the
    * repaired state intact. */
   def reconPostRepairEq(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{CommitLog, Dsv2Parquet, EqualityRepair, GraftMaintenance}
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-eq").toString
-    try {
-      val path = s"$tmp/mv"
-      val damaged = MvSyncDemo.mvDf(spark, dir)
-      damaged.write.format(fmt)
-        .option(Dsv2Parquet.SchemaOption, damaged.schema.toDDL)
-        .mode("append").save(path)
-      CommitLog.enable(path, Dsv2Parquet.readConf)
-      val baseDf = MvSyncDemo.baseDf(spark, dir)
-      def readBack = spark.read.format(fmt).load(path)
-      val pk = MvSyncDemo.mvSchema.sortedPk
-      val classified = MvReconciler.reconcile(baseDf, readBack,
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .select((pk.map(col) :+ col("problem")).toIndexedSeq: _*)
-        .localCheckpoint()
-      val deleteKeys = classified.filter(col("problem")
-          .isin("MISSING_IN_BASE_TABLE", "INCONSISTENT"))
-        .select(pk.map(col).toIndexedSeq: _*)
-      val insertKeys = classified.filter(col("problem")
-          .isin("MISSING_IN_MV_TABLE", "INCONSISTENT"))
-        .select(pk.map(col).toIndexedSeq: _*)
-      val inserts = baseDf.selectExpr(damaged.columns.toIndexedSeq: _*)
-        .join(insertKeys, pk.toSeq, "left_semi")
-      EqualityRepair.commit(spark, path, pk.toSeq, deleteKeys, inserts)
+    import graft.sources.GraftMaintenance
+    withTempDir("graft-eq") { tmp =>
+      val path = repairedMv(spark, dir, tmp)
       val snap = CommitLog.latest(path, Dsv2Parquet.readConf).get
       require(snap.eqFiles.nonEmpty,
         "recon_post_repair_eq: no equality sidecars landed")
       require(snap.dvFiles.isEmpty,
         "recon_post_repair_eq: position deletes landed — not an " +
           "equality repair")
-      val healed = MvReconciler.reconcile(baseDf, readBack,
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .groupBy("problem").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+      val healed = healedCounts(spark, dir, path)
       // fold: compaction retires the sidecars, the state must hold
       GraftMaintenance.compactDeletionVectors(spark, path): Unit
       require(CommitLog.latest(path, Dsv2Parquet.readConf)
           .get.eqFiles.isEmpty,
         "recon_post_repair_eq: compaction left equality sidecars live")
-      val foldedProblems = MvReconciler.reconcile(baseDf, readBack,
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .filter(col("problem") =!= "CONSISTENT").count()
-      require(foldedProblems == 0L,
-        s"recon_post_repair_eq: $foldedProblems problems after folding")
+      val folded = healedCounts(spark, dir, path).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap - "CONSISTENT"
+      require(folded.isEmpty,
+        s"recon_post_repair_eq: problems after folding: $folded")
       healed
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** The STREAMING-RECONCILER-DRIVEN repair: the continuous monitor
@@ -879,64 +814,65 @@ object ReconQueries {
    * manifest. This is the reference's continuous-repair deployment
    * shape (classify → bind repair statements by key,
    * DBOperations.java:58-194) with Structured Streaming as the
-   * classifier and the DSv2 commit log as the mutation fabric. Shares
-   * recon_post_repair's oracle verbatim. */
+   * classifier and the DSv2 commit log as the mutation fabric. Unlike
+   * `MvSyncJob.repair` the commit replaces whole rows by key: the
+   * monitor emits keys and classifications, not cells, so the inserts
+   * are the base rows of the keys to upsert. Shares recon_post_repair's
+   * oracle verbatim. */
   def reconPostRepairEqStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{CommitLog, Dsv2Parquet, EqualityRepair}
+    import graft.sources.EqualityRepair
     import graft.streaming.StreamingReconciler
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-eqs").toString
+    val fmt = classOf[GraftParquetProvider].getName
     val sink = s"graft_eqs_${java.lang.Long.toHexString(System.nanoTime())}"
-    try {
-      val path = s"$tmp/mv"
-      val damaged = MvSyncDemo.mvDf(spark, dir)
-      damaged.write.format(fmt)
-        .option(Dsv2Parquet.SchemaOption, damaged.schema.toDDL)
-        .mode("append").save(path)
-      CommitLog.enable(path, Dsv2Parquet.readConf)
-      val baseDf = MvSyncDemo.baseDf(spark, dir)
-      // change feeds: 4 files per side → 8 micro-batches, so the
-      // stateful operator genuinely merges across triggers
-      baseDf.selectExpr(damaged.columns.toIndexedSeq: _*)
-        .repartition(4).write.parquet(s"$tmp/feed/base")
-      spark.read.format(fmt).load(path)
-        .repartition(4).write.parquet(s"$tmp/feed/mv")
-      def feed(p: String) = spark.readStream.schema(damaged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(p)
-      val updates = StreamingReconciler.monitor(
-        feed(s"$tmp/feed/base"), feed(s"$tmp/feed/mv"),
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema).toDF()
-      val q = updates.writeStream.outputMode("update")
-        .format("memory").queryName(sink).start()
-      try q.processAllAvailable() finally q.stop()
-      // settle: the max-seq update per key is its final classification
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("key").orderBy(col("seq").desc)
-      val keyParts = split(col("key"), "\\|")
-      val settled = spark.table(sink)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(keyParts.getItem(0).cast("bigint").as("o_custkey"),
-          keyParts.getItem(1).cast("bigint").as("o_orderkey"),
-          col("problem"))
-        .localCheckpoint()
-      val pk = Seq("o_custkey", "o_orderkey")
-      val deleteKeys = settled.filter(col("problem")
-        .isin("MISSING_IN_BASE_TABLE", "INCONSISTENT")).select(pk.map(col): _*)
-      val insertKeys = settled.filter(col("problem")
-        .isin("MISSING_IN_MV_TABLE", "INCONSISTENT")).select(pk.map(col): _*)
-      val inserts = baseDf.selectExpr(damaged.columns.toIndexedSeq: _*)
-        .join(insertKeys, pk, "left_semi")
-      EqualityRepair.commit(spark, path, pk, deleteKeys, inserts)
-      require(CommitLog.latest(path, Dsv2Parquet.readConf)
-          .get.eqFiles.nonEmpty,
-        "recon_post_repair_eq_stream: no equality sidecars landed")
-      MvReconciler.reconcile(baseDf, spark.read.format(fmt).load(path),
-        MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
-        .groupBy("problem").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-    } finally {
-      spark.catalog.dropTempView(sink)
-      deleteRecursively(new java.io.File(tmp))
+    withTempDir("graft-eqs") { tmp =>
+      try {
+        val path = s"$tmp/mv"
+        val damaged = MvSyncDemo.mvDf(spark, dir)
+        damaged.write.format(fmt)
+          .option(Dsv2Parquet.SchemaOption, damaged.schema.toDDL)
+          .mode("append").save(path)
+        CommitLog.enable(path, Dsv2Parquet.readConf)
+        val baseDf = MvSyncDemo.baseDf(spark, dir)
+        // change feeds: 4 files per side → 8 micro-batches, so the
+        // stateful operator genuinely merges across triggers
+        baseDf.selectExpr(damaged.columns.toIndexedSeq: _*)
+          .repartition(4).write.parquet(s"$tmp/feed/base")
+        spark.read.format(fmt).load(path)
+          .repartition(4).write.parquet(s"$tmp/feed/mv")
+        def feed(p: String) = spark.readStream.schema(damaged.schema)
+          .option("maxFilesPerTrigger", "1").parquet(p)
+        val updates = StreamingReconciler.monitor(
+          feed(s"$tmp/feed/base"), feed(s"$tmp/feed/mv"),
+          MvSyncDemo.baseSchema, MvSyncDemo.mvSchema).toDF()
+        val q = updates.writeStream.outputMode("update")
+          .format("memory").queryName(sink).start()
+        try q.processAllAvailable() finally q.stop()
+        // settle: the max-seq update per key is its final classification
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("key").orderBy(col("seq").desc)
+        val keyParts = split(col("key"), "\\|")
+        val settled = spark.table(sink)
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+          .select(keyParts.getItem(0).cast("bigint").as("o_custkey"),
+            keyParts.getItem(1).cast("bigint").as("o_orderkey"),
+            col("problem"))
+          .localCheckpoint()
+        val pk = Seq("o_custkey", "o_orderkey")
+        val deleteKeys = settled.filter(col("problem")
+          .isin("MISSING_IN_BASE_TABLE", "INCONSISTENT")).select(pk.map(col): _*)
+        val insertKeys = settled.filter(col("problem")
+          .isin("MISSING_IN_MV_TABLE", "INCONSISTENT")).select(pk.map(col): _*)
+        val inserts = baseDf.selectExpr(damaged.columns.toIndexedSeq: _*)
+          .join(insertKeys, pk, "left_semi")
+        EqualityRepair.commit(spark, path, pk, deleteKeys, inserts)
+        require(CommitLog.latest(path, Dsv2Parquet.readConf)
+            .get.eqFiles.nonEmpty,
+          "recon_post_repair_eq_stream: no equality sidecars landed")
+        MvReconciler.reconcile(baseDf, spark.read.format(fmt).load(path),
+          MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
+          .groupBy("problem").agg(count(lit(1)).as("n"))
+          .localCheckpoint()
+      } finally spark.catalog.dropTempView(sink): Unit
     }
   }
 
@@ -953,15 +889,8 @@ object ReconQueries {
    * read is fully repaired while the pinned read still sees the
    * damage. */
   def reconTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{CommitLog, Dsv2Parquet, Dsv2WriteProbe}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tt").toString
-    val tag = java.lang.Long.toHexString(System.nanoTime())
-    val cat = s"gtt_$tag"
-    val view = s"graft_tt_src_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmp)
-    try {
+    import graft.sources.Dsv2WriteProbe
+    withCatalog(spark, "gtt") { (cat, tmp) =>
       val damaged = MvSyncDemo.mvDf(spark, dir)
       spark.sql(
         s"""CREATE TABLE $cat.db.mv (${damaged.schema.toDDL})
@@ -970,18 +899,7 @@ object ReconQueries {
       damaged.writeTo(s"$cat.db.mv").append()
       val path = s"$tmp/db/mv"
       val preRepair = CommitLog.latest(path, Dsv2Parquet.readConf).get.version
-      MvSyncDemo.baseDf(spark, dir).selectExpr(damaged.columns: _*)
-        .createOrReplaceTempView(view)
-      val pk = MvSyncDemo.mvSchema.sortedPk
-      val setList = damaged.columns.filterNot(pk.contains)
-        .map(c => s"t.$c = s.$c").mkString(", ")
-      spark.sql(
-        s"""MERGE INTO $cat.db.mv t USING $view s
-           |ON t.o_custkey = s.o_custkey AND t.o_orderkey = s.o_orderkey
-           |WHEN MATCHED THEN UPDATE SET $setList
-           |WHEN NOT MATCHED THEN INSERT (${damaged.columns.mkString(", ")})
-           |  VALUES (${damaged.columns.map(c => s"s.$c").mkString(", ")})
-           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+      mergeBaseIntoMv(spark, dir, cat, damaged.columns.toIndexedSeq)
       val probe = Dsv2WriteProbe.forPath(path)
       require(probe.lastDvPositions.get() > 0,
         "recon_time_travel: the repair wrote no deletion vectors — " +
@@ -1003,11 +921,6 @@ object ReconQueries {
         MvSyncDemo.baseSchema, MvSyncDemo.mvSchema, Trusted)
         .groupBy("problem").agg(count(lit(1)).as("n"))
         .localCheckpoint()
-    } finally {
-      spark.catalog.dropTempView(view)
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
-      deleteRecursively(new java.io.File(tmp))
     }
   }
 
@@ -1037,9 +950,8 @@ object ReconQueries {
    * goes red. This is the closest offline analogue of a live
    * connector's full CQL type surface (reference SURVEY §1.2). */
   def reconClassifyAllTypesDsv2(spark: SparkSession, dir: String): DataFrame = {
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-alltypes-dsv2").toString
-    try {
+    val fmt = classOf[GraftParquetProvider].getName
+    withTempDir("graft-alltypes-dsv2") { tmp =>
       val base = AllTypesFixture.base(spark)
       val mv = AllTypesFixture.mv(spark)
       base.write.format(fmt).option("graft.schema", base.schema.toDDL)
@@ -1078,7 +990,7 @@ object ReconQueries {
         AllTypesFixture.schema, AllTypesFixture.schema, Trusted)
         .select("id", "problem", "mismatch_col", "mismatch_base", "mismatch_mv")
         .localCheckpoint()
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /**
@@ -1101,33 +1013,33 @@ object ReconQueries {
    */
   def reconStreamReplay(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingReconciler
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-replay").toString
-    val baseDf = AllTypesFixture.base(spark)
-    val mvDf = AllTypesFixture.mv(spark)
-    // 4 files per side → 8 micro-batches at maxFilesPerTrigger=1
-    baseDf.repartition(4).write.parquet(s"$tmp/base")
-    mvDf.repartition(4).write.parquet(s"$tmp/mv")
-    def feed(path: String, schema: org.apache.spark.sql.types.StructType) =
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
-    val updates = StreamingReconciler.monitor(
-      feed(s"$tmp/base", baseDf.schema), feed(s"$tmp/mv", mvDf.schema),
-      AllTypesFixture.schema, AllTypesFixture.schema).toDF()
-    val sink = s"graft_stream_replay_${java.lang.Long.toHexString(System.nanoTime())}"
-    val q = updates.writeStream.outputMode("update")
-      .format("memory").queryName(sink).start()
-    try q.processAllAvailable() finally q.stop()
-    // settle: the max-seq update per key is the key's current state
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("seq").desc)
-    val settled = spark.table(sink)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("key").cast("bigint").as("id"), col("problem"),
-        col("mismatch_col"), col("mismatch_base"), col("mismatch_mv"))
-      .localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    deleteRecursively(new java.io.File(tmp))
-    settled
+    withTempDir("graft-stream-replay") { tmp =>
+      val baseDf = AllTypesFixture.base(spark)
+      val mvDf = AllTypesFixture.mv(spark)
+      // 4 files per side → 8 micro-batches at maxFilesPerTrigger=1
+      baseDf.repartition(4).write.parquet(s"$tmp/base")
+      mvDf.repartition(4).write.parquet(s"$tmp/mv")
+      def feed(path: String, schema: org.apache.spark.sql.types.StructType) =
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
+      val updates = StreamingReconciler.monitor(
+        feed(s"$tmp/base", baseDf.schema), feed(s"$tmp/mv", mvDf.schema),
+        AllTypesFixture.schema, AllTypesFixture.schema).toDF()
+      val sink = s"graft_stream_replay_${java.lang.Long.toHexString(System.nanoTime())}"
+      val q = updates.writeStream.outputMode("update")
+        .format("memory").queryName(sink).start()
+      try q.processAllAvailable() finally q.stop()
+      // settle: the max-seq update per key is the key's current state
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("key").orderBy(col("seq").desc)
+      val settled = spark.table(sink)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("key").cast("bigint").as("id"), col("problem"),
+          col("mismatch_col"), col("mismatch_base"), col("mismatch_mv"))
+        .localCheckpoint()
+      spark.catalog.dropTempView(sink)
+      settled
+    }
   }
 
   /** The STREAMING read through the DataSource V2 seam — the third
@@ -1145,9 +1057,8 @@ object ReconQueries {
    * group exactly once with exact values. */
   def reconStreamDsv2(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingReconciler
-    val fmt = classOf[graft.sources.GraftParquetProvider].getName
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-dsv2").toString
-    try {
+    val fmt = classOf[GraftParquetProvider].getName
+    withTempDir("graft-stream-dsv2") { tmp =>
       val baseDf = MvSyncDemo.baseDf(spark, dir)
       val mvDf = MvSyncDemo.mvDf(spark, dir)
       baseDf.repartition(4).write.parquet(s"$tmp/base")
@@ -1176,7 +1087,7 @@ object ReconQueries {
         .localCheckpoint()
       spark.catalog.dropTempView(sink)
       settled
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** The BOUNDED-STATE streaming reconciler under the ORACLE — the
@@ -1198,8 +1109,7 @@ object ReconQueries {
    * classification and resurrect no stale state. */
   def reconStreamEvict(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingReconciler
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-evict").toString
-    try {
+    withTempDir("graft-stream-evict") { tmp =>
       val T0 = 1577836800L // 2020-01-01 UTC
       def withTs(df: DataFrame, sideOffset: Int): DataFrame =
         df.withColumn("_event_ts", timestamp_seconds(
@@ -1264,7 +1174,7 @@ object ReconQueries {
         .localCheckpoint()
       spark.catalog.dropTempView(sink)
       settled
-    } finally deleteRecursively(new java.io.File(tmp))
+    }
   }
 
   /** Operator O's report format under the ORACLE: the exact

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
  * EQUALITY-DELETE sidecars for [[GraftParquetProvider]] tables —
  * deletes by KEY VALUE instead of by (file, position), the
  * Iceberg equality-delete idea reduced to this connector's shape. The
- * client that needs them is a streaming repairer: it knows which KEYS
- * are damaged (from the reconcile classification) but not where their
+ * clients that need them are repairers (`graft.MvSyncJob.repair`, the
+ * streaming repair): each knows which KEYS are damaged (from the
+ * reconcile classification) but not where their
  * rows physically live — position deletes would force a scan-planning
  * round trip per repair; an equality delete is write-only.
  *
@@ -238,8 +239,9 @@ object Dsv2Equality {
 }
 
 /**
- * The repair face a STREAMING reconciler drives: upserts and deletes
- * by KEY, one atomic commit, no `_file`/`_pos` knowledge (the
+ * The repair face `graft.MvSyncJob.repair` and a STREAMING reconciler
+ * drive: upserts and deletes by KEY, one atomic commit, no
+ * `_file`/`_pos` knowledge (the
  * reference's repair statements are exactly this shape —
  * DBOperations.java:58-194,240-387 bind keys, never storage
  * positions). `deleteKeys` rows name keys to remove from the CURRENT

@@ -5,10 +5,11 @@ import graft.reconcile.{Fixtures, MvReconciler}
 import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportFormatter, ReportWriter}
 import graft.schema.TableSchema
-import graft.sources.{CommitLog, Dsv2Parquet, Dsv2ParquetSource, EqualityRepair,
+import graft.sources.{CommitLog, Dsv2Parquet, Dsv2ParquetSource, GraftCatalog,
   GraftParquetProvider, ParquetSource, Source}
 import java.io.File
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,21 +26,8 @@ class MvSyncJobSpec extends SparkSpec {
   private val Fixing = Settings(
     fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
 
-  private def pk(p: String, ck1: String, ck2: Int) =
-    Map[String, Any]("pk" -> p, "ck1" -> ck1, "ck2" -> ck2)
-
-  /** One key per category: Driver1 consistent, Driver2 inconsistent
-   * (c4 44 vs 441), Driver3 missing in the MV, Driver4 an MV orphan.
-   * Driver1 and Driver2 are written at Wt1, the others at Wt2. */
-  private def base = df(spark, baseSchema,
-    baseRow(pk("Driver1", "SF", 2020), Seq(10, 20, 30, 40), Wt1),
-    baseRow(pk("Driver2", "NY", 2021), Seq(11, 22, 33, 44), Wt1),
-    baseRow(pk("Driver3", "LA", 2022), Seq(12, 23, 34, 45), Wt2))
-  private def mv = df(spark, mvSchema,
-    mvRow(mvSchema, pk("Driver1", "SF", 2020), 10, Seq(20, 30, 40), Wt1),
-    mvRow(mvSchema, pk("Driver2", "NY", 2021), 11, Seq(22, 33, 44), Wt1,
-      c4Override = Some(441)),
-    mvRow(mvSchema, pk("Driver4", "TX", 2023), 13, Seq(24, 35, 46), Wt2))
+  private def base = baseOnePerCategory(spark)
+  private def mv = mvOnePerCategory(spark)
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -153,24 +141,77 @@ class MvSyncJobSpec extends SparkSpec {
 
     val first = runOnce()
     assert(first.stats.consistentRecords == 1 && first.classified.count() == 3)
-    // the repair: delete orphan and stale keys, insert the base rows of
-    // missing and inconsistent keys (MV columns, values from the base)
-    val keys = mvSchema.sortedPk
-    val problem = col(MvReconciler.ProblemCol)
-    val mvCols = spark.read.format(classOf[GraftParquetProvider].getName)
-      .load(mvPath).columns.toSeq
-    EqualityRepair.commit(spark, mvPath, keys,
-      first.classified
-        .filter(problem.isin(MvReconciler.MissingInBase, MvReconciler.Inconsistent))
-        .select(keys.map(col): _*),
-      first.classified
-        .filter(problem.isin(MvReconciler.MissingInMv, MvReconciler.Inconsistent))
-        .select(mvCols.map(c =>
-          if (keys.contains(c)) col(c) else col(s"base_$c").as(c)): _*))
+    def versions = CommitLog.versions(new Path(mvPath), Dsv2Parquet.readConf).length
+    val before = versions
+    MvSyncJob.repair(spark, first, mvPath, ParquetSource(basePath),
+      baseSchema, mvSchema, settings)
+    assert(versions == before + 1, "repair publishes exactly one version")
 
     val second = runOnce()
     assert(second.stats.totRecords == 3 && second.stats.consistentRecords == 3,
       s"second run: ${second.stats}")
     assert(second.classified.count() == 0)
+  }
+
+  /** The stats line `MvSyncJob.main` prints for `args` under the
+   * `cass.mv.*` session confs `conf`. */
+  private def mainLine(args: Seq[String], conf: Map[String, String]): String = {
+    val saved = (conf.keys.toSeq :+ "spark.sql.shuffle.partitions")
+      .map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val out = new java.io.ByteArrayOutputStream
+    try Console.withOut(new java.io.PrintStream(out, true)) {
+      MvSyncJob.main(args.toArray)
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    out.toString("UTF-8").linesIterator.filter(_.startsWith("totRecords:")).toSeq.last
+  }
+
+  private def fixFlags(outputDir: String) = Map(
+    "cass.mv.fixmissingmv" -> "true", "cass.mv.fixorphanmv" -> "true",
+    "cass.mv.fixinconsistentmv" -> "true", "cass.mv.output.dir" -> outputDir)
+
+  test("main repairs a graft MV when a fix flag is set; a second main reports it consistent") {
+    val tmp = tmpDir("graft-mvsync-main")
+    val (basePath, mvPath) = tables(tmp)
+    val args = Seq(basePath, mvPath, mvSchema.pk.mkString(","))
+    val first = mainLine(args, fixFlags(s"$tmp/reports-1"))
+    assert(first.startsWith("totRecords: 4, skippedRecords: 0, consistentRecords: 1,"), first)
+    val second = mainLine(args, fixFlags(s"$tmp/reports-2"))
+    val settings = Fixing.copy(outputDir = s"$tmp/reports-3")
+    val viaConnector = MvSyncJob.run(spark, Dsv2ParquetSource(basePath),
+      Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings, writeReports = false)
+    assert(viaConnector.stats.totRecords == 3 && viaConnector.stats.consistentRecords == 3)
+    assert(second == viaConnector.stats.toString)
+  }
+
+  test("main's MV schema is the connector's: a column added by ALTER TABLE is compared") {
+    val tmp = tmpDir("graft-mvsync-alter")
+    val basePath = s"$tmp/base"
+    base.withColumn("c5", lit(5)).write.parquet(basePath)
+    val cat = s"gmain_${java.lang.Long.toHexString(System.nanoTime())}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", s"$tmp/cat")
+    try {
+      mv.writeTo(s"$cat.db.mv").create()
+      spark.sql(s"ALTER TABLE $cat.db.mv ADD COLUMN c5 INT")
+      // Driver3 lands with c5 in a file of its own, part-00001-*: the
+      // frame's first partition is empty. The first file in path order
+      // is then a pre-ALTER part-00000-*, so a schema read from that
+      // one file would miss c5
+      df(spark, mvSchema, mvRow(mvSchema,
+          Map("pk" -> "Driver3", "ck1" -> "LA", "ck2" -> 2022), 12, Seq(23, 34, 45), Wt2))
+        .withColumn("c5", lit(5)).writeTo(s"$cat.db.mv").append()
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.root")
+    }
+    // c5 compared: Driver1 and Driver2 differ in it (null vs 5), and
+    // Driver3 agrees
+    val line = mainLine(Seq(basePath, s"$tmp/cat/db/mv", mvSchema.pk.mkString(",")),
+      Map("cass.mv.output.dir" -> s"$tmp/reports"))
+    assert(line.startsWith("totRecords: 4, skippedRecords: 0, consistentRecords: 1, " +
+      "inConsistentRecords: 2, missingBaseTableRecords: 1, missingMvRecords: 0,"), line)
   }
 }

@@ -96,6 +96,24 @@ object Fixtures {
   def baseMissingRow2(spark: SparkSession): DataFrame = df(spark, baseSchema,
     row(baseSchema, baseRow1Pk, cells(Seq(10, 20, 30, 40), Wt1)))
 
+  private def pk(p: String, ck1: String, ck2: Int) =
+    Map[String, Any]("pk" -> p, "ck1" -> ck1, "ck2" -> ck2)
+
+  /** One key per category with [[mvOnePerCategory]]: Driver1
+   * consistent, Driver2 inconsistent (c4 44 vs 441), Driver3 missing in
+   * the MV, Driver4 an MV orphan. Driver1 and Driver2 are written at
+   * Wt1, the others at Wt2. */
+  def baseOnePerCategory(spark: SparkSession): DataFrame = df(spark, baseSchema,
+    baseRow(pk("Driver1", "SF", 2020), Seq(10, 20, 30, 40), Wt1),
+    baseRow(pk("Driver2", "NY", 2021), Seq(11, 22, 33, 44), Wt1),
+    baseRow(pk("Driver3", "LA", 2022), Seq(12, 23, 34, 45), Wt2))
+
+  def mvOnePerCategory(spark: SparkSession): DataFrame = df(spark, mvSchema,
+    mvRow(mvSchema, pk("Driver1", "SF", 2020), 10, Seq(20, 30, 40), Wt1),
+    mvRow(mvSchema, pk("Driver2", "NY", 2021), 11, Seq(22, 33, 44), Wt1,
+      c4Override = Some(441)),
+    mvRow(mvSchema, pk("Driver4", "TX", 2023), 13, Seq(24, 35, 46), Wt2))
+
   /** Scenario: MV row2 c4=441 → INCONSISTENT (reference golden
    * `BaseColumn: c4:INT:44 / MvColumn: c4:INT:441`). */
   def mvMismatchRow2(spark: SparkSession): DataFrame = df(spark, mvSchema,

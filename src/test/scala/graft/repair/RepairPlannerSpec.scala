@@ -74,14 +74,15 @@ class RepairPlannerSpec extends SparkSpec {
   }
 
   test("plan ops are disjoint per MV key (fused-merge apply invariant)") {
-    // RepairApplier's fused merge drops any _del-marked key OUTRIGHT,
-    // discarding whatever upsert mutations the same key might carry —
-    // sound only because a plan never emits both ops for one PK
-    // (deletes come from MISSING_IN_BASE keys, upserts from
+    // MvSyncJob.repair commits a planned DELETE's key as a delete and
+    // an upserted key as delete + re-insert in ONE commit, whose inserts
+    // the deletes never reach — so a key carrying both ops would survive
+    // its delete. Sound only because a plan never emits both ops for one
+    // PK (deletes come from MISSING_IN_BASE keys, upserts from
     // MISSING_IN_MV/INCONSISTENT — disjoint classifications). This spec
     // pins that invariant over a plan containing ALL THREE damage kinds
     // at once, so a planner change that starts mixing ops per key fails
-    // here instead of silently changing apply semantics.
+    // here instead of silently changing repair semantics.
     val s = Settings(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
     val base = baseBoth(spark) // rows 1,2
     val row1Pk = Map[String, Any]("pk" -> "Driver1", "ck1" -> "SF", "ck2" -> 2020)
@@ -97,79 +98,5 @@ class RepairPlannerSpec extends SparkSpec {
       .agg(countDistinct(col("op")).as("n_ops"))
       .filter(col("n_ops") > 1)
     assert(mixed.count() == 0, "a PK carried both DELETE and UPSERT ops")
-  }
-
-  test("applyPlan round-trips every damage scenario to CONSISTENT") {
-    val s = Settings(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-    // Damage: row2 price mismatched in MV + an orphan MV row (Driver3,
-    // absent from base). Base row2 also missing from... keep mvMismatch +
-    // orphan by using base with only row1+row2 and MV missing row2:
-    val base = baseBoth(spark)
-    val mv = mvMismatchRow2(spark) // row2 c4=441 → INCONSISTENT
-    val plan = RepairPlanner.plan(classified(base, mv, s), baseSchema, mvSchema, s)
-    val repaired = RepairApplier.applyPlan(mv, plan, mvSchema)
-    val again = classified(base, repaired, s)
-    assert(again.filter(col("problem") =!= MvReconciler.Consistent).count() == 0)
-    assert(again.count() == 2)
-    // the untouched equal columns kept their original cells (writetime intact)
-    val r2 = repaired.filter(col("pk") === "Driver2").collect()(0)
-    assert(r2.getAs[Int]("c4") == 44)
-    assert(r2.getAs[Long]("writetime_c2") == Wt2)
-  }
-
-  test("applyPlan is idempotent under retries (exactly-once posture)") {
-    // Task/job retries can re-apply mutations (SURVEY §7.4). The
-    // reference's mitigations are timestamped upserts (replaying the
-    // same cell timestamp is a no-op overwrite) and read-before-delete;
-    // the offline applier inherits both: re-applying a plan sets the
-    // same cells to the same values/writetimes, and a retried DELETE
-    // anti-joins a key that is already gone. Double-apply must be
-    // byte-identical to single-apply for every mutation kind.
-    val s = Settings(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-
-    // upsert path: mismatched row repaired, then the plan replayed
-    val base = baseBoth(spark)
-    val mv = mvMismatchRow2(spark)
-    val plan = RepairPlanner.plan(classified(base, mv, s), baseSchema, mvSchema, s)
-    val once = RepairApplier.applyPlan(mv, plan, mvSchema)
-    val twice = RepairApplier.applyPlan(once, plan, mvSchema)
-    assert(rows(twice) == rows(once))
-    assert(classified(base, twice, s)
-      .filter(col("problem") =!= MvReconciler.Consistent).count() == 0)
-
-    // delete path: orphan removed, then the delete replayed on the
-    // already-repaired MV — left-anti finds nothing the second time
-    val base2 = baseMissingRow2(spark)
-    val mv2 = mvBoth(spark)
-    val plan2 = RepairPlanner.plan(classified(base2, mv2, s), baseSchema, mvSchema, s)
-    val d1 = RepairApplier.applyPlan(mv2, plan2, mvSchema)
-    val d2 = RepairApplier.applyPlan(d1, plan2, mvSchema)
-    assert(rows(d2) == rows(d1))
-    assert(d2.count() == 1)
-  }
-
-  test("applyPlan deletes orphans and inserts missing rows") {
-    val s = Settings(fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-    // base lacks row2 (orphan in MV); MV lacks row1's... construct:
-    // base = row1 only, mv = row1+row2 → row2 is MISSING_IN_BASE → delete.
-    val base = baseMissingRow2(spark)
-    val mv = mvBoth(spark)
-    val plan = RepairPlanner.plan(classified(base, mv, s), baseSchema, mvSchema, s)
-    val repaired = RepairApplier.applyPlan(mv, plan, mvSchema)
-    assert(repaired.count() == 1)
-    assert(repaired.collect()(0).getAs[String]("pk") == "Driver1")
-    // and the reverse: mv lacks row2 → upserted back with base cells
-    val mv2 = mvMissingRow2(spark)
-    val plan2 = RepairPlanner.plan(classified(baseBoth(spark), mv2, s), baseSchema, mvSchema, s)
-    val repaired2 = RepairApplier.applyPlan(mv2, plan2, mvSchema)
-    assert(repaired2.count() == 2)
-    val row2 = repaired2.filter(col("pk") === "Driver2").collect()(0)
-    assert(row2.getAs[Int]("c2") == 22 && row2.getAs[Int]("c3") == 33 &&
-      row2.getAs[Int]("c4") == 44)
-    assert(row2.getAs[Long]("writetime_c3") == Wt2)
-    val again = classified(baseBoth(spark), repaired2, s)
-    assert(again.filter(col("problem") =!= MvReconciler.Consistent).count() == 0)
   }
 }
