@@ -2,59 +2,14 @@ package graft
 
 import graft.config.Settings
 import graft.reconcile.{Fixtures, MvReconciler}
-import graft.sources.{CommitLog, Dsv2Parquet, Dsv2ParquetSource, GraftParquetProvider, Source}
-import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** `MvSyncJob.repair`: the classification of a `run` lands as one
  * equality commit on a commit-logged MV table, per-column as the
  * reference upserts. */
-class MvSyncRepairSpec extends SparkSpec {
+class MvSyncRepairSpec extends SparkSpec with MvRepairHarness {
   import Fixtures._
-
-  private val Fixing = Settings(
-    fixMissingMv = true, fixOrphanMv = true, fixInconsistentMv = true)
-
-  private def source(df: DataFrame): Source = (_, _) => df
-
-  /** `mv` as a commit-logged graft table in a fresh directory. */
-  private def graftMv(mv: DataFrame): String = {
-    val path = s"${Files.createTempDirectory("graft-repair")}/mv"
-    mv.write.format(classOf[GraftParquetProvider].getName)
-      .option(Dsv2Parquet.SchemaOption, mv.schema.toDDL)
-      .mode("append").save(path)
-    CommitLog.enable(path, Dsv2Parquet.readConf)
-    path
-  }
-
-  private def runOn(base: DataFrame, path: String, settings: Settings) =
-    MvSyncJob.run(spark, source(base), Dsv2ParquetSource(path),
-      baseSchema, mvSchema, settings, writeReports = false)
-
-  private def commit(result: MvSyncJob.Result, base: DataFrame, path: String,
-      settings: Settings): Unit =
-    MvSyncJob.repair(spark, result, path, source(base), baseSchema, mvSchema, settings)
-
-  /** `mv` written as a graft table, then run + repair against `base`. */
-  private def repaired(base: DataFrame, mv: DataFrame,
-      settings: Settings = Fixing): String = {
-    val path = graftMv(mv)
-    commit(runOn(base, path, settings), base, path, settings)
-    path
-  }
-
-  private def live(path: String): DataFrame =
-    Dsv2ParquetSource(path).load(spark, mvSchema)
-
-  private def rows(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).toSeq.sorted
-
-  private def problems(base: DataFrame, path: String,
-      settings: Settings = Settings()): Map[String, Long] =
-    MvReconciler.reconcile(base, live(path), baseSchema, mvSchema, settings)
-      .groupBy(MvReconciler.ProblemCol).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   private def row(path: String, pk: String): Row =
     live(path).filter(col("pk") === pk).collect().toSeq match {
@@ -71,18 +26,6 @@ class MvSyncRepairSpec extends SparkSpec {
       val path = repaired(base, mv)
       assert(problems(base, path) == Map(MvReconciler.Consistent -> base.count()))
     }
-  }
-
-  test("repair is idempotent under retries: one result committed twice leaves the same live rows") {
-    // a retried commit deletes the keys again, the first commit's
-    // inserts included, and inserts the same rows
-    val (base, path) = (baseOnePerCategory(spark), graftMv(mvOnePerCategory(spark)))
-    val result = runOn(base, path, Fixing)
-    commit(result, base, path, Fixing)
-    val once = rows(live(path))
-    commit(result, base, path, Fixing)
-    assert(rows(live(path)) == once)
-    assert(problems(base, path) == Map(MvReconciler.Consistent -> 3L))
   }
 
   test("repair deletes orphans and inserts missing rows") {

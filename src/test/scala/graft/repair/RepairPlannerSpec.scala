@@ -1,11 +1,11 @@
 package graft.repair
 
-import graft.SparkSpec
+import graft.{MvRepairHarness, SparkSpec}
 import graft.config.Settings
 import graft.reconcile.{Fixtures, MvReconciler}
 import org.apache.spark.sql.functions._
 
-class RepairPlannerSpec extends SparkSpec {
+class RepairPlannerSpec extends SparkSpec with MvRepairHarness {
   import Fixtures._
 
   private def classified(
@@ -98,5 +98,18 @@ class RepairPlannerSpec extends SparkSpec {
       .agg(countDistinct(col("op")).as("n_ops"))
       .filter(col("n_ops") > 1)
     assert(mixed.count() == 0, "a PK carried both DELETE and UPSERT ops")
+  }
+
+  test("applyPlan is idempotent under retries (exactly-once posture)") {
+    // the plan lands through MvSyncJob.repair: a retried commit deletes
+    // the keys again, the first commit's inserts included, and inserts
+    // the same rows
+    val (base, path) = (baseOnePerCategory(spark), graftMv(mvOnePerCategory(spark)))
+    val result = runOn(base, path, Fixing)
+    commit(result, base, path, Fixing)
+    val once = rows(live(path))
+    commit(result, base, path, Fixing)
+    assert(rows(live(path)) == once)
+    assert(problems(base, path) == Map(MvReconciler.Consistent -> 3L))
   }
 }
