@@ -6,7 +6,7 @@ import graft.reconcile.MvReconciler
 import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportWriter, StatsCollector}
 import graft.schema.TableSchema
-import graft.sources.{Dsv2ParquetSource, EqualityRepair, GraftParquetProvider, Source}
+import graft.sources.{Dsv2Parquet, Dsv2ParquetSource, EqualityRepair, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -57,9 +57,10 @@ object MvSyncJob {
    * `cass.mv.{base.path, mv.path, mv.pk, base.pk}`. Both tables are
    * read through the graft connector (Dsv2ParquetSource), so a
    * commit-logged table reads as its current snapshot, and each schema
-   * is the one the connector serves: the union over the snapshot's live
-   * files, not one listed file's (TableSchema.fromSchema), mirroring the
-   * reference's cluster-metadata discovery. When a `cass.mv.fix*` flag
+   * is the one the connector serves (Dsv2Parquet.tableSchema: recorded
+   * or declared DDL, else the union over the snapshot's live files),
+   * mirroring the reference's cluster-metadata discovery
+   * (MvSync.java:171-214). When a `cass.mv.fix*` flag
    * is set, [[repair]] commits the repair to the MV table before the
    * stats line prints.
    */
@@ -76,8 +77,8 @@ object MvSyncJob {
     val basePk = args.lift(3).orElse(conf("base.pk"))
       .map(_.split(",").toSeq).getOrElse(mvPk.tail)
     val settings = Settings.fromSession(spark)
-    def schemaOf(path: String, pk: Seq[String]) = TableSchema.fromSchema(
-      spark.read.format(classOf[GraftParquetProvider].getName).load(path).schema, pk)
+    def schemaOf(path: String, pk: Seq[String]) =
+      TableSchema.fromSchema(Dsv2Parquet.tableSchema(path, None), pk)
     val (base, baseSchema) = (Dsv2ParquetSource(basePath), schemaOf(basePath, basePk))
     val mvSchema = schemaOf(mvPath, mvPk)
     val result = run(spark, base, Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings)

@@ -330,24 +330,16 @@ object CommitLog {
     Map("operation" -> operation,
       "ts" -> System.currentTimeMillis().toString)
 
-  /** The table's DECLARED schema DDL at commit time (`_schema.ddl`
-   * beside the data), recorded into each manifest's metadata so time
-   * travel serves the AS-OF schema — a column added later must not
-   * appear (null-filled) in a version committed before it existed.
-   * None for path-written tables that never declared: their schema is
-   * the footer union, which the pinned file set already scopes. */
-  private def declaredDdl(path: String,
-      conf: Configuration): Option[String] = {
-    val p = new Path(path, Dsv2Parquet.SchemaFileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val ddl = Dsv2Parquet.readText(fs, p)
-      // the manifest format is line-based — a DDL that somehow grew a
-      // newline is unrecordable, not a reason to fail the commit
-      if (ddl.nonEmpty && !ddl.contains('\n')) Some(ddl) else None
-    }
-  }
+  /** The table's declared schema DDL ([[Dsv2Parquet.declaredDdl]]) as
+   * commit metadata, recorded into each manifest so time travel serves
+   * the AS-OF schema ([[Dsv2Parquet.tableSchema]]). Empty for
+   * path-written tables that never declared: their schema is the footer
+   * union, which the pinned file set already scopes. */
+  private def schemaMeta(path: String): Map[String, String] =
+    // the manifest format is line-based — a DDL that somehow grew a
+    // newline is unrecordable, not a reason to fail the commit
+    Dsv2Parquet.declaredDdl(path).filter(!_.contains('\n'))
+      .map("schema" -> _).toMap
 
   /** Forget a cached manifest (paired with its physical expiry —
    * same-JVM reads of an expired version must fail, not resurrect). */
@@ -374,8 +366,8 @@ object CommitLog {
         .map(_.getPath.getName).toSet
       val dv = Dsv2Parquet.dvListing(path, conf)
         .values.flatten.map(new Path(_).getName).toSet
-      val snap = Snapshot(1L, data, dv, meta = stamp("enable") ++
-        declaredDdl(path, conf).map("schema" -> _))
+      val snap = Snapshot(1L, data, dv,
+        meta = stamp("enable") ++ schemaMeta(path))
       if (tryCommit(path, snap, conf)) snap
       else latest(path, conf).get // lost an enable race — theirs stands
     }
@@ -419,13 +411,13 @@ object CommitLog {
       // publish the POST-alter schema, not the one it saw before the
       // loop — else time travel to its version serves a schema missing
       // a column its files may already carry (r20 What's-wrong #2)
-      val schemaMeta = declaredDdl(path, conf).map("schema" -> _).toMap
+      val declared = schemaMeta(path)
       update(cur) match {
         case None => return None
         case Some(next0) =>
           val next = next0.copy(version = cur.version + 1,
             meta = (if (operation.isEmpty) next0.meta
-              else stamp(operation)) ++ schemaMeta,
+              else stamp(operation)) ++ declared,
             // a retired file's bucket id retires with it
             buckets = next0.buckets.filter(b => next0.dataFiles(b._1)))
           if (tryCommit(path, next, conf)) return Some(next)

@@ -247,21 +247,19 @@ object Dsv2Equality {
  * positions). `deleteKeys` rows name keys to remove from the CURRENT
  * data files; `inserts` rows land beside them exempt from those
  * deletes — so an upsert is (key ∈ deleteKeys) + (new row ∈ inserts).
- * Inserts follow the table's store-assignment rule, as a DSv2 append
- * does: a column whose type cannot be stored into the table's fails the
- * commit before anything stages, and a value that overflows its
- * narrower table type fails the job. The table is unchanged either way.
+ * Inserts are projected onto the table's schema
+ * ([[Dsv2Parquet.tableSchema]]) under its store-assignment rule, as a
+ * DSv2 append does: a column whose type cannot be stored into the
+ * table's fails the commit before anything stages, and a value that
+ * overflows its narrower table type fails the job. The table is
+ * unchanged either way, and also when the job stages nothing (no delete
+ * key, no insert row): that commit publishes no version.
  */
 object EqualityRepair {
   def commit(spark: SparkSession, path: String, keyCols: Seq[String],
       deleteKeys: DataFrame, inserts: DataFrame): Unit = {
     val conf = Dsv2Parquet.readConf
-    // a fresh (file-less) table has no footers yet — the inserts
-    // define its shape, and the deletes are no-ops against it
-    val tableSchema =
-      if (Dsv2Parquet.dataFiles(path, conf).nonEmpty)
-        Dsv2Parquet.footerSchema(path)
-      else inserts.schema
+    val tableSchema = Dsv2Parquet.tableSchema(path, None)
     val kc = keyCols.toArray
     kc.foreach { c =>
       val f = tableSchema.fields.find(_.name == c).getOrElse(
@@ -383,6 +381,8 @@ object EqualityRepair {
         (Option(file).map(_.getName).iterator ++ eqName.iterator)
       }.collect()
     }
+    // nothing staged — no delete key, no insert row: nothing to publish
+    if (names.isEmpty) return commit.abort()
     val (eqNames, insertNames) =
       names.partition(_.startsWith(Dsv2Equality.EqPrefix))
     commit.publish("eq-repair", names.toSeq.map(new Path(staging, _))) { cur =>

@@ -69,14 +69,13 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 class GraftParquetProvider extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
-  /** Schema from the `graft.schema` DDL option when present — the
-   * connector analogue of cluster catalog metadata, and the only way a
-   * write into a FRESH directory can resolve (no footers exist yet) —
-   * else from the first data file's footer. */
+  /** Schema from the `graft.schema` DDL option when present, else the
+   * table's own ([[Dsv2Parquet.tableSchema]]) at the read's `VERSION AS
+   * OF`. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val ddl = options.get(Dsv2Parquet.SchemaOption)
     if (ddl != null && ddl.nonEmpty) StructType.fromDDL(ddl)
-    else Dsv2Parquet.footerSchema(Dsv2Parquet.pathOf(options),
+    else Dsv2Parquet.tableSchema(Dsv2Parquet.pathOf(options),
       Option(options.get(Dsv2Parquet.VersionAsOfOption)).map(_.toLong))
   }
 
@@ -189,14 +188,10 @@ private[sources] case class GraftParquetTable(path: String,
         s"graft-parquet: cannot metadata-delete by ${filters.mkString(", ")}"))
     val conf = Dsv2Parquet.readConf
     val base = CommitLog.begin(path, conf)
-    val fs = new Path(path).getFileSystem(conf)
-    if (keep.isEmpty && drop.nonEmpty) {
-      // a delete (e.g. TRUNCATE) that removes the LAST data file must
-      // not make the table vanish from the catalog — persist the schema
-      // the way CREATE TABLE does before dropping the data
-      val out = fs.create(new Path(path, Dsv2Parquet.SchemaFileName), true)
-      try out.write(schema.toDDL.getBytes("UTF-8")) finally out.close()
-    }
+    // a delete (e.g. TRUNCATE) that removes the LAST data file must not
+    // make the table vanish from the catalog — declare the schema the
+    // way CREATE TABLE does before dropping the data
+    if (keep.isEmpty && drop.nonEmpty) Dsv2Parquet.declareSchema(path, schema)
     // logical retire: the manifest drop IS the delete (re-proved per
     // CAS attempt); the bytes stay for time travel
     CommitLog.commitUpdate(path, conf, operation = "delete",
@@ -426,6 +421,10 @@ private[sources] final case class PlanningView(path: String,
         blocks.map(b => f.getPath.toString -> b)
       }
 
+  /** The pinned version's table schema ([[Dsv2Parquet.tableSchema]]). */
+  @transient lazy val schema: StructType =
+    Dsv2Parquet.schemaIn(path, snapshot, dataFiles)
+
   /** Data file name → its deletion-vector sidecar paths. */
   @transient lazy val dvMap: Map[String, Array[String]] =
     Dsv2Parquet.dvListingFrom(listing._1.map(_.getPath), new Path(path),
@@ -547,12 +546,11 @@ private[sources] case class GraftParquetScan(path: String,
    * state compact_table folds away. */
   @transient private lazy val eqInfo: Option[(Array[StructField],
       Array[(Set[String], Dsv2Equality.KeyFilter)])] =
-    // schema resolution by-name and PINNED to this scan's files (the
-    // latest manifest may hold a different — even empty — file set):
-    // forSnapshot touches it only after at least one LIVE sidecar is
-    // found, which implies live target files with footers
-    Dsv2Equality.forSnapshot(path, view.snapshot,
-      Dsv2Parquet.footerSchemaOf(path, view.dataFiles), Dsv2Parquet.readConf)
+    // key fields resolve against the schema of THIS scan's version (the
+    // latest may hold a different — even empty — file set), which
+    // forSnapshot touches only once it finds a live sidecar
+    Dsv2Equality.forSnapshot(path, view.snapshot, view.schema,
+      Dsv2Parquet.readConf)
   @transient private lazy val eqPresent: Boolean = eqInfo.nonEmpty
 
   /** The clustered layout the pinned snapshot's files prove
@@ -964,9 +962,53 @@ private[graft] object Dsv2Parquet {
    * per-file cardinality. */
   val BloomNdvOption = "graft.bloomNdv"
 
-  /** Table-schema sidecar file name, shared by the catalog's
-   * createTable and the empty-after-delete persistence. */
-  val SchemaFileName = "_schema.ddl"
+  /** The declared-schema file, the cluster-metadata stand-in: catalog
+   * CREATE / ALTER and a delete that empties the table write it
+   * ([[declareSchema]]); [[declaredDdl]] reads it. No other code
+   * touches it. */
+  private[sources] val SchemaFileName = "_schema.ddl"
+
+  /** The table's declared schema DDL (`_schema.ddl`), if it has one. */
+  private[sources] def declaredDdl(path: String): Option[String] = {
+    val p = new Path(path, SchemaFileName)
+    val fs = p.getFileSystem(readConf)
+    if (fs.exists(p)) Some(readText(fs, p)).filter(_.nonEmpty) else None
+  }
+
+  /** Declare `schema` as the table's (`_schema.ddl`), atomically: write
+   * to a temp name, then rename over the file — the same discipline the
+   * data-file committer uses — so a reader racing an ALTER can never
+   * observe a truncated or empty schema file (`StructType.fromDDL` would
+   * crash on torn bytes). Rename-over-existing is atomic on the local
+   * and HDFS filesystems this targets; concurrent declarations remain
+   * last-writer-wins (single-writer DDL is the documented discipline,
+   * as for any file-backed catalog without a lock service). */
+  private[sources] def declareSchema(path: String, schema: StructType): Unit = {
+    val fs = new Path(path).getFileSystem(readConf)
+    fs.mkdirs(new Path(path))
+    val tmp = new Path(path,
+      s"$SchemaFileName.tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(schema.toDDL.getBytes("UTF-8")) finally out.close()
+    // Hadoop's RawLocalFileSystem.rename refuses to clobber an existing
+    // destination, so route through java.nio ATOMIC_MOVE for local
+    // paths and delete-then-rename elsewhere (the non-local window is
+    // the pre-existing one; local — every test and local[] deployment —
+    // is genuinely atomic)
+    val dst = new Path(path, SchemaFileName)
+    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
+      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
+    if (local) {
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(tmp.toUri.getPath),
+        java.nio.file.Paths.get(dst.toUri.getPath),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    } else {
+      if (fs.exists(dst)) fs.delete(dst, false)
+      require(fs.rename(tmp, dst), s"graft-parquet: DDL rename failed for $path")
+    }
+  }
 
   /** A small metadata file's whole text (manifest, DDL, ledger). */
   private[sources] def readText(fs: org.apache.hadoop.fs.FileSystem,
@@ -1400,38 +1442,37 @@ private[graft] object Dsv2Parquet {
     fileFooter(p.getFileSystem(conf).getFileStatus(p), conf)._1
   }
 
-  /** Table schema from the UNION of every data file's footer
-   * (metadata-only reads — the connector analogue of reading cluster
-   * schema metadata, reference CassandraClient.java:14-68). The union,
-   * not whichever file lists first: a schema-evolved directory holds
-   * wider files beside older narrow ones, and an undeclared path-based
-   * read must see every column regardless of listing order (the reader
-   * null-fills what an individual file lacks). A same-name column whose
-   * Spark type differs across files fails fast — silently picking one
-   * decode would corrupt the other files' bytes. */
-  def footerSchema(path: String): StructType = footerSchema(path, None)
+  /** THE schema of the graft table at `path` as of `versionAsOf` (None:
+   * the latest) — the one rule every reader, writer and maintenance job
+   * takes a table's columns from, standing in for the reference's
+   * cluster-metadata discovery (MvSync.java:171-214). The first of:
+   *  1. the DDL recorded in that version's manifest, so time travel
+   *     serves the as-of schema: a column added later does not leak in;
+   *  2. the declared `_schema.ddl` ([[declaredDdl]]), which after ALTER
+   *     TABLE ADD COLUMN is wider than every file (the reader null-fills
+   *     what a file lacks);
+   *  3. the UNION of that version's live files' footers — a path-written
+   *     table that never declared. The union, not whichever file lists
+   *     first: a schema-evolved directory holds wider files beside older
+   *     narrow ones. A same-name column whose Spark type differs across
+   *     files fails fast — silently picking one decode would corrupt the
+   *     other files' bytes.
+   * A table with none of the three fails ("no parquet data files"). */
+  def tableSchema(path: String, versionAsOf: Option[Long]): StructType =
+    PlanningView(path, versionAsOf).schema
 
-  /** [[footerSchema]] scoped to a pinned commit-log version: the union
-   * runs over exactly THAT version's files, so an undeclared
-   * (path-read) table's time-travel schema is the as-of one — a
-   * column that exists only in later files does not leak in. */
-  def footerSchema(path: String, versionAsOf: Option[Long]): StructType =
-    footerSchemaOf(path, dataFiles(path, readConf, versionAsOf))
+  /** [[tableSchema]] over a snapshot and its file set already resolved;
+   * the footers are read only when neither DDL exists. */
+  private[sources] def schemaIn(path: String,
+      snap: Option[CommitLog.Snapshot],
+      files: => Array[FileStatus]): StructType =
+    snap.flatMap(_.meta.get("schema")).orElse(declaredDdl(path))
+      .fold(footerUnion(path, files))(StructType.fromDDL)
 
-  /** [[footerSchema]] over a file set already resolved. */
-  def footerSchemaOf(path: String, files: Array[FileStatus]): StructType = {
-    val conf = readConf
-    if (files.isEmpty) {
-      // an EMPTIED table: the delete that dropped the last data file
-      // persisted the declared DDL precisely so the table doesn't
-      // vanish — the catalog already serves it; path reads must too
-      val sf = new Path(path, SchemaFileName)
-      val fs = sf.getFileSystem(conf)
-      require(fs.exists(sf), s"no parquet data files under $path")
-      val ddl = readText(fs, sf)
-      return StructType.fromDDL(ddl)
-    }
-    fileFooters(files, conf).map { case (schema, _, _) =>
+  private def footerUnion(path: String,
+      files: Array[FileStatus]): StructType = {
+    require(files.nonEmpty, s"no parquet data files under $path")
+    fileFooters(files, readConf).map { case (schema, _, _) =>
       sparkSchema(schema)
     }.reduce { (a, b) =>
       b.fields.foldLeft(a) { (acc, bf) =>

@@ -253,9 +253,9 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
     val conf = Dsv2Parquet.readConf
     // equality deletes apply to streamed micro-batches exactly like
     // batch scans (the key probe composes with the DV application)
-    val eqInfo = CommitLog.latest(path, conf).filter(_.eqFiles.nonEmpty)
-      .flatMap(s => Dsv2Equality.forSnapshot(path, Some(s),
-        Dsv2Parquet.footerSchema(path), conf))
+    val eqInfo = CommitLog.latest(path, conf).flatMap(s =>
+      Dsv2Equality.forSnapshot(path, Some(s),
+        Dsv2Parquet.tableSchema(path, Some(s.version)), conf))
     GraftParquetReaderFactory(required, pushed,
       dvMap = Dsv2Parquet.dvListing(path, conf),
       eqKeyFields = eqInfo.map(_._1).getOrElse(Array.empty),

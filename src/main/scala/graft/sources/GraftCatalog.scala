@@ -22,10 +22,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * registers exactly this plugin (`spark.sql.catalog.<name>=...`) and
  * resolves keyspace.table identifiers against cluster metadata, so
  * `SELECT … FROM cass.ks.t` and `DELETE FROM …` work as plain SQL.
- * Here an identifier `ns….t` maps to `<root>/ns…/t`; schema comes
- * from parquet footers when data exists, else from the `_schema.ddl`
- * file `createTable` writes (the cluster-metadata stand-in — same
- * fallback discipline as the provider's `graft.schema` option).
+ * Here an identifier `ns….t` maps to `<root>/ns…/t`, and its schema
+ * is the one a path read of that directory serves
+ * ([[Dsv2Parquet.tableSchema]]): the DDL the pinned version's manifest
+ * recorded, else the declared `_schema.ddl` `createTable` writes (the
+ * cluster-metadata stand-in), else the union of the live files'
+ * footers.
  *
  * Register with:
  *   spark.sql.catalog.graft       = graft.sources.GraftCatalog
@@ -52,8 +54,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   private def pathOf(ident: Identifier): String =
     (root +: (ident.namespace() :+ ident.name()).toSeq).mkString("/")
 
-  private def schemaFile(p: String) = new Path(p, Dsv2Parquet.SchemaFileName)
-
   private def hasData(p: String): Boolean =
     try Dsv2Parquet.dataFiles(p, conf).nonEmpty
     catch { case _: java.io.FileNotFoundException => false }
@@ -73,66 +73,13 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val p = pathOf(ident)
     val fs = new Path(p).getFileSystem(conf)
     fs.exists(new Path(p)) &&
-      (hasData(p) || fs.exists(schemaFile(p)))
+      (Dsv2Parquet.declaredDdl(p).isDefined || hasData(p))
   }
 
-  private def readDdl(p: String): Option[StructType] = {
-    val fs = new Path(p).getFileSystem(conf)
-    if (!fs.exists(schemaFile(p))) None
-    else {
-      val ddl = Dsv2Parquet.readText(fs, schemaFile(p))
-      Some(StructType.fromDDL(ddl))
-    }
-  }
-
-  /** Atomic DDL publish: write to a temp name, then rename over
-   * `_schema.ddl` — the same discipline the data-file committer uses —
-   * so a reader racing an ALTER can never observe a truncated or empty
-   * schema file (`StructType.fromDDL` would crash on torn bytes).
-   * Rename-over-existing is atomic on the local and HDFS filesystems
-   * this targets; concurrent ALTERs remain last-writer-wins
-   * (single-writer DDL is the documented discipline, as for any
-   * file-backed catalog without a lock service). */
-  private def writeDdl(p: String, schema: StructType): Unit = {
-    val fs = new Path(p).getFileSystem(conf)
-    fs.mkdirs(new Path(p))
-    val tmp = new Path(p,
-      s"${Dsv2Parquet.SchemaFileName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(schema.toDDL.getBytes("UTF-8")) finally out.close()
-    // Hadoop's RawLocalFileSystem.rename refuses to clobber an existing
-    // destination, so route through java.nio ATOMIC_MOVE for local
-    // paths and delete-then-rename elsewhere (the non-local window is
-    // the pre-existing one; local — every test and local[] deployment —
-    // becomes genuinely atomic)
-    val dst = schemaFile(p)
-    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    if (local) {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    } else {
-      if (fs.exists(dst)) fs.delete(dst, false)
-      require(fs.rename(tmp, dst), s"graft catalog: DDL rename failed for $p")
-    }
-  }
-
-  /** The DECLARED schema (`_schema.ddl`) wins when present — it is the
-   * cluster-metadata stand-in and may be WIDER than old data files
-   * after ALTER TABLE ADD COLUMN (the reader null-fills what a file
-   * lacks); footers serve path-written tables that never declared. */
   override def loadTable(ident: Identifier): Table = {
+    if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val p = pathOf(ident)
-    val mor = readMergeMode(p)
-    readDdl(p) match {
-      case Some(schema) => GraftParquetTable(p, schema, mor)
-      case None if hasData(p) =>
-        GraftParquetTable(p, Dsv2Parquet.footerSchema(p), mor)
-      case None => throw new NoSuchTableException(ident)
-    }
+    GraftParquetTable(p, Dsv2Parquet.tableSchema(p, None), readMergeMode(p))
   }
 
   /** SQL time travel: `SELECT … FROM cat.ns.t VERSION AS OF n` — the
@@ -150,20 +97,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     }
   }
 
-  /** Pin a loaded table to commit-log version `v`, serving the schema
-   * RECORDED at that commit when the manifest carries one — a column
-   * added by a later ALTER must not appear (null-filled) in a version
-   * committed before it existed. Manifests from before schema
-   * recording fall back to the current declared schema. */
-  private def pinVersion(t: GraftParquetTable,
-      v: Long): GraftParquetTable = {
-    val snap = CommitLog.snapshotFor(t.path, conf, Some(v)).get
-    snap.meta.get("schema") match {
-      case Some(ddl) =>
-        t.copy(schema = StructType.fromDDL(ddl), versionAsOf = Some(v))
-      case None => t.copy(versionAsOf = Some(v))
-    }
-  }
+  /** Pin a loaded table to commit-log version `v`, with that version's
+   * schema — a column added by a later ALTER must not appear
+   * (null-filled) in a version committed before it existed. */
+  private def pinVersion(t: GraftParquetTable, v: Long): GraftParquetTable =
+    t.copy(schema = Dsv2Parquet.tableSchema(t.path, Some(v)),
+      versionAsOf = Some(v))
 
   /** SQL `TIMESTAMP AS OF t`: resolve to the NEWEST version whose
    * commit timestamp is ≤ t (manifests stamp `ts` millis at publish;
@@ -197,7 +136,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     checkCommitLog(properties)
     val p = pathOf(ident)
-    writeDdl(p, schema)
+    Dsv2Parquet.declareSchema(p, schema)
     // honor the row-level operation mode, persisted next to the DDL so
     // a fresh session loads the table in the declared mode
     val mor = parseMergeMode(properties)
@@ -266,7 +205,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       changes: TableChange*): Table = {
     val p = pathOf(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val current = readDdl(p).getOrElse(Dsv2Parquet.footerSchema(p))
+    val current = Dsv2Parquet.tableSchema(p, None)
     var mor = readMergeMode(p)
     val next = changes.foldLeft(current) {
       case (s, add: TableChange.AddColumn) =>
@@ -312,7 +251,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // OF at-or-after serves the new schema. A plain parquet table is
     // imported first, while it still declares the old schema.
     val base = if (next != current) Some(CommitLog.begin(p, conf)) else None
-    writeDdl(p, next)
+    Dsv2Parquet.declareSchema(p, next)
     base.foreach(b =>
       CommitLog.commitUpdate(p, conf, "alter schema", Some(b))(Some(_)))
     if (mor) writeProps(p, Map(
@@ -388,10 +327,6 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       properties: util.Map[String, String])
       : org.apache.spark.sql.connector.catalog.StagedTable =
     staged(ident, schema, partitions, properties, replacing = true)
-
-  /** The staged DDL write, shared with [[GraftStagedTable]]. */
-  private[sources] def writeStagedDdl(p: String, schema: StructType): Unit =
-    writeDdl(p, schema)
 
   // ---- namespace surface (CREATE/DROP/SHOW NAMESPACES as plain SQL;
   // a namespace is a directory under the root, the same mapping a
@@ -897,7 +832,7 @@ private[sources] case class GraftStagedTable(catalog: GraftCatalog,
     fs.mkdirs(staging)
     // declare the schema inside the still-invisible staging dir, so
     // the published table is complete the instant the rename lands
-    catalog.writeStagedDdl(stagingPath, schema)
+    Dsv2Parquet.declareSchema(stagingPath, schema)
     // graft.* table properties (e.g. the merge mode) publish with the
     // same rename — a staged CTAS honors them like a plain CREATE
     catalog.writeStagedProps(stagingPath, props)

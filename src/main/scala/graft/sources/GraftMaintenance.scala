@@ -145,7 +145,7 @@ object GraftMaintenance {
     val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
     if (files.isEmpty) return 0
     val fmt = classOf[GraftParquetProvider].getName
-    val schema = Dsv2Parquet.footerSchema(path)
+    val schema = Dsv2Parquet.tableSchema(path, Some(base.version))
     val w = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
       .load(path)
@@ -200,7 +200,7 @@ object GraftMaintenance {
     val dir = new Path(path)
     val base = commit.base
     val fmt = classOf[GraftParquetProvider].getName
-    val schema = Dsv2Parquet.footerSchema(path)
+    val schema = Dsv2Parquet.tableSchema(path, Some(base.version))
     val targets = files.map(_.toString).toSet
     val live0 = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)

@@ -62,7 +62,9 @@ object ParquetSource {
    * (`ParquetFileFormat.readSchemaFromFooter`: the Spark schema a Spark
    * writer stored in the footer, else `ParquetToSparkSchemaConverter`
    * under the session's conf, every field nullable). Hidden names
-   * (`_x`, `.x`) are skipped as Spark's file index skips them. */
+   * (`_x`, `.x`) are skipped as Spark's file index skips them. This is
+   * the rule of Spark's file source, which [[ParquetSource]] reads
+   * through; a graft table's schema is [[Dsv2Parquet.tableSchema]]. */
   def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)

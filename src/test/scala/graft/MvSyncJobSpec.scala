@@ -178,7 +178,13 @@ class MvSyncJobSpec extends SparkSpec {
     val args = Seq(basePath, mvPath, mvSchema.pk.mkString(","))
     val first = mainLine(args, fixFlags(s"$tmp/reports-1"))
     assert(first.startsWith("totRecords: 4, skippedRecords: 0, consistentRecords: 1,"), first)
+    // the second main finds a healthy MV: its repair stages nothing, so
+    // it publishes no version and leaves no staging dir
+    def versions = CommitLog.versions(new Path(mvPath), Dsv2Parquet.readConf).toSeq
+    val healed = versions
     val second = mainLine(args, fixFlags(s"$tmp/reports-2"))
+    assert(versions == healed, "a repair with nothing to do publishes no version")
+    assert(!new File(mvPath).list().exists(_.startsWith("_staging")))
     val settings = Fixing.copy(outputDir = s"$tmp/reports-3")
     val viaConnector = MvSyncJob.run(spark, Dsv2ParquetSource(basePath),
       Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings, writeReports = false)
@@ -187,31 +193,47 @@ class MvSyncJobSpec extends SparkSpec {
   }
 
   test("main's MV schema is the connector's: a column added by ALTER TABLE is compared") {
-    val tmp = tmpDir("graft-mvsync-alter")
-    val basePath = s"$tmp/base"
-    base.withColumn("c5", lit(5)).write.parquet(basePath)
-    val cat = s"gmain_${java.lang.Long.toHexString(System.nanoTime())}"
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"$tmp/cat")
-    try {
-      mv.writeTo(s"$cat.db.mv").create()
-      spark.sql(s"ALTER TABLE $cat.db.mv ADD COLUMN c5 INT")
-      // Driver3 lands with c5 in a file of its own, part-00001-*: the
-      // frame's first partition is empty. The first file in path order
-      // is then a pre-ALTER part-00000-*, so a schema read from that
-      // one file would miss c5
-      df(spark, mvSchema, mvRow(mvSchema,
-          Map("pk" -> "Driver3", "ck1" -> "LA", "ck2" -> 2022), 12, Seq(23, 34, 45), Wt2))
-        .withColumn("c5", lit(5)).writeTo(s"$cat.db.mv").append()
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.root")
+    // c5 compared: Driver1 and Driver2 differ in it (null vs 5). A
+    // post-ALTER Driver3 row agrees; without it the ALTER is the MV's
+    // last commit and no file holds c5, so only the recorded DDL has it
+    Seq(true -> ("consistentRecords: 1, inConsistentRecords: 2, " +
+        "missingBaseTableRecords: 1, missingMvRecords: 0,"),
+      false -> ("consistentRecords: 0, inConsistentRecords: 2, " +
+        "missingBaseTableRecords: 1, missingMvRecords: 1,")).foreach {
+      case (newRow, counts) =>
+        val tmp = tmpDir("graft-mvsync-alter")
+        val (basePath, mvPath) = (s"$tmp/base", s"$tmp/cat/db/mv")
+        base.withColumn("c5", lit(5)).write.parquet(basePath)
+        val cat = s"gmain_${java.lang.Long.toHexString(System.nanoTime())}"
+        spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+        spark.conf.set(s"spark.sql.catalog.$cat.root", s"$tmp/cat")
+        try {
+          mv.writeTo(s"$cat.db.mv").create()
+          spark.sql(s"ALTER TABLE $cat.db.mv ADD COLUMN c5 INT")
+          // Driver3 lands with c5 in a file of its own, part-00001-*: the
+          // frame's first partition is empty. The first file in path order
+          // is then a pre-ALTER part-00000-*, so a schema read from that
+          // one file would miss c5
+          if (newRow)
+            df(spark, mvSchema, mvRow(mvSchema,
+                Map("pk" -> "Driver3", "ck1" -> "LA", "ck2" -> 2022), 12, Seq(23, 34, 45), Wt2))
+              .withColumn("c5", lit(5)).writeTo(s"$cat.db.mv").append()
+          assert(spark.read.format(classOf[GraftParquetProvider].getName).load(mvPath).schema ==
+            spark.table(s"$cat.db.mv").schema)
+        } finally {
+          spark.conf.unset(s"spark.sql.catalog.$cat")
+          spark.conf.unset(s"spark.sql.catalog.$cat.root")
+        }
+        val args = Seq(basePath, mvPath, mvSchema.pk.mkString(","))
+        val line = mainLine(args, Map("cass.mv.output.dir" -> s"$tmp/reports"))
+        assert(line.startsWith(s"totRecords: 4, skippedRecords: 0, $counts"), s"$newRow: $line")
+        if (!newRow) {
+          // the repair writes c5 too, so a second run finds nothing to do
+          mainLine(args, fixFlags(s"$tmp/reports-1"))
+          val second = mainLine(args, fixFlags(s"$tmp/reports-2"))
+          assert(second.startsWith("totRecords: 3, skippedRecords: 0, consistentRecords: 3, " +
+            "inConsistentRecords: 0, missingBaseTableRecords: 0, missingMvRecords: 0,"), second)
+        }
     }
-    // c5 compared: Driver1 and Driver2 differ in it (null vs 5), and
-    // Driver3 agrees
-    val line = mainLine(Seq(basePath, s"$tmp/cat/db/mv", mvSchema.pk.mkString(",")),
-      Map("cass.mv.output.dir" -> s"$tmp/reports"))
-    assert(line.startsWith("totRecords: 4, skippedRecords: 0, consistentRecords: 1, " +
-      "inConsistentRecords: 2, missingBaseTableRecords: 1, missingMvRecords: 0,"), line)
   }
 }

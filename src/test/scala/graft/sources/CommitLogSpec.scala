@@ -658,6 +658,15 @@ class CommitLogSpec extends SparkSpec {
       spark.range(5).select(col("id").as("k")).coalesce(1)
         .writeTo(s"$cat.db.t").append()                         // v2
       spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN v BIGINT")   // v3
+      // a path read serves the catalog's schema, at every version; with
+      // no row written since the ALTER no file holds v
+      val path = s"${spark.conf.get(s"spark.sql.catalog.$cat.root")}/db/t"
+      def pathSchema(v: Option[Long]) = v.fold(spark.read.format(fmt))(n =>
+        spark.read.format(fmt).option(Dsv2Parquet.VersionAsOfOption, n.toString))
+        .load(path).schema
+      assert(pathSchema(None) == spark.table(s"$cat.db.t").schema)
+      Seq(2L, 3L).foreach(n => assert(pathSchema(Some(n)) ==
+        spark.sql(s"SELECT * FROM $cat.db.t VERSION AS OF $n").schema, s"v$n"))
       spark.range(5, 8).select(col("id").as("k"), (col("id") * 10).as("v"))
         .coalesce(1).writeTo(s"$cat.db.t").append()             // v4
       // current read: both columns, old rows null-filled
