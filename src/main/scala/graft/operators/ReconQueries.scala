@@ -982,7 +982,8 @@ object ReconQueries {
         }
       graft.sources.CommitLog.commitUpdate(s"$tmp/mv", conf, "delta")(cur =>
         Some(cur.copy(dvFiles = cur.dvFiles ++ sidecars)))
-      require(graft.sources.Dsv2Parquet.hasDvs(s"$tmp/mv", conf),
+      require(graft.sources.CommitLog.latest(s"$tmp/mv", conf)
+          .exists(_.dvFiles.nonEmpty),
         "recon_classify_alltypes_dsv2: the MV table carries no DVs")
       def rd(p: String) = spark.read.format(fmt).load(p)
       MvReconciler.reconcile(

@@ -49,6 +49,14 @@ import org.apache.hadoop.fs.{FileStatus, Path}
  * ([[enable]], the analogue of Delta's CONVERT TO DELTA). Until then
  * reads serve its listing, and the history procedures refuse it.
  *
+ * One table view: every read of a version's state — its data files,
+ * deletion vectors, equality deletes, schema and the versions beside
+ * it — is one [[PlanningView]], one listing that pins the manifest it
+ * finds. [[begin]] and [[enable]] read theirs too. Only
+ * [[commitUpdate]]'s retry loop, a failed commit's cleanup and a lost
+ * import race read [[latest]] directly: each must see the newest
+ * version.
+ *
  * Scale shape: one small text file per commit, one `listStatus` per
  * planning (the same listing the data files need anyway), O(files)
  * manifest size. At 100 TB the listing is the catalog's problem
@@ -85,8 +93,8 @@ object CommitLog {
       dataFiles.nonEmpty &&
         dataFiles.forall(f => buckets.get(f).exists(_ < l.width)))
 
-    /** data file name → its DV sidecar paths under `dir` (the same
-     * shape [[Dsv2Parquet.dvListing]] serves from a raw listing). */
+    /** data file name → its DV sidecar paths under `dir` (the shape
+     * [[PlanningView.dvMap]] serves). */
     def dvMapUnder(dir: Path): Map[String, Array[String]] =
       dvFiles.toArray.flatMap { s =>
         Dsv2Parquet.dvTarget(s).map(_ -> new Path(dir, s).toString)
@@ -196,31 +204,6 @@ object CommitLog {
   def latest(path: String, conf: Configuration): Option[Snapshot] = {
     val dir = new Path(path)
     versions(dir, conf).lastOption.map(read(dir, _, conf))
-  }
-
-  /** The snapshot to read: an explicit `VERSION AS OF`, else the
-   * latest; None for a directory graft never wrote (readers serve its
-   * listing). An explicit version there fails loudly — silently
-   * serving current state would misanswer a time-travel query. */
-  def snapshotFor(path: String, conf: Configuration,
-      versionAsOf: Option[Long]): Option[Snapshot] = {
-    val dir = new Path(path)
-    snapshotIn(dir, listing(dir, conf), conf, versionAsOf)
-  }
-
-  /** [[snapshotFor]] over a listing of `dir` already taken — the scan
-   * pins its snapshot from the same listing that finds its files. */
-  def snapshotIn(dir: Path, listed: Array[FileStatus], conf: Configuration,
-      versionAsOf: Option[Long]): Option[Snapshot] = {
-    val vs = listed.flatMap(f => versionOf(f.getPath.getName))
-    versionAsOf match {
-      case Some(v) =>
-        require(vs.nonEmpty,
-          s"graft-manifest: VERSION AS OF $v on $dir, which has no " +
-            "commit log (graft has never written it)")
-        Some(read(dir, v, conf))
-      case None => vs.maxOption.map(read(dir, _, conf))
-    }
   }
 
   /** CAS-publish `snap` as version `snap.version`: true iff THIS call
@@ -359,19 +342,8 @@ object CommitLog {
   /** Start the log: snapshot the CURRENT listing into version 1 (an
    * empty version 1 for an empty directory — CREATE TABLE). Idempotent
    * — a logged table returns its latest version untouched. */
-  def enable(path: String, conf: Configuration): Snapshot = {
-    latest(path, conf).getOrElse {
-      val dir = new Path(path)
-      val data = Dsv2Parquet.dataFiles(path, conf)
-        .map(_.getPath.getName).toSet
-      val dv = Dsv2Parquet.dvListing(path, conf)
-        .values.flatten.map(new Path(_).getName).toSet
-      val snap = Snapshot(1L, data, dv,
-        meta = stamp("enable") ++ schemaMeta(path))
-      if (tryCommit(path, snap, conf)) snap
-      else latest(path, conf).get // lost an enable race — theirs stands
-    }
-  }
+  def enable(path: String, conf: Configuration): Snapshot =
+    imported(PlanningView(path, None), conf)._1
 
   /** The snapshot a write builds on — call it BEFORE the write places
    * any file in the table directory. A logged table answers its latest
@@ -380,14 +352,37 @@ object CommitLog {
    * import taken after the write's renames would count its new files as
    * old table state, and an overwrite would retire them. A directory
    * holding no table file yet is not imported — the base is the empty,
-   * unpublished version 0, and the write's own commit is version 1. */
+   * unpublished version 0, and the write's own commit is version 1.
+   * Either way one listing ([[PlanningView]]). */
   def begin(path: String, conf: Configuration): Snapshot =
-    latest(path, conf).getOrElse {
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir) && (Dsv2Parquet.dataFiles(path, conf).nonEmpty ||
-          Dsv2Parquet.dvListing(path, conf).nonEmpty)) enable(path, conf)
-      else Snapshot(0L, Set.empty, Set.empty)
+    beginView(path, conf)._1
+
+  /** [[begin]], with a view of the returned version's files taken from
+   * the same listing — only a lost import race lists again. */
+  private[sources] def beginView(path: String,
+      conf: Configuration): (Snapshot, PlanningView) = {
+    val view = PlanningView(path, None)
+    if (view.versions.isEmpty && view.dataFiles.isEmpty && view.dvMap.isEmpty)
+      (Snapshot(0L, Set.empty, Set.empty), view)
+    else imported(view, conf)
+  }
+
+  /** `view`'s latest version, or its listing published as version 1,
+   * with a view of that version's files: `view` itself, unless a
+   * concurrent import won the race — theirs stands. */
+  private def imported(view: PlanningView,
+      conf: Configuration): (Snapshot, PlanningView) =
+    view.snapshot match {
+      case Some(s) => (s, view)
+      case None =>
+        val snap = Snapshot(1L, view.dataFiles.map(_.getPath.getName).toSet,
+          view.dvMap.values.flatten.map(new Path(_).getName).toSet,
+          meta = stamp("enable") ++ schemaMeta(view.path))
+        if (tryCommit(view.path, snap, conf)) (snap, view)
+        else {
+          val theirs = latest(view.path, conf).get
+          (theirs, PlanningView(view.path, Some(theirs.version)))
+        }
     }
 
   /** Retry loop for COMMUTING updates (appends, delta deletes, DV

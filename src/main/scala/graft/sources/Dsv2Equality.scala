@@ -101,8 +101,6 @@ object Dsv2Equality {
       java.util.Arrays.sort(out)
       Some(out)
     }
-    def containsLong(table: Array[Long], v: Long): Boolean =
-      java.util.Arrays.binarySearch(table, v) >= 0
   }
 
   private[sources] def supportedKeyType(dt: DataType): Boolean = dt match {

@@ -112,7 +112,7 @@ private[sources] case class GraftParquetTable(path: String,
     // live equality deletes would be invisible to the rewrite scans'
     // position bookkeeping — fold them into files first (sidecars all
     // of whose targets were retired are inert and don't block)
-    require(CommitLog.latest(path, Dsv2Parquet.readConf).forall(s =>
+    require(PlanningView(path, None).snapshot.forall(s =>
         Dsv2Equality.liveSidecars(new Path(path), s,
           Dsv2Parquet.readConf).isEmpty),
       s"graft-parquet: $path carries live equality deletes — fold them " +
@@ -177,15 +177,16 @@ private[sources] case class GraftParquetTable(path: String,
    * correctness never depends on a guess. Pairs with the ordered
    * write: a range layout makes range deletes file-aligned. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    Dsv2Parquet.deleteDecisions(path, filters).isDefined
+    Dsv2Parquet.deleteDecisions(PlanningView(path, None), filters).isDefined
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(versionAsOf.isEmpty,
       s"graft-parquet: cannot delete from $path pinned at VERSION AS " +
         s"OF ${versionAsOf.get}")
-    val (drop, keep) = Dsv2Parquet.deleteDecisions(path, filters)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"graft-parquet: cannot metadata-delete by ${filters.mkString(", ")}"))
+    val (drop, keep) =
+      Dsv2Parquet.deleteDecisions(PlanningView(path, None), filters)
+        .getOrElse(throw new UnsupportedOperationException(
+          s"graft-parquet: cannot metadata-delete by ${filters.mkString(", ")}"))
     val conf = Dsv2Parquet.readConf
     val base = CommitLog.begin(path, conf)
     // a delete (e.g. TRUNCATE) that removes the LAST data file must not
@@ -196,11 +197,10 @@ private[sources] case class GraftParquetTable(path: String,
     // CAS attempt); the bytes stay for time travel
     CommitLog.commitUpdate(path, conf, operation = "delete",
         base = Some(base)) { cur =>
-      val removed = Dsv2Parquet.deleteDecisions(path, filters).getOrElse(
+      val removed = Dsv2Parquet.retiredBy(path, cur, filters).getOrElse(
         throw new IllegalStateException(
           s"graft-parquet: metadata delete no longer file-aligned " +
             s"(${filters.mkString(", ")}) — a file changed mid-commit"))
-        ._1.map(_.getName).toSet
       val remaining = cur.dataFiles -- removed
       Some(cur.copy(dataFiles = remaining,
         dvFiles = cur.dvFiles.filterNot(v =>
@@ -387,31 +387,72 @@ private[sources] class GraftParquetScanBuilder(path: String,
   }
 }
 
-/** ONE planning listing and the commit-log snapshot it pins (None for a
- * directory graft never wrote, whose listing is its state). Every
- * planning fact of a scan derives from it — data files and their
- * footers, deletion vectors, equality deletes, the footer-aggregate
- * gate, the clustered layout — so no two can come from different
- * versions, and a planning pays one listing RPC however many of them
- * it consults. Equal by what it pins, so scans that share one still
- * compare by their fields. */
+/** THE table view: the one answer to "which data files, deletion
+ * vectors, equality deletes, schema and versions make up this version
+ * of the table at `path`". Every planning read of a graft table —
+ * scans, the stream, the catalog's load, the write's base
+ * ([[CommitLog.begin]]), maintenance, the metadata-delete proof — builds
+ * one and reads it; nothing else lists a table directory for its
+ * state. The rule: ONE directory listing; when it shows a commit log
+ * ([[CommitLog]] manifests) the state is the MANIFEST's — the latest
+ * version, or exactly `versionAsOf` (time travel) — and files present
+ * in the directory but not in it (uncommitted, replaced, orphaned) are
+ * invisible. A directory graft never wrote (plain parquet output, read
+ * through the provider) serves its listing until a graft write imports
+ * it; a missing path reads as an empty one. So no two facts of one view
+ * can come from different versions, and a view pays one listing RPC
+ * however many of them it consults. Built per scan or decision, never
+ * cached on a table object. Equal by what it pins, so scans that share
+ * one still compare by their fields. */
 private[sources] final case class PlanningView(path: String,
     versionAsOf: Option[Long]) {
   @transient private lazy val listing: (Array[FileStatus], Boolean) = {
     val p = new Path(path)
     val fs = p.getFileSystem(Dsv2Parquet.readConf)
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory) (fs.listStatus(p), true) else (Array(st), false)
+    try {
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory) (fs.listStatus(p), true) else (Array(st), false)
+    } catch {
+      case _: java.io.FileNotFoundException => (Array.empty[FileStatus], true)
+    }
   }
 
-  @transient lazy val snapshot: Option[CommitLog.Snapshot] =
-    if (!listing._2) None
-    else CommitLog.snapshotIn(new Path(path), listing._1,
-      Dsv2Parquet.readConf, versionAsOf)
+  /** The published commit-log versions, ascending (empty: no log). */
+  @transient lazy val versions: Array[Long] =
+    listing._1.flatMap(f => CommitLog.versionOf(f.getPath.getName)).sorted
 
-  @transient lazy val dataFiles: Array[FileStatus] =
-    Dsv2Parquet.dataFilesFrom(listing._1, new Path(path), listing._2,
-      snapshot)
+  /** The pinned manifest: `versionAsOf`, else the latest; None for a
+   * directory graft never wrote. An explicit version there fails
+   * loudly — silently serving current state would misanswer a
+   * time-travel query. */
+  @transient lazy val snapshot: Option[CommitLog.Snapshot] = {
+    val dir = new Path(path)
+    versionAsOf match {
+      case Some(v) =>
+        require(versions.nonEmpty,
+          s"graft-manifest: VERSION AS OF $v on $dir, which has no " +
+            "commit log (graft has never written it)")
+        Some(CommitLog.read(dir, v, Dsv2Parquet.readConf))
+      case None => versions.lastOption.map(CommitLog.read(dir, _,
+        Dsv2Parquet.readConf))
+    }
+  }
+
+  /** The version's data files, in name order for a logged table. */
+  @transient lazy val dataFiles: Array[FileStatus] = {
+    val files = listing._1.filter { f =>
+      val n = f.getPath.getName
+      (!listing._2 || f.isFile) && n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")
+    }
+    snapshot.fold(files) { s =>
+      val byName = files.map(f => f.getPath.getName -> f).toMap
+      s.dataFiles.toArray.sorted.map(n => byName.getOrElse(n,
+        throw new IllegalStateException(
+          s"graft-manifest: version ${s.version} of $path references " +
+            s"missing data file $n (expired or physically deleted)")))
+    }
+  }
 
   /** Each data file's row groups, keyed by the file's full path. */
   @transient lazy val footerBlocks
@@ -421,14 +462,23 @@ private[sources] final case class PlanningView(path: String,
         blocks.map(b => f.getPath.toString -> b)
       }
 
-  /** The pinned version's table schema ([[Dsv2Parquet.tableSchema]]). */
+  /** The pinned version's table schema ([[Dsv2Parquet.tableSchema]]);
+   * the footers are read only when neither DDL exists. */
   @transient lazy val schema: StructType =
-    Dsv2Parquet.schemaIn(path, snapshot, dataFiles)
+    snapshot.flatMap(_.meta.get("schema"))
+      .orElse(Dsv2Parquet.declaredDdl(path))
+      .fold(Dsv2Parquet.footerUnion(path, dataFiles))(StructType.fromDDL)
 
-  /** Data file name → its deletion-vector sidecar paths. */
+  /** Data file name → its deletion-vector sidecar paths: the
+   * manifest's sidecars, or every sidecar a directory graft never wrote
+   * lists. Shipped to readers, so a delta commit landing mid-query is
+   * invisible, like any file-source snapshot. */
   @transient lazy val dvMap: Map[String, Array[String]] =
-    Dsv2Parquet.dvListingFrom(listing._1.map(_.getPath), new Path(path),
-      snapshot)
+    snapshot.fold {
+      listing._1.map(_.getPath)
+        .flatMap(s => Dsv2Parquet.dvTarget(s.getName).map(_ -> s.toString))
+        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
+    }(_.dvMapUnder(new Path(path)))
 }
 
 /** The metadata-only aggregate scan: one partition, one row, values
@@ -510,11 +560,14 @@ private[sources] case class GraftParquetScan(path: String,
 
   override def filter(filters: Array[Filter]): Unit = {
     // keep what EITHER path can use: record-level parquet predicates
-    // (translate) or driver-side row-group stats pruning (inBounds —
-    // which also covers the empty IN () that translate can't express)
-    runtime = filters.filter(f =>
-      Dsv2Parquet.translate(f, required).isDefined ||
-        Dsv2Parquet.inBounds(Array(f)).nonEmpty)
+    // (translate) or driver-side row-group stats pruning — an integer
+    // `In`, which also covers the empty and null IN that translate
+    // can't express
+    runtime = filters.filter {
+      case In(_, vs) if vs.forall(v =>
+          v == null || v.isInstanceOf[Long] || v.isInstanceOf[Int]) => true
+      case f => Dsv2Parquet.translate(f, required).isDefined
+    }
     Dsv2RuntimeProbe.forPath(path).filterCalls.incrementAndGet()
   }
 
@@ -605,7 +658,6 @@ private[sources] case class GraftParquetScan(path: String,
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val bounds = Dsv2Parquet.inBounds(runtime)
     val survivors = footerBlocks.filter { case (_, b) =>
       // one partition per row group, addressed by byte range —
       // parquet selects row groups by midpoint offset;
@@ -614,8 +666,7 @@ private[sources] case class GraftParquetScan(path: String,
       // launches (the IO win dynamic pruning exists for), and PUSHED
       // band predicates prune the same way (driver-side, so a pruned
       // row group never launches a task)
-      Dsv2Parquet.blockMayMatch(b, bounds) &&
-        Dsv2Parquet.blockMayMatchFilters(b, pushed)
+      Dsv2Parquet.blockMayMatchFilters(b, pushed ++ runtime)
     }
     // pushed-limit row-group truncation: with NO predicate in play
     // (pushed or runtime — either makes per-group yield unknowable),
@@ -1109,35 +1160,6 @@ private[graft] object Dsv2Parquet {
     name
   }
 
-  /** The table's sidecar map from ONE directory listing:
-   * data file name → its sidecar paths. Taken at PLANNING time and
-   * shipped to readers (snapshot semantics — a delta commit landing
-   * mid-query is invisible, like any file-source snapshot). */
-  def dvListing(path: String,
-      conf: Configuration): Map[String, Array[String]] =
-    dvListing(path, conf, None)
-
-  /** Same snapshot rule as [[dataFiles]]: a graft table serves the
-   * manifest's sidecar set (latest or `versionAsOf`), a directory graft
-   * never wrote the raw listing. */
-  def dvListing(path: String, conf: Configuration,
-      versionAsOf: Option[Long]): Map[String, Array[String]] = {
-    val p = new Path(path)
-    val all = CommitLog.listing(p, conf)
-    dvListingFrom(all.map(_.getPath), p,
-      CommitLog.snapshotIn(p, all, conf, versionAsOf))
-  }
-
-  /** [[dvListing]] over a listing ALREADY TAKEN and the snapshot it
-   * pins ([[PlanningView]]): the snapshot's sidecars, or for a
-   * directory graft never wrote every sidecar listed. */
-  def dvListingFrom(all: Array[Path], p: Path,
-      snap: Option[CommitLog.Snapshot]): Map[String, Array[String]] =
-    snap.fold {
-      all.flatMap(s => dvTarget(s.getName).map(_ -> s.toString))
-        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
-    }(_.dvMapUnder(p))
-
   /** `_dv-<datafile>-<uuid>.bin` → `<datafile>`; data file names always
    * end in .parquet (and contain hyphens, as does the uuid), so the
    * unambiguous cut is after the LAST ".parquet" before the uuid. */
@@ -1150,13 +1172,6 @@ private[graft] object Dsv2Parquet {
       if (cut < 0) None
       else Some(n.substring(0, cut + ".parquet".length))
     }
-
-  /** Any deletion vector under this table dir? Drives the scan-side
-   * gates: footer-served aggregates off (row counts are no longer
-   * exact), pushed-limit row-group truncation off (per-group yield
-   * unknowable). */
-  def hasDvs(path: String, conf: Configuration): Boolean =
-    dvListing(path, conf).nonEmpty
 
   /** Metadata-column name → the physical wide column carrying its
    * bytes: `writetime(c)` ↔ `writetime_c`, `ttl(c)` ↔ `ttl_c` (the
@@ -1252,8 +1267,9 @@ private[graft] object Dsv2Parquet {
    * is undecidable, any filter form is unsupported, or the filter list
    * is empty. Supported forms: </, <=, >, >=, = on int/long columns
    * with present statistics; a row group with nulls in the filtered
-   * column can never be all-match (nulls don't satisfy comparisons). */
-  def deleteDecisions(path: String,
+   * column can never be all-match (nulls don't satisfy comparisons).
+   * The proof covers exactly `view`'s data files. */
+  def deleteDecisions(view: PlanningView,
       filters: Array[Filter]): Option[(Array[Path], Array[Path])] = {
     if (filters.isEmpty) return None
     sealed trait Tri
@@ -1313,7 +1329,7 @@ private[graft] object Dsv2Parquet {
       }
     }
 
-    val files = dataFiles(path, conf)
+    val files = view.dataFiles
     val drop = scala.collection.mutable.ArrayBuffer.empty[Path]
     val keep = scala.collection.mutable.ArrayBuffer.empty[Path]
     val footers = fileFooters(files, conf)
@@ -1333,6 +1349,17 @@ private[graft] object Dsv2Parquet {
     }
     Some((drop.toArray, keep.toArray))
   }
+
+  /** The names of the data files a commit on `cur` retires under
+   * `filters` — [[deleteDecisions]] proved inside the CAS closure over
+   * exactly `cur`'s files, so a file landed since planning is decided
+   * too; None when one no longer is. The empty unpublished version 0
+   * retires nothing. */
+  def retiredBy(path: String, cur: CommitLog.Snapshot,
+      filters: Array[Filter]): Option[Set[String]] =
+    if (cur.version == 0L) Some(Set.empty)
+    else deleteDecisions(PlanningView(path, Some(cur.version)), filters)
+      .map(_._1.map(_.getName).toSet)
 
   def pathOf(options: CaseInsensitiveStringMap): String = {
     val p = options.get("path")
@@ -1390,49 +1417,6 @@ private[graft] object Dsv2Parquet {
     out
   }
 
-  def dataFiles(path: String, conf: Configuration): Array[FileStatus] =
-    dataFiles(path, conf, None)
-
-  /** The table's data files. ONE directory listing; when the listing
-   * shows a commit log ([[CommitLog]] manifests), the returned set is
-   * the MANIFEST's — the latest version's, or exactly `versionAsOf`'s
-   * (time travel). Files present in the directory but not in the
-   * manifest (uncommitted, replaced, orphaned) are invisible. A
-   * directory graft never wrote (plain parquet output, read through the
-   * provider) serves its listing until a graft write imports it. */
-  def dataFiles(path: String, conf: Configuration,
-      versionAsOf: Option[Long]): Array[FileStatus] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    if (!st.isDirectory) dataFilesFrom(Array(st), p, isDir = false, None)
-    else {
-      val files = fs.listStatus(p)
-      dataFilesFrom(files, p, isDir = true,
-        CommitLog.snapshotIn(p, files, conf, versionAsOf))
-    }
-  }
-
-  /** [[dataFiles]] over a listing already taken and the snapshot it
-   * pins ([[CommitLog.snapshotIn]]; None serves the listing). */
-  def dataFilesFrom(all: Array[FileStatus], p: Path, isDir: Boolean,
-      snap: Option[CommitLog.Snapshot]): Array[FileStatus] = {
-    val files = if (isDir) all.filter(_.isFile) else all
-    val base = files.filter { f =>
-      val n = f.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
-    snap match {
-      case None => base
-      case Some(s) =>
-        val byName = base.map(f => f.getPath.getName -> f).toMap
-        s.dataFiles.toArray.sorted.map(n => byName.getOrElse(n,
-          throw new IllegalStateException(
-            s"graft-manifest: version ${s.version} of $p references " +
-              s"missing data file $n (expired or physically deleted)")))
-    }
-  }
-
   /** One file's schema from its own footer (executor-side, per task;
    * served from the JVM footer cache — the tasks of a multi-row-group
    * file share one footer read per executor). */
@@ -1461,15 +1445,7 @@ private[graft] object Dsv2Parquet {
   def tableSchema(path: String, versionAsOf: Option[Long]): StructType =
     PlanningView(path, versionAsOf).schema
 
-  /** [[tableSchema]] over a snapshot and its file set already resolved;
-   * the footers are read only when neither DDL exists. */
-  private[sources] def schemaIn(path: String,
-      snap: Option[CommitLog.Snapshot],
-      files: => Array[FileStatus]): StructType =
-    snap.flatMap(_.meta.get("schema")).orElse(declaredDdl(path))
-      .fold(footerUnion(path, files))(StructType.fromDDL)
-
-  private def footerUnion(path: String,
+  private[sources] def footerUnion(path: String,
       files: Array[FileStatus]): StructType = {
     require(files.nonEmpty, s"no parquet data files under $path")
     fileFooters(files, readConf).map { case (schema, _, _) =>
@@ -1573,51 +1549,8 @@ private[graft] object Dsv2Parquet {
       StructField(f.getName, dt, nullable = true)
     }.toArray)
 
-  /** Conjunctive [lo, hi] bounds per integer column from runtime `In`
-   * filters — the driver-side row-group pruning form. An empty or
-   * all-null value set yields the impossible range (MaxValue,
-   * MinValue), which prunes every stats-bearing block: `IN ()` matches
-   * no row. Non-integer columns prune record-level only (string
-   * min/max truncation semantics stay the parquet reader's problem). */
-  def inBounds(runtime: Array[Filter]): Map[String, (Long, Long)] = {
-    val ranges = runtime.flatMap {
-      case In(n, vs) if vs.forall(v =>
-          v == null || v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
-        val longs = vs.collect { case x: Long => x; case x: Int => x.toLong }
-        Some(n -> (if (longs.isEmpty) (Long.MaxValue, Long.MinValue)
-                   else (longs.min, longs.max)))
-      case _ => None
-    }
-    // multiple In filters on one column intersect
-    ranges.groupBy(_._1).map { case (n, rs) =>
-      n -> (rs.map(_._2._1).max, rs.map(_._2._2).min)
-    }
-  }
-
-  /** Can this row group contain any row inside every bound? Missing or
-   * empty statistics keep the block (pruning is an optimization, never
-   * a correctness dependency); a chunk whose min/max excludes the whole
-   * value range cannot match — nulls never satisfy `In`, so null counts
-   * are irrelevant. */
-  def blockMayMatch(b: org.apache.parquet.hadoop.metadata.BlockMetaData,
-      bounds: Map[String, (Long, Long)]): Boolean =
-    bounds.forall { case (colName, (lo, hi)) =>
-      b.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-        case None => true
-        case Some(c) =>
-          val st = c.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue) true
-          else (st.genericGetMin, st.genericGetMax) match {
-            case (mn: java.lang.Long, mx: java.lang.Long) =>
-              mx >= lo && mn <= hi
-            case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-              mx.longValue >= lo && mn.longValue <= hi
-            case _ => true
-          }
-      }
-    }
-
-  /** Can this row group contain a row satisfying EVERY pushed filter?
+  /** Can this row group contain a row satisfying EVERY filter — the
+   * scan's pushed ones and the runtime (dynamic-pruning) `In`s alike?
    * false only on a footer-statistics PROOF of none-match (int/long
    * min/max); anything unsupported, missing, or uncertain keeps the
    * block — pushed filters are residual-advisory, so this pruning is
@@ -1661,8 +1594,10 @@ private[graft] object Dsv2Parquet {
         case In(n, vs) => stats(n) match {
           case Some((mn, mx)) =>
             // per-value: provably empty only when NO candidate value
-            // falls inside the chunk band (nulls never satisfy In)
-            vs.exists(v => lit(v).forall(x => mn <= x && x <= mx))
+            // falls inside the chunk band, so `IN ()` prunes every
+            // stats-bearing row group. A null never satisfies In; a
+            // non-integer value can't be placed and keeps the block.
+            vs.exists(v => v != null && lit(v).forall(x => mn <= x && x <= mx))
           case None => true
         }
         case _ => true
@@ -1716,7 +1651,8 @@ private[graft] object Dsv2Parquet {
       // the runtime-filter shape: dynamic pruning hands the scan
       // In(joinKey, broadcastSideValues). Null values are unpushable
       // (IN's null never matches, but parquet's dictionary test has no
-      // null slot); the empty set is handled by inBounds pruning.
+      // null slot); the empty set prunes driver-side
+      // (blockMayMatchFilters).
       case In(n, vs) if vs.nonEmpty && !vs.contains(null) =>
         typed(n) match {
           case Some(LongType) if vs.forall(_.isInstanceOf[Long]) =>

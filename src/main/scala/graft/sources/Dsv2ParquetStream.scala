@@ -163,8 +163,8 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
    * them through an offset — a crash between persist and processing
    * replays identically. */
   private def discover(): Unit = {
-    // ONE listStatus per trigger serves both views (same discipline as
-    // the batch scan's single planning listing), and ORDER MATTERS:
+    // ONE view per trigger serves both the files and the versions (the
+    // batch scan's single planning listing), and ORDER MATTERS:
     // the data-file view derives from a listing taken at-or-before the
     // version set — a rewrite publishing mid-discovery only makes the
     // skip-set NEWER than the listing — every rewrite output the
@@ -173,16 +173,10 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
     // computation and the listing). `skipped` accumulates retired
     // outputs too, so a stale listing's already-replaced rewrite files
     // stay filtered.
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    val st = fs.getFileStatus(dir)
-    val all = if (st.isDirectory) fs.listStatus(dir) else Array(st)
-    val listed = Dsv2Parquet.dataFilesFrom(all, dir, st.isDirectory,
-      if (st.isDirectory) CommitLog.snapshotIn(dir, all, conf, None)
-      else None).map(_.getPath.toString)
-    val vs = all.flatMap(s => CommitLog.versionOf(s.getPath.getName)).sorted
+    val view = PlanningView(path, None)
+    val listed = view.dataFiles.map(_.getPath.toString)
     val skip: Set[String] =
-      if (initialized) maintenanceIntroduced(vs) else Set.empty
+      if (initialized) maintenanceIntroduced(view.versions) else Set.empty
     val (skippedNow, fresh) = listed.filterNot(seen)
       .partition(f => skip.contains(new Path(f).getName))
     if (fresh.nonEmpty || skippedNow.nonEmpty) {
@@ -250,14 +244,15 @@ private[sources] class GraftParquetMicroBatchStream(path: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     // projection resolution is per file when each reader opens —
     // micro-batches routinely span files from different writers
-    val conf = Dsv2Parquet.readConf
     // equality deletes apply to streamed micro-batches exactly like
-    // batch scans (the key probe composes with the DV application)
-    val eqInfo = CommitLog.latest(path, conf).flatMap(s =>
-      Dsv2Equality.forSnapshot(path, Some(s),
-        Dsv2Parquet.tableSchema(path, Some(s.version)), conf))
+    // batch scans (the key probe composes with the DV application);
+    // deletes, their key schema and the DVs come from ONE view, so from
+    // one version
+    val view = PlanningView(path, None)
+    val eqInfo = Dsv2Equality.forSnapshot(path, view.snapshot, view.schema,
+      Dsv2Parquet.readConf)
     GraftParquetReaderFactory(required, pushed,
-      dvMap = Dsv2Parquet.dvListing(path, conf),
+      dvMap = view.dvMap,
       eqKeyFields = eqInfo.map(_._1).getOrElse(Array.empty),
       eqFilters = eqInfo.map(_._2).getOrElse(Array.empty))
   }

@@ -73,7 +73,7 @@ private[sources] case class GraftParquetWriteBuilder(path: String,
   override def canOverwrite(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     filters.forall(_ == org.apache.spark.sql.sources.AlwaysTrue()) ||
-      Dsv2Parquet.deleteDecisions(path, filters).isDefined
+      Dsv2Parquet.deleteDecisions(PlanningView(path, None), filters).isDefined
 
   override def overwrite(
       filters: Array[org.apache.spark.sql.sources.Filter]): WriteBuilder = {
@@ -198,12 +198,11 @@ private[sources] case class GraftParquetBatchWrite(path: String,
       val removedNames: Set[String] = (
         if (truncateFirst) cur.dataFiles
         else if (overwriteFilters.nonEmpty)
-          Dsv2Parquet.deleteDecisions(path, overwriteFilters).getOrElse(
+          Dsv2Parquet.retiredBy(path, cur, overwriteFilters).getOrElse(
             throw new IllegalStateException(
               "graft-parquet overwrite: the predicate is no longer " +
                 s"file-aligned (${overwriteFilters.mkString(", ")}) — " +
                 "a file changed between planning and commit"))
-            ._1.map(_.getName).toSet
         else Set.empty[String]) -- stagedNames
       removedCount = removedNames.size
       val remaining = cur.dataFiles -- removedNames

@@ -2,12 +2,8 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, Table, TableCatalog, TableChange}
@@ -54,9 +50,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   private def pathOf(ident: Identifier): String =
     (root +: (ident.namespace() :+ ident.name()).toSeq).mkString("/")
 
-  private def hasData(p: String): Boolean =
-    try Dsv2Parquet.dataFiles(p, conf).nonEmpty
-    catch { case _: java.io.FileNotFoundException => false }
+  /** A table exists when it declares a schema or `view` shows a data
+   * file; the view is listed only for an undeclared one. */
+  private def exists(p: String, view: PlanningView): Boolean =
+    Dsv2Parquet.declaredDdl(p).isDefined || view.dataFiles.nonEmpty
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = new Path((root +: namespace.toSeq).mkString("/"))
@@ -71,15 +68,16 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   override def tableExists(ident: Identifier): Boolean = {
     val p = pathOf(ident)
-    val fs = new Path(p).getFileSystem(conf)
-    fs.exists(new Path(p)) &&
-      (Dsv2Parquet.declaredDdl(p).isDefined || hasData(p))
+    exists(p, PlanningView(p, None))
   }
 
+  /** One view per load: the existence check and the schema share its
+   * listing. */
   override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val p = pathOf(ident)
-    GraftParquetTable(p, Dsv2Parquet.tableSchema(p, None), readMergeMode(p))
+    val view = PlanningView(p, None)
+    if (!exists(p, view)) throw new NoSuchTableException(ident)
+    GraftParquetTable(p, view.schema, readMergeMode(p))
   }
 
   /** SQL time travel: `SELECT … FROM cat.ns.t VERSION AS OF n` — the
@@ -426,10 +424,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
    * row per published version; rollback: the new version). */
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.length == 1 && namespace(0) == "system")
-      Array("compact_table", "compact_deletion_vectors",
-        "compact_small_files", "rewrite_clustered", "expire_snapshots",
-        "snapshots", "rollback_to_version", "remove_orphan_files")
-        .map(n => Identifier.of(namespace, n))
+      procedures.map(p => Identifier.of(namespace, p.name)).toArray
     else Array.empty
 
   override def loadProcedure(ident: Identifier)
@@ -437,321 +432,110 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     require(ident.namespace().sameElements(Array("system")),
       s"graft catalog: procedures live in the `system` namespace, not " +
         s"${ident.namespace().mkString(".")}")
-    ident.name() match {
-      case "compact_table" =>
-        GraftCompactProcedure("compact_table", root, major = true)
-      case "compact_deletion_vectors" =>
-        GraftCompactProcedure("compact_deletion_vectors", root, major = false)
-      case "compact_small_files" => GraftBinpackProcedure(root)
-      case "rewrite_clustered" => GraftReclusterProcedure(root)
-      case "expire_snapshots" => GraftExpireProcedure(root)
-      case "snapshots" => GraftSnapshotsProcedure(root)
-      case "rollback_to_version" => GraftRollbackProcedure(root)
-      case "remove_orphan_files" => GraftOrphanProcedure(root)
-      case other => throw new UnsupportedOperationException(
-        s"graft catalog: unknown procedure $other")
-    }
+    procedures.find(_.name == ident.name()).getOrElse(
+      throw new UnsupportedOperationException(
+        s"graft catalog: unknown procedure ${ident.name()}"))
+  }
+
+  /** The one procedure registry both methods above read. Every procedure
+   * takes the table ('ns.table') first and runs on the driver. */
+  private lazy val procedures: Seq[GraftProcedure] = {
+    import org.apache.spark.sql.SparkSession.{active => spark}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    def path(in: InternalRow) =
+      (root +: in.getUTF8String(0).toString.split('.').toSeq).mkString("/")
+    def csv(in: InternalRow, i: Int) = in.getUTF8String(i).toString
+      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    def str(v: Option[String]) =
+      v.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull
+    def count(col: String) = new StructType().add(col, IntegerType, false)
+    val table = "table" -> StringType
+    Seq(
+      GraftProcedure("compact_table",
+        "rewrite DV-carrying data files to fold deletion vectors",
+        Seq(table), count("files"))(in =>
+        Seq(Seq(GraftMaintenance.compactDeletionVectors(spark, path(in))))),
+      GraftProcedure("compact_deletion_vectors",
+        "merge each data file's deletion-vector sidecars into one",
+        Seq(table), count("files"))(in =>
+        Seq(Seq(GraftMaintenance.compactDvSidecars(path(in))))),
+      GraftProcedure("compact_small_files",
+        "bin-pack data files below target_mb into ~target-sized files",
+        Seq(table, "target_mb" -> IntegerType), count("packed_files"))(in =>
+        Seq(Seq(GraftMaintenance.compactSmallFiles(spark, path(in),
+          in.getInt(1).toLong * 1024L * 1024L)))),
+      // rewrite through the sink-demanded hash exchange and record the
+      // layout — restores the zero-exchange storage-partitioned
+      // reconcile after repairs turned the claim off; '' for
+      // sort_within skips the within-bucket sort
+      GraftProcedure("rewrite_clustered",
+        "rewrite the table hash-clustered and record the SPJ layout",
+        Seq(table, "cluster_by" -> StringType, "buckets" -> IntegerType,
+          "sort_within" -> StringType), count("replaced_files"))(in =>
+        Seq(Seq(GraftMaintenance.reclusterTable(spark, path(in), csv(in, 1),
+          in.getInt(2), csv(in, 3))))),
+      GraftProcedure("expire_snapshots",
+        "drop commit-log versions past retain_last, deleting their orphaned files",
+        Seq(table, "retain_last" -> IntegerType), count("deleted_files"))(in =>
+        Seq(Seq(GraftMaintenance.expireSnapshots(path(in), in.getInt(1))))),
+      // one row per published version: the DESCRIBE HISTORY face of the
+      // log an operator consults before VERSION AS OF or expiry
+      GraftProcedure("snapshots",
+        "list the table's published commit-log versions", Seq(table),
+        new StructType().add("version", LongType, false)
+          .add("data_files", IntegerType, false)
+          .add("dv_files", IntegerType, false)
+          .add("eq_files", IntegerType, false)
+          .add("operation", StringType).add("ts_millis", LongType)
+          .add("schema", StringType)) { in =>
+        val dir = new Path(path(in))
+        CommitLog.versions(dir, conf).toSeq.map { v =>
+          val s = CommitLog.read(dir, v, conf)
+          Seq(s.version, s.dataFiles.size, s.dvFiles.size, s.eqFiles.size,
+            str(s.meta.get("operation")),
+            s.meta.get("ts").flatMap(_.toLongOption)
+              .map(java.lang.Long.valueOf).orNull,
+            str(s.meta.get("schema")))
+        }
+      },
+      // metadata-only undo that preserves history; returns the newly
+      // published version
+      GraftProcedure("rollback_to_version",
+        "set the table back to a prior commit-log version (history preserved)",
+        Seq(table, "version" -> LongType),
+        new StructType().add("version", LongType, false))(in =>
+        Seq(Seq(GraftMaintenance.rollbackTo(path(in), in.getLong(1))))),
+      GraftProcedure("remove_orphan_files",
+        "delete unreferenced table files older than the age guard",
+        Seq(table, "older_than_ms" -> LongType), count("deleted_files"))(in =>
+        Seq(Seq(GraftMaintenance.removeOrphanFiles(path(in),
+          in.getLong(1))))))
   }
 }
 
-/** One maintenance procedure (major = fold deletion vectors into
- * rewritten files; minor = merge each file's sidecars). The body runs
- * on the driver through [[GraftMaintenance]]; the result is one local
- * row with the affected file count. */
-private[sources] case class GraftCompactProcedure(procName: String,
-    root: String, major: Boolean)
+/** One CALL procedure: its parameters (all IN, in order), its result
+ * schema, and a body that runs on the driver and returns the result
+ * rows — served as one local scan. */
+private[sources] final case class GraftProcedure(name: String,
+    override val description: String, params: Seq[(String, DataType)],
+    result: StructType)(body: InternalRow => Seq[Seq[Any]])
     extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
     with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = procName
-  override def description(): String =
-    if (major) "rewrite DV-carrying data files to fold deletion vectors"
-    else "merge each data file's deletion-vector sidecars into one"
 
   override def bind(inputType: StructType): BoundProcedure = this
   override def isDeterministic: Boolean = false
   override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build())
+    params.map { case (n, t) => ProcedureParameter.in(n, t).build() }.toArray
 
   override def call(input: InternalRow)
       : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val n =
-      if (major) GraftMaintenance.compactDeletionVectors(
-        org.apache.spark.sql.SparkSession.active, path)
-      else GraftMaintenance.compactDvSidecars(path)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](n))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("files", IntegerType, nullable = false)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `compact_small_files('ns.table', target_mb)`: bin-pack every data
- * file smaller than the target into ~target-sized rewritten files
- * ([[GraftMaintenance.compactSmallFiles]]). Returns one row with the
- * packed input-file count. */
-private[sources] case class GraftBinpackProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "compact_small_files"
-  override def description(): String =
-    "bin-pack data files below target_mb into ~target-sized files"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("target_mb", IntegerType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val targetMb = input.getInt(1)
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val n = GraftMaintenance.compactSmallFiles(
-      org.apache.spark.sql.SparkSession.active, path,
-      targetMb.toLong * 1024L * 1024L)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](n))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("packed_files", IntegerType, nullable = false)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `rewrite_clustered('ns.table', 'c1,c2', buckets, 'sort1,...')`:
- * rewrite the whole table through the sink-demanded hash exchange and
- * publish it with its clustered layout recorded
- * ([[GraftMaintenance.reclusterTable]]) — restores the zero-exchange
- * storage-partitioned reconcile after repairs turned the claim off.
- * Pass '' for sort_within to skip the
- * within-bucket sort. Returns one row with the replaced file count. */
-private[sources] case class GraftReclusterProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "rewrite_clustered"
-  override def description(): String =
-    "rewrite the table hash-clustered and record the SPJ layout"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("cluster_by",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("buckets", IntegerType).build(),
-    ProcedureParameter.in("sort_within",
-      org.apache.spark.sql.types.StringType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val clusterBy = input.getUTF8String(1).toString.split(',')
-      .map(_.trim).filter(_.nonEmpty).toSeq
-    val buckets = input.getInt(2)
-    val sortWithin = input.getUTF8String(3).toString.split(',')
-      .map(_.trim).filter(_.nonEmpty).toSeq
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val n = GraftMaintenance.reclusterTable(
-      org.apache.spark.sql.SparkSession.active, path, clusterBy, buckets,
-      sortWithin)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](n))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("replaced_files", IntegerType, nullable = false)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `snapshots('ns.table')`: one row per published commit-log version
- * (version, data/dv/eq file counts) — the DESCRIBE HISTORY face of
- * the log, the surface an operator consults before `VERSION AS OF`
- * or `expire_snapshots`. */
-private[sources] case class GraftSnapshotsProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "snapshots"
-  override def description(): String =
-    "list the table's published commit-log versions"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] =
-    Array(ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val conf = Dsv2Parquet.readConf
-    val dir = new Path(path)
-    val out: Array[InternalRow] = CommitLog.versions(dir, conf).map { v =>
-      val s = CommitLog.read(dir, v, conf)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](s.version, s.dataFiles.size, s.dvFiles.size,
-          s.eqFiles.size,
-          s.meta.get("operation")
-            .map(org.apache.spark.unsafe.types.UTF8String.fromString)
-            .orNull,
-          s.meta.get("ts").flatMap(_.toLongOption)
-            .map(java.lang.Long.valueOf).orNull,
-          s.meta.get("schema")
-            .map(org.apache.spark.unsafe.types.UTF8String.fromString)
-            .orNull))
-    }
+    val out = body(input).map(r => new org.apache.spark.sql.catalyst
+      .expressions.GenericInternalRow(r.toArray): InternalRow).toArray
     java.util.Collections.singletonList(
       new org.apache.spark.sql.connector.read.LocalScan {
         override def rows(): Array[InternalRow] = out
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("version", org.apache.spark.sql.types.LongType,
-            nullable = false),
-          StructField("data_files", IntegerType, nullable = false),
-          StructField("dv_files", IntegerType, nullable = false),
-          StructField("eq_files", IntegerType, nullable = false),
-          StructField("operation", org.apache.spark.sql.types.StringType,
-            nullable = true),
-          StructField("ts_millis", org.apache.spark.sql.types.LongType,
-            nullable = true),
-          StructField("schema", org.apache.spark.sql.types.StringType,
-            nullable = true)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `expire_snapshots('ns.table', retain_last)`: drop commit-log
- * versions older than the newest `retain_last` and physically delete
- * the files only they reference — the reclamation half of the log's
- * "commits never physically delete" contract ([[GraftMaintenance
- * .expireSnapshots]]). Returns one row with the deleted file count. */
-private[sources] case class GraftExpireProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "expire_snapshots"
-  override def description(): String =
-    "drop commit-log versions past retain_last, deleting their orphaned files"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("retain_last", IntegerType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val retain = input.getInt(1)
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val n = GraftMaintenance.expireSnapshots(path, retain)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](n))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("deleted_files", IntegerType, nullable = false)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `rollback_to_version('ns.table', v)`: publish a new commit-log
- * version whose file sets are exactly version `v`'s — metadata-only
- * undo preserving history ([[GraftMaintenance.rollbackTo]]). Returns
- * one row with the newly published version. */
-private[sources] case class GraftRollbackProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "rollback_to_version"
-  override def description(): String =
-    "set the table back to a prior commit-log version (history preserved)"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("version",
-      org.apache.spark.sql.types.LongType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val version = input.getLong(1)
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val v = GraftMaintenance.rollbackTo(path, version)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](v))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("version", org.apache.spark.sql.types.LongType,
-            nullable = false)))
-      }: org.apache.spark.sql.connector.read.Scan).iterator()
-  }
-}
-
-/** `remove_orphan_files('ns.table', older_than_ms)`: delete
- * table-shaped files no published commit-log version references and
- * older than the age guard ([[GraftMaintenance.removeOrphanFiles]]).
- * Returns one row with the deleted file count. */
-private[sources] case class GraftOrphanProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "remove_orphan_files"
-  override def description(): String =
-    "delete unreferenced table files older than the age guard"
-
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table",
-      org.apache.spark.sql.types.StringType).build(),
-    ProcedureParameter.in("older_than_ms",
-      org.apache.spark.sql.types.LongType).build())
-
-  override def call(input: InternalRow)
-      : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val table = input.getUTF8String(0).toString
-    val olderThan = input.getLong(1)
-    val path = (root +: table.split('.').toSeq).mkString("/")
-    val n = GraftMaintenance.removeOrphanFiles(path, olderThan)
-    val out = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](n))
-    java.util.Collections.singletonList(
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def rows(): Array[InternalRow] = Array(out)
-        override def readSchema(): StructType = StructType(Seq(
-          StructField("deleted_files", IntegerType, nullable = false)))
+        override def readSchema(): StructType = result
       }: org.apache.spark.sql.connector.read.Scan).iterator()
   }
 }

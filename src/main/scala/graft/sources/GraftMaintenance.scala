@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions.col
  * and compaction-vs-delta is a detected version conflict: whichever
  * publishes second sees the other's change, and the non-commuting
  * loser aborts loudly — deletes are never lost. A plain parquet
- * directory is imported as version 1 first ([[CommitLog.begin]]).
+ * directory is imported as version 1 first ([[CommitLog.begin]]), and
+ * each job plans from the one listing its base was read from
+ * ([[StagedCommit.view]]).
  */
 object GraftMaintenance {
 
@@ -44,8 +46,8 @@ object GraftMaintenance {
   def compactDvSidecars(path: String): Int = {
     val conf = Dsv2Parquet.readConf
     val commit = StagedCommit.fresh(path, "compact-minor")
-    commit.base: Unit
-    val multi = Dsv2Parquet.dvListing(path, conf).filter(_._2.length > 1)
+    if (commit.base.version == 0L) return 0
+    val multi = commit.view.dvMap.filter(_._2.length > 1)
     if (multi.isEmpty) return 0
     val staging = new Path(commit.dir)
     val replacements = commit.stage(multi.toSeq.map { case (name, sidecars) =>
@@ -79,15 +81,14 @@ object GraftMaintenance {
     val commit = StagedCommit.fresh(path, "compact")
     val base = commit.base
     if (base.version == 0L) return 0
-    val dvNames = Dsv2Parquet.dvListing(path, conf, Some(base.version)).keySet
+    val dvNames = commit.view.dvMap.keySet
     // equality-delete targets still live in the base version rewrite
     // too — folding them is what retires the sidecars (and returns
     // scans to the vectorized zero-probe path)
     val eqTargets: Set[String] = base.eqFiles.flatMap(n =>
       Dsv2Equality.read(dir, n, conf).targets)
-    val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
-      .map(_.getPath).filter(f =>
-        dvNames.contains(f.getName) || eqTargets.contains(f.getName))
+    val files = commit.view.dataFiles.map(_.getPath).filter(f =>
+      dvNames.contains(f.getName) || eqTargets.contains(f.getName))
     if (files.isEmpty) return 0
     rewriteFiles(spark, commit, files, outPartitions = None)
   }
@@ -106,12 +107,9 @@ object GraftMaintenance {
       targetBytes: Long): Int = {
     require(targetBytes > 0, s"graft-compact: target_bytes must be " +
       s"positive, got $targetBytes")
-    val conf = Dsv2Parquet.readConf
     val commit = StagedCommit.fresh(path, "compact")
-    val base = commit.base
-    if (base.version == 0L) return 0
-    val smalls = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
-      .filter(_.getLen < targetBytes)
+    if (commit.base.version == 0L) return 0
+    val smalls = commit.view.dataFiles.filter(_.getLen < targetBytes)
     if (smalls.length < 2) return 0 // a lone small file gains nothing
     val n = math.max(1, math.ceil(
       smalls.map(_.getLen).sum.toDouble / targetBytes).toInt)
@@ -138,14 +136,13 @@ object GraftMaintenance {
     require(clusterBy.nonEmpty && buckets > 0,
       s"graft-recluster: need cluster columns and a positive bucket " +
         s"count, got ${clusterBy.mkString(",")} / $buckets")
-    val conf = Dsv2Parquet.readConf
     val commit = StagedCommit.fresh(path, "recluster")
     val base = commit.base
     if (base.version == 0L) return 0
-    val files = Dsv2Parquet.dataFiles(path, conf, Some(base.version))
+    val files = commit.view.dataFiles
     if (files.isEmpty) return 0
     val fmt = classOf[GraftParquetProvider].getName
-    val schema = Dsv2Parquet.tableSchema(path, Some(base.version))
+    val schema = commit.view.schema
     val w = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
       .load(path)
@@ -160,7 +157,7 @@ object GraftMaintenance {
       (if (sortWithin.nonEmpty)
         w.option(Dsv2Parquet.SortWithinOption, sortWithin.mkString(","))
       else w).mode("append").save(commit.dir)
-      CommitLog.latest(commit.dir, conf).get
+      PlanningView(commit.dir, None).snapshot.get
     }
     commit.publish("recluster",
         written.dataFiles.toSeq.map(new Path(commit.dir, _))) { cur =>
@@ -200,7 +197,7 @@ object GraftMaintenance {
     val dir = new Path(path)
     val base = commit.base
     val fmt = classOf[GraftParquetProvider].getName
-    val schema = Dsv2Parquet.tableSchema(path, Some(base.version))
+    val schema = commit.view.schema
     val targets = files.map(_.toString).toSet
     val live0 = spark.read.format(fmt)
       .option(Dsv2Parquet.VersionAsOfOption, base.version.toString)
@@ -213,7 +210,7 @@ object GraftMaintenance {
       live.write.format(fmt)
         .option(Dsv2Parquet.SchemaOption, schema.toDDL)
         .mode("append").save(commit.dir)
-      Dsv2Parquet.dataFiles(commit.dir, conf).map(_.getPath).toSeq
+      PlanningView(commit.dir, None).dataFiles.map(_.getPath).toSeq
     }
 
     val scannedSet = files.map(_.getName).toSet

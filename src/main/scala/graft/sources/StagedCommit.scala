@@ -43,7 +43,13 @@ private[sources] final class StagedCommit(val path: String, tag: String) {
   /** The snapshot the commit builds on, taken on first use. [[publish]]
    * takes it before it promotes anything; a caller that plans against
    * it (a pinned scan, a fixed delete-target set) takes it first. */
-  lazy val base: CommitLog.Snapshot = CommitLog.begin(path, conf)
+  lazy val base: CommitLog.Snapshot = begun._1
+
+  /** [[base]]'s files, deletion vectors and schema, from the listing
+   * base was read from — what a commit planning against base reads. */
+  lazy val view: PlanningView = begun._2
+
+  private lazy val begun = CommitLog.beginView(path, conf)
 
   /** Run the staging job; if it fails, drop the staging dir and rethrow. */
   def stage[A](job: => A): A =

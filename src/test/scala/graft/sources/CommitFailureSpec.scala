@@ -236,7 +236,7 @@ class CommitFailureSpec extends SparkSpec {
           .coalesce(1).write.format(fmt).mode("append").save(p)
       }
       // a deletion vector on each file, so compaction rewrites both
-      Dsv2Parquet.dataFiles(p, conf).foreach { f =>
+      PlanningView(p, None).dataFiles.foreach { f =>
         val dv = Dsv2Parquet.writeDvSidecar(new Path(p), f.getPath.getName,
           Array(0L, 1L), conf)
         CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>

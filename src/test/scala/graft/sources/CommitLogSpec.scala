@@ -504,7 +504,7 @@ class CommitLogSpec extends SparkSpec {
       CommitRaceProbe.beforePublish = {
         case (_, "replace") =>
           CommitRaceProbe.reset() // one-shot
-          val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+          val fn = PlanningView(p, None).dataFiles.head.getPath.getName
           val dv = Dsv2Parquet.writeDvSidecar(
             new org.apache.hadoop.fs.Path(p), fn, Array(0L, 1L), conf)
           CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>

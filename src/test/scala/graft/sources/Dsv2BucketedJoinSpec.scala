@@ -247,7 +247,7 @@ class Dsv2BucketedJoinSpec extends SparkSpec {
         // clustered layout claim survives (a subset of a bucket is
         // still exactly that bucket)
         spark.sql(s"DELETE FROM $cat.db.sa WHERE k % 10 = 3")
-        assert(Dsv2Parquet.hasDvs(s"$tmp/db/sa", conf))
+        assert(PlanningView(s"$tmp/db/sa", None).dvMap.nonEmpty)
         assert(claimed(s"$tmp/db/sa").nonEmpty,
           "delete-only delta commit turned the layout claim off")
         val j = spark.table(s"$cat.db.sa")

@@ -48,7 +48,7 @@ class Dsv2CommitProtocolSpec extends SparkSpec {
       // simulate the crash window: the ledger exists but the committed
       // file does not (driver died after the marker, before the rename)
       val fs = new Path(p).getFileSystem(new Configuration())
-      val committed = Dsv2Parquet.dataFiles(p, new Configuration())
+      val committed = PlanningView(p, None).dataFiles
       assert(committed.length == 1)
       // deterministic name, not a UUID: a replayed rename lands ON it
       assert(committed.head.getPath.getName == "part-spec-crash-e3-00000.parquet")
@@ -93,7 +93,7 @@ class Dsv2CommitProtocolSpec extends SparkSpec {
       assert(topLevel.contains("_epochs"))
       assert(!topLevel.exists(_.startsWith("_epoch-")), topLevel.toString)
       // neither the provider's listing nor Spark's sees the marker dir
-      assert(Dsv2Parquet.dataFiles(p, new Configuration()).length == 1)
+      assert(PlanningView(p, None).dataFiles.length == 1)
       assert(spark.read.format(fmt).load(p).count() == 1L)
     }
   }

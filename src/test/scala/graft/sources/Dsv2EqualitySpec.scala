@@ -219,7 +219,7 @@ class Dsv2EqualitySpec extends SparkSpec {
     withTmp { tmp =>
       val p = mkTable(tmp)
       // put a DV on the table so compaction has something to rewrite
-      val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+      val fn = PlanningView(p, None).dataFiles.head.getPath.getName
       val dvName = Dsv2Parquet.writeDvSidecar(
         new org.apache.hadoop.fs.Path(p), fn, Array(0L, 1L), conf)
       CommitLog.commitUpdate(p, conf)(cur =>
@@ -303,9 +303,9 @@ class Dsv2EqualitySpec extends SparkSpec {
         .option(Dsv2Parquet.SchemaOption, "k BIGINT, v BIGINT")
         .mode("append").save(p)
       CommitLog.enable(p, conf)
-      assert(Dsv2Parquet.dataFiles(p, conf).length == 8)
+      assert(PlanningView(p, None).dataFiles.length == 8)
       // damage riding along: one DV + one eq delete — both must fold
-      val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+      val fn = PlanningView(p, None).dataFiles.head.getPath.getName
       val dvName = Dsv2Parquet.writeDvSidecar(
         new org.apache.hadoop.fs.Path(p), fn, Array(0L), conf)
       CommitLog.commitUpdate(p, conf)(cur =>
@@ -340,11 +340,11 @@ class Dsv2EqualitySpec extends SparkSpec {
         spark.range(1000).select(col("id").as("k")).repartition(5)
           .write.parquet(s"$tmp/db/t")
         assert(!CommitLog.enabled(s"$tmp/db/t", conf))
-        assert(Dsv2Parquet.dataFiles(s"$tmp/db/t", conf).length == 5)
+        assert(PlanningView(s"$tmp/db/t", None).dataFiles.length == 5)
         val packed = spark.sql(
           s"CALL $cat.system.compact_small_files('db.t', 64)").collect()
         assert(packed.head.getInt(0) == 5)
-        assert(Dsv2Parquet.dataFiles(s"$tmp/db/t", conf).length == 1)
+        assert(PlanningView(s"$tmp/db/t", None).dataFiles.length == 1)
         assert(CommitLog.latest(s"$tmp/db/t", conf).get.version == 2L)
         assert(spark.sql(s"SELECT k FROM $cat.db.t").as[Long]
           .collect().toSet == (0L until 1000L).toSet)
@@ -398,7 +398,7 @@ class Dsv2EqualitySpec extends SparkSpec {
         // the manifest — the invariant the scan's
         // KeyGroupedPartitioning report needs
         val buckets = CommitLog.latest(p, conf).get.buckets
-        assert(Dsv2Parquet.dataFiles(p, conf).forall(f =>
+        assert(PlanningView(p, None).dataFiles.forall(f =>
           buckets.get(f.getPath.getName).exists(_ < 4)))
         // pre-recluster history stays readable (replace-all was logical)
         assert(spark.sql(
@@ -549,7 +549,7 @@ class Dsv2EqualitySpec extends SparkSpec {
         .option(Dsv2Parquet.SchemaOption, "k BIGINT, s STRING, v BIGINT")
         .mode("append").save(staging)
       val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(conf)
-      val fresh = Dsv2Parquet.dataFiles(staging, conf).map { s =>
+      val fresh = PlanningView(staging, None).dataFiles.map { s =>
         val dst = new org.apache.hadoop.fs.Path(p, s.getPath.getName)
         require(fs.rename(s.getPath, dst), "stage rename failed")
         dst.getName

@@ -85,7 +85,7 @@ class Dsv2FuzzRoundTripSpec extends SparkSpec {
           if (rnd.nextInt(3) == 0) Set.empty
           else (0L until n.toLong).filter(_ => rnd.nextInt(10) == 0).toSet
         if (dv.nonEmpty) {
-          val fileName = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+          val fileName = PlanningView(p, None).dataFiles.head.getPath.getName
           val parts = dv.toArray.sorted
             .grouped(math.max(1, dv.size / (1 + rnd.nextInt(3)))).toSeq
           val sidecars = parts.map(ps => Dsv2Parquet.writeDvSidecar(

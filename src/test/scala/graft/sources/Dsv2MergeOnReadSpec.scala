@@ -53,7 +53,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
         concat(lit("s"), col("id")).as("s"), lit(0L).as("v"))
         .coalesce(2).writeTo(s"$cat.db.m").append()
       val conf = new org.apache.hadoop.conf.Configuration()
-      val before = Dsv2Parquet.dataFiles(s"$tmp/db/m", conf)
+      val before = PlanningView(s"$tmp/db/m", None).dataFiles
         .map(_.getPath.getName).toSet
       // source: 5 updates, 3 inserts, the rest untouched (no
       // not-matched-by-source clause → no mass delete)
@@ -70,7 +70,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       assert(probe.lastDvFiles.get() >= 1)
       assert(probe.lastDvPositions.get() == 5L)
       // the pre-image data files all survive (plus new insert files)
-      val after = Dsv2Parquet.dataFiles(s"$tmp/db/m", conf)
+      val after = PlanningView(s"$tmp/db/m", None).dataFiles
         .map(_.getPath.getName).toSet
       assert(before.subsetOf(after), s"before=$before after=$after")
       // and the read applies the vectors: updated rows once, new rows
@@ -233,15 +233,15 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.db.mc WHERE v = 3")
       val conf = new org.apache.hadoop.conf.Configuration()
       val p = s"$tmp/db/mc"
-      val before = Dsv2Parquet.dvListing(p, conf)
+      val before = PlanningView(p, None).dvMap
       assert(before.values.head.length == 3, before.toString)
-      val dataBefore = Dsv2Parquet.dataFiles(p, conf)
+      val dataBefore = PlanningView(p, None).dataFiles
         .map(f => f.getPath.getName -> f.getModificationTime).toSet
       assert(GraftMaintenance.compactDvSidecars(p) == 1)
-      val after = Dsv2Parquet.dvListing(p, conf)
+      val after = PlanningView(p, None).dvMap
       assert(after.values.head.length == 1, after.toString)
       // data files untouched; live rows identical
-      assert(Dsv2Parquet.dataFiles(p, conf)
+      assert(PlanningView(p, None).dataFiles
         .map(f => f.getPath.getName -> f.getModificationTime).toSet
         == dataBefore)
       val t = spark.table(s"$cat.db.mc")
@@ -257,7 +257,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
         .coalesce(1).writeTo(s"$cat.db.bf")
         .option("graft.bloomFor", "s").create()
       val conf = new org.apache.hadoop.conf.Configuration()
-      val f = Dsv2Parquet.dataFiles(s"$tmp/db/bf", conf).head
+      val f = PlanningView(s"$tmp/db/bf", None).dataFiles.head
       val (_, blocks, _) = Dsv2Parquet.fileFooter(f, conf)
       val chunk = blocks.head.getColumns.asScala
         .find(_.getPath.toDotString == "s").get
@@ -278,12 +278,12 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.db.k WHERE v = 2")
       val conf = new org.apache.hadoop.conf.Configuration()
       val p = s"$tmp/db/k"
-      assert(Dsv2Parquet.hasDvs(p, conf))
+      assert(PlanningView(p, None).dvMap.nonEmpty)
       val expected = spark.table(s"$cat.db.k").collect()
         .map(_.toSeq).toSet
       val compacted = GraftMaintenance.compactDeletionVectors(spark, p)
       assert(compacted == 2)
-      assert(!Dsv2Parquet.hasDvs(p, conf), "deletion vectors survived")
+      assert(PlanningView(p, None).dvMap.isEmpty, "deletion vectors survived")
       // identical live rows, now without any per-scan membership test,
       // and the columnar path re-engages (no DVs left to gate it off)
       assert(spark.table(s"$cat.db.k").collect().map(_.toSeq).toSet
@@ -324,7 +324,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
         lit(0L).as("v")).coalesce(1).writeTo(s"$cat.db.cc").append()
       val p = s"$tmp/db/cc"
       val conf = new org.apache.hadoop.conf.Configuration()
-      val name = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+      val name = PlanningView(p, None).dataFiles.head.getPath.getName
       val schema = spark.table(s"$cat.db.cc").schema
       // two INTERLEAVED delta commits: each writes its OWN immutable
       // sidecar — neither read-modify-writes shared state, so the
@@ -360,8 +360,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       assert(ex.getMessage.contains("concurrent writer conflict"))
       CommitResidue.assertNone(s"$tmp/db/cf")
       // nothing changed: no DV appeared, rows intact
-      assert(!Dsv2Parquet.hasDvs(s"$tmp/db/cf",
-        new org.apache.hadoop.conf.Configuration()))
+      assert(PlanningView(s"$tmp/db/cf", None).dvMap.isEmpty)
       assert(spark.table(s"$cat.db.cf").count() == 10L)
     }
   }
@@ -385,8 +384,7 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       merge()
       assert(probe.lastTruncated.get() == 0 && probe.lastDvFiles.get() > 0,
         "post-ALTER merge did not run merge-on-read")
-      assert(Dsv2Parquet.hasDvs(s"$tmp/db/sw",
-        new org.apache.hadoop.conf.Configuration()))
+      assert(PlanningView(s"$tmp/db/sw", None).dvMap.nonEmpty)
       // and back: copy-on-write folds the vectors into its rewrite
       spark.sql(s"""ALTER TABLE $cat.db.sw
         |SET TBLPROPERTIES('graft.merge.mode'='copy-on-write')""".stripMargin)
@@ -412,12 +410,12 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       val merged = spark.sql(
         s"CALL $cat.system.compact_deletion_vectors('db.sq')").collect()
       assert(merged.head.getInt(0) == 1)
-      assert(Dsv2Parquet.dvListing(p, conf).values.head.length == 1)
+      assert(PlanningView(p, None).dvMap.values.head.length == 1)
       // major: the vector folds into a rewritten file
       val folded = spark.sql(
         s"CALL $cat.system.compact_table('db.sq')").collect()
       assert(folded.head.getInt(0) == 1)
-      assert(!Dsv2Parquet.hasDvs(p, conf))
+      assert(PlanningView(p, None).dvMap.isEmpty)
       assert(spark.table(s"$cat.db.sq").count() == 40L)
     }
   }
@@ -428,11 +426,9 @@ class Dsv2MergeOnReadSpec extends SparkSpec {
       spark.range(100).select(col("id").as("k"), lit("x").as("s"),
         (col("id") % 5).as("v")).coalesce(1).writeTo(s"$cat.db.c").append()
       spark.sql(s"DELETE FROM $cat.db.c WHERE v = 3") // creates a DV
-      assert(Dsv2Parquet.hasDvs(s"$tmp/db/c",
-        new org.apache.hadoop.conf.Configuration()))
+      assert(PlanningView(s"$tmp/db/c", None).dvMap.nonEmpty)
       spark.sql(s"TRUNCATE TABLE $cat.db.c") // metadata delete: whole files
-      assert(!Dsv2Parquet.hasDvs(s"$tmp/db/c",
-        new org.apache.hadoop.conf.Configuration()),
+      assert(PlanningView(s"$tmp/db/c", None).dvMap.isEmpty,
         "orphan deletion vector survived its data file")
       assert(spark.table(s"$cat.db.c").count() == 0L)
     }

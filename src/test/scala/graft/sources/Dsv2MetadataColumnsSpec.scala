@@ -35,8 +35,7 @@ class Dsv2MetadataColumnsSpec extends SparkSpec {
       val files = spark.table(s"$cat.db.t")
         .select(col("k"), col("_file")).collect()
         .map(_.getString(1)).distinct.sorted
-      val onDisk = Dsv2Parquet.dataFiles(s"$tmp/db/t",
-        new org.apache.hadoop.conf.Configuration())
+      val onDisk = PlanningView(s"$tmp/db/t", None).dataFiles
         .map(_.getPath.toString).sorted
       assert(files.sameElements(onDisk),
         s"_file values ${files.toSeq} != on-disk ${onDisk.toSeq}")

@@ -64,6 +64,22 @@ class Dsv2OverwriteSpec extends SparkSpec {
     }
   }
 
+  test("a filtered overwrite of a table with no version yet retires nothing") {
+    withCat { (cat, tmp) =>
+      // declared but never committed (a CREATE TABLE that died before
+      // publishing version 1): the overwrite builds on the empty version
+      // 0, so its own rows — which straddle the predicate — are never
+      // up for retirement
+      Dsv2Parquet.declareSchema(s"$tmp/db/e",
+        org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, s STRING"))
+      assert(CommitLog.versions(new org.apache.hadoop.fs.Path(s"$tmp/db/e"),
+        Dsv2Parquet.readConf).isEmpty)
+      spark.range(10).select(col("id").as("k"), lit("new").as("s"))
+        .coalesce(1).writeTo(s"$cat.db.e").overwrite(col("k") < 5)
+      assert(spark.table(s"$cat.db.e").count() == 10L)
+    }
+  }
+
   test("overwrite(AlwaysTrue) stays the full truncate") {
     withCat { (cat, tmp) =>
       bandTable(cat, "v")

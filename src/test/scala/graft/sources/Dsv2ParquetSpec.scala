@@ -131,6 +131,19 @@ class Dsv2ParquetSpec extends SparkSpec {
       val keptParts = scan.planInputPartitions()
       val kept = probe.lastKept.get()
       assert(kept < all && keptParts.nonEmpty, s"kept=$kept all=$all")
+      // pruning is per value, not by the values' [min, max] envelope:
+      // the two extreme keys live in the first and last row groups
+      def keptBy(vs: Any*): Int = {
+        scan.filter(Array[org.apache.spark.sql.sources.Filter](
+          org.apache.spark.sql.sources.In("k", vs.toArray)))
+        scan.planInputPartitions()
+        probe.lastKept.get()
+      }
+      assert(keptBy(5L, 395L) <= 2, s"kept=${probe.lastKept.get()}")
+      // a null never satisfies IN: alone it prunes all, beside a value
+      // it keeps exactly what the value keeps
+      assert(keptBy(null: Any) == 0, "IN (null) must prune all")
+      assert(keptBy(5L, null) == keptBy(5L))
       // (row-level parity under pruning is covered by the DPP test below)
       val empty = GraftParquetScan(s"$tmp/fact", schema, Array.empty)
       empty.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("k",

@@ -171,7 +171,7 @@ class Dsv2RowLevelSpec extends SparkSpec {
       spark.range(10, 20).select(col("id").as("k"), lit(0L).as("v"))
         .coalesce(1).writeTo(s"$cat.db.x").append()
       val conf = new org.apache.hadoop.conf.Configuration()
-      val before = Dsv2Parquet.dataFiles(s"$tmp/db/x", conf)
+      val before = PlanningView(s"$tmp/db/x", None).dataFiles
         .map(_.getPath.getName).toSet
       assert(before.size == 2)
       // the merge touches only k=3 — one file holds it
@@ -180,7 +180,7 @@ class Dsv2RowLevelSpec extends SparkSpec {
       spark.sql(
         s"""MERGE INTO $cat.db.x t USING rlo_one s ON t.k = s.k
            |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
-      val after = Dsv2Parquet.dataFiles(s"$tmp/db/x", conf)
+      val after = PlanningView(s"$tmp/db/x", None).dataFiles
         .map(_.getPath.getName).toSet
       // the untouched file SURVIVES the rewrite (runtime group
       // filtering pruned it from the scan, so the commit left it);

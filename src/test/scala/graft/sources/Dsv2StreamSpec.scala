@@ -161,7 +161,7 @@ class Dsv2StreamSpec extends SparkSpec {
         // a delta-style DV lands, then compaction folds it: the
         // rewrite's output must NOT re-stream (previously the whole
         // table re-delivered after every maintenance cycle)
-        val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+        val fn = PlanningView(p, None).dataFiles.head.getPath.getName
         val dv = Dsv2Parquet.writeDvSidecar(
           new org.apache.hadoop.fs.Path(p), fn, Array(0L, 1L), conf)
         CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>
@@ -194,7 +194,7 @@ class Dsv2StreamSpec extends SparkSpec {
         ckpt, None)
       val end1 = s1.latestOffset() // both files discovered (seen)
       // compact: retired files are all seen → output provably skippable
-      val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+      val fn = PlanningView(p, None).dataFiles.head.getPath.getName
       val dv = Dsv2Parquet.writeDvSidecar(
         new org.apache.hadoop.fs.Path(p), fn, Array(0L), conf)
       CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>
@@ -235,7 +235,7 @@ class Dsv2StreamSpec extends SparkSpec {
       val end1 = s1.latestOffset()
       // compact → output provably skippable; the skip is recorded in
       // the persisted file-order log as a zero-row-group entry
-      val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+      val fn = PlanningView(p, None).dataFiles.head.getPath.getName
       val dv = Dsv2Parquet.writeDvSidecar(
         new org.apache.hadoop.fs.Path(p), fn, Array(0L), conf)
       CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>

@@ -18,7 +18,7 @@ class FooterCacheSpec extends SparkSpec {
         .write.parquet(s"$tmp/t")
       val fs = new org.apache.hadoop.fs.Path(tmp)
         .getFileSystem(conf)
-      val file = Dsv2Parquet.dataFiles(s"$tmp/t", conf).head
+      val file = PlanningView(s"$tmp/t", None).dataFiles.head
       val (schema1, blocks1, _) = Dsv2Parquet.fileFooter(file, conf)
       assert(schema1.containsField("k"))
       assert(blocks1.map(_.getRowCount).sum == 10L)
@@ -31,7 +31,7 @@ class FooterCacheSpec extends SparkSpec {
       val stage = s"$tmp/stage"
       spark.range(25).select(col("id").as("k"),
         lit("w").as("extra")).coalesce(1).write.parquet(stage)
-      val staged = Dsv2Parquet.dataFiles(stage, conf).head
+      val staged = PlanningView(stage, None).dataFiles.head
       fs.delete(file.getPath, false)
       require(fs.rename(staged.getPath, file.getPath))
       val fresh = fs.getFileStatus(file.getPath)

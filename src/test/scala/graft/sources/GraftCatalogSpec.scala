@@ -71,7 +71,7 @@ class GraftCatalogSpec extends SparkSpec {
       // the table supports row-level operations, Spark falls back to
       // the group-based copy-on-write REWRITE instead of erroring
       // (the Iceberg metadata-vs-copy-on-write composition)
-      assert(Dsv2Parquet.deleteDecisions(p, Array(
+      assert(Dsv2Parquet.deleteDecisions(PlanningView(p, None), Array(
         org.apache.spark.sql.sources.LessThanOrEqual("k", 50L))).isEmpty,
         "the metadata path should find this predicate undecidable")
       spark.sql(s"DELETE FROM $cat.db.t WHERE k <= 50")

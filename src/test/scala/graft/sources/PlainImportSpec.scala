@@ -37,7 +37,7 @@ class PlainImportSpec extends SparkSpec {
         .write.mode("append").parquet(p)
     }
     assert(!CommitLog.enabled(p, conf))
-    Dsv2Parquet.dataFiles(p, conf).map(_.getPath.getName).toSet
+    PlanningView(p, None).dataFiles.map(_.getPath.getName).toSet
   }
 
   private def keys(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -95,7 +95,7 @@ class PlainImportSpec extends SparkSpec {
       spark.sql(s"TRUNCATE TABLE $cat.db.t")
       imported(p, original)
       assert(spark.table(s"$cat.db.t").count() == 0L)
-      assert(Dsv2Parquet.dataFiles(p, conf).isEmpty)
+      assert(PlanningView(p, None).dataFiles.isEmpty)
     }
   }
 
@@ -145,7 +145,7 @@ class PlainImportSpec extends SparkSpec {
       // deletion vectors beside plain files: the listing applies them,
       // and so must the import
       val original = plain(p)
-      val first = Dsv2Parquet.dataFiles(p, conf).map(_.getPath.getName).min
+      val first = PlanningView(p, None).dataFiles.map(_.getPath.getName).min
       val firstKeys = spark.read.parquet(s"$p/$first").select("k")
         .as[Long].collect()
       def dv(pos: Array[Long]): String =
@@ -165,7 +165,7 @@ class PlainImportSpec extends SparkSpec {
       val original = plain(p)
       assert(GraftMaintenance.compactSmallFiles(spark, p, 1L << 20) == 2)
       imported(p, original)
-      assert(Dsv2Parquet.dataFiles(p, conf).length == 1)
+      assert(PlanningView(p, None).dataFiles.length == 1)
     }
     withCatalog { (_, p) =>
       val original = plain(p)

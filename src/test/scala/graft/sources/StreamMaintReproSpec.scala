@@ -32,7 +32,7 @@ class StreamMaintReproSpec extends SparkSpec {
         q.processAllAvailable()
         assert(spark.table(sink).count() == 4000L)
         (0 until 10).foreach { c =>
-          val fn = Dsv2Parquet.dataFiles(p, conf).head.getPath.getName
+          val fn = PlanningView(p, None).dataFiles.head.getPath.getName
           val dv = Dsv2Parquet.writeDvSidecar(
             new org.apache.hadoop.fs.Path(p), fn, Array(c.toLong), conf)
           CommitLog.commitUpdate(p, conf, operation = "delta")(cur =>
