@@ -3,12 +3,17 @@ package graft.config
 import org.apache.spark.sql.SparkSession
 
 /**
- * Job configuration with the same key surface as the reference's
- * `MVSyncSettings` (reference: src/main/java/mvsync/MVSyncSettings.java:11-137).
+ * Job configuration: the keys of the reference's `MVSyncSettings`
+ * (reference: src/main/java/mvsync/MVSyncSettings.java:11-137) that
+ * this job acts on, plus one engine key.
  *
  * Keys live under the `cass.mv.` prefix and are also accepted with a
  * leading `spark.` (reference MVSyncSettings.java:123-130). Defaults
- * reproduce the reference's documented defaults (README.md:17-37).
+ * reproduce the reference's documented defaults (README.md:17-37). The
+ * reference's connection, consistency, keyspace/table-name and
+ * rate-limit keys have no field: the job reads tables by path through
+ * the graft connector and commits a repair as one all-or-nothing
+ * version, so nothing would read them.
  *
  * This is a plain immutable case class: resolve once on the driver from
  * the SparkSession conf (or any Map), then ship by closure — at 100 TB
@@ -17,22 +22,10 @@ import org.apache.spark.sql.SparkSession
 final case class Settings(
     startTsEpochSec: Long = -1L,
     endTsEpochSec: Long = -1L,
-    keyspace: String = null,
-    baseTableName: String = null,
-    mvName: String = null,
-    readConsistency: String = "LOCAL_QUORUM",
-    mvWriteConsistency: String = "LOCAL_QUORUM",
     fixMissingMv: Boolean = false,
     fixOrphanMv: Boolean = false,
     fixInconsistentMv: Boolean = false,
-    cassandraHost: String = "localhost",
-    cassandraPort: String = "9042",
-    scanRateLimit: Int = 10,
-    mutationRateLimit: Int = 5,
     useLatestTs: Boolean = false,
-    cassandraUserName: String = null,
-    cassandraPassword: String = null,
-    cassandraDatacenter: String = "datacenter1",
     outputDir: String = "/tmp/cassandra-mv-repair-spark-job/",
     /** Engine extension (no reference key): skip the per-side
      * dropDuplicates in the reconcile prep. Cassandra scans cannot
@@ -59,26 +52,13 @@ object Settings {
       conf.getOption(k).orElse(conf.getOption(s"spark.$k")).filter(_.nonEmpty)
         .getOrElse(default)
     }
-    def getOrNull(suffix: String): String = get(suffix, null)
     Settings(
       startTsEpochSec = get("starttsinsec", "-1").toLong,
       endTsEpochSec = get("endtsinsec", "-1").toLong,
-      keyspace = getOrNull("keyspace"),
-      baseTableName = getOrNull("basetablename"),
-      mvName = getOrNull("mvname"),
-      readConsistency = get("readconsistency", "LOCAL_QUORUM"),
-      mvWriteConsistency = get("mvwriteconsistency", "LOCAL_QUORUM"),
       fixMissingMv = get("fixmissingmv", "false").toBoolean,
       fixOrphanMv = get("fixorphanmv", "false").toBoolean,
       fixInconsistentMv = get("fixinconsistentmv", "false").toBoolean,
-      cassandraHost = get("cassandra.host", "localhost"),
-      cassandraPort = get("cassandra.port", "9042"),
-      scanRateLimit = get("scan.ratelimiter", "10").toInt,
-      mutationRateLimit = get("mutation.ratelimiter", "5").toInt,
       useLatestTs = get("mutation.uselatestts", "false").toBoolean,
-      cassandraUserName = getOrNull("cassandra.username"),
-      cassandraPassword = getOrNull("cassandra.password"),
-      cassandraDatacenter = get("cassandra.datacenter", "datacenter1"),
       outputDir = get("output.dir", "/tmp/cassandra-mv-repair-spark-job/"),
       trustUniquePk = get("trustuniquepk", "false").toBoolean
     )

@@ -177,35 +177,6 @@ object ReportWriter {
     stats
   }
 
-  /**
-   * Failed-mutation report files (MVJobOutputStreamer.java:82-96): a
-   * sink that applies mutations reports failures as a DataFrame with
-   * columns `op` ("DELETE"|"UPSERT"), `report` (the MVInconsistentRow
-   * string for the key) and `error`; each lands in
-   * `<outdir>/ERR_DELETING|ERR_UPSERTING/<partitionId>.txt` as
-   * report + error message + separator — the reference's layout.
-   * (The offline LogSink never fails; a Cassandra sink produces this
-   * frame from its per-mutation outcomes.)
-   */
-  def writeMutationErrors(errors: DataFrame, outDir: String,
-      factory: OutputStreamFactory = new OutputStreamFactory): Unit =
-    errors.select(col("op"), col("report"), col("error"))
-      .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-        val pid = TaskContext.getPartitionId()
-        val streams = scala.collection.mutable.Map.empty[String, BlobStreamer]
-        try {
-          it.foreach { row =>
-            val category =
-              if (row.getString(0) == "DELETE") "ERR_DELETING" else "ERR_UPSERTING"
-            val s = streams.getOrElseUpdate(category,
-              factory.getStream(s"$outDir/$category/$pid.txt"))
-            s.append(row.getString(1))
-            s.append(row.getString(2))
-            s.append(ReportFormatter.Separator)
-          }
-        } finally streams.values.foreach(_.commit())
-      }
-
   private def writeStats(stats: JobStats, outDir: String): Unit = {
     val statsFile = new java.io.File(outDir)
     statsFile.mkdirs()

@@ -118,7 +118,9 @@ object StatsCollector {
       repairRecords = delAttempted + upsertAttempted,
       notRepairRecords = (missingBase + missingMv + inconsistent) - delAttempted - upsertAttempted,
       delAttemptedRecords = delAttempted,
-      delSuccessRecords = delAttempted, // LogSink never fails; Cassandra sink patches
+      // a repair is one all-or-nothing commit: every attempted
+      // mutation lands, or the job fails before the stats line prints
+      delSuccessRecords = delAttempted,
       // Reference increments notDelRecords only inside the delete-attempted
       // branch (MvSync.java:388-395); with fixOrphanMv off the counter stays
       // 0 and the rows land in notRepairRecords instead.

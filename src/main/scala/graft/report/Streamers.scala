@@ -54,8 +54,3 @@ final class ConsoleStreamer extends BlobStreamer {
 class OutputStreamFactory extends Serializable {
   def getStream(path: String): BlobStreamer = new FileStreamer(path)
 }
-
-/** The console override as a ready-made factory. */
-final class ConsoleStreamFactory extends OutputStreamFactory {
-  override def getStream(path: String): BlobStreamer = new ConsoleStreamer
-}

@@ -355,13 +355,15 @@ object CommitLog {
    * unpublished version 0, and the write's own commit is version 1.
    * Either way one listing ([[PlanningView]]). */
   def begin(path: String, conf: Configuration): Snapshot =
-    beginView(path, conf)._1
+    beginView(path, conf, PlanningView(path, None))._1
 
   /** [[begin]], with a view of the returned version's files taken from
-   * the same listing — only a lost import race lists again. */
-  private[sources] def beginView(path: String,
-      conf: Configuration): (Snapshot, PlanningView) = {
-    val view = PlanningView(path, None)
+   * the same listing — only a lost import race lists again. `view` is
+   * the latest view of `path`: a caller that already read one (to
+   * validate against its schema) hands it over instead of listing
+   * twice. */
+  private[sources] def beginView(path: String, conf: Configuration,
+      view: PlanningView): (Snapshot, PlanningView) = {
     if (view.versions.isEmpty && view.dataFiles.isEmpty && view.dvMap.isEmpty)
       (Snapshot(0L, Set.empty, Set.empty), view)
     else imported(view, conf)

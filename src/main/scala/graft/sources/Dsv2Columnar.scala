@@ -12,7 +12,7 @@ import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
@@ -103,8 +103,8 @@ private[sources] object Dsv2Columnar {
       case d: DecimalType =>
         (name == INT32 || name == INT64 || name == BINARY ||
           name == FIXED_LEN_BYTE_ARRAY) && decScale.contains(d.scale)
-      case LongType | TimestampType | TimestampNTZType =>
-        name == INT64 && decScale.isEmpty
+      case TimestampType => (name == INT64 && decScale.isEmpty) || name == INT96
+      case LongType | TimestampNTZType => name == INT64 && decScale.isEmpty
       case IntegerType | DateType | ShortType | ByteType =>
         name == INT32 && decScale.isEmpty
       case DoubleType => name == DOUBLE
@@ -130,6 +130,40 @@ private[sources] object Dsv2Columnar {
       s"graft-parquet: cannot read column '${f.name}' of type " +
         s"${f.dataType.sql} — the reader serves flat primitives, " +
         "decimals, and arrays/maps of them")
+  }
+
+  private val JulianDayOfEpoch = 2440588L
+  private val MicrosPerDay = 86400000000L
+
+  /** An INT96 timestamp (8 little-endian bytes of nanoseconds in the
+   * day, then a 4-byte Julian day) as µs since the epoch — the
+   * conversion of Spark's reader (`DateTimeUtils.fromJulianDay`), with
+   * no calendar rebase ([[requireProlepticInt96]]). */
+  def int96Micros(b: org.apache.parquet.io.api.Binary): Long = {
+    val buf = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val nanos = buf.getLong
+    Math.addExact(
+      Math.multiplyExact(buf.getInt - JulianDayOfEpoch, MicrosPerDay),
+      nanos / 1000L)
+  }
+
+  /** INT96 values decode without a calendar rebase, which is right
+   * only for a Spark ≥ 3.0 writer that stored them in the proleptic
+   * calendar: footer key `org.apache.spark.version` ≥ 3.0 and no
+   * `org.apache.spark.legacyINT96`. Any other file is one Spark would
+   * rebase or refuse, so its INT96 column `column` fails the read,
+   * named. */
+  def requireProlepticInt96(kv: java.util.Map[String, String],
+      file: String, column: String): Unit = {
+    val version = Option(kv.get("org.apache.spark.version"))
+    val legacy = kv.containsKey("org.apache.spark.legacyINT96")
+    require(!legacy &&
+      version.exists(_.takeWhile(_.isDigit).toIntOption.exists(_ >= 3)),
+      s"graft-parquet: INT96 column '$column' of $file needs a calendar " +
+        "rebase graft does not do (org.apache.spark.version=" +
+        s"${version.getOrElse("absent")}" +
+        (if (legacy) ", org.apache.spark.legacyINT96 set" else "") +
+        "); rewrite it with Spark >= 3.0 in the proleptic calendar")
   }
 
   /** Minimal converter tree for [[ColumnReadStoreImpl]]. Dictionary
@@ -321,6 +355,14 @@ private[sources] class GraftColumnarPartitionReader(p: GraftParquetPartition,
       reader.setRequestedSchema(proj.getColumns)
       Some(proj)
     }
+  projection.foreach(_.getColumns.asScala
+    .find(_.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT96)
+    .foreach { c =>
+      try Dsv2Columnar.requireProlepticInt96(
+        reader.getFooter.getFileMetaData.getKeyValueMetaData, p.file,
+        c.getPath.mkString("."))
+      catch { case e: IllegalArgumentException => reader.close(); throw e }
+    })
 
   /** One vector per UNIQUE physical column (typed by the first
    * required field backed by it — duplicates share the type since
@@ -673,8 +715,18 @@ private[sources] class GraftColumnarPartitionReader(p: GraftParquetPartition,
    * Spark's precision-determined storage class (int / long / bytes). */
   private def valuePutter(pt: PrimitiveType,
       dt: DataType): (ColumnReader, WritableColumnVector) => Unit = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      (cr, v) => { v.appendLong(cr.getLong); () }
+    // Spark's three timestamp encodings, all to micros: INT96 (Julian
+    // day + nanos of day), INT64 MILLIS (×1000), INT64 MICROS as is
+    case TimestampType | TimestampNTZType =>
+      (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+        case (PrimitiveTypeName.INT96, _) =>
+          (cr, v) => { v.appendLong(Dsv2Columnar.int96Micros(cr.getBinary)); () }
+        case (_, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
+            if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
+          (cr, v) => { v.appendLong(cr.getLong * 1000L); () }
+        case _ => (cr, v) => { v.appendLong(cr.getLong); () }
+      }
+    case LongType => (cr, v) => { v.appendLong(cr.getLong); () }
     case IntegerType | DateType => (cr, v) => { v.appendInt(cr.getInteger); () }
     case ShortType => (cr, v) => { v.appendShort(cr.getInteger.toShort); () }
     case ByteType => (cr, v) => { v.appendByte(cr.getInteger.toByte); () }

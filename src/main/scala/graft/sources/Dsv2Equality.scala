@@ -257,7 +257,10 @@ object EqualityRepair {
   def commit(spark: SparkSession, path: String, keyCols: Seq[String],
       deleteKeys: DataFrame, inserts: DataFrame): Unit = {
     val conf = Dsv2Parquet.readConf
-    val tableSchema = Dsv2Parquet.tableSchema(path, None)
+    // one listing: the view validated against is the one the commit
+    // builds on
+    val view = PlanningView(path, None)
+    val tableSchema = view.schema
     val kc = keyCols.toArray
     kc.foreach { c =>
       val f = tableSchema.fields.find(_.name == c).getOrElse(
@@ -278,9 +281,9 @@ object EqualityRepair {
             s"${f.dataType.sql} into table column type ${t.dataType.sql}")
       }
     }
-    // a plain parquet directory is imported here, before the job below
-    // stages any file
-    val commit = StagedCommit.fresh(path, "eq")
+    // a plain parquet directory is imported here, after validation and
+    // before the job below stages any file
+    val commit = StagedCommit.fresh(path, "eq", view)
     val base = commit.base
     // one key tuple per table: a second repair must agree with the
     // sidecars still LIVE (compaction retires them; sidecars whose

@@ -51,7 +51,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * ABOVE the built-in source's decode throughput on the smoke shapes
  * (BASELINE.md regime `dsv2scan`). What it deliberately skips is Hive-style
  * partition-directory discovery — the catalog + clustered layouts
- * cover that ground here.
+ * cover that ground here, and a plain directory holding a partition
+ * subdirectory is refused at planning ([[PlanningView.dataFiles]]).
  *
  * Scale shape: one [[InputPartition]] per parquet ROW GROUP (the same
  * split unit Spark's own parquet source uses, and the moral equivalent
@@ -62,9 +63,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * drown in per-task overhead. Planning reads footers only (one per
  * file, JVM-cached).
  *
- * Supported leaf types: BOOLEAN, INT32, INT64, FLOAT, DOUBLE, UTF8
- * BINARY, raw BINARY — the TableSchema surface (SURVEY §1.3). Nested
- * and repeated groups fail fast at schema inference.
+ * Supported leaf types: BOOLEAN, INT32, INT64, INT96 (timestamps),
+ * FLOAT, DOUBLE, UTF8 BINARY, raw BINARY — the TableSchema surface
+ * (SURVEY §1.3). Nested and repeated groups fail fast at schema
+ * inference.
  */
 class GraftParquetProvider extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
@@ -438,14 +440,25 @@ private[sources] final case class PlanningView(path: String,
     }
   }
 
-  /** The version's data files, in name order for a logged table. */
+  /** The version's data files, in name order for a logged table.
+   * Without a log every non-hidden entry must be a `.parquet` file (the
+   * hidden rule of Spark's file index: a `.` prefix, or a `_` prefix
+   * without `=`): a partition subdirectory or a differently named file
+   * holds rows Spark's reader would read, so it fails here, named,
+   * rather than being skipped. */
   @transient lazy val dataFiles: Array[FileStatus] = {
-    val files = listing._1.filter { f =>
+    val (files, other) = listing._1.filterNot { f =>
       val n = f.getPath.getName
-      (!listing._2 || f.isFile) && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }
-    snapshot.fold(files) { s =>
+      n.startsWith(".") || n.startsWith("_") && !n.contains("=")
+    }.partition(f => (!listing._2 || f.isFile) &&
+      f.getPath.getName.endsWith(".parquet"))
+    snapshot.fold {
+      other.headOption.foreach(f => throw new IllegalArgumentException(
+        s"graft-parquet: $path has no commit log and holds ${f.getPath}, " +
+          "which is not a .parquet data file; graft reads flat directories " +
+          "of .parquet files only (no partition directories)"))
+      files
+    } { s =>
       val byName = files.map(f => f.getPath.getName -> f).toMap
       s.dataFiles.toArray.sorted.map(n => byName.getOrElse(n,
         throw new IllegalStateException(
@@ -1470,11 +1483,13 @@ private[graft] object Dsv2Parquet {
       case (_, d: DecimalLogicalTypeAnnotation) =>
         DecimalType(d.getPrecision, d.getScale)
       case (PrimitiveTypeName.INT64, t: TimestampLogicalTypeAnnotation) =>
-        require(t.getUnit == TimeUnit.MICROS,
-          s"graft-parquet: only MICROS timestamps supported ($name)")
+        require(t.getUnit != TimeUnit.NANOS,
+          s"graft-parquet: only MICROS and MILLIS timestamps supported ($name)")
         // isAdjustedToUTC distinguishes the instant type from the
-        // wall-clock (NTZ) type; both carry int64 micros
+        // wall-clock (NTZ) type; the reader scales MILLIS to micros
         if (t.isAdjustedToUTC) TimestampType else TimestampNTZType
+      // Spark's default timestamp encoding: Julian day + nanos of day
+      case (PrimitiveTypeName.INT96, _) => TimestampType
       case (PrimitiveTypeName.INT32, _: DateLogicalTypeAnnotation) => DateType
       case (PrimitiveTypeName.INT32, i: IntLogicalTypeAnnotation)
           if i.getBitWidth == 16 => ShortType
@@ -1675,9 +1690,9 @@ private[graft] object Dsv2Parquet {
 }
 
 /**
- * [[Source]] implementation through the DSv2 provider — the fourth
- * offline implementation of the trait boundary, and the one whose READ
- * PATH is the connector API itself: `Source.project`'s select becomes a
+ * [[Source]] implementation through the DSv2 provider — the one reader
+ * of parquet tables (the base and the MV alike), whose READ PATH is the
+ * connector API itself: `Source.project`'s select becomes a
  * genuine `pruneColumns` call into [[GraftParquetScanBuilder]], so the
  * scan's requested `MessageType` — not a post-scan projection — is what
  * limits the bytes read.

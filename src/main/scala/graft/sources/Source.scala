@@ -1,14 +1,7 @@
 package graft.sources
 
-import graft.config.Settings
 import graft.schema.TableSchema
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Table source abstraction (reference operator A: the connector scan,
@@ -17,8 +10,9 @@ import org.apache.spark.sql.types.StructType
  * The reference reads via the Spark Cassandra connector
  * (`javaFunctions(jsc).cassandraTable(ks, table).select(cols)`,
  * MvSync.java:245-247) with token-range parallelism. This offline repo has
- * no Cassandra, so the production implementation here is Parquet; the
- * trait keeps the engine source-agnostic — a `CassandraSource` is
+ * no Cassandra, so the production implementation here is Parquet read
+ * through the graft connector ([[Dsv2ParquetSource]]); the trait keeps
+ * the engine source-agnostic — a `CassandraSource` is
  * `spark.read.format("org.apache.spark.sql.cassandra")` with the same
  * projection, and nothing downstream changes.
  *
@@ -43,47 +37,14 @@ object Source {
   }
 }
 
-/** Parquet-backed table: path + projection to the schema's columns.
- * The read schema is [[ParquetSource.footerSchema]], so a load runs no
- * Spark job. */
-final case class ParquetSource(path: String) extends Source {
-  override def load(spark: SparkSession, schema: TableSchema): DataFrame =
-    Source.project(
-      spark.read.schema(ParquetSource.footerSchema(spark, path)).parquet(path),
-      schema)
-}
-
+/** The name perfbench's workloads (`Workloads.scala`, 4 calls) read a
+ * parquet table by. It is not a reader of its own: every parquet table
+ * is read through the graft connector, [[Dsv2ParquetSource]], under the
+ * connector's schema rule ([[Dsv2Parquet.tableSchema]]). The next change
+ * to the benchmark calls [[Dsv2ParquetSource]] directly and deletes this
+ * alias. */
 object ParquetSource {
-  /** The schema `spark.read.parquet(path)` infers, read on the driver.
-   * Spark's inference (`ParquetUtils.inferSchema` without mergeSchema,
-   * no summary files) reads ONE footer, the first data file's in path
-   * order, but submits a one-task Spark job to do it. This reads the
-   * same footer here and converts it the same way
-   * (`ParquetFileFormat.readSchemaFromFooter`: the Spark schema a Spark
-   * writer stored in the footer, else `ParquetToSparkSchemaConverter`
-   * under the session's conf, every field nullable). Hidden names
-   * (`_x`, `.x`) are skipped as Spark's file index skips them. This is
-   * the rule of Spark's file source, which [[ParquetSource]] reads
-   * through; a graft table's schema is [[Dsv2Parquet.tableSchema]]. */
-  def footerSchema(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def hidden(name: String): Boolean =
-      name.startsWith(".") || name.startsWith("_") && !name.contains("=")
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(f => hidden(f.getPath.getName)).flatMap(leaves)
-    val file = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
-      .headOption.getOrElse(throw new IllegalArgumentException(
-        s"no parquet data files under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val footer = try reader.getFooter finally reader.close()
-    GraftSqlBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
-      new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
-  }
+  def apply(path: String): Source = Dsv2ParquetSource(path)
 }
 
 /**

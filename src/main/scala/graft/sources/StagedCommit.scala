@@ -32,7 +32,8 @@ import org.apache.hadoop.fs.Path
  * that dies mid-commit leaves debris, which
  * [[GraftMaintenance.removeOrphanFiles]] reclaims.
  */
-private[sources] final class StagedCommit(val path: String, tag: String) {
+private[sources] final class StagedCommit(val path: String, tag: String,
+    latest: PlanningView) {
   private def conf = Dsv2Parquet.readConf
   private def fs = new Path(path).getFileSystem(conf)
   private val promoted = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -49,7 +50,7 @@ private[sources] final class StagedCommit(val path: String, tag: String) {
    * base was read from — what a commit planning against base reads. */
   lazy val view: PlanningView = begun._2
 
-  private lazy val begun = CommitLog.beginView(path, conf)
+  private lazy val begun = CommitLog.beginView(path, conf, latest)
 
   /** Run the staging job; if it fails, drop the staging dir and rethrow. */
   def stage[A](job: => A): A =
@@ -118,9 +119,15 @@ private[sources] final class StagedCommit(val path: String, tag: String) {
 
 private[sources] object StagedCommit {
   def apply(path: String, tag: String): StagedCommit =
-    new StagedCommit(path, tag)
+    new StagedCommit(path, tag, PlanningView(path, None))
 
   /** A commit whose staging dir no other commit can share. */
   def fresh(path: String, kind: String): StagedCommit =
-    StagedCommit(path, s"$kind-${UUID.randomUUID()}")
+    fresh(path, kind, PlanningView(path, None))
+
+  /** [[fresh]], building on `view`, a latest view of `path` the caller
+   * already read, so the commit's [[StagedCommit.base]] comes from that
+   * view's listing. */
+  def fresh(path: String, kind: String, view: PlanningView): StagedCommit =
+    new StagedCommit(path, s"$kind-${UUID.randomUUID()}", view)
 }

@@ -6,7 +6,7 @@ import graft.repair.RepairPlanner
 import graft.report.{JobStats, ReportFormatter, ReportWriter}
 import graft.schema.TableSchema
 import graft.sources.{CommitLog, Dsv2Parquet, Dsv2ParquetSource, GraftCatalog,
-  GraftParquetProvider, ParquetSource, Source}
+  GraftParquetProvider, Source}
 import java.io.File
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
@@ -121,11 +121,11 @@ class MvSyncJobSpec extends SparkSpec {
   test("run on a parquet base and a graft MV submits exactly 4 Spark jobs") {
     // the reconcile's two shuffle-map stages and its result stage (AQE
     // runs each as a job), then the one reports + stats job; loading
-    // either side runs none
+    // either side through the connector runs none
     val tmp = tmpDir("graft-mvsync-jobs")
     val (basePath, mvPath) = tables(tmp)
     val (result, ran) = org.apache.spark.SparkJobCount.of(spark) {
-      MvSyncJob.run(spark, ParquetSource(basePath), Dsv2ParquetSource(mvPath),
+      MvSyncJob.run(spark, Dsv2ParquetSource(basePath), Dsv2ParquetSource(mvPath),
         baseSchema, mvSchema, Fixing.copy(outputDir = s"$tmp/reports"))
     }
     assert(result.stats.totRecords == 4)
@@ -136,14 +136,14 @@ class MvSyncJobSpec extends SparkSpec {
     val tmp = tmpDir("graft-mvsync-stale")
     val (basePath, mvPath) = tables(tmp)
     val settings = Fixing.copy(outputDir = s"$tmp/reports")
-    def runOnce() = MvSyncJob.run(spark, ParquetSource(basePath),
+    def runOnce() = MvSyncJob.run(spark, Dsv2ParquetSource(basePath),
       Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings, writeReports = false)
 
     val first = runOnce()
     assert(first.stats.consistentRecords == 1 && first.classified.count() == 3)
     def versions = CommitLog.versions(new Path(mvPath), Dsv2Parquet.readConf).length
     val before = versions
-    MvSyncJob.repair(spark, first, mvPath, ParquetSource(basePath),
+    MvSyncJob.repair(spark, first, mvPath, Dsv2ParquetSource(basePath),
       baseSchema, mvSchema, settings)
     assert(versions == before + 1, "repair publishes exactly one version")
 
@@ -190,6 +190,35 @@ class MvSyncJobSpec extends SparkSpec {
       Dsv2ParquetSource(mvPath), baseSchema, mvSchema, settings, writeReports = false)
     assert(viaConnector.stats.totRecords == 3 && viaConnector.stats.consistentRecords == 3)
     assert(second == viaConnector.stats.toString)
+  }
+
+  test("main reads a base Spark wrote with default settings, a timestamp " +
+      "column included, and prints run's stats line over the same frames") {
+    val tmp = tmpDir("graft-mvsync-ts")
+    val (basePath, mvPath) = (s"$tmp/base", s"$tmp/mv")
+    def withTs(df: DataFrame) =
+      df.withColumn("ts", timestamp_micros(lit(Wt1) + col("ck2") * 1000001L))
+    val (b, m) = (withTs(base), withTs(mv))
+    b.write.parquet(basePath)
+    m.write.format(classOf[GraftParquetProvider].getName)
+      .option(Dsv2Parquet.SchemaOption, m.schema.toDDL).mode("append").save(mvPath)
+    // Spark's default encoding is INT96; the graft writer's is INT64
+    val conf = Dsv2Parquet.readConf
+    val file = new File(basePath).listFiles().find(_.getName.endsWith(".parquet")).get
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file.getPath), conf))
+    try assert(footer.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
+      .getPrimitiveTypeName.toString == "INT96") finally footer.close()
+
+    val line = mainLine(Seq(basePath, mvPath, mvSchema.pk.mkString(",")),
+      Map("cass.mv.output.dir" -> s"$tmp/reports-main"))
+    def schemaOf(df: DataFrame, pk: Seq[String]) = TableSchema.fromSchema(df.schema, pk)
+    val viaFrames = MvSyncJob.run(spark, DfSource(b), DfSource(m),
+      schemaOf(b, baseSchema.pk), schemaOf(m, mvSchema.pk),
+      Settings(outputDir = s"$tmp/reports-run"), writeReports = false)
+    assert(line == viaFrames.stats.toString)
+    assert(line.startsWith("totRecords: 4, skippedRecords: 0, consistentRecords: 1, " +
+      "inConsistentRecords: 1,"), line)
   }
 
   test("main's MV schema is the connector's: a column added by ALTER TABLE is compared") {

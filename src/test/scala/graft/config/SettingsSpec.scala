@@ -11,12 +11,8 @@ class SettingsSpec extends SparkSpec {
     val s = Settings()
     assert(s.startTsEpochSec == -1L && s.endTsEpochSec == -1L)
     assert(!s.timeScoped)
-    assert(s.readConsistency == "LOCAL_QUORUM" && s.mvWriteConsistency == "LOCAL_QUORUM")
     assert(!s.fixMissingMv && !s.fixOrphanMv && !s.fixInconsistentMv)
-    assert(s.scanRateLimit == 10 && s.mutationRateLimit == 5)
     assert(!s.useLatestTs)
-    assert(s.cassandraHost == "localhost" && s.cassandraPort == "9042")
-    assert(s.cassandraDatacenter == "datacenter1")
     assert(s.outputDir == "/tmp/cassandra-mv-repair-spark-job/")
   }
 
@@ -35,10 +31,9 @@ class SettingsSpec extends SparkSpec {
     try {
       keys.foreach { case (k, v) => spark.conf.set(k, v) }
       val s = Settings.fromSession(spark)
-      assert(s.keyspace == "ks1" && s.baseTableName == "t1" && s.mvName == "mv1")
       assert(s.fixMissingMv && s.fixOrphanMv && !s.fixInconsistentMv)
       assert(s.startTsEpochSec == 100L && s.endTsEpochSec == 200L && s.timeScoped)
-      assert(s.scanRateLimit == 77 && s.useLatestTs)
+      assert(s.useLatestTs)
       assert(s.outputDir == "/tmp/x")
     } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
   }

@@ -97,24 +97,6 @@ class ReportWriterSpec extends SparkSpec {
     assert(!content.contains("c4:INT:null"))
   }
 
-  test("failed mutations land in ERR_DELETING / ERR_UPSERTING files") {
-    import spark.implicits._
-    val outDir = Files.createTempDirectory("graft-report-err").toString
-    val errors = Seq(
-      ("DELETE", "Problem: MISSING_IN_BASE_TABLE\nRowKey: k1", "timeout"),
-      ("UPSERT", "Problem: INCONSISTENT\nRowKey: k2", "unavailable"))
-      .toDF("op", "report", "error")
-    ReportWriter.writeMutationErrors(errors, outDir)
-    def slurp(cat: String) =
-      Files.list(Paths.get(s"$outDir/$cat")).iterator().asScala.toSeq
-        .map(f => Files.readString(f)).mkString
-    val del = slurp("ERR_DELETING")
-    assert(del.contains("RowKey: k1") && del.contains("timeout") &&
-      del.contains("=============================="))
-    val ups = slurp("ERR_UPSERTING")
-    assert(ups.contains("RowKey: k2") && ups.contains("unavailable"))
-  }
-
   test("missing-in-mv report renders MVTableEntry: null") {
     val outDir = Files.createTempDirectory("graft-report2").toString
     val settings = Settings(outputDir = outDir)

@@ -597,6 +597,11 @@ class Dsv2EqualitySpec extends SparkSpec {
       spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
         .coalesce(1).write.parquet(p)
       assert(!CommitLog.enabled(p, conf))
+      // validation runs before the import: a refused repair leaves the
+      // directory as found
+      intercept[IllegalArgumentException](EqualityRepair.commit(spark, p,
+        Seq("nope"), Seq(3L).toDF("nope"), Seq.empty[Long].toDF("k")))
+      assert(!CommitLog.enabled(p, conf))
       EqualityRepair.commit(spark, p, Seq("k"), Seq(3L, 4L).toDF("k"),
         Seq((4L, 40L), (500L, 1L)).toDF("k", "v"))
       // version 1 is the listing as found, version 2 the repair

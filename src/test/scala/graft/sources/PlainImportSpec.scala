@@ -53,6 +53,35 @@ class PlainImportSpec extends SparkSpec {
       .option(Dsv2Parquet.VersionAsOfOption, "1").load(p)) == v1Keys)
   }
 
+  test("a plain directory holding a partition directory or a file without " +
+      "the .parquet suffix fails at planning, with the entry named") {
+    withCatalog { (_, p) =>
+      val parted = s"$p-parted"
+      (0L until 10L).map(k => (k, k % 2)).toDF("k", "part").write
+        .partitionBy("part").parquet(parted)
+      val e = intercept[IllegalArgumentException](spark.read.format(fmt).load(parted))
+      assert(e.getMessage.contains("part=0") || e.getMessage.contains("part=1"),
+        e.getMessage)
+      // Spark's reader reads a data file whatever its name
+      val original = plain(p)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(p, original.head),
+        java.nio.file.Paths.get(p, "extra-rows"))
+      assert(spark.read.parquet(p).count() == 150L)
+      val e2 = intercept[IllegalArgumentException](spark.read.format(fmt).load(p))
+      assert(e2.getMessage.contains("extra-rows"), e2.getMessage)
+      // a table with a commit log reads its manifest's files only
+      val logged = s"$p-logged"
+      Seq((1L, 2L)).toDF("k", "v").write.format(fmt).mode("append").save(logged)
+      assert(CommitLog.enabled(logged, conf))
+      java.nio.file.Files.createDirectory(java.nio.file.Paths.get(logged, "part=1"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(p, original.head),
+        java.nio.file.Paths.get(logged, "part=1", original.head))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(p, original.head),
+        java.nio.file.Paths.get(logged, "extra-rows"))
+      assert(keys(spark.read.format(fmt).load(logged)) == Set(1L))
+    }
+  }
+
   test("batch append imports the directory first") {
     withCatalog { (_, p) =>
       val original = plain(p)
